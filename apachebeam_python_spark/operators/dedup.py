@@ -20,7 +20,7 @@ Scale design (the 100 TB story, per variant):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -112,46 +112,19 @@ _MAX_LONG = (1 << 63) - 1
 _PREFIX_BLOCK_LEN = 15
 
 
-def _minhash_signature(shingle_col: Column, num_hashes: int) -> Column:
+def _minhash_signature_sql(shingle_col: str, num_hashes: int) -> str:
     """num_hashes min-hashes: min over shingles of xxhash64(shingle, seed i).
 
     Single fold over the shingle array (per shingle: num_hashes xxhash64
     calls, element-wise min into the accumulator) — one traversal instead of
     num_hashes traversals, and xxhash64 is a JVM built-in so the whole
-    signature stays inside codegen."""
-    return F.aggregate(
-        shingle_col,
-        F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_hashes),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(*[F.xxhash64(s, F.lit(i)) for i in range(num_hashes)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
+    signature stays inside codegen. Works over string shingles or (much
+    faster) 64-bit hashed grams: xxhash64 over a long is one fixed 8-byte
+    round vs a variable-length string walk per hash.
 
-
-def _shingles_sql(text_col: str, n: int) -> str:
-    """SQL-string twin of ``functions.text.shingles`` (same NULL/short-doc
-    guards, same output). The string form exists purely for CONSTRUCTION
-    latency: one server-side parse instead of dozens of py4j
-    expression-builder round-trips (measured ~0.7 s → ~0.03 s per build on a
-    loaded host; the optimized plan is identical)."""
-    w = f"split(`{text_col}`, ' ')"
-    gram = ", ".join(f"element_at({w}, i + {j})" for j in range(n))
-    return (
-        f"CASE WHEN `{text_col}` IS NULL THEN CAST(NULL AS array<string>) "
-        f"WHEN size({w}) >= {n} THEN "
-        f"array_distinct(transform(sequence(1, size({w}) - {n - 1}), "
-        f"i -> concat_ws(' ', {gram}))) "
-        f"ELSE array() END"
-    )
-
-
-def _minhash_signature_sql(shingle_col: str, num_hashes: int) -> str:
-    """SQL-string twin of :func:`_minhash_signature` (same fold, same
-    values) — see :func:`_shingles_sql` for why. Works over string shingles
-    or (much faster) 64-bit hashed grams: xxhash64 over a long is one fixed
-    8-byte round vs a variable-length string walk per hash."""
+    Built as SQL text for CONSTRUCTION latency: the JVM parses it once,
+    where the Column-API form costs py4j round trips per node (see
+    CLAUDE.md, "wide expressions")."""
     hashes = ", ".join(f"xxhash64(s, {i})" for i in range(num_hashes))
     return (
         f"aggregate(`{shingle_col}`, "
@@ -510,25 +483,26 @@ def ngram_containment_pairs(
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
     """64-bit SimHash: per token, xxhash64 supplies the bit pattern; each bit
     votes ±1; the signature is the sign vector packed to a long. All
-    expression-level (explode + groupBy + bit ops)."""
+    expression-level (explode + groupBy + bit ops). The per-bit vote
+    aggregates and the signature OR are SQL text (CLAUDE.md, "wide
+    expressions")."""
     toks = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(T.tokens(F.col(text_col)))).alias("tok"),
     ).withColumn("h", F.xxhash64("tok"))
     votes = toks.groupBy("doc_id").agg(
         *[
-            F.sum(
-                F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{i}")
+            F.expr(f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}")
             for i in range(bits)
         ]
     )
-    sig = F.lit(0).cast("long")
+    sig = "CAST(0 AS BIGINT)"
     for i in range(bits):
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
+        sig = (
+            f"({sig} | CASE WHEN b{i} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
+            f"ELSE CAST(0 AS BIGINT) END)"
         )
-    return votes.select("doc_id", sig.alias("simhash"))
+    return votes.select("doc_id", F.expr(f"{sig} AS simhash"))
 
 
 def simhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str, *, max_hamming: int = 3, band_bits: int = 16) -> DataFrame:
@@ -574,36 +548,20 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str, *, max_hamm
         widths.append(w)
         off += w
 
-    def band_key(col, i):
-        return F.shiftright(col, offsets[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
+    def band_key(col: str, i: int) -> str:
+        return f"(shiftright({col}, {offsets[i]}) & {(1 << widths[i]) - 1})"
 
+    structs = ", ".join(
+        f"struct({b} AS band, {band_key('simhash', b)} AS key)" for b in range(n_bands)
+    )
     banded = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        band_key(F.col("simhash"), b).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
+        "doc_id", "simhash", F.expr(f"explode(array({structs})) AS bb")
     ).select("doc_id", "simhash", "bb.band", "bb.key")
     a, b = banded.alias("a"), banded.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    ham = F.bit_count(xor)
-    first_band = (
-        F.array_position(
-            F.array(*[band_key(xor, i) for i in range(n_bands)]),
-            F.lit(0).cast("long"),
-        )
-        - 1
-    )
+    xor = "(a.simhash ^ b.simhash)"
+    ham = f"bit_count({xor})"
+    keys = ", ".join(band_key(xor, i) for i in range(n_bands))
+    first_band = f"(array_position(array({keys}), CAST(0 AS BIGINT)) - 1)"
     return (
         a.join(
             b,
@@ -611,11 +569,11 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str, *, max_hamm
             & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .filter((F.col("a.band") == first_band) & (ham <= max_hamming))
+        .filter(F.expr(f"(a.band = {first_band}) AND ({ham} <= {max_hamming})"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
+            F.expr(f"{ham} AS hamming"),
         )
     )
 

@@ -13,7 +13,7 @@ Two tiers:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -60,31 +60,25 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, vec_col: str, id_col: str
     )
 
 
-def _hyperplane_bit(vec: Column, table: int, bit: int) -> Column:
+def _hyperplane_bit_sql(vec_col: str, table: int, bit: int) -> str:
     """Sign of <v, w> for a pseudo-random hyperplane w whose component i is
-    ±1 from xxhash64(table, bit, i) parity — deterministic, no stored model."""
-    proj = F.aggregate(
-        F.zip_with(
-            vec,
-            F.transform(
-                F.sequence(F.lit(1), F.size(vec)),
-                # pmod, not %: Spark's % follows the dividend sign, so
-                # (hash % 2)*2-1 would yield {-3,-1,+1} — a biased plane
-                lambda i: F.pmod(F.xxhash64(F.lit(table), F.lit(bit), i), F.lit(2)).cast("double") * 2 - 1,
-            ),
-            lambda x, w: x.cast("double") * w,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (proj >= 0).cast("int")
+    ±1 from xxhash64(table, bit, i) parity — deterministic, no stored model.
+
+    pmod, not %: Spark's % follows the dividend sign, so (hash % 2)*2-1
+    would yield {-3,-1,+1} — a biased plane. Built as SQL text (CLAUDE.md,
+    "wide expressions"): PySpark's own lambda names (x, y) and typed
+    literals (0.0D is a DOUBLE; a bare 0.0 would be a DECIMAL)."""
+    v = f"`{vec_col}`"
+    plane = f"transform(sequence(1, size({v})), x -> CAST(pmod(xxhash64({table}, {bit}, x), 2) AS DOUBLE) * 2 - 1)"
+    proj = f"aggregate(zip_with({v}, {plane}, (x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (x, y) -> x + y)"
+    return f"CAST(({proj} >= 0) AS INT)"
 
 
-def lsh_bucket(vec: Column, table: int, n_bits: int) -> Column:
+def _lsh_bucket_sql(vec_col: str, table: int, n_bits: int) -> str:
     """n_bits-bit bucket id for one hash table."""
-    bucket = F.lit(0)
+    bucket = "0"
     for b in range(n_bits):
-        bucket = bucket * 2 + _hyperplane_bit(vec, table, b)
+        bucket = f"(({bucket} * 2) + {_hyperplane_bit_sql(vec_col, table, b)})"
     return bucket
 
 
@@ -112,16 +106,12 @@ def lsh_buckets(
             V.norm(F.col(vec_col)).alias("nrm"),
         ]
     out_cols = ["doc_id"] + (["vec", "nrm"] if with_vectors else [])
+    structs = ", ".join(
+        f"struct({t} AS tbl, {_lsh_bucket_sql(vec_col, t, n_bits)} AS bucket)"
+        for t in range(n_tables)
+    )
     return fan_out(df).select(
-        *cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("tbl"), lsh_bucket(F.col(vec_col), t, n_bits).alias("bucket"))
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
+        *cols, F.expr(f"explode(array({structs})) AS tb")
     ).select(*out_cols, "tb.tbl", "tb.bucket")
 
 

@@ -651,7 +651,7 @@ def q_dedup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-attach to the SURVIVING pairs through the size-gated broadcast
     # (row-gated, AQE shuffle-join fallback once the corpus outgrows it).
     from ..functions import vectors as V
-    from ..session import broadcast_if_small, checkpoint
+    from ..session import bounded_rows, broadcast_if_small, checkpoint
 
     buckets = checkpoint(
         SIM.lsh_buckets(
@@ -674,13 +674,15 @@ def q_dedup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
     )
+    # va and vb project the same table: one size probe gates both sides
+    n_vec = bounded_rows(vn)
     emb_lsh = (
         a.join(b, ["tbl", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
-        .join(broadcast_if_small(va), "id_a")
-        .join(broadcast_if_small(vb), "id_b")
+        .join(broadcast_if_small(va, known_rows=n_vec), "id_a")
+        .join(broadcast_if_small(vb, known_rows=n_vec), "id_b")
         .withColumn(
             "score",
             F.round(V.safe_cosine_from(V.dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")), 6),

@@ -89,12 +89,26 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     return spark
 
 
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for a local session: half of ``MemAvailable``, capped at
+    16g and floored at 1g. The heap is committed up front (-Xms = -Xmx),
+    so a fixed size the host cannot commit kills the JVM at start; the
+    other half is left to the JVM's off-heap memory, the Python workers
+    and the rest of the host. Hosts without ``/proc/meminfo`` get 2g."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "2g"
+    return f"{min(max(kb // 2048, 1024), 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "apachebeam_python_spark") -> SparkSession:
     """Build a local session (tests / bench). The driver supplies its own."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # pre-size the heap (-Xms = -Xmx): heap-growth full GCs under 32 threads
     # showed up as multi-second random per-query spikes in bench runs
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -225,8 +239,15 @@ def broadcast_if_small(
     (vocabulary tables, config-bounded grids), pass ``known_rows`` and the
     probe is skipped entirely.
     """
-    n = known_rows if known_rows is not None else df.limit(limit_rows + 1).count()
+    n = known_rows if known_rows is not None else bounded_rows(df, limit_rows)
     return F.broadcast(df) if n <= limit_rows else df
+
+
+def bounded_rows(df: DataFrame, limit_rows: int = 1_000_000) -> int:
+    """Row count of ``df`` capped at ``limit_rows + 1`` — the bounded probe
+    behind :func:`broadcast_if_small`. Run it once and pass the result as
+    ``known_rows`` when several join sides project the same table."""
+    return df.limit(limit_rows + 1).count()
 
 
 def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
