@@ -627,23 +627,28 @@ def connected_components(
     propagation fixpoint is already the component min (the jump is then the
     identity — the convergence test is unchanged).
 
-    r12 (the operators/graph single-task pattern, VERDICT r11 #1 applied to
-    the dedup tail): when the PAIR table is bounded (one count on the
-    eagerly checkpointed pair projection decides — near-dup pair sets are
-    a small fraction of any corpus, but the gate keeps the distributed
-    loop live for degenerate generators), the whole closure runs as
-    min-rooted UNION-FIND inside ONE Arrow task: cluster id = min member
-    is the identical partition + labeling by construction (pinned both
-    paths in tests/test_graph_kernels.py). Past the gate the propagation
-    loop below runs unchanged."""
+    r12 (the operators/graph bounded-kernel pattern, VERDICT r11 #1
+    applied to the dedup tail): when the PAIR table is bounded (one
+    bounded fetch of the checkpointed pair projection decides — near-dup
+    pair sets are a small fraction of any corpus, but the gate keeps the
+    distributed loop live for degenerate generators), the whole closure
+    runs as min-rooted UNION-FIND on the driver
+    (``graph.driver_kernel``): cluster id = min member is the identical
+    partition + labeling by construction (pinned both paths in
+    tests/test_graph_kernels.py). Past the gate the propagation loop
+    below runs unchanged."""
     p = checkpoint(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
-        eager=False,  # the gate count materializes it; both paths reuse
+        eager=False,  # the gate fetch materializes it; the loop reuses it
     )
-    from .graph import _kernel_ids_ok
+    from .graph import _edge_kernel
 
-    if _kernel_ids_ok(p, "u", "v") and p.count() <= small_graph_max_edges:
-        return _connected_components_small(p)
+    small = _edge_kernel(
+        p, "u", "v", small_graph_max_edges, _union_find_clusters,
+        "doc_id {id}, cluster_id {id}",
+    )
+    if small is not None:
+        return small
     edges = checkpoint(
         p.unionByName(p.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -689,44 +694,32 @@ def connected_components(
     return labels.select(F.col("u").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def _connected_components_small(p: DataFrame) -> DataFrame:
+def _union_find_clusters(pdf):
     """Bounded-pair fast path: min-rooted union-find over the raw pair
-    rows inside ONE Arrow task. Attaching the larger root under the
-    smaller keeps every root the MINIMUM member of its set, so the final
-    find(x) equals the propagation fixpoint's min-label exactly; node set
-    = all pair endpoints, matching the distributed labels' domain."""
+    rows ``(ku, kv)``. Attaching the larger root under the smaller keeps
+    every root the MINIMUM member of its set, so the final find(x) equals
+    the propagation fixpoint's min-label exactly; node set = all pair
+    endpoints, matching the distributed labels' domain."""
     import pandas as pd
 
-    from pyspark.sql import types as ST
+    parent: dict = {}
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for u, v in zip(pdf["ku"], pdf["kv"]):
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                if rv < ru:
-                    ru, rv = rv, ru
-                parent[rv] = ru
-        nodes = sorted(set(pdf["ku"]) | set(pdf["kv"]))
-        return pd.DataFrame(
-            {"doc_id": nodes, "cluster_id": [find(x) for x in nodes]}
-        )
-
-    id_t = {f.name: f.dataType for f in p.schema.fields}["u"]
-    schema = ST.StructType(
-        [ST.StructField("doc_id", id_t), ST.StructField("cluster_id", id_t)]
-    )
-    ek = p.select(F.col("u").alias("ku"), F.col("v").alias("kv"))
-    return ek.groupBy(F.lit(1).alias("g")).applyInPandas(kernel, schema=schema)
+    for u, v in zip(pdf["ku"], pdf["kv"]):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            if rv < ru:
+                ru, rv = rv, ru
+            parent[rv] = ru
+    nodes = sorted(set(pdf["ku"]) | set(pdf["kv"]))
+    return pd.DataFrame({"doc_id": nodes, "cluster_id": [find(x) for x in nodes]})
 
 
 def fuzzy_pairs(

@@ -15,13 +15,17 @@ loop structure is unchanged.
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import checkpoint
 
-#: node-id types the single-task kernels accept: the kernels never do
+#: node-id types the bounded kernels accept: the kernels never do
 #: arithmetic on ids (only dictionary-encode them), but the id ordering a
 #: kernel relies on (np.unique / Python ``<``) must MATCH Spark's ordering.
 #: Integral: trivially identical. String: Python compares code points and
@@ -51,8 +55,69 @@ def _integral_ids(df: DataFrame, *cols: str) -> bool:
     )
 
 
-def _id_type(df: DataFrame, col: str) -> T.DataType:
-    return {f.name: f.dataType for f in df.schema.fields}[col]
+def _id_ddl(df: DataFrame, col: str) -> str:
+    """DDL type name of an id column, for pass-through kernel schemas."""
+    return {f.name: f.dataType for f in df.schema.fields}[col].simpleString()
+
+
+def driver_kernel(
+    df: DataFrame,
+    max_rows: int,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+    schema: str,
+) -> DataFrame | None:
+    """Run a size-gated graph kernel on the DRIVER; None means "over the
+    gate, run the distributed loop".
+
+    One bounded Arrow action — ``limit(max_rows + 1)`` then toArrow — is
+    both the gate and the data load, so a caller that used to count the
+    kernel's input and then read it again pays one Spark action instead
+    of two. Over ``max_rows`` rows the result is None. Otherwise
+    ``kernel`` gets the rows as one pandas frame and returns the result
+    in ``schema``'s column order, or None to decline on a size it derives
+    from the rows (``dag_depths``' node count). An empty input gives an
+    empty result without calling the kernel, as zero ``applyInPandas``
+    groups did.
+
+    Why the driver: the bounded kernels used to run as one
+    ``groupBy(lit(1)).applyInPandas`` task, which starts a Python daemon
+    and worker. On a cold session that costs ~2 s and ~180 MB RSS to run
+    a kernel of well under a second. The driver already holds numpy,
+    pandas and pyarrow, and the fetch is capped at ``max_rows + 1`` rows,
+    so the driver's share is bounded by the gate. The kernel runs while
+    the query is built, where the gate count used to run.
+    """
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        return None
+    spark = df.sparkSession
+    if table.num_rows == 0:
+        return spark.createDataFrame([], schema)
+    out = kernel(table.to_pandas())
+    return None if out is None else spark.createDataFrame(out, schema)
+
+
+def _edge_kernel(
+    e: DataFrame,
+    src: str,
+    dst: str,
+    max_edges: int,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+    schema: str,
+    ids_ok: Callable[..., bool] = _kernel_ids_ok,
+) -> DataFrame | None:
+    """``driver_kernel`` over an edge list as ``(ku, kv)``; ``{id}`` in
+    ``schema`` stands for the id columns' type, which passes through. None
+    (run the loop) past the gate, or for an id type whose kernel ordering
+    could differ from Spark's (``ids_ok``)."""
+    if not ids_ok(e, src, dst):
+        return None
+    return driver_kernel(
+        e.select(F.col(src).alias("ku"), F.col(dst).alias("kv")),
+        max_edges,
+        kernel,
+        schema.format(id=_id_ddl(e, src)),
+    )
 
 
 def pagerank(
@@ -91,7 +156,7 @@ def pagerank(
     jobs were not the cost; a 3-deep lazy plan pays it back in planning
     + nested broadcasts), and is NOT kept. What IS kept: when the node
     count is bounded (``small_graph_max_nodes``), the whole recurrence
-    runs as ONE Arrow task (``applyInPandas`` numpy kernel, identical
+    runs on the driver (``driver_kernel``: a numpy kernel with identical
     per-round half-away 9-dp rounding) — the heavy, data-sized work
     (the edge aggregation) stays distributed, and iterating a
     metadata-sized vector through 10 scheduler waves was the
@@ -103,18 +168,17 @@ def pagerank(
         "p", F.col(weight) / F.sum(weight).over(Window.partitionBy(src))
     ).select(src, dst, "p")
     # small-graph kernel (r11): the aggregated (src, dst, p) table and the
-    # rank vector are metadata-sized here — one bounded .count() picks the
-    # path (the same bounded-metadata class as the k-means centroid
-    # collects in tests/test_antipatterns.py's ledger)
-    n_nodes = nodes.count()
-    if n_nodes <= small_graph_max_nodes:
-        # no checkpoint on this path (r11b): the kernel consumes `en`
-        # exactly once, so the eager parquet write+read that cuts lineage
-        # for the ITERATING path below is pure overhead here
-        return _pagerank_small_graph(
-            en, nodes, src=src, dst=dst, node=node,
-            damping=damping, iterations=iterations, round_dp=round_dp,
-        )
+    # rank vector are metadata-sized here. No checkpoint on this path
+    # (r11b): the kernel reads `en` exactly once, so the eager parquet
+    # write+read that cuts lineage for the ITERATING path below is pure
+    # overhead here
+    small = _pagerank_small_graph(
+        en, nodes, src=src, dst=dst, node=node, damping=damping,
+        iterations=iterations, round_dp=round_dp,
+        max_nodes=small_graph_max_nodes,
+    )
+    if small is not None:
+        return small
     en = checkpoint(en)
     srcs = checkpoint(en.select(src).distinct())
     nn = nodes.agg(F.count("*").alias("n"))
@@ -160,10 +224,15 @@ def _pagerank_small_graph(
     damping: float,
     iterations: int,
     round_dp: int,
-) -> DataFrame:
-    """The metadata-sized fast path: the full power iteration inside ONE
-    Arrow task. Arithmetic contract mirrors the distributed loop exactly —
-    out-edge probabilities arrive precomputed in ``en``; each round is
+    max_nodes: int,
+) -> DataFrame | None:
+    """The metadata-sized fast path: the full power iteration on the
+    driver (``driver_kernel``), or None past ``max_nodes`` node rows. The
+    fetched table is the node list with each node's out-edges attached
+    as one list, so its row count IS the node count the gate has always
+    counted, and one fetch both gates and loads the graph. Arithmetic
+    contract mirrors the distributed loop exactly — out-edge
+    probabilities arrive precomputed in ``en``; each round is
     teleport/n + d·(Σ r·p per dst + dangling_mass/n), rounded HALF-AWAY to
     ``round_dp`` decimals (``floor(x·10^k + 0.5)`` — ranks are positive —
     the same decision F.round and DuckDB's round make away from the
@@ -171,18 +240,20 @@ def _pagerank_small_graph(
     numpy-vs-SQL sum-order drift exactly as it swallows Spark-vs-DuckDB
     drift in the distributed path). Edges whose endpoints are not in the
     node list are ignored, matching the distributed joins' semantics."""
-    import numpy as np
-    import pandas as pd
-
     damping_f, iters, dp = float(damping), int(iterations), int(round_dp)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        nodes_a = np.sort(
-            pdf.loc[pdf["kind"] == 0, "ksrc"].to_numpy(dtype="int64")
-        )
+        nodes_a = np.sort(pdf["ksrc"].to_numpy(dtype="int64"))
         idx = {int(v): i for i, v in enumerate(nodes_a)}
         n = len(nodes_a)
-        e_all = pdf[pdf["kind"] == 1]
+        out = pdf.explode("out").dropna(subset=["out"])
+        e_all = pd.DataFrame(
+            {
+                "ksrc": out["ksrc"].to_numpy(),
+                "kdst": [o["kdst"] for o in out["out"]],
+                "kp": [o["kp"] for o in out["out"]],
+            }
+        )
         # dangling mask from ALL edge srcs (r12, VERDICT r11 #7): the
         # distributed loop derives non-dangling from en.select(src).distinct()
         # BEFORE any dst filtering — a node whose only out-edge points
@@ -209,23 +280,18 @@ def _pagerank_small_graph(
             )
         return pd.DataFrame({"node": nodes_a, "r": r})
 
-    tagged = nodes.select(
-        F.col(node).cast("long").alias("ksrc"),
-        F.lit(None).cast("long").alias("kdst"),
-        F.lit(0.0).alias("kp"),
-        F.lit(0).alias("kind"),
-    ).unionByName(
-        en.select(
-            F.col(src).cast("long").alias("ksrc"),
-            F.col(dst).cast("long").alias("kdst"),
-            F.col("p").cast("double").alias("kp"),
-            F.lit(1).alias("kind"),
-        )
+    out_edges = en.groupBy(F.col(src).cast("long").alias("ksrc")).agg(
+        F.collect_list(
+            F.struct(
+                F.col(dst).cast("long").alias("kdst"),
+                F.col("p").cast("double").alias("kp"),
+            )
+        ).alias("out")
     )
-    out = tagged.groupBy(F.lit(1).alias("g")).applyInPandas(
-        kernel, schema=f"{node} long, r double"
+    rows = nodes.select(F.col(node).cast("long").alias("ksrc")).join(
+        out_edges, "ksrc", "left"
     )
-    return out
+    return driver_kernel(rows, max_nodes, kernel, f"{node} long, r double")
 
 
 def dag_depths(
@@ -243,11 +309,12 @@ def dag_depths(
     fixpoint, capped at ``max_rounds``. Returns ``(node, d)``. Nodes are
     src ∪ dst of the edge list.
 
-    r11 (the q_pagerank kernel pattern): when the node count is bounded
-    (``small_graph_max_nodes``, one bounded count decides) the whole
-    fixpoint runs inside ONE Arrow task — each distributed round costs a
-    broadcast join + union + max-groupBy + eager checkpoint + a Σd
-    convergence action, ~10 scheduler waves to advance a ≤|V|-row table.
+    r11 (the q_pagerank kernel pattern): when the edge and node counts
+    are bounded (one bounded fetch of the edges decides both) the whole
+    fixpoint runs on the driver (``driver_kernel``) — each distributed
+    round costs a broadcast join + union + max-groupBy + eager checkpoint
+    + a Σd convergence action, ~10 scheduler waves to advance a ≤|V|-row
+    table.
     The relaxation is integer and order-free, so both paths reach the
     IDENTICAL fixpoint by construction (pinned in
     tests/test_dag_layers_paths.py). Past the threshold the distributed
@@ -255,23 +322,22 @@ def dag_depths(
     per-round join is exchange-free; depth tables shuffle on the node
     key with map-side max partials."""
     e = checkpoint(edges.select(src, dst), eager=False)
-    nodes = (
-        e.select(F.col(src).alias("v")).union(e.select(F.col(dst))).distinct()
-    )
     # kernel gate (r12, ADVICE r11 #2/#3): ids must be integral (the kernel
     # casts them to long — strings/decimals fall through to the distributed
     # loop, which handles any type), and BOTH dimensions must be bounded —
-    # node count caps the depth vector, edge count caps the one-task Arrow
+    # node count caps the depth vector, edge count caps the fetched
     # payload (a dense small-node DAG could otherwise funnel ~|V|² edges
-    # into a single executor)
-    if (
-        _integral_ids(e, src, dst)
-        and nodes.count() <= small_graph_max_nodes
-        and e.count() <= small_graph_max_edges
-    ):
-        return _dag_depth_small_graph(
-            e, nodes, src=src, dst=dst, node="v", max_rounds=max_rounds
-        )
+    # onto the driver). One bounded fetch of the edges decides both: the
+    # node set is src ∪ dst of the fetched rows
+    small = _dag_depth_small_graph(
+        e, src=src, dst=dst, max_rounds=max_rounds,
+        max_nodes=small_graph_max_nodes, max_edges=small_graph_max_edges,
+    )
+    if small is not None:
+        return small
+    nodes = (
+        e.select(F.col(src).alias("v")).union(e.select(F.col(dst))).distinct()
+    )
     depth = nodes.select("v", F.lit(0).cast("long").alias("d"))
     prev = -1
     # terminates in ≤ diameter ≤ |V| rounds on a DAG; the cap is a backstop
@@ -295,15 +361,17 @@ def dag_depths(
 
 def _dag_depth_small_graph(
     edges: DataFrame,
-    nodes: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    max_rounds: int = 64,
-) -> DataFrame:
+    src: str,
+    dst: str,
+    max_rounds: int,
+    max_nodes: int,
+    max_edges: int,
+) -> DataFrame | None:
     """Longest-path (topological-layer) depth per node for a
-    METADATA-SIZED DAG, computed inside ONE Arrow task — the r11
+    METADATA-SIZED DAG, computed on the driver (``driver_kernel``), or
+    None past ``max_edges`` edges or ``max_nodes`` nodes or for
+    non-integral ids (the kernel casts them to long) — the r11
     q_pagerank kernel pattern applied to q_dag_layers' relaxation loop
     (each distributed round there was a broadcast join + union +
     max-groupBy + eager checkpoint + a Σd convergence action, all to
@@ -311,23 +379,18 @@ def _dag_depth_small_graph(
     distributed loop exactly: simultaneous relaxation
     d(v) ← max(d(v), d(u)+1) over incoming edges until a fixpoint, capped
     at ``max_rounds`` (the loop's backstop) — integers, order-free, so
-    the fixpoint is identical by construction. Edges whose endpoints are
-    not in the node list are ignored, matching the join semantics."""
-    import numpy as np
-    import pandas as pd
-
+    the fixpoint is identical by construction. The node list is src ∪ dst
+    of the edges, as the loop's."""
     rounds = int(max_rounds)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        nodes_a = np.sort(
-            pdf.loc[pdf["kind"] == 0, "ksrc"].to_numpy(dtype="int64")
-        )
-        idx = {int(v): i for i, v in enumerate(nodes_a)}
-        e = pdf[pdf["kind"] == 1]
-        keep = e["ksrc"].isin(idx) & e["kdst"].isin(idx)
-        e = e[keep]
-        si = e["ksrc"].map(idx).to_numpy(dtype="int64")
-        di = e["kdst"].map(idx).to_numpy(dtype="int64")
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        u = pdf["ku"].to_numpy(dtype="int64")
+        v = pdf["kv"].to_numpy(dtype="int64")
+        nodes_a = np.unique(np.concatenate([u, v]))
+        if len(nodes_a) > max_nodes:
+            return None
+        si = np.searchsorted(nodes_a, u)
+        di = np.searchsorted(nodes_a, v)
         d = np.zeros(len(nodes_a), dtype="int64")
         for _ in range(rounds):
             nd = d.copy()
@@ -337,19 +400,9 @@ def _dag_depth_small_graph(
             d = nd
         return pd.DataFrame({"node": nodes_a, "d": d})
 
-    tagged = nodes.select(
-        F.col(node).cast("long").alias("ksrc"),
-        F.lit(None).cast("long").alias("kdst"),
-        F.lit(0).alias("kind"),
-    ).unionByName(
-        edges.select(
-            F.col(src).cast("long").alias("ksrc"),
-            F.col(dst).cast("long").alias("kdst"),
-            F.lit(1).alias("kind"),
-        )
-    )
-    return tagged.groupBy(F.lit(1).alias("g")).applyInPandas(
-        kernel, schema="node long, d long"
+    return _edge_kernel(
+        edges, src, dst, max_edges, kernel, "node long, d long",
+        ids_ok=_integral_ids,
     )
 
 
@@ -364,19 +417,16 @@ def _dag_depth_small_graph(
 # pass through with their input dtype (schema-preserving), gated on types
 # whose kernel ordering matches Spark's (_KERNEL_ID_TYPES).
 #
-# Gate: ONE bounded count of the (distinct, checkpointed) edge list —
-# |E| ≤ small_graph_max_edges. Distinct edges imply |V| ≤ 2·|E|, so the
+# Gate: ONE bounded fetch of the (distinct, checkpointed) edge list —
+# |E| ≤ small_graph_max_edges — through _edge_kernel / driver_kernel, which
+# also loads the kernel's input. Distinct edges imply |V| ≤ 2·|E|, so the
 # default gate (2048 edges ⇒ ≤4096 nodes) bounds the kernels' dense n×n
-# work matrices at ~134 MB in one Arrow task (ADVICE r11 #3's
-# both-dimensions rule, collapsed to one count because the input is
+# work matrices at ~134 MB on the driver (ADVICE r11 #3's
+# both-dimensions rule, collapsed to one fetch because the input is
 # distinct by construction). Past the gate the distributed loops run
 # unchanged: edges bucketed by src at scale, per-round joins exchange-free,
 # node-keyed state shuffles with map-side partials.
 # --------------------------------------------------------------------------
-
-
-def _ids_struct(dtype, *fields: str):
-    return T.StructType([T.StructField(f, dtype) for f in fields])
 
 
 def hop_distances(
@@ -397,13 +447,19 @@ def hop_distances(
     the distance-k class). Distributed shape per round: frontier ⋈ edges,
     anti-join visited, checkpoint, empty-probe — ~5 scheduler waves to
     advance a ≤|V|²-row pair table one hop. Small graphs run the whole
-    BFS as ONE Arrow task on boolean adjacency matrices: frontier
-    expansion is set algebra on exact integers, so visited/(src,node,d)
-    is identical by construction (pinned in tests/test_graph_kernels.py).
+    BFS on the driver (``driver_kernel``) on boolean adjacency matrices:
+    frontier expansion is set algebra on exact integers, so
+    visited/(src,node,d) is identical by construction (pinned in
+    tests/test_graph_kernels.py).
     """
     e0 = checkpoint(edges.select(src, dst), eager=False)
-    if _kernel_ids_ok(e0, src, dst) and e0.count() <= small_graph_max_edges:
-        return _hop_distances_small_graph(e0, src=src, dst=dst, max_d=max_d)
+    small = _edge_kernel(
+        e0, src, dst, small_graph_max_edges,
+        lambda pdf: _hop_distances_kernel(pdf, int(max_d)),
+        "src {id}, node {id}, d long",
+    )
+    if small is not None:
+        return small
     e = (
         e0.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(e0.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -438,57 +494,35 @@ def hop_distances(
     return visited
 
 
-def _hop_distances_small_graph(
-    e0: DataFrame, *, src: str, dst: str, max_d: int
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    cap = int(max_d)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        u = pdf["ku"].to_numpy()
-        v = pdf["kv"].to_numpy()
-        nodes_a = np.unique(np.concatenate([u, v]))
-        idx = {val: i for i, val in enumerate(nodes_a)}
-        n = len(nodes_a)
-        si = pdf["ku"].map(idx).to_numpy(dtype="int64")
-        di = pdf["kv"].map(idx).to_numpy(dtype="int64")
-        adj = np.zeros((n, n), dtype=bool)
-        adj[si, di] = True
-        adj[di, si] = True  # symmetrize (the distributed union ∪ reverse)
-        np.fill_diagonal(adj, False)  # no self loops in a distinct src≠dst list
-        adj_u8 = adj.astype(np.uint8)
-        dist = np.zeros((n, n), dtype="int64")
-        dist[adj] = 1
-        reached = adj | np.eye(n, dtype=bool)  # v == src never enters visited
-        frontier = adj
-        for d in range(2, cap + 1):
-            nxt = ((frontier.astype(np.uint8) @ adj_u8) > 0) & ~reached
-            if not nxt.any():
-                break
-            dist[nxt] = d
-            reached |= nxt
-            frontier = nxt
-        srcs, nodes = np.nonzero(dist)
-        return pd.DataFrame(
-            {
-                "src": nodes_a[srcs],
-                "node": nodes_a[nodes],
-                "d": dist[srcs, nodes],
-            }
-        )
-
-    id_t = _id_type(e0, src)
-    schema = T.StructType(
-        [
-            T.StructField("src", id_t),
-            T.StructField("node", id_t),
-            T.StructField("d", T.LongType()),
-        ]
+def _hop_distances_kernel(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
+    u = pdf["ku"].to_numpy()
+    v = pdf["kv"].to_numpy()
+    nodes_a = np.unique(np.concatenate([u, v]))
+    idx = {val: i for i, val in enumerate(nodes_a)}
+    n = len(nodes_a)
+    si = pdf["ku"].map(idx).to_numpy(dtype="int64")
+    di = pdf["kv"].map(idx).to_numpy(dtype="int64")
+    adj = np.zeros((n, n), dtype=bool)
+    adj[si, di] = True
+    adj[di, si] = True  # symmetrize (the distributed union ∪ reverse)
+    np.fill_diagonal(adj, False)  # no self loops in a distinct src≠dst list
+    dist = np.zeros((n, n), dtype="int64")
+    dist[adj] = 1
+    reached = adj | np.eye(n, dtype=bool)  # v == src never enters visited
+    frontier = adj
+    for d in range(2, cap + 1):
+        # bool @ bool is logical OR over AND: a uint8 product counted
+        # paths mod 256 and lost pairs joined by 256·k of them
+        nxt = (frontier @ adj) & ~reached
+        if not nxt.any():
+            break
+        dist[nxt] = d
+        reached |= nxt
+        frontier = nxt
+    srcs, nodes = np.nonzero(dist)
+    return pd.DataFrame(
+        {"src": nodes_a[srcs], "node": nodes_a[nodes], "d": dist[srcs, nodes]}
     )
-    ek = e0.select(F.col(src).alias("ku"), F.col(dst).alias("kv"))
-    return ek.groupBy(F.lit(1).alias("g")).applyInPandas(kernel, schema=schema)
 
 
 def closure_census(
@@ -505,16 +539,19 @@ def closure_census(
     — q_cycle_nodes' computation.
 
     Distributed shape per round: pair-set ⋈ edges, union, distinct,
-    checkpoint, count-stall probe. Small graphs run the closure as ONE
-    Arrow task on a boolean reachability matrix (reach ∪= reach·adj — the
-    same one-edge-extension recurrence, same ``max_rounds`` backstop);
-    row sums and the diagonal are the census. Exact set algebra ⇒
-    identical fixpoint by construction."""
+    checkpoint, count-stall probe. Small graphs run the closure on the
+    driver (``driver_kernel``) on a boolean reachability matrix
+    (reach ∪= reach·adj — the same one-edge-extension recurrence, same
+    ``max_rounds`` backstop); row sums and the diagonal are the census.
+    Exact set algebra ⇒ identical fixpoint by construction."""
     e = checkpoint(edges.select(src, dst), eager=False)
-    if _kernel_ids_ok(e, src, dst) and e.count() <= small_graph_max_edges:
-        return _closure_census_small_graph(
-            e, src=src, dst=dst, max_rounds=max_rounds
-        )
+    small = _edge_kernel(
+        e, src, dst, small_graph_max_edges,
+        lambda pdf: _closure_census_kernel(pdf, int(max_rounds)),
+        "node {id}, n_reachable long, on_cycle boolean",
+    )
+    if small is not None:
+        return small
     paths = e.select(F.col(src).alias("s"), F.col(dst).alias("v"))
     prev = -1
     for _ in range(max_rounds):  # ≤ diameter rounds; |V|² cap keeps each tiny
@@ -549,49 +586,29 @@ def closure_census(
     )
 
 
-def _closure_census_small_graph(
-    e: DataFrame, *, src: str, dst: str, max_rounds: int
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    rounds = int(max_rounds)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        u = pdf["ku"].to_numpy()
-        v = pdf["kv"].to_numpy()
-        nodes_a = np.unique(np.concatenate([u, v]))
-        idx = {val: i for i, val in enumerate(nodes_a)}
-        n = len(nodes_a)
-        si = pdf["ku"].map(idx).to_numpy(dtype="int64")
-        di = pdf["kv"].map(idx).to_numpy(dtype="int64")
-        adj = np.zeros((n, n), dtype=bool)
-        adj[si, di] = True
-        adj_u8 = adj.astype(np.uint8)
-        reach = adj.copy()
-        for _ in range(rounds):
-            nxt = reach | ((reach.astype(np.uint8) @ adj_u8) > 0)
-            if (nxt == reach).all():
-                break
-            reach = nxt
-        return pd.DataFrame(
-            {
-                "node": nodes_a,
-                "n_reachable": reach.sum(axis=1).astype("int64"),
-                "on_cycle": reach.diagonal().copy(),
-            }
-        )
-
-    id_t = _id_type(e, src)
-    schema = T.StructType(
-        [
-            T.StructField("node", id_t),
-            T.StructField("n_reachable", T.LongType()),
-            T.StructField("on_cycle", T.BooleanType()),
-        ]
+def _closure_census_kernel(pdf: pd.DataFrame, rounds: int) -> pd.DataFrame:
+    u = pdf["ku"].to_numpy()
+    v = pdf["kv"].to_numpy()
+    nodes_a = np.unique(np.concatenate([u, v]))
+    idx = {val: i for i, val in enumerate(nodes_a)}
+    n = len(nodes_a)
+    si = pdf["ku"].map(idx).to_numpy(dtype="int64")
+    di = pdf["kv"].map(idx).to_numpy(dtype="int64")
+    adj = np.zeros((n, n), dtype=bool)
+    adj[si, di] = True
+    reach = adj.copy()
+    for _ in range(rounds):
+        nxt = reach | (reach @ adj)  # bool matmul: OR over AND, no overflow
+        if (nxt == reach).all():
+            break
+        reach = nxt
+    return pd.DataFrame(
+        {
+            "node": nodes_a,
+            "n_reachable": reach.sum(axis=1).astype("int64"),
+            "on_cycle": reach.diagonal().copy(),
+        }
     )
-    ek = e.select(F.col(src).alias("ku"), F.col(dst).alias("kv"))
-    return ek.groupBy(F.lit(1).alias("g")).applyInPandas(kernel, schema=schema)
 
 
 def kcore_census(
@@ -609,15 +626,18 @@ def kcore_census(
     ``(node, core_degree long)`` — q_kcore's computation.
 
     Distributed shape per round: two semi-join filters against the
-    survivor set + one degree groupBy. Small graphs peel inside ONE Arrow
-    task with bincount degrees — integer counting over the identical
-    edge/survivor sets, so every round's degree table matches the
-    distributed one exactly."""
+    survivor set + one degree groupBy. Small graphs peel on the driver
+    (``driver_kernel``) with bincount degrees — integer counting over the
+    identical edge/survivor sets, so every round's degree table matches
+    the distributed one exactly."""
     e0 = checkpoint(edges.select(src, dst), eager=False)
-    if _kernel_ids_ok(e0, src, dst) and e0.count() <= small_graph_max_edges:
-        return _kcore_census_small_graph(
-            e0, src=src, dst=dst, k=k, rounds=rounds
-        )
+    small = _edge_kernel(
+        e0, src, dst, small_graph_max_edges,
+        lambda pdf: _kcore_census_kernel(pdf, int(k), int(rounds)),
+        "node {id}, core_degree long",
+    )
+    if small is not None:
+        return small
     e = (
         e0.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(e0.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -643,49 +663,25 @@ def kcore_census(
     )
 
 
-def _kcore_census_small_graph(
-    e0: DataFrame, *, src: str, dst: str, k: int, rounds: int
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    kk, rr = int(k), int(rounds)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        u = pdf["ku"].to_numpy()
-        v = pdf["kv"].to_numpy()
-        nodes_a = np.unique(np.concatenate([u, v]))
-        idx = {val: i for i, val in enumerate(nodes_a)}
-        n = len(nodes_a)
-        si0 = pdf["ku"].map(idx).to_numpy(dtype="int64")
-        di0 = pdf["kv"].map(idx).to_numpy(dtype="int64")
-        # symmetrize + dedupe (the distributed union ∪ reverse + distinct)
-        pair = np.unique(
-            np.concatenate(
-                [si0 * n + di0, di0 * n + si0]
-            )
-        )
-        su, sv = pair // n, pair % n
-        alive = np.ones(n, dtype=bool)
-        deg = np.zeros(n, dtype="int64")
-        for _ in range(rr):
-            m = alive[su] & alive[sv]
-            deg = np.bincount(su[m], minlength=n).astype("int64")
-            alive = deg >= kk
-        keep = deg >= kk
-        return pd.DataFrame(
-            {"node": nodes_a[keep], "core_degree": deg[keep]}
-        )
-
-    id_t = _id_type(e0, src)
-    schema = T.StructType(
-        [
-            T.StructField("node", id_t),
-            T.StructField("core_degree", T.LongType()),
-        ]
-    )
-    ek = e0.select(F.col(src).alias("ku"), F.col(dst).alias("kv"))
-    return ek.groupBy(F.lit(1).alias("g")).applyInPandas(kernel, schema=schema)
+def _kcore_census_kernel(pdf: pd.DataFrame, kk: int, rr: int) -> pd.DataFrame:
+    u = pdf["ku"].to_numpy()
+    v = pdf["kv"].to_numpy()
+    nodes_a = np.unique(np.concatenate([u, v]))
+    idx = {val: i for i, val in enumerate(nodes_a)}
+    n = len(nodes_a)
+    si0 = pdf["ku"].map(idx).to_numpy(dtype="int64")
+    di0 = pdf["kv"].map(idx).to_numpy(dtype="int64")
+    # symmetrize + dedupe (the distributed union ∪ reverse + distinct)
+    pair = np.unique(np.concatenate([si0 * n + di0, di0 * n + si0]))
+    su, sv = pair // n, pair % n
+    alive = np.ones(n, dtype=bool)
+    deg = np.zeros(n, dtype="int64")
+    for _ in range(rr):
+        m = alive[su] & alive[sv]
+        deg = np.bincount(su[m], minlength=n).astype("int64")
+        alive = deg >= kk
+    keep = deg >= kk
+    return pd.DataFrame({"node": nodes_a[keep], "core_degree": deg[keep]})
 
 
 def lpa_labels(
@@ -703,16 +699,21 @@ def lpa_labels(
     — q_communities_lpa's loop.
 
     Distributed shape per round: und ⋈ labels, (node,label) count,
-    row_number argmax, checkpoint. Small graphs run all rounds inside ONE
-    Arrow task: labels dictionary-encode to indices of the SORTED node
-    array, so "smallest label" is "smallest index" and np.argmax's
-    first-max-wins IS the tie-break; counting is exact integer scatter.
-    String ids are safe here: the kernel orders via np.unique (code-point
-    order) and Spark orders UTF-8 bytes — identical orders, since UTF-8
-    byte order preserves code points."""
+    row_number argmax, checkpoint. Small graphs run all rounds on the
+    driver (``driver_kernel``): labels dictionary-encode to indices of the
+    SORTED node array, so "smallest label" is "smallest index" and
+    np.argmax's first-max-wins IS the tie-break; counting is exact integer
+    scatter. String ids are safe here: the kernel orders via np.unique
+    (code-point order) and Spark orders UTF-8 bytes — identical orders,
+    since UTF-8 byte order preserves code points."""
     e0 = checkpoint(edges.select(src, dst), eager=False)
-    if _kernel_ids_ok(e0, src, dst) and e0.count() <= small_graph_max_edges:
-        return _lpa_labels_small_graph(e0, src=src, dst=dst, rounds=rounds)
+    small = _edge_kernel(
+        e0, src, dst, small_graph_max_edges,
+        lambda pdf: _lpa_labels_kernel(pdf, int(rounds)),
+        "node {id}, label {id}",
+    )
+    if small is not None:
+        return small
     und = (
         e0.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
@@ -741,34 +742,21 @@ def lpa_labels(
     return labels
 
 
-def _lpa_labels_small_graph(
-    e0: DataFrame, *, src: str, dst: str, rounds: int
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    rr = int(rounds)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        u = pdf["ku"].to_numpy()
-        v = pdf["kv"].to_numpy()
-        nodes_a = np.unique(np.concatenate([u, v]))
-        idx = {val: i for i, val in enumerate(nodes_a)}
-        n = len(nodes_a)
-        si = pdf["ku"].map(idx).to_numpy(dtype="int64")
-        di = pdf["kv"].map(idx).to_numpy(dtype="int64")
-        # und = oriented ∪ reversed (u < v ⇒ no dupes to dedupe)
-        su = np.concatenate([si, di])
-        sv = np.concatenate([di, si])
-        lab = np.arange(n, dtype="int64")
-        for _ in range(rr):
-            cnt = np.zeros((n, n), dtype="int64")
-            np.add.at(cnt, (su, lab[sv]), 1)
-            # first max = smallest label index = smallest label (sorted ids)
-            lab = cnt.argmax(axis=1)
-        return pd.DataFrame({"node": nodes_a, "label": nodes_a[lab]})
-
-    id_t = _id_type(e0, src)
-    schema = _ids_struct(id_t, "node", "label")
-    ek = e0.select(F.col(src).alias("ku"), F.col(dst).alias("kv"))
-    return ek.groupBy(F.lit(1).alias("g")).applyInPandas(kernel, schema=schema)
+def _lpa_labels_kernel(pdf: pd.DataFrame, rr: int) -> pd.DataFrame:
+    u = pdf["ku"].to_numpy()
+    v = pdf["kv"].to_numpy()
+    nodes_a = np.unique(np.concatenate([u, v]))
+    idx = {val: i for i, val in enumerate(nodes_a)}
+    n = len(nodes_a)
+    si = pdf["ku"].map(idx).to_numpy(dtype="int64")
+    di = pdf["kv"].map(idx).to_numpy(dtype="int64")
+    # und = oriented ∪ reversed (u < v ⇒ no dupes to dedupe)
+    su = np.concatenate([si, di])
+    sv = np.concatenate([di, si])
+    lab = np.arange(n, dtype="int64")
+    for _ in range(rr):
+        cnt = np.zeros((n, n), dtype="int64")
+        np.add.at(cnt, (su, lab[sv]), 1)
+        # first max = smallest label index = smallest label (sorted ids)
+        lab = cnt.argmax(axis=1)
+    return pd.DataFrame({"node": nodes_a, "label": nodes_a[lab]})

@@ -1928,9 +1928,9 @@ def q_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced."""
     # r12 (VERDICT r11 #1): the synchronous-rounds loop moved to
     # operators/graph.lpa_labels — metadata-sized graphs (one bounded edge
-    # count decides; brand ids dictionary-encode to sorted indices, so the
+    # fetch decides; brand ids dictionary-encode to sorted indices, so the
     # smallest-label tie-break is argmax's first-max-wins) run all rounds
-    # inside ONE Arrow task instead of 3 scheduler waves of join + count +
+    # on the driver instead of 3 scheduler waves of join + count +
     # window-argmax + checkpoint each; the distributed loop is unchanged
     # past the threshold (tests/test_graph_kernels.py).
     from ..operators.graph import lpa_labels
@@ -2633,8 +2633,8 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12 (VERDICT r11 #1): the peel loop moved to operators/graph.
     # kcore_census — the q_pagerank/q_dag_layers kernel pattern: a
-    # metadata-sized graph (one bounded edge count decides) peels all
-    # rounds inside ONE Arrow task instead of 3 scheduler waves of
+    # metadata-sized graph (one bounded edge fetch decides) peels all
+    # rounds on the driver instead of 3 scheduler waves of
     # semi-joins + degree groupBys; the distributed loop is unchanged past
     # the threshold and both paths are integer-identical by construction
     # (tests/test_graph_kernels.py).
@@ -3430,8 +3430,8 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     # r12 (VERDICT r11 #1): the multi-source BFS moved to operators/graph.
-    # hop_distances — metadata-sized graphs (one bounded edge count
-    # decides) expand all 9 levels inside ONE Arrow task on boolean
+    # hop_distances — metadata-sized graphs (one bounded edge fetch
+    # decides) expand all 9 levels on the driver on boolean
     # adjacency matrices instead of 8 scheduler waves of join + distinct +
     # anti-join + checkpoint + an empty-probe action each; the distributed
     # loop is unchanged past the threshold and both paths produce the
@@ -3904,8 +3904,8 @@ def q_dag_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     # r11: the relaxation loop moved to operators/graph.dag_depths — the
-    # q_pagerank pattern: metadata-sized DAGs (one bounded count decides)
-    # run the whole fixpoint in ONE Arrow task instead of ~10 scheduler
+    # q_pagerank pattern: metadata-sized DAGs (one bounded fetch decides)
+    # run the whole fixpoint on the driver instead of ~10 scheduler
     # waves of broadcast join + union + max-groupBy + eager checkpoint +
     # a Σd convergence action per hop; the distributed loop is unchanged
     # and remains the path past the node threshold (both paths proven
@@ -3989,8 +3989,8 @@ def q_cycle_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     # r12 (VERDICT r11 #1): the closure loop moved to operators/graph.
-    # closure_census — metadata-sized graphs (one bounded edge count
-    # decides) run the whole reach ∪= reach·adj fixpoint as ONE Arrow task
+    # closure_census — metadata-sized graphs (one bounded edge fetch
+    # decides) run the whole reach ∪= reach·adj fixpoint on the driver
     # on a boolean reachability matrix instead of ≤64 scheduler waves of
     # join + union + distinct + checkpoint + a count action each; the
     # distributed loop is unchanged past the threshold and both paths are
@@ -5032,8 +5032,8 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-path, and the anti-joins against closer levels remove everything
     # nearer — the same sets operators/graph.hop_distances produces), so
     # the three self-join + double-anti-join rounds collapse into the
-    # shared BFS operator: metadata-sized graphs run inside ONE Arrow
-    # task; the distributed BFS loop is unchanged past the threshold
+    # shared BFS operator: metadata-sized graphs run on the driver; the
+    # distributed BFS loop is unchanged past the threshold
     # (tests/test_graph_kernels.py pins level ≡ distance-class equality).
     from ..operators.graph import hop_distances
 

@@ -8,7 +8,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import table
+from ..session import scratch_dir, table
 from ..sources import io
 from ._registry import register
 
@@ -20,11 +20,11 @@ def _sfkey(sf_dir: str) -> str:
 
 
 def _scratch_dir() -> str:
-    """Sink scratch space inside the repo (gitignored) — round-trip queries
+    """Sink scratch space (``session.scratch_dir``) — round-trip queries
     write here then read back; the oracle checks against the original table.
     Keyed per process so concurrent runs can't race each other's
     overwrite-then-read cycle."""
-    d = f"/root/repo/.tmp/run_{os.getpid()}"
+    d = scratch_dir(f"run_{os.getpid()}")
     os.makedirs(d, exist_ok=True)
     return d
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scratch_dir
 from ..streaming import jobs, stateful
 from ._registry import register
 
@@ -142,7 +143,7 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    out_dir = f"/root/repo/.tmp/foreach_sink_{_sink('x', sf_dir)}"
+    out_dir = scratch_dir(f"foreach_sink_{_sink('x', sf_dir)}")
     shutil.rmtree(out_dir, ignore_errors=True)
 
     agg = (

@@ -103,6 +103,18 @@ def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(max(kb // 2048, 1024), 16 * 1024)}m"
 
 
+def scratch_dir(*parts: str) -> str:
+    """Local scratch path for the warehouse, durable checkpoints and sink
+    round trips: ``parts`` joined under ``$SPARK_GRAFT_SCRATCH`` if set,
+    else under ``.tmp/`` (gitignored) in the checkout that holds this
+    package — so a second checkout writes into its own tree, never into
+    another's. Creates nothing."""
+    root = os.environ.get("SPARK_GRAFT_SCRATCH") or os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+    )
+    return os.path.join(root, *parts)
+
+
 def get_spark(app_name: str = "apachebeam_python_spark") -> SparkSession:
     """Build a local session (tests / bench). The driver supplies its own."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -116,7 +128,7 @@ def get_spark(app_name: str = "apachebeam_python_spark") -> SparkSession:
         .config("spark.driver.memory", mem)
         .config("spark.driver.extraJavaOptions", f"-Xms{mem}")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", "/root/repo/.tmp/warehouse")
+        .config("spark.sql.warehouse.dir", scratch_dir("warehouse"))
         .getOrCreate()
     )
     return tune(spark)
@@ -174,7 +186,7 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
       into executor block storage. Fast and right-sized for local runs, but
       NOT fault-tolerant: blocks die with their executor, so one lost node
       in round 40 of a BPE train replays nothing — it kills the job.
-    - set (``1``/``true`` → repo scratch, or an explicit directory path):
+    - set (``1``/``true`` → :func:`scratch_dir`, or an explicit directory path):
       parquet WRITE-THROUGH — the round table is written to the durable
       store and read back with its original schema. Any executor (or even
       driver-restart-with-resume) can replan from the last completed round.
@@ -199,7 +211,7 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     root = (
         mode
         if mode.lower() not in ("1", "true", "yes")
-        else f"/root/repo/.tmp/durable_ckpt_{os.getpid()}"
+        else scratch_dir(f"durable_ckpt_{os.getpid()}")
     )
     path = os.path.join(root, f"round_{_CKPT_SEQ:06d}")
     df.write.mode("overwrite").parquet(path)

@@ -3,8 +3,9 @@ this makes it regression-proof): no driver-side row loops, no row-at-a-time
 Python UDFs, no full-table pandas materialization inside the engine.
 
 Allowed exceptions are DOCUMENTED bounded-metadata collects (k-means
-centroid sums: k × dim rows; CMS point reads: 10 rows) — each listed with
-its expected count so a NEW collect in those files still fails the test.
+centroid sums: k × dim rows; CMS point reads: 10 rows; the graph kernels'
+gate-capped Arrow fetch) — each listed with its expected count so a NEW
+collect in those files still fails the test.
 """
 
 from __future__ import annotations
@@ -18,8 +19,14 @@ import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "apachebeam_python_spark"
 
-#: file → number of sanctioned bounded-metadata `.collect()` calls
+#: file → number of sanctioned bounded driver-side materializations:
+#: `.collect()` and `.toArrow()` calls (both pull rows to the driver)
 ALLOWED_COLLECTS = {
+    # driver_kernel: the one fetch every size-gated graph kernel goes
+    # through — limit(max_rows + 1) caps it at the kernel's own gate
+    # (≤ 2048 edges for the r12 kernels, 1<<20 dedup pairs, 1<<22 DAG
+    # edges, 65536 pagerank nodes), so it is never a full-table pull
+    "operators/graph.py": 1,
     "operators/clustering.py": 4,  # seeds (k) + centroid sums (k*dim) + k-center seed (1) + per-round argmax (1)
     "operators/decomposition.py": 1,  # PCA moment partials (dim^2+dim+1 rows)
     "sources/avro_lite.py": 1,  # sink action: 1 row per write task (row counts)
@@ -54,12 +61,12 @@ def test_no_full_table_topandas_in_engine():
 
 def test_collects_are_exactly_the_documented_bounded_ones():
     for rel, src in _sources():
-        n = src.count(".collect()")
+        n = src.count(".collect()") + src.count(".toArrow()")
         allowed = ALLOWED_COLLECTS.get(rel, 0)
         assert n == allowed, (
-            f"{rel}: {n} .collect() calls, {allowed} sanctioned — a new "
-            "driver-side collect needs a bounded-size argument and an entry "
-            "in ALLOWED_COLLECTS"
+            f"{rel}: {n} .collect()/.toArrow() calls, {allowed} sanctioned "
+            "— a new driver-side collect needs a bounded-size argument and "
+            "an entry in ALLOWED_COLLECTS"
         )
 
 
@@ -202,3 +209,25 @@ def test_no_private_py4j_handles_in_query_paths():
         assert not re.search(r"\b_jdf\b|\b_jvm\b|\b_jsc\b", src), (
             f"{rel}: private py4j handle — non-public API on a query path"
         )
+
+
+def test_no_hard_coded_scratch_paths():
+    """Runtime scratch paths come from session.scratch_dir (the checkout
+    that holds the package, or $SPARK_GRAFT_SCRATCH): no module names this
+    checkout's absolute path or an absolute path into a ``.tmp`` scratch
+    tree, so a second checkout never writes into another's."""
+    checkout = str(PKG.parent)
+    for rel, src in _sources():
+        assert checkout not in src, f"{rel}: hard-codes the checkout path"
+        assert not re.search(r"[\"']/[^\"'\s]*/\.tmp\b", src), (
+            f"{rel}: absolute .tmp path — use session.scratch_dir"
+        )
+
+
+def test_scratch_dir_follows_checkout_or_env(monkeypatch):
+    from apachebeam_python_spark.session import scratch_dir
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    assert scratch_dir("warehouse") == str(PKG.parent / ".tmp" / "warehouse")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", "/elsewhere")
+    assert scratch_dir("run_1") == "/elsewhere/run_1"
