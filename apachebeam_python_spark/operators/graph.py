@@ -184,6 +184,7 @@ def pagerank(
     nn = nodes.agg(F.count("*").alias("n"))
     base = checkpoint(nodes.select(node).crossJoin(F.broadcast(nn)))
     teleport = F.lit(1.0) - F.lit(damping)
+    scale = F.lit(10.0 ** round_dp)
     ranks = base.select(node, (F.lit(1.0) / F.col("n")).alias("r"))
     for i in range(iterations):
         contrib = (
@@ -199,14 +200,24 @@ def pagerank(
             .crossJoin(F.broadcast(dang))
             .select(
                 node,
-                F.round(
-                    teleport / F.col("n")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("con"), F.lit(0.0))
-                        + F.col("dm") / F.col("n")
-                    ),
-                    round_dp,
+                # the kernel's half-away rounding of the binary value:
+                # F.round rounds the shortest decimal repr instead and
+                # disagrees on ties it only appears to hit (0.1290341755
+                # is 129034175.49999999 × 1e-9, an 8-edge chain's rank)
+                (
+                    F.floor(
+                        (
+                            teleport / F.col("n")
+                            + F.lit(damping)
+                            * (
+                                F.coalesce(F.col("con"), F.lit(0.0))
+                                + F.col("dm") / F.col("n")
+                            )
+                        )
+                        * scale
+                        + F.lit(0.5)
+                    )
+                    / scale
                 ).alias("r"),
             )
         )
@@ -235,11 +246,12 @@ def _pagerank_small_graph(
     probabilities arrive precomputed in ``en``; each round is
     teleport/n + d·(Σ r·p per dst + dangling_mass/n), rounded HALF-AWAY to
     ``round_dp`` decimals (``floor(x·10^k + 0.5)`` — ranks are positive —
-    the same decision F.round and DuckDB's round make away from the
-    ~1-ulp half-boundary class, and the per-round 1e-9 round swallows
-    numpy-vs-SQL sum-order drift exactly as it swallows Spark-vs-DuckDB
-    drift in the distributed path). Edges whose endpoints are not in the
-    node list are ignored, matching the distributed joins' semantics."""
+    the same expression the distributed loop evaluates, and the decision
+    DuckDB's round makes on the binary value; the per-round 1e-9 round
+    swallows numpy-vs-SQL sum-order drift exactly as it swallows
+    Spark-vs-DuckDB drift in the distributed path). Edges whose endpoints
+    are not in the node list are ignored, matching the distributed joins'
+    semantics."""
     damping_f, iters, dp = float(damping), int(iterations), int(round_dp)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:

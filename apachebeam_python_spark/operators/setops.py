@@ -1,9 +1,10 @@
 """Set operators (SURVEY.md §2.6): Beam ``Flatten`` and the SQL set algebra.
 
 ``flatten`` is UNION ALL — a zero-shuffle metadata union (Beam's Flatten is
-likewise free). distinct/intersect/except each cost one hash-aggregate
-shuffle; at scale prefer pre-aggregated inputs so the shuffle carries keys,
-not raw rows.
+likewise free). Distinct, INTERSECT and EXCEPT are the plain DataFrame
+methods (``distinct``, ``intersect``, ``subtract``); each costs one
+hash-aggregate shuffle, so at scale prefer pre-aggregated inputs so the
+shuffle carries keys, not raw rows (the count-based form of q_setops).
 """
 
 from __future__ import annotations
@@ -17,21 +18,6 @@ def flatten(*dfs: DataFrame) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out
-
-
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    """Flatten + Distinct (SQL UNION)."""
-    return flatten(*dfs).distinct()
-
-
-def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
-    """SQL INTERSECT (distinct semantics)."""
-    return a.intersect(b)
-
-
-def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    """SQL EXCEPT (distinct semantics)."""
-    return a.subtract(b)
 
 
 def except_all(a: DataFrame, b: DataFrame) -> DataFrame:

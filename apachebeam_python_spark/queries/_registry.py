@@ -40,8 +40,9 @@ def register(
     """Register a named query; ``oracle`` is DuckDB SQL or None (rows-only).
 
     ``driver=False`` keeps the query (and its oracle) in the local pytest
-    sweep but off the driver contract — used for folded-out variants whose
-    capability is proven by a merged driver query (VERDICT r1 #1).
+    sweep but off the driver contract (VERDICT r1 #1). A variant folded into
+    a merged query is deleted instead, once tests/test_plans.py's SUBSUMED
+    table shows the merged plan carries its operator.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

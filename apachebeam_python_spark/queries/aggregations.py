@@ -12,7 +12,7 @@ from ._registry import register
 
 @register(
     "q_agg_sum",
-    driver=False,  # folded into q_agg_combine
+    driver=False,  # kept: tests pin its one-exchange CombinePerKey plan
     oracle="""
 SELECT l_returnflag,
        round(sum(l_quantity), 2)      AS sum_qty,
@@ -28,135 +28,6 @@ def q_agg_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum_qty=F.round(F.sum("l_quantity"), 2),
         sum_price=F.round(F.sum("l_extendedprice"), 2),
     )
-
-
-@register(
-    "q_agg_multi",
-    driver=False,  # folded into q_agg_combine
-    oracle="""
-SELECT l_linestatus,
-       count(*)                            AS n,
-       round(min(l_extendedprice), 2)      AS min_price,
-       round(max(l_extendedprice), 2)      AS max_price,
-       count(DISTINCT l_partkey)           AS nd_parts,
-       round(sum(l_quantity), 2)           AS sum_qty
-FROM lineitem GROUP BY l_linestatus
-""",
-)
-def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CombinePerKey with many accumulators incl. exact distinct count."""
-    return agg.combine_per_key(
-        table(spark, sf_dir, "lineitem"),
-        ["l_linestatus"],
-        n=F.count("*"),
-        min_price=F.round(F.min("l_extendedprice"), 2),
-        max_price=F.round(F.max("l_extendedprice"), 2),
-        nd_parts=F.countDistinct("l_partkey"),
-        sum_qty=F.round(F.sum("l_quantity"), 2),
-    )
-
-
-@register(
-    "q_agg_global",
-    driver=False,  # folded into q_agg_combine
-    oracle="""
-SELECT count(*)                        AS n_orders,
-       round(sum(o_totalprice), 2)     AS total,
-       round(avg(o_totalprice), 6)     AS avg_price,
-       count(DISTINCT o_custkey)       AS n_customers
-FROM orders
-""",
-)
-def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CombineGlobally: whole-dataset combine to one row."""
-    return agg.combine_globally(
-        table(spark, sf_dir, "orders"),
-        n_orders=F.count("*"),
-        total=F.round(F.sum("o_totalprice"), 2),
-        avg_price=F.round(F.avg("o_totalprice"), 6),
-        n_customers=F.countDistinct("o_custkey"),
-    )
-
-
-@register(
-    "q_agg_avg",
-    driver=False,  # folded into q_agg_combine
-    oracle="""
-SELECT c_mktsegment, round(avg(c_acctbal), 6) AS avg_bal, count(*) AS n
-FROM customer GROUP BY c_mktsegment
-""",
-)
-def q_agg_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean.PerKey (avg rounded at 6 — half-way cases need an exact 7th
-    decimal digit of 5, vanishingly rare for sum/count rationals)."""
-    return agg.combine_per_key(
-        table(spark, sf_dir, "customer"),
-        ["c_mktsegment"],
-        avg_bal=F.round(F.avg("c_acctbal"), 6),
-        n=F.count("*"),
-    )
-
-
-@register(
-    "q_count_per_element",
-    driver=False,  # subsumed: keyed counts in q_agg_combine/q_wordcount
-    oracle="SELECT event_type, count(*) AS n FROM events GROUP BY event_type",
-)
-def q_count_per_element(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count.PerElement — the canonical Beam counting combine."""
-    return agg.count_per_element(table(spark, sf_dir, "events"), "event_type")
-
-
-@register(
-    "q_distinct",
-    driver=False,  # subsumed: distinct-union arm of q_setops + q_dedup_exact
-    oracle="SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders",
-)
-def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct: exact dedup of the projected pair."""
-    return agg.distinct_rows(table(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority")
-
-
-@register(
-    "q_groupbykey_collect",
-    driver=False,  # folded into q_groupbykey_batches
-    oracle="""
-SELECT user_id,
-       array_to_string(list(event_type ORDER BY event_type), ',')                       AS values,
-       array_to_string(list_sort(list(DISTINCT event_type)), ',')                       AS value_set
-FROM events GROUP BY user_id
-""",
-)
-def q_groupbykey_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GroupByKey materialized to (K, sorted list[V]) + ToSet — both
-    accumulators in ONE combine (single scan, single shuffle; a join of two
-    separate groupBys would shuffle three times). Lists sorted AND serialized
-    to CSV strings in both engines: raw array columns crash the driver's
-    pandas canonicalizer (VERDICT r1 #2); the array form stays covered by
-    operator-level pytest."""
-    e = table(spark, sf_dir, "events")
-    return agg.combine_per_key(
-        e,
-        ["user_id"],
-        values=F.array_join(F.array_sort(F.collect_list("event_type")), ","),
-        value_set=F.array_join(F.array_sort(F.collect_set("event_type")), ","),
-    )
-
-
-@register(
-    "q_topk_global",
-    driver=False,  # folded into q_order_limit (same TakeOrdered plan)
-    oracle="""
-SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
-FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
-""",
-)
-def q_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top.Of(10) → TakeOrderedAndProject (no global sort). o_orderkey
-    tiebreak makes the selection total-ordered, hence deterministic."""
-    o = table(spark, sf_dir, "orders")
-    top = agg.top_k_global(o, [F.col("o_totalprice").desc(), F.col("o_orderkey")], 10)
-    return top.select("o_orderkey", F.round("o_totalprice", 2).alias("totalprice"))
 
 
 @register(
@@ -203,26 +74,6 @@ def q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_rollup",
-    driver=False,  # subsumed by q_cube (superset of grouping sets)
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       CAST(grouping(l_returnflag) AS INTEGER) + CAST(grouping(l_linestatus) AS INTEGER) AS lvl,
-       count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-)
-def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical subtotals (SQL-engine completeness beyond Beam, §2.3)."""
-    l = table(spark, sf_dir, "lineitem")
-    return l.rollup("l_returnflag", "l_linestatus").agg(
-        (F.grouping("l_returnflag").cast("int") + F.grouping("l_linestatus").cast("int")).alias("lvl"),
-        F.count("*").alias("n"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-    )
-
-
-@register(
     "q_cube",
     driver=False,  # rotated off r8: grouping-sets family proven r2-r7
     oracle="""
@@ -236,30 +87,6 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
-    )
-
-
-@register(
-    "q_group_into_batches",
-    driver=False,  # folded into q_groupbykey_batches
-    oracle="""
-WITH per_key AS (
-  SELECT user_id, list(event_id ORDER BY event_id) AS vals FROM events GROUP BY user_id
-)
-SELECT user_id,
-       array_to_string(
-         unnest(list_transform(range(1, CAST(ceil(len(vals) / 50.0) AS BIGINT) + 1),
-                               i -> vals[(i - 1) * 50 + 1 : i * 50])), ',') AS batch
-FROM per_key
-""",
-)
-def q_group_into_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GroupIntoBatches(50): per-key sorted ids chunked into ≤50-element
-    batches, exploded one row per batch (SURVEY §2.3). Batches serialized to
-    CSV strings in both engines (driver canonicalizer, VERDICT r1 #2)."""
-    out = agg.group_into_batches(table(spark, sf_dir, "events"), ["user_id"], "event_id", 50)
-    return out.withColumn(
-        "batch", F.array_join(F.transform("batch", lambda x: x.cast("string")), ",")
     )
 
 
@@ -312,8 +139,8 @@ FROM lineitem
 """,
 )
 def q_agg_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CombinePerKey + CombineGlobally in one driver row (SURVEY §2.3; folds
-    q_agg_sum/q_agg_multi/q_agg_avg/q_agg_global, pytest-only): the same
+    """CombinePerKey + CombineGlobally in one driver row (SURVEY §2.3; its
+    plan also proves Count.PerElement's keyed count and Mean.PerKey): the same
     multi-accumulator combine (count/min/max/exact-distinct/sum/mean) keyed
     by linestatus, unioned with the whole-dataset form tagged '<global>'.
     Both arms are single-shuffle partial+final HashAggregates; the global arm
@@ -362,8 +189,7 @@ FROM per_key
 )
 def q_groupbykey_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GroupByKey (ToList + ToSet accumulators) AND GroupIntoBatches(50) in
-    one tagged driver row (SURVEY §2.3; folds q_groupbykey_collect /
-    q_group_into_batches, pytest-only). Arms: 'values' = sorted per-key list,
+    one tagged driver row (SURVEY §2.3). Arms: 'values' = sorted per-key list,
     'value_set' = sorted distinct set, 'batch' = sorted ids chunked to ≤50
     with batch_idx from posexplode. All lists serialized to CSV strings in
     both engines (driver canonicalizer, VERDICT r1 #2)."""

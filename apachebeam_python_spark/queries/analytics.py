@@ -31,10 +31,9 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical CombineFn family: stddev/variance/correlation/covariance —
     all mergeable sketch-free accumulators (sum, sum², sum-of-products),
     partial+final like any agg — plus EXACT interpolated percentiles (Spark
-    ``percentile`` ≡ DuckDB ``quantile_cont``; folds q_agg_median,
-    pytest-only). The exact percentile needs the full per-group multiset —
-    at 100 TB use the sketch arm of q_approx_sample; this is its
-    correctness anchor."""
+    ``percentile`` ≡ DuckDB ``quantile_cont``). The exact percentile needs
+    the full per-group multiset — at 100 TB use the sketch arm of
+    q_approx_sample; this is its correctness anchor."""
     c = table(spark, sf_dir, "customer")
     return c.groupBy("c_mktsegment").agg(
         F.round(F.stddev_samp("c_acctbal"), 6).alias("sd_bal"),
@@ -43,51 +42,6 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.covar_pop("c_acctbal", "c_nationkey"), 4).alias("covar_bal_nation"),
         F.round(F.percentile("c_acctbal", F.lit(0.5)), 4).alias("median_bal"),
         F.round(F.percentile("c_acctbal", F.lit(0.9)), 4).alias("p90_bal"),
-    )
-
-
-@register(
-    "q_agg_median",
-    driver=False,  # folded into q_agg_stats (percentile columns)
-    oracle="""
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.5), 4)  AS median_price,
-       round(quantile_cont(o_totalprice, 0.9), 4)  AS p90_price
-FROM orders GROUP BY o_orderpriority
-""",
-)
-def q_agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT interpolated percentiles (Spark ``percentile`` ≡ DuckDB
-    ``quantile_cont``). The exact form needs the full value multiset per
-    group — use q_approx_quantiles' sketches at 100 TB; this is the
-    correctness anchor for them."""
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("median_price"),
-        F.round(F.percentile("o_totalprice", F.lit(0.9)), 4).alias("p90_price"),
-    )
-
-
-@register(
-    "q_grouping_sets",
-    driver=False,  # subsumed by q_cube
-    oracle="""
-SELECT l_returnflag, l_linestatus, count(*) AS n, round(sum(l_extendedprice), 2) AS total
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-""",
-)
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (the general form behind rollup/cube)."""
-    l = table(spark, sf_dir, "lineitem")
-    l.createOrReplaceTempView("lineitem_gs")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus, count(*) AS n,
-               round(sum(l_extendedprice), 2) AS total
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
     )
 
 
@@ -630,7 +584,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cast diverges cross-engine on fractional seconds (Spark floors,
     DuckDB's epoch rounds). One user_id shuffle shared by the lead window
     and the agg. Rounded at 6 dp in both engines (sum-order ulp drift —
-    same convention as q_agg_avg)."""
+    same convention as q_agg_combine's avg_price)."""
     from pyspark.sql import Window
 
     e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())

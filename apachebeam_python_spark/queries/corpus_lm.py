@@ -1010,14 +1010,14 @@ FROM m
 )
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORCAST readability grade per document (SURVEY §2.11 text-quality
-    tier, beside q_quality_score/q_token_entropy): grade = 20 − 15·(share
-    of monosyllabic words), the one classic readability formula that needs
-    NO sentence boundaries — which is exactly what whitespace-tokenized
-    training corpora lack. Syllables are vowel-group counts (the standard
-    heuristic), monosyllable = exactly one [aeiou]+ run; both engines run
-    the identical regex from the Java/RE2-agreed subset inside a
-    higher-order list filter, so the census is exact integers and the
-    grade one shared double expression.
+    tier, beside q_doc_features' quality score and q_token_entropy):
+    grade = 20 − 15·(share of monosyllabic words), the one classic
+    readability formula that needs NO sentence boundaries — which is
+    exactly what whitespace-tokenized training corpora lack. Syllables are
+    vowel-group counts (the standard heuristic), monosyllable = exactly one
+    [aeiou]+ run; both engines run the identical regex from the
+    Java/RE2-agreed subset inside a higher-order list filter, so the census
+    is exact integers and the grade one shared double expression.
 
     Scale: zero shuffles — the whole census is per-row lambda arithmetic
     fused into the scan; at 100 TB this is a free column on any pass over

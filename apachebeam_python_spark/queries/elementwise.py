@@ -13,68 +13,6 @@ from ._registry import register
 
 
 @register(
-    "q_project",
-    driver=False,  # folded into q_elementwise
-    oracle="""
-SELECT
-  l_orderkey,
-  l_linenumber,
-  round(l_extendedprice * (1 - l_discount), 4) AS revenue,
-  l_returnflag || '/' || l_linestatus           AS flag_status
-FROM lineitem
-""",
-)
-def q_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam ``Map`` (1→1 computed projection) — narrow, codegen-fused."""
-    l = table(spark, sf_dir, "lineitem")
-    return ew.map_rows(
-        l,
-        l_orderkey=F.col("l_orderkey"),
-        l_linenumber=F.col("l_linenumber"),
-        # rounded at the product's exact decimal depth (2dec × 2dec = 4dec):
-        # shallower rounding hits X.XX5 half-way cases where Spark (decimal
-        # HALF_UP) and DuckDB (binary) disagree — SURVEY §7.4.4.
-        revenue=F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4),
-        flag_status=F.concat_ws("/", "l_returnflag", "l_linestatus"),
-    )
-
-
-@register(
-    "q_filter",
-    driver=False,  # folded into q_elementwise
-    oracle="""
-SELECT p_partkey, p_brand, p_type, p_size
-FROM part
-WHERE p_type LIKE 'PROMO%' AND p_size >= 25 AND p_brand <> 'Brand#33'
-""",
-)
-def q_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam ``Filter`` — compound predicate, fully pushdown-eligible."""
-    p = table(spark, sf_dir, "part")
-    pred = (
-        F.col("p_type").like("PROMO%")
-        & (F.col("p_size") >= 25)
-        & (F.col("p_brand") != "Brand#33")
-    )
-    return ew.filter_rows(p, pred).select("p_partkey", "p_brand", "p_type", "p_size")
-
-
-@register(
-    "q_flatmap_explode",
-    driver=False,  # folded into q_elementwise
-    oracle="""
-SELECT doc_id, unnest(string_split(text, ' ')) AS word
-FROM documents
-WHERE lang = 'en'
-""",
-)
-def q_flatmap_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam ``FlatMap`` (1→N): tokenize text and emit one row per token."""
-    d = table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    return ew.flat_map_explode(d, F.split("text", " "), "word", "doc_id")
-
-
-@register(
     "q_partition",
     oracle="""
 SELECT user_id % 5 AS bucket, count(*) AS n, round(sum(value), 2) AS sum_value
@@ -155,8 +93,7 @@ def q_elementwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §2.2 element-wise trio in one driver row — Beam ``Filter`` (lang +
     length predicate, pushdown-eligible), ``Map`` (computed src_tag
     projection), ``FlatMap`` (tokenize → one row per token) plus a post-Map
-    on the exploded rows. Folds q_project / q_filter / q_flatmap_explode
-    (pytest-only); all narrow, one codegen stage, zero shuffles."""
+    on the exploded rows. All narrow, one codegen stage, zero shuffles."""
     d = table(spark, sf_dir, "documents").filter(
         (F.col("lang") == "en") & (F.col("n_chars") >= 50)
     )

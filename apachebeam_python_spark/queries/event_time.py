@@ -21,7 +21,7 @@ from ._registry import register
 
 @register(
     "q_tumbling_window",
-    driver=False,  # folded into q_windows_fixed_sliding
+    driver=False,  # kept: timed by perfbench, bench.py and PLAN_SHA_BASELINE
     oracle="""
 SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP)                     AS window_start,
        CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR   AS window_end,
@@ -39,36 +39,6 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "1 hour",
         keys=["event_type"],
-        n=F.count("*"),
-        sum_value=F.round(F.sum("value"), 2),
-    )
-
-
-@register(
-    "q_sliding_window",
-    driver=False,  # folded into q_windows_fixed_sliding
-    oracle="""
-SELECT ws AS window_start,
-       ws + INTERVAL 2 HOUR AS window_end,
-       count(*)             AS n,
-       round(sum(value), 2) AS sum_value
-FROM (
-  SELECT unnest([CAST(date_trunc('hour', ts) AS TIMESTAMP),
-                 CAST(date_trunc('hour', ts) AS TIMESTAMP) - INTERVAL 1 HOUR]) AS ws,
-         value
-  FROM events
-)
-GROUP BY ws
-""",
-)
-def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SlidingWindows(size=2h, period=1h): every event in exactly 2 windows
-    (epoch-aligned starts at trunc(ts,1h) and trunc(ts,1h)−1h)."""
-    return ET.sliding(
-        table(spark, sf_dir, "events"),
-        "ts",
-        "2 hours",
-        "1 hour",
         n=F.count("*"),
         sum_value=F.round(F.sum("value"), 2),
     )
@@ -162,7 +132,7 @@ GROUP BY ws
 )
 def q_windows_fixed_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FixedWindows(1h) and SlidingWindows(2h, 1h) in one tagged driver row
-    (SURVEY §2.8; folds q_tumbling_window / q_sliding_window, pytest-only).
+    (SURVEY §2.8; q_tumbling_window keeps a benchmarked tumbling-only form).
     'tumbling' arm keys by event_type; 'sliding' arm is unkeyed (grp='') with
     every event in exactly 2 epoch-aligned windows. Each arm is one windowed
     partial+final agg; Spark expands sliding assignment at map time (the same

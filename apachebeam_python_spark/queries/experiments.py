@@ -1186,7 +1186,7 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     part of their columns union by NAME with missing columns null-filled
     (``unionByName(allowMissingColumns=True)``) — the schema-evolution
     staple when a field was added to one feed but not another. Positional
-    UNION (q_union_all) would silently misalign; by-name is the safe form.
+    UNION ALL would silently misalign; by-name is the safe form.
 
     Scale: pure narrow concatenation — no shuffle, each source keeps its
     own partitioning and pushdown."""

@@ -17,7 +17,7 @@ from ._registry import register
 
 @register(
     "q_join_inner",
-    driver=False,  # folded into q_join_equi
+    driver=False,  # kept: timed by perfbench, bench.py and PLAN_SHA_BASELINE
     oracle="""
 SELECT n_name, count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
 FROM orders
@@ -37,28 +37,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.groupBy("n_name").agg(
         F.count("*").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
-
-
-@register(
-    "q_join_left",
-    driver=False,  # folded into q_join_equi
-    oracle="""
-SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
-       round(coalesce(sum(o_totalprice), 0), 2) AS spend
-FROM customer
-LEFT JOIN orders ON o_custkey = c_custkey AND o_orderstatus = 'F'
-GROUP BY c_custkey, c_name
-""",
-)
-def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join keeping customers with zero matches (count=0 rows)."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    j = J.equi_join(c, o, F.col("o_custkey") == F.col("c_custkey"), how="left")
-    return j.groupBy("c_custkey", "c_name").agg(
-        F.count("o_orderkey").alias("n_orders"),
-        F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("spend"),
     )
 
 
@@ -90,42 +68,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)"))
             ).cast("double"), 4,
         ).alias("revenue"),
-    )
-
-
-@register(
-    "q_join_semi",
-    driver=False,  # folded into q_join_semi_anti
-    oracle="""
-SELECT c_custkey, c_name FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-""",
-)
-def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS → left_semi: no column leakage, no row multiplication."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return J.semi_join(c, o, F.col("c_custkey") == F.col("o_custkey")).select(
-        "c_custkey", "c_name"
-    )
-
-
-@register(
-    "q_join_anti",
-    driver=False,  # folded into q_join_semi_anti
-    oracle="""
-SELECT c_custkey, c_mktsegment FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-""",
-)
-def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS → left_anti (customers with no urgent orders; non-empty)."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return J.anti_join(c, o, F.col("c_custkey") == F.col("o_custkey")).select(
-        "c_custkey", "c_mktsegment"
     )
 
 
@@ -260,7 +202,7 @@ GROUP BY c_custkey, c_name
 )
 def q_join_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi inner + left outer joins in one tagged driver row (SURVEY §2.4;
-    folds q_join_inner / q_join_left, pytest-only). 'inner' arm: star join
+    q_join_inner keeps a benchmarked inner-only form). 'inner' arm: star join
     orders→customer→nation with broadcast dims; 'left' arm: per-customer
     order counts keeping the zero-match rows (count=0, spend=0). The fact
     side takes at most one shuffle per arm; dims broadcast."""
@@ -301,10 +243,9 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 )
 def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS → left_semi and NOT EXISTS → left_anti in one tagged driver row
-    (SURVEY §2.4; folds q_join_semi / q_join_anti, pytest-only). The two arms
-    partition the customer table exactly (semi ∪ anti = all customers) — the
-    union makes that invariant hash-checked. No column leakage, no row
-    multiplication in either arm."""
+    (SURVEY §2.4). The two arms partition the customer table exactly (semi ∪
+    anti = all customers) — the union makes that invariant hash-checked. No
+    column leakage, no row multiplication in either arm."""
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     semi = J.semi_join(c, o, F.col("c_custkey") == F.col("o_custkey")).select(

@@ -68,28 +68,6 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_token_count",
-    driver=False,  # folded into q_doc_features
-    oracle="""
-SELECT doc_id,
-       len(string_split(text, ' '))                          AS ws_tokens,
-       len(list_distinct(string_split(text, ' ')))           AS distinct_tokens,
-       len(regexp_extract_all(text, '[a-z0-9]+'))            AS re_tokens
-FROM documents
-""",
-)
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace + regex tokenizers (SURVEY §2.11)."""
-    d = table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        T.token_count(F.col("text")).alias("ws_tokens"),
-        T.distinct_token_count(F.col("text")).alias("distinct_tokens"),
-        F.size(T.regex_tokens(F.col("text"))).alias("re_tokens"),
-    )
-
-
 _MARKER_SQL = {
     lang: "[" + ", ".join(f"'{m}'" for m in marks) + "]"
     for lang, marks in T.LANG_MARKERS.items()
@@ -108,55 +86,8 @@ _PRED_SQL = (
 
 
 @register(
-    "q_lang_id",
-    driver=False,  # folded into q_doc_features
-    oracle=f"""
-WITH scored AS (
-  SELECT lang, {_SCORES_SQL} FROM documents
-), best AS (
-  SELECT lang, {_BEST_SQL} AS best, s_en, s_es, s_de, s_fr, s_zh FROM scored
-)
-SELECT lang, {_PRED_SQL} AS predicted, count(*) AS n
-FROM best GROUP BY 1, 2
-""",
-)
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic: marker-word hit counts → argmax with fixed tie
-    precedence; output = confusion counts actual × predicted. (Mechanism
-    demo — fixture text is a shared synthetic vocabulary; see
-    functions.text.LANG_MARKERS.)"""
-    d = table(spark, sf_dir, "documents")
-    return (
-        d.withColumn("predicted", T.lang_predict(F.col("text")))
-        .groupBy("lang", "predicted")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@register(
-    "q_quality_score",
-    driver=False,  # folded into q_doc_features
-    oracle="""
-SELECT doc_id,
-       round(0.3 * (len(list_distinct(w)) / n)
-           + 0.5 * (1.0 - (len(list_filter(w, x -> list_contains(['the','a','of','and','or'], x))) / n))
-           + 0.2 * least(n / 100.0, 1.0), 6) AS quality
-FROM (SELECT doc_id, string_split(text, ' ') AS w,
-             CAST(len(string_split(text, ' ')) AS DOUBLE) AS n
-      FROM documents)
-""",
-)
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: lexical diversity + non-stopword density + length
-    adequacy (functions.text.quality_score; oracle mirrors it term by term
-    in the same evaluation order)."""
-    d = table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.round(T.quality_score(F.col("text")), 6).alias("quality"))
-
-
-@register(
     "q_fingerprint",
-    driver=False,  # folded into q_doc_features
+    driver=False,  # kept: the only caller of dedup.fingerprint_groups
     oracle="""
 SELECT md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS fp,
        min(doc_id)                  AS keep_id,
@@ -589,14 +520,13 @@ FROM best
 )
 def q_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document text-analysis feature vector in ONE driver row (SURVEY
-    §2.11; folds q_token_count / q_quality_score / q_lang_id / q_fingerprint,
-    pytest-only — detailed notes live there): whitespace/distinct/regex token
-    counts, the composite quality score, marker-based language ID, and the
-    8-token-prefix fingerprint with its duplicate-group size via a window
-    count. Everything is a JVM expression over one scan — the shape of a real
-    corpus feature-extraction pass (one narrow stage + one fp-window
-    shuffle); at 100 TB the fp_count window rides the same hash shuffle an
-    exact-dedup pass needs anyway."""
+    §2.11; q_fingerprint keeps the grouped fingerprint clusters):
+    whitespace/distinct/regex token counts, the composite quality score,
+    marker-based language ID, and the 8-token-prefix fingerprint with its
+    duplicate-group size via a window count. Everything is a JVM expression
+    over one scan — the shape of a real corpus feature-extraction pass (one
+    narrow stage + one fp-window shuffle); at 100 TB the fp_count window
+    rides the same hash shuffle an exact-dedup pass needs anyway."""
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")

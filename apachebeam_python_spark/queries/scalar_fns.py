@@ -15,154 +15,6 @@ from ._registry import register
 
 
 @register(
-    "q_fn_string",
-    driver=False,  # folded into q_fn_scalar
-    oracle="""
-SELECT
-  p_partkey,
-  upper(p_name)                                   AS name_up,
-  length(p_name)                                  AS name_len,
-  substring(p_name, 1, 8)                         AS name_pfx,
-  regexp_extract(p_brand, 'Brand#(\\d+)', 1)      AS brand_num,
-  concat_ws('|', p_brand, p_type)                 AS brand_type,
-  lpad(CAST(p_size AS VARCHAR), 3, '0')           AS size_pad,
-  replace(p_type, ' ', '_')                       AS type_snake,
-  trim('  ' || p_brand || ' ')                    AS brand_trim,
-  instr(p_type, 'BRUSHED')                        AS brushed_at
-FROM part
-""",
-)
-def q_fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String family: upper/length/substring/regexp_extract/concat_ws/lpad/
-    replace/trim/instr. Dialect note: Spark ``instr`` and DuckDB ``instr``
-    are both 1-based with 0 for no-match."""
-    p = table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_up"),
-        F.length("p_name").alias("name_len"),
-        F.substring("p_name", 1, 8).alias("name_pfx"),
-        F.regexp_extract("p_brand", r"Brand#(\d+)", 1).alias("brand_num"),
-        F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
-        F.lpad(F.col("p_size").cast("string"), 3, "0").alias("size_pad"),
-        F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
-        F.trim(F.concat(F.lit("  "), F.col("p_brand"), F.lit(" "))).alias("brand_trim"),
-        F.instr(F.col("p_type"), "BRUSHED").alias("brushed_at"),
-    )
-
-
-@register(
-    "q_fn_date",
-    driver=False,  # folded into q_fn_scalar
-    oracle="""
-SELECT
-  o_orderkey,
-  year(o_orderdate)                                            AS yr,
-  month(o_orderdate)                                           AS mo,
-  day(o_orderdate)                                             AS dom,
-  CAST(date_trunc('month', o_orderdate) AS TIMESTAMP)          AS month_start,
-  date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since,
-  -- TIMESTAMP, not DATE: DuckDB DATE → pandas datetime64 ('… 00:00:00')
-  -- while Spark DateType → datetime.date ('1997-01-31') — driver hash-fail
-  CAST(CAST(o_orderdate AS DATE) + 30 AS TIMESTAMP)            AS due_date,
-  CAST(epoch(o_orderdate) AS BIGINT)                           AS epoch_s
-FROM orders
-WHERE year(o_orderdate) = 1997
-""",
-)
-def q_fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date/time family. Parity notes: Spark ``datediff`` is calendar-day
-    difference (casts to date) = DuckDB ``date_diff('day', d1, d2)`` on DATEs;
-    ``unix_timestamp`` under a UTC session = DuckDB ``epoch`` on naive ts."""
-    o = table(spark, sf_dir, "orders")
-    return o.filter(F.year("o_orderdate") == 1997).select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.month("o_orderdate").alias("mo"),
-        F.dayofmonth("o_orderdate").alias("dom"),
-        F.date_trunc("month", "o_orderdate").alias("month_start"),
-        F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date")).alias("days_since"),
-        F.date_add(F.col("o_orderdate").cast("date"), 30).cast("timestamp").alias("due_date"),
-        F.unix_timestamp("o_orderdate").alias("epoch_s"),
-    )
-
-
-@register(
-    "q_fn_math",
-    driver=False,  # folded into q_fn_scalar
-    oracle="""
-SELECT
-  l_orderkey,
-  l_linenumber,
-  round(l_quantity * l_quantity, 4)        AS qty_sq,
-  round(sqrt(l_extendedprice), 6)          AS price_sqrt,
-  round(ln(l_extendedprice + 1), 6)        AS price_ln,
-  CAST(floor(l_quantity / 7) AS BIGINT)    AS qty_div7,
-  CAST(ceil(l_discount * 100) AS BIGINT)   AS disc_pct_ceil,
-  abs(l_quantity - 25)                     AS qty_dev,
-  CAST(sign(l_discount - 0.05) AS DOUBLE)  AS disc_sign,
-  greatest(l_tax, l_discount)              AS max_rate,
-  least(l_tax, l_discount)                 AS min_rate,
-  l_orderkey % 7                           AS key_mod7
-FROM lineitem
-WHERE l_linenumber = 1
-""",
-)
-def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math family. Parity notes: Spark ``floor``/``ceil`` return LONG while
-    DuckDB returns DOUBLE (oracle casts to BIGINT); Spark ``signum`` returns
-    DOUBLE while DuckDB ``sign`` returns TINYINT (oracle casts to DOUBLE);
-    ``%`` on BIGINT matches natively."""
-    l = table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.col("l_quantity") * F.col("l_quantity"), 4).alias("qty_sq"),
-        F.round(F.sqrt("l_extendedprice"), 6).alias("price_sqrt"),
-        F.round(F.log(F.col("l_extendedprice") + 1), 6).alias("price_ln"),
-        F.floor(F.col("l_quantity") / 7).alias("qty_div7"),
-        F.ceil(F.col("l_discount") * 100).alias("disc_pct_ceil"),
-        F.abs(F.col("l_quantity") - 25).alias("qty_dev"),
-        F.signum(F.col("l_discount") - 0.05).alias("disc_sign"),
-        F.greatest("l_tax", "l_discount").alias("max_rate"),
-        F.least("l_tax", "l_discount").alias("min_rate"),
-        (F.col("l_orderkey") % 7).alias("key_mod7"),
-    )
-
-
-@register(
-    "q_fn_case",
-    driver=False,  # folded into q_fn_scalar
-    oracle="""
-SELECT
-  c_custkey,
-  CASE WHEN c_acctbal < 0 THEN 'overdrawn'
-       WHEN c_acctbal < 5000 THEN 'standard'
-       ELSE 'premium' END                          AS tier,
-  coalesce(nullif(c_mktsegment, 'AUTOMOBILE'), 'CARS') AS segment_alias,
-  CASE WHEN c_nationkey % 2 = 0 THEN c_acctbal ELSE 0 END AS even_nation_bal
-FROM customer
-""",
-)
-def q_fn_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional family: when/otherwise, coalesce, nullif."""
-    c = table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, "overdrawn")
-        .when(F.col("c_acctbal") < 5000, "standard")
-        .otherwise("premium")
-        .alias("tier"),
-        F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("AUTOMOBILE")), F.lit("CARS")).alias(
-            "segment_alias"
-        ),
-        F.when(F.col("c_nationkey") % 2 == 0, F.col("c_acctbal")).otherwise(0.0).alias(
-            "even_nation_bal"
-        ),
-    )
-
-
-@register(
     "q_fn_array",
     driver=False,  # rotated off r8: §2.7 keeps q_fn_scalar + q_json_extract
     oracle="""
@@ -298,12 +150,14 @@ WHERE year(o_orderdate) = 1997
 )
 def q_fn_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SURVEY §2.7 scalar-function families — string, date/time, math,
-    conditional — in ONE driver row over a single table scan (folds
-    q_fn_string / q_fn_date / q_fn_math / q_fn_case, pytest-only, where the
-    per-family dialect notes live). All JVM-side codegen'd expressions, no
-    Python boundary; the WHERE year(...)=1997 predicate is pushdown-eligible.
-    Dialect casts mirror the family queries: floor/ceil → BIGINT, sign →
-    DOUBLE, DATE outputs → TIMESTAMP, epoch → BIGINT."""
+    conditional — in ONE driver row over a single table scan. All JVM-side
+    codegen'd expressions, no Python boundary; the WHERE year(...)=1997
+    predicate is pushdown-eligible. Dialect notes: Spark ``floor``/``ceil``
+    return LONG and ``signum`` DOUBLE where DuckDB returns DOUBLE and TINYINT
+    (oracle casts to BIGINT / DOUBLE); DATE outputs → TIMESTAMP; ``instr`` is
+    1-based with 0 for no-match in both; ``datediff`` is a calendar-day
+    difference ≡ DuckDB ``date_diff('day', …)`` on DATEs; ``unix_timestamp``
+    under a UTC session ≡ DuckDB ``epoch`` on naive ts (cast to BIGINT)."""
     o = table(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997)
     return o.select(
         "o_orderkey",

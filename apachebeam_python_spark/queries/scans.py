@@ -47,50 +47,6 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_scan_text",
-    driver=False,  # folded into q_scan_formats
-    oracle="SELECT count(*) AS n_lines, count(DISTINCT line) AS n_distinct FROM (SELECT text AS line FROM documents)",
-)
-def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WriteToText → ReadFromText round-trip (SURVEY §2.1). The written lines
-    are the documents' text; the oracle checks against the original table, so
-    this proves the sink/source pair is lossless for line-oriented data."""
-    out = os.path.join(_scratch_dir(), f"text_{_sfkey(sf_dir)}")
-    docs = table(spark, sf_dir, "documents").select("text")
-    io.write_text(docs, out)
-    lines = io.read_text(spark, out)
-    return lines.agg(
-        F.count("*").alias("n_lines"),
-        F.countDistinct("value").alias("n_distinct"),
-    )
-
-
-_CSV_SCHEMA = "p_partkey long, p_brand string, p_size int, p_retailprice double"
-
-
-@register(
-    "q_scan_csv",
-    driver=False,  # folded into q_scan_formats
-    oracle="""
-SELECT p_brand, count(*) AS n, round(sum(p_retailprice), 2) AS sum_retail
-FROM part GROUP BY p_brand
-""",
-)
-def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV sink → source round-trip with explicit schema (no inferSchema scan
-    — SURVEY §2.1 / scale note in sources/io.py), checked against the
-    original parquet table via the oracle."""
-    out = os.path.join(_scratch_dir(), f"csv_{_sfkey(sf_dir)}")
-    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size", "p_retailprice")
-    io.write_csv(p, out)
-    back = io.read_csv(spark, out, schema=_CSV_SCHEMA)
-    return back.groupBy("p_brand").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("p_retailprice"), 2).alias("sum_retail"),
-    )
-
-
-@register(
     "q_json_extract",
     # rotated off r9 (VERDICT r8 #1): q_variant_json carries the
     # semi-structured family's driver slot; this stays in the local sweep
@@ -127,14 +83,13 @@ FROM orders
 )
 def q_scan_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text, CSV, JSON-lines, and ORC sink→source round trips in ONE tagged
-    driver row (SURVEY §2.1; folds q_scan_text / q_scan_csv / q_scan_jsonl,
-    pytest-only — per-format notes live there). Each arm writes the original
-    parquet table out in its format, reads it back with an explicit schema
-    (self-describing for ORC; no inferSchema scan anywhere), and aggregates;
-    the oracle checks against the ORIGINAL tables, so a lossy round trip in
-    any format breaks the hash. Parquet scans themselves are proven
-    transitively by every driver query; Avro stays a documented gap (needs
-    the spark-avro jar, absent offline)."""
+    driver row (SURVEY §2.1). Each arm writes the original parquet table out
+    in its format, reads it back with an explicit schema (self-describing for
+    ORC; no inferSchema scan anywhere), and aggregates; the oracle checks
+    against the ORIGINAL tables, so a lossy round trip in any format breaks
+    the hash (JSON-lines drops timestamps, which JSON serializes lossily).
+    Parquet scans themselves are proven transitively by every driver query;
+    Avro stays a documented gap (needs the spark-avro jar, absent offline)."""
     scratch = _scratch_dir()
     key = _sfkey(sf_dir)
 
@@ -934,7 +889,7 @@ GROUP BY lang
 )
 def q_scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-file JSON-ARRAY scan (``multiLine=true``) — the other JSON shape
-    next to q_scan_jsonl's line-oriented one (SURVEY §2.1): a doc subset is
+    next to q_scan_formats' line-oriented one (SURVEY §2.1): a doc subset is
     serialized as ONE pretty-printable JSON array document, read back with
     the multiline parser, and census-checked against the original table.
 

@@ -38,84 +38,8 @@ def q_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_union_all",
-    driver=False,  # folded into q_setops
-    oracle="""
-SELECT nationkey, kind, count(*) AS n FROM (
-  SELECT c_nationkey AS nationkey, 'customer' AS kind FROM customer
-  UNION ALL
-  SELECT s_nationkey AS nationkey, 'supplier' AS kind FROM supplier
-) GROUP BY nationkey, kind
-""",
-)
-def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam ``Flatten``: bag union keeping duplicates (zero-shuffle), then a
-    count to make the multiplicity observable."""
-    c = table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey"), F.lit("customer").alias("kind")
-    )
-    s = table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey"), F.lit("supplier").alias("kind")
-    )
-    return S.flatten(c, s).groupBy("nationkey", "kind").agg(F.count("*").alias("n"))
-
-
-@register(
-    "q_union_distinct",
-    driver=False,  # folded into q_setops
-    oracle="""
-SELECT c_nationkey AS nationkey FROM customer
-UNION
-SELECT s_nationkey AS nationkey FROM supplier
-""",
-)
-def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flatten + Distinct (SQL UNION)."""
-    c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return S.union_distinct(c, s)
-
-
-@register(
-    "q_intersect",
-    driver=False,  # folded into q_setops
-    oracle="""
-SELECT c_nationkey AS nationkey FROM customer WHERE c_acctbal > 9000
-INTERSECT
-SELECT s_nationkey AS nationkey FROM supplier
-""",
-)
-def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (distinct): nations having both rich customers & suppliers."""
-    c = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000).select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return S.intersect(c, s)
-
-
-@register(
-    "q_except",
-    driver=False,  # folded into q_setops
-    oracle="""
-SELECT n_nationkey AS nationkey FROM nation
-EXCEPT
-SELECT s_nationkey AS nationkey FROM supplier WHERE s_acctbal > 8000
-""",
-)
-def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): nations with no high-balance supplier (non-empty at
-    every fixture sf — verified 13 rows at sf0.01)."""
-    n = table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("nationkey"))
-    s = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") > 8000).select(
-        F.col("s_nationkey").alias("nationkey")
-    )
-    return S.except_distinct(n, s)
-
-
-@register(
     "q_except_all",
-    driver=False,  # folded into q_setops
+    driver=False,  # kept: the only exceptAll plan (Generate replicaterows)
     oracle="""
 SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
 EXCEPT ALL
@@ -166,11 +90,10 @@ SELECT 'except_all', o_orderpriority, count(*) FROM (
 """,
 )
 def q_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The complete SURVEY §2.6 set-operation family in ONE tagged driver row
-    (folds q_union_all / q_union_distinct / q_intersect / q_except /
-    q_except_all, pytest-only): Beam ``Flatten`` with multiplicity counts,
-    distinct union (also the §2.3 Distinct primitive), INTERSECT, EXCEPT,
-    and bag-difference EXCEPT ALL aggregated per priority.
+    """The complete SURVEY §2.6 set-operation family in ONE tagged driver row:
+    Beam ``Flatten`` with multiplicity counts, distinct union (also the §2.3
+    Distinct primitive), INTERSECT, EXCEPT, and bag-difference EXCEPT ALL
+    aggregated per priority (q_except_all keeps Spark's own ``exceptAll``).
 
     100 TB shape: the naive form re-scans customer ×3, supplier ×4 and
     orders ×2 with different filters (ReusedExchange can't fire across

@@ -1,9 +1,7 @@
-"""UDF/UDAF/grouped-map/side-input queries (SURVEY.md §2.10, §1.1) plus the
-JSON-lines source round trip (§2.1)."""
+"""UDF/UDAF/grouped-map/side-input queries (SURVEY.md §2.10, §1.1)."""
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -15,9 +13,7 @@ from ..functions import udfs as U
 from ..operators import elementwise as ew
 from ..operators import inference as _inference
 from ..session import fan_out, table
-from ..sources import io
 from ._registry import register
-from .scans import _scratch_dir, _sfkey
 
 
 @register(
@@ -109,28 +105,6 @@ def q_side_input_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.crossJoin(F.broadcast(avg_price))
         .filter(F.col("o_totalprice") > F.col("threshold"))
         .select("o_orderkey", F.round("o_totalprice", 2).alias("totalprice"))
-    )
-
-
-@register(
-    "q_scan_jsonl",
-    driver=False,  # folded into q_scan_formats
-    oracle="""
-SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events GROUP BY event_type
-""",
-)
-def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-lines sink → source round trip (the Beam textio+json.loads
-    pattern, SURVEY §2.1), checked against the original parquet: schema-
-    explicit read (no inference scan), timestamps excluded (JSON serializes
-    them lossily — documented)."""
-    out = os.path.join(_scratch_dir(), f"jsonl_{_sfkey(sf_dir)}")
-    e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    io.write_json(e, out)
-    back = io.read_json(spark, out, schema="event_id long, event_type string, value double")
-    return back.groupBy("event_type").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
 
 

@@ -11,71 +11,8 @@ from ._registry import register
 
 
 @register(
-    "q_win_rank",
-    driver=False,  # folded into q_win_functions
-    oracle="""
-SELECT c_custkey, c_mktsegment, c_nationkey,
-       CAST(row_number()   OVER w_total AS INTEGER) AS rn,
-       CAST(rank()         OVER w_ties  AS INTEGER) AS rnk,
-       CAST(dense_rank()   OVER w_ties  AS INTEGER) AS drnk,
-       CAST(ntile(4)       OVER w_total AS INTEGER) AS quartile,
-       round(percent_rank() OVER w_ties, 6)         AS prank
-FROM customer
-WINDOW
-  w_total AS (PARTITION BY c_mktsegment ORDER BY c_nationkey, c_custkey),
-  w_ties  AS (PARTITION BY c_mktsegment ORDER BY c_nationkey)
-""",
-)
-def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking family. Tie-sensitive functions (rank/dense_rank/percent_rank)
-    run over a ties-allowed order; position-sensitive ones (row_number/ntile)
-    over a total order, so every value is deterministic."""
-    c = table(spark, sf_dir, "customer")
-    w_total = W.over(["c_mktsegment"], [F.col("c_nationkey"), F.col("c_custkey")])
-    w_ties = W.over(["c_mktsegment"], [F.col("c_nationkey")])
-    return c.select(
-        "c_custkey", "c_mktsegment", "c_nationkey",
-        F.row_number().over(w_total).alias("rn"),
-        F.rank().over(w_ties).alias("rnk"),
-        F.dense_rank().over(w_ties).alias("drnk"),
-        F.ntile(4).over(w_total).alias("quartile"),
-        F.round(F.percent_rank().over(w_ties), 6).alias("prank"),
-    )
-
-
-@register(
-    "q_win_lag_lead",
-    driver=False,  # folded into q_win_functions
-    oracle="""
-SELECT event_id, user_id, ts,
-       round(value, 2)                                   AS value,
-       round(lag(value)  OVER w, 2)                      AS prev_value,
-       round(lead(value) OVER w, 2)                      AS next_value,
-       round(first_value(value) OVER w, 2)               AS first_value,
-       round(lag(value, 2, 0.0) OVER w, 2)               AS prev2_value
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-""",
-)
-def q_win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic family: lag/lead/first_value + offset-with-default.
-    event_id tiebreaks ts (round 8): (user_id, ts) is unique in the base
-    fixture but NOT in sf1 replicas or real streams."""
-    e = table(spark, sf_dir, "events")
-    w = W.over(["user_id"], [F.col("ts"), F.col("event_id")])
-    return e.select(
-        "event_id", "user_id", "ts",
-        F.round("value", 2).alias("value"),
-        F.round(F.lag("value").over(w), 2).alias("prev_value"),
-        F.round(F.lead("value").over(w), 2).alias("next_value"),
-        F.round(F.first("value").over(w), 2).alias("first_value"),
-        F.round(F.lag("value", 2, 0.0).over(w), 2).alias("prev2_value"),
-    )
-
-
-@register(
     "q_win_running_sum",
-    driver=False,  # folded into q_win_functions
+    driver=False,  # kept: timed by perfbench, bench.py and PLAN_SHA_BASELINE
     oracle="""
 SELECT o_orderkey, o_custkey, o_orderdate,
        round(sum(o_totalprice) OVER (PARTITION BY o_custkey
@@ -92,46 +29,6 @@ def q_win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_orderkey", "o_custkey", "o_orderdate",
         F.round(F.sum("o_totalprice").over(w), 2).alias("running_spend"),
-    )
-
-
-@register(
-    "q_win_moving_avg",
-    driver=False,  # folded into q_win_functions
-    oracle="""
-SELECT event_id, user_id, ts,
-       round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS mavg3
-FROM events
-""",
-)
-def q_win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moving average over the trailing 3 rows per key (event_id
-    tiebreaks ts — round 8, same reason as q_win_functions)."""
-    e = table(spark, sf_dir, "events")
-    w = W.running(["user_id"], [F.col("ts"), F.col("event_id")], preceding=2)
-    return e.select(
-        "event_id", "user_id", "ts",
-        F.round(F.avg("value").over(w), 6).alias("mavg3"),
-    )
-
-
-@register(
-    "q_win_cume_dist",
-    driver=False,  # folded into q_win_functions
-    oracle="""
-SELECT p_partkey, p_brand,
-       round(cume_dist() OVER (PARTITION BY p_brand ORDER BY p_retailprice), 6) AS cd
-FROM part
-""",
-)
-def q_win_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative distribution within brand (well-defined under ties)."""
-    p = table(spark, sf_dir, "part")
-    w = W.over(["p_brand"], [F.col("p_retailprice")])
-    return p.select(
-        "p_partkey", "p_brand",
-        F.round(F.cume_dist().over(w), 6).alias("cd"),
     )
 
 
@@ -161,13 +58,13 @@ WINDOW
 )
 def q_win_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete SURVEY §2.5 analytic-window family in ONE driver row
-    (folds q_win_rank / q_win_lag_lead / q_win_running_sum / q_win_moving_avg
-    / q_win_cume_dist, pytest-only): ranking (row_number/ntile on the total
-    (user_id, ts) order; rank/dense_rank/percent_rank/cume_dist on the
-    ties-allowed event_type order), navigation (lag/lead/first + offset with
-    default), and frames (running sum, trailing 3-row moving average). One
-    shuffle on user_id serves every function — Spark computes all three
-    window specs over the same partitioning without re-exchanging."""
+    (q_win_running_sum keeps a benchmarked running-sum-only form): ranking
+    (row_number/ntile on the total (user_id, ts) order; rank/dense_rank/
+    percent_rank/cume_dist on the ties-allowed event_type order), navigation
+    (lag/lead/first + offset with default), and frames (running sum,
+    trailing 3-row moving average). One shuffle on user_id serves every
+    function — Spark computes all three window specs over the same
+    partitioning without re-exchanging."""
     e = table(spark, sf_dir, "events")
     # event_id tiebreaks every ROWS-frame/navigation order: ts alone is a
     # total order only on fixtures with unique per-user timestamps — the

@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from apachebeam_python_spark.pipeline import Pipeline
-from apachebeam_python_spark.session import get_spark, table
+from apachebeam_python_spark.session import get_spark, scratch_dir, table
 
 
 def main() -> None:
@@ -53,7 +53,7 @@ def main() -> None:
     )
     report.show(10, truncate=False)
 
-    out = "/root/repo/.tmp/examples/customer_report"
+    out = scratch_dir("examples", "customer_report")
     Pipeline.of(report).write_parquet(out)
     print(f"wrote {out}")
 
@@ -62,7 +62,7 @@ def main() -> None:
     from apachebeam_python_spark.sources.pyds import AvroLiteDataSource
 
     spark.dataSource.register(AvroLiteDataSource)
-    avro_out = "/root/repo/.tmp/examples/customer_report_avro"
+    avro_out = scratch_dir("examples", "customer_report_avro")
     import shutil
 
     shutil.rmtree(avro_out, ignore_errors=True)
@@ -79,7 +79,7 @@ def main() -> None:
     docs = table(spark, sf_dir, "documents").withColumn(
         "shard", (F.col("doc_id") / 64).cast("long")
     )
-    wds_out = "/root/repo/.tmp/examples/corpus_wds"
+    wds_out = scratch_dir("examples", "corpus_wds")
     shutil.rmtree(wds_out, ignore_errors=True)
     write_webdataset(docs, wds_out, "doc_id", "text", ["source", "lang"], "shard")
     m = read_webdataset(spark, wds_out, ["source", "lang"]).count()

@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from apachebeam_python_spark.session import get_spark, table
+from apachebeam_python_spark.session import get_spark, scratch_dir, table
 from apachebeam_python_spark.sources import laketable as LT
 
 
@@ -41,7 +41,7 @@ def main() -> None:
     spark = get_spark("example-governed-lake")
     spark.sparkContext.setLogLevel("ERROR")
 
-    root = "/root/repo/.tmp/examples/governed_lake"
+    root = scratch_dir("examples", "governed_lake")
     shutil.rmtree(root, ignore_errors=True)
     prod = os.path.join(root, "corpus")
     branch = os.path.join(root, "corpus_gate_exp")

@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from apachebeam_python_spark.session import get_spark, table
+from apachebeam_python_spark.session import get_spark, scratch_dir, table
 from apachebeam_python_spark.sources import layout
 
 
@@ -36,7 +36,7 @@ def main() -> None:
     spark = get_spark("example-lake-maintenance")
     spark.sparkContext.setLogLevel("ERROR")
 
-    path = "/root/repo/.tmp/examples/events_lake"
+    path = scratch_dir("examples", "events_lake")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value", "event_type"
     )

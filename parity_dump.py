@@ -66,9 +66,6 @@ EMPTY_OK: dict[str, str] = {
     "q_betweenness": "bridge nodes of the ≥190-weight trade subgraph; the "
         "graph densifies with SF until no node lies on a unique shortest "
         "path (nonempty at sf0.01, empty at sf0.1/sf1)",
-    "q_except": "nations minus nations-with-rich-suppliers: at sf0.1+ every "
-        "nation has a supplier over the acctbal cut, so the set difference "
-        "is correctly empty",
     "q_except_all": "EXCEPT ALL multiplicity difference of order-priority "
         "bags (status F vs P); at sf0.1+ the P side's multiplicities cover "
         "the F side's for every priority",

@@ -63,7 +63,7 @@ DEFAULT_TARGETS = [
     "q_dedup_embedding",
     "q_semantic_dedup",
     "q_resample_linterp",
-    "q_project",
+    "q_elementwise",
     "q_activity_bitmap",
     "q_skyline",
     "q_proration",

@@ -213,12 +213,15 @@ def test_no_private_py4j_handles_in_query_paths():
 
 def test_no_hard_coded_scratch_paths():
     """Runtime scratch paths come from session.scratch_dir (the checkout
-    that holds the package, or $SPARK_GRAFT_SCRATCH): no module names this
-    checkout's absolute path or an absolute path into a ``.tmp`` scratch
-    tree, so a second checkout never writes into another's."""
-    checkout = str(PKG.parent)
-    for rel, src in _sources():
-        assert checkout not in src, f"{rel}: hard-codes the checkout path"
+    that holds the package, or $SPARK_GRAFT_SCRATCH) and test scratch from
+    ``tmp_path``: no module, test or example names this checkout's absolute
+    path or an absolute path into a ``.tmp`` scratch tree, so a second
+    checkout never writes into another's."""
+    checkout = PKG.parent
+    for p in [p for d in ("apachebeam_python_spark", "tests", "examples")
+              for p in (checkout / d).rglob("*.py")]:
+        rel, src = p.relative_to(checkout).as_posix(), p.read_text()
+        assert str(checkout) not in src, f"{rel}: hard-codes the checkout path"
         assert not re.search(r"[\"']/[^\"'\s]*/\.tmp\b", src), (
             f"{rel}: absolute .tmp path — use session.scratch_dir"
         )

@@ -6,10 +6,11 @@ driver_kernel), and both sides of each gate agree on adversarial graphs.
   executing the query starts no Python worker.
 - Reachability counts paths as booleans: a uint8 matmul wrapped at 256
   paths and dropped pairs the distributed loop returns.
-- Kernel ≡ loop as a property (``small_graph_max_edges=0`` forces the
+- Kernel ≡ loop as a property for all seven operators
+  (``small_graph_max_edges=0`` or ``small_graph_max_nodes=0`` forces the
   loop), with explicit high fan-in, chain, clique and empty graphs. These
-  run the distributed loops dozens of times (~70 s), so they stay out of
-  the fast ``driver`` gate.
+  run the distributed loops dozens of times, so they stay out of the fast
+  ``driver`` gate.
 """
 
 from __future__ import annotations
@@ -21,7 +22,11 @@ from hypothesis import strategies as st
 from apachebeam_python_spark.operators.dedup import connected_components
 from apachebeam_python_spark.operators.graph import (
     closure_census,
+    dag_depths,
     hop_distances,
+    kcore_census,
+    lpa_labels,
+    pagerank,
 )
 
 #: 0 → {1..256} → 1000: 512 edges, under the 2048-edge gate, and exactly
@@ -48,6 +53,11 @@ def _rows(df, *cols):
 
 def _edges(spark, edges, names="src long, dst long"):
     return spark.createDataFrame(edges, names)
+
+
+def _oriented(edges):
+    """The distinct low → high edges: a DAG, and lpa_labels' u < v input."""
+    return sorted({(min(a, b), max(a, b)) for a, b in edges})
 
 
 @pytest.mark.driver  # fast-gate tier: guards driver queries
@@ -119,4 +129,62 @@ def test_connected_components_kernel_matches_loop(spark, edges):
     cols = ("doc_id", "cluster_id")
     assert _rows(connected_components(pairs), *cols) == _rows(
         connected_components(pairs, small_graph_max_edges=0), *cols
+    )
+
+
+@PROPERTY
+@given(edges=EDGES)
+@example(edges=FAN_IN)
+@example(edges=CHAIN)
+@example(edges=CLIQUE)
+@example(edges=[])
+def test_pagerank_kernel_matches_loop(spark, edges):
+    """Weighted edges over a node list that also holds dangling and
+    isolated nodes; ranks must be value-identical, not approximate."""
+    weighted = [(a, b, (a + 2 * b) % 5 + 1) for a, b in edges]
+    e = spark.createDataFrame(weighted, "src long, dst long, w long")
+    ids = sorted(set(range(12)).union(*map(set, edges)))
+    nodes = spark.createDataFrame([(i,) for i in ids], "node long")
+    assert _rows(pagerank(e, nodes), "node", "r") == _rows(
+        pagerank(e, nodes, small_graph_max_nodes=0), "node", "r"
+    )
+
+
+@PROPERTY
+@given(edges=EDGES)
+@example(edges=FAN_IN)
+@example(edges=CHAIN)
+@example(edges=CLIQUE)
+@example(edges=[])
+def test_dag_depths_kernel_matches_loop(spark, edges):
+    e = _edges(spark, _oriented(edges))
+    assert _rows(dag_depths(e), "node", "d") == _rows(
+        dag_depths(e, small_graph_max_edges=0), "node", "d"
+    )
+
+
+@PROPERTY
+@given(edges=EDGES)
+@example(edges=FAN_IN)
+@example(edges=CHAIN)
+@example(edges=CLIQUE)
+@example(edges=[])
+def test_kcore_census_kernel_matches_loop(spark, edges):
+    e = _edges(spark, edges)
+    cols = ("node", "core_degree")
+    assert _rows(kcore_census(e), *cols) == _rows(
+        kcore_census(e, small_graph_max_edges=0), *cols
+    )
+
+
+@PROPERTY
+@given(edges=EDGES)
+@example(edges=FAN_IN)
+@example(edges=CHAIN)
+@example(edges=CLIQUE)
+@example(edges=[])
+def test_lpa_labels_kernel_matches_loop(spark, edges):
+    e = _edges(spark, _oriented(edges), "u long, v long")
+    assert _rows(lpa_labels(e), "node", "label") == _rows(
+        lpa_labels(e, small_graph_max_edges=0), "node", "label"
     )

@@ -2,15 +2,18 @@
 
 from __future__ import annotations
 
+import pathlib
 import runpy
 import sys
+
+EXAMPLES = pathlib.Path(__file__).resolve().parent.parent / "examples"
 
 
 def _run(name, sf_dir):
     argv = sys.argv
     sys.argv = [name, sf_dir]
     try:
-        runpy.run_path(f"/root/repo/examples/{name}.py", run_name="__main__")
+        runpy.run_path(str(EXAMPLES / f"{name}.py"), run_name="__main__")
     finally:
         sys.argv = argv
 

@@ -659,7 +659,7 @@ def test_persist_replay_ids_dedups_on_crash_retry(spark, tbl):
     assert LT.append_stream_batch(b, tbl, batch_id=11) == v
 
 
-def test_stream_cdc_into_lake_via_foreach_batch(spark, tbl):
+def test_stream_cdc_into_lake_via_foreach_batch(spark, tbl, tmp_path):
     """End-to-end CDC: a stream of change events lands in the lake table
     through foreachBatch(merge_apply) — each micro-batch compacted to
     final-state-per-key (last write wins) before the one-commit apply."""
@@ -668,7 +668,7 @@ def test_stream_cdc_into_lake_via_foreach_batch(spark, tbl):
 
     from pyspark.sql import functions as F
 
-    src_dir = f"/root/repo/.tmp/streamtest/cdclake_{_uuid.uuid4().hex[:8]}"
+    src_dir = f"{tmp_path}/cdclake_{_uuid.uuid4().hex[:8]}"
     schema = "seq long, id long, v long, _op string"
     # batch 1: update id=5 twice (last wins), delete id=7
     spark.createDataFrame(

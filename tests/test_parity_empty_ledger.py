@@ -19,14 +19,12 @@ from parity_dump import EMPTY_OK
 #: The exact ledger membership as reviewed in round 11. Every entry was
 #: observed empty at ≥1 sweep scale factor in CORRECTNESS_LOCAL_r10*
 #: (sf0.01: q_duplicate_orders, q_source_overlap; sf0.1 adds q_betweenness,
-#: q_except, q_except_all, q_important_stock, q_inverted_index,
-#: q_k_anonymity, q_sparse_cosine; sf1.0 adds q_misra_gries) with the
-#: oracle hash-agreeing on the empty set — correct but vacuous, hence the
-#: documented reasons.
+#: q_except_all, q_important_stock, q_inverted_index, q_k_anonymity,
+#: q_sparse_cosine; sf1.0 adds q_misra_gries) with the oracle hash-agreeing
+#: on the empty set — correct but vacuous, hence the documented reasons.
 PINNED_LEDGER = {
     "q_betweenness",
     "q_duplicate_orders",
-    "q_except",
     "q_except_all",
     "q_important_stock",
     "q_inverted_index",

@@ -4,6 +4,8 @@ aggregation would pass correctness but die at 100 TB."""
 
 from __future__ import annotations
 
+import pytest
+
 from apachebeam_python_spark import queries as q
 from apachebeam_python_spark.plans import inspect as P
 
@@ -36,8 +38,8 @@ def test_order_limit_uses_take_ordered(spark, sf_dir):
 
 
 def test_semi_anti_plans(spark, sf_dir):
-    assert P.has(q.QUERIES["q_join_semi"](spark, sf_dir), "LeftSemi")
-    assert P.has(q.QUERIES["q_join_anti"](spark, sf_dir), "LeftAnti")
+    df = q.QUERIES["q_join_semi_anti"](spark, sf_dir)
+    assert P.has(df, "LeftSemi") and P.has(df, "LeftAnti")
 
 
 def test_single_shuffle_aggregation(spark, sf_dir):
@@ -65,11 +67,6 @@ def test_win_functions_single_shuffle(spark, sf_dir):
     exchange serves ranking, navigation, and frame functions."""
     df = q.QUERIES["q_win_functions"](spark, sf_dir)
     assert P.count_exchanges(df) == 1, P.executed_plan(df)
-
-
-def test_join_semi_anti_merged_plans(spark, sf_dir):
-    df = q.QUERIES["q_join_semi_anti"](spark, sf_dir)
-    assert P.has(df, "LeftSemi") and P.has(df, "LeftAnti")
 
 
 def test_doc_features_single_shuffle(spark, sf_dir):
@@ -756,3 +753,82 @@ def test_run_inference_map_only_pruned(spark, sf_dir):
     assert "text" in rs and "lang" not in rs and "n_chars" not in rs, rs
     plan = P.executed_plan(df)
     assert plan.count("MapInPandas") == 1, "model scoring must be ONE Python pass"
+
+
+#: Queries deleted because a remaining query's executed plan carries the
+#: operator that made their primitive: {deleted query: (subsumer, needles)}.
+#: A needle is a physical operator, join type, or aggregate, window or
+#: scalar function as Spark prints it in the executed plan.
+SUBSUMED = {
+    # §2.1 sink → source round trips
+    "q_scan_text": ("q_scan_formats", ("FileScan text",)),
+    "q_scan_csv": ("q_scan_formats", ("FileScan csv",)),
+    "q_scan_jsonl": ("q_scan_formats", ("FileScan json",)),
+    # §2.2 element-wise
+    "q_project": ("q_elementwise", ("Project [", "concat_ws(")),
+    "q_filter": ("q_elementwise", ("Filter (",)),
+    "q_flatmap_explode": ("q_elementwise", ("Generate explode(",)),
+    # §2.3 aggregation
+    "q_agg_multi": ("q_agg_combine", ("HashAggregate(", "partial_min(", "partial_max(",
+                                      "count(distinct ")),
+    "q_agg_global": ("q_agg_combine", ("HashAggregate(keys=[]", "Exchange SinglePartition")),
+    "q_agg_avg": ("q_agg_combine", ("partial_avg(",)),
+    "q_count_per_element": ("q_wordcount", ("HashAggregate(", "partial_count(1)")),
+    "q_distinct": ("q_setops", ("HashAggregate(", "functions=[]")),
+    "q_groupbykey_collect": ("q_groupbykey_batches", ("ObjectHashAggregate(", "collect_list(",
+                                                      "collect_set(")),
+    "q_group_into_batches": ("q_groupbykey_batches", ("collect_list(", "Generate ",
+                                                      "explode(filter(transform(sequence(")),
+    "q_topk_global": ("q_order_limit", ("TakeOrderedAndProject(",)),
+    "q_rollup": ("q_cube", ("Expand [",)),
+    "q_grouping_sets": ("q_cube", ("Expand [",)),
+    "q_agg_median": ("q_agg_stats", ("ObjectHashAggregate(", "percentile(")),
+    # §2.4 joins
+    "q_join_left": ("q_join_equi", ("LeftOuter",)),
+    "q_join_semi": ("q_join_semi_anti", ("LeftSemi",)),
+    "q_join_anti": ("q_join_semi_anti", ("LeftAnti",)),
+    # §2.5 analytic windows
+    "q_win_rank": ("q_win_functions", ("Window [", "row_number()", "[rank(", "dense_rank(",
+                                       "ntile(", "percent_rank(")),
+    "q_win_lag_lead": ("q_win_functions", ("lag(", "lead(", "first(")),
+    "q_win_moving_avg": ("q_win_functions", ("avg(value", "RowFrame, -2, currentrow$()")),
+    "q_win_cume_dist": ("q_win_functions", ("cume_dist()",)),
+    # §2.6 set operations
+    "q_union_all": ("q_setops", ("Union",)),
+    "q_union_distinct": ("q_setops", ("Union", "functions=[]")),
+    "q_intersect": ("q_setops", ("LeftSemi",)),
+    "q_except": ("q_setops", ("LeftAnti",)),
+    # §2.7 scalar functions
+    "q_fn_string": ("q_fn_scalar", ("upper(", "length(", "substring(", "regexp_extract(",
+                                    "concat_ws(", "lpad(", "replace(", "trim(", "instr(")),
+    "q_fn_date": ("q_fn_scalar", ("year(", "month(", "dayofmonth(", "date_trunc(",
+                                  "datediff(", "date_add(", "unix_timestamp(")),
+    "q_fn_math": ("q_fn_scalar", ("SQRT(", "ln(", "FLOOR(", "CEIL(", "abs(", "SIGNUM(",
+                                  "greatest(", "least(", " % 7)")),
+    "q_fn_case": ("q_fn_scalar", ("CASE WHEN", "coalesce(if (")),
+    # §2.8 event-time windows
+    "q_sliding_window": ("q_windows_fixed_sliding", ("Expand [",)),
+    # §2.11 per-document text features
+    "q_token_count": ("q_doc_features", ("size(split(", "array_distinct(",
+                                         "regexp_extract_all(")),
+    "q_lang_id": ("q_doc_features", ("array_intersect(",)),
+    "q_quality_score": ("q_doc_features", ("IN (the,a,of,and,or)",)),
+}
+
+
+@pytest.mark.parametrize("deleted", sorted(SUBSUMED))
+def test_subsumer_plan_carries_deleted_operator(spark, sf_dir, deleted):
+    """A query folded into another is deleted, not kept registered: the
+    subsumer's executed plan must still carry its operator. Project lists
+    print in full here; Spark truncates them past 25 fields by default."""
+    subsumer, needles = SUBSUMED[deleted]
+    assert deleted not in q.QUERIES, f"{deleted} is registered again"
+    key = "spark.sql.debug.maxToStringFields"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1000")
+        plan = P.executed_plan(q.QUERIES[subsumer](spark, sf_dir))
+    finally:
+        spark.conf.set(key, prev)
+    missing = [n for n in needles if n not in plan]
+    assert not missing, f"{subsumer}'s plan lost {deleted}'s {missing}"

@@ -44,10 +44,10 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed_tables):
     assert joined.count() == plain
 
 
-def test_partitioned_layout_prunes(spark, sf_dir):
+def test_partitioned_layout_prunes(spark, sf_dir, tmp_path):
     """Directory partitioning by the dominant filter column → partition
     pruning (the non-matching partitions never reach the scan)."""
-    path = "/root/repo/.tmp/events_by_type"
+    path = str(tmp_path / "events_by_type")
     write_parquet(
         table(spark, sf_dir, "events"), path, partition_by=("event_type",)
     )
@@ -102,14 +102,14 @@ def test_salted_collect_matches_plain(spark, sf_dir):
     }
 
 
-def test_write_clustered_files_have_disjoint_ranges(spark, sf_dir):
+def test_write_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
     """Clustered layout: parquet files carry disjoint min/max ranges of the
     cluster column (verified from the file footers), enabling file skipping."""
     import glob
 
     import pyarrow.parquet as pq
 
-    path = "/root/repo/.tmp/orders_clustered"
+    path = str(tmp_path / "orders_clustered")
     layout.write_clustered(table(spark, sf_dir, "orders"), path, "o_totalprice", 4)
     ranges = []
     for f in glob.glob(f"{path}/part-*.parquet"):
@@ -139,7 +139,7 @@ def test_zorder_key_interleaves():
     assert (row.k, row.k2, row.k3) == (0b1010, 0b0101, 0b1111)
 
 
-def test_zorder_layout_skips_files_on_both_dims(spark, sf_dir):
+def test_zorder_layout_skips_files_on_both_dims(spark, sf_dir, tmp_path):
     """Z-ordered layout: a selective filter on EITHER interleaved column
     touches a strict subset of files (per-file min/max would skip the
     rest), where single-column clustering only serves its own column."""
@@ -153,8 +153,8 @@ def test_zorder_layout_skips_files_on_both_dims(spark, sf_dir):
         # per-file min/max ranges aren't tight enough to assert on (sf0.001
         # fast loop) — the default sf0.01 run exercises the real claim
         pytest.skip("z-order skipping assertion needs >= 10k rows")
-    zpath = "/root/repo/.tmp/orders_zorder"
-    cpath = "/root/repo/.tmp/orders_cluster_x"
+    zpath = str(tmp_path / "orders_zorder")
+    cpath = str(tmp_path / "orders_cluster_x")
     layout.write_zordered(o, zpath, ["x", "y"], num_files=8, bits=10)
     layout.write_clustered(o, cpath, "x", num_files=8)
 
@@ -179,13 +179,13 @@ def test_zorder_layout_skips_files_on_both_dims(spark, sf_dir):
     assert c_y == 8, f"control: expected y-filter to touch all x-clustered files, got {c_y}"
 
 
-def test_schema_merge_and_bounded_files(spark):
+def test_schema_merge_and_bounded_files(spark, tmp_path):
     """Lake-maintenance knobs: mergeSchema unions evolved footers (old
     files read as NULL for new columns); maxRecordsPerFile bounds output
     file sizes so no task emits an unsplittable straggler file."""
     from apachebeam_python_spark.sources.io import read_parquet, write_parquet
 
-    path = "/root/repo/.tmp/evolving"
+    path = str(tmp_path / "evolving")
     v1 = spark.range(5).select(F.col("id").alias("k"))
     v2 = spark.range(5, 10).select(F.col("id").alias("k"), F.lit("x").alias("extra"))
     write_parquet(v1, path)
@@ -194,17 +194,17 @@ def test_schema_merge_and_bounded_files(spark):
     assert set(merged.columns) == {"k", "extra"}
     assert merged.filter(F.col("extra").isNull()).count() == 5
 
-    bpath = "/root/repo/.tmp/bounded_files"
+    bpath = str(tmp_path / "bounded_files")
     write_parquet(spark.range(100).repartition(1), bpath, max_records_per_file=10)
     files = spark.read.parquet(bpath).select(F.input_file_name()).distinct().count()
     assert files == 10
 
 
-def test_dynamic_partition_overwrite_is_surgical(spark, sf_dir):
+def test_dynamic_partition_overwrite_is_surgical(spark, sf_dir, tmp_path):
     """Backfilling one partition must not touch the others' files."""
     import glob
 
-    path = "/root/repo/.tmp/events_backfill"
+    path = str(tmp_path / "events_backfill")
     ev = table(spark, sf_dir, "events").withColumn(
         "etype", F.col("event_type")
     ).select("event_id", "user_id", "value", "etype")
@@ -221,12 +221,12 @@ def test_dynamic_partition_overwrite_is_surgical(spark, sf_dir):
     assert after.filter("etype = 'view'").count() > 0
 
 
-def test_compact_partition_reduces_files(spark, sf_dir):
+def test_compact_partition_reduces_files(spark, sf_dir, tmp_path):
     """Compaction collapses a many-file partition to target_files without
     changing its rows or touching sibling partitions."""
     import glob
 
-    path = "/root/repo/.tmp/events_compact"
+    path = str(tmp_path / "events_compact")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     # simulate incremental ingest: 8 small files per partition
     layout.overwrite_partition(ev.repartition(8), path, ["event_type"])
@@ -241,8 +241,8 @@ def test_compact_partition_reduces_files(spark, sf_dir):
     assert set(glob.glob(f"{path}/event_type=view/*.parquet")) == sibling_before
 
 
-def test_file_report_counts(spark):
-    path = "/root/repo/.tmp/file_report_demo"
+def test_file_report_counts(spark, tmp_path):
+    path = str(tmp_path / "file_report_demo")
     spark.range(100).repartition(4).write.mode("overwrite").parquet(path)
     rep = layout.file_report(spark, path).collect()
     assert len(rep) == 4
@@ -346,7 +346,7 @@ def test_runtime_bloom_filter_injection(spark, sf_dir):
             spark.conf.set(k, v)
 
 
-def test_ivf_layout_partition_prunes_probes(spark, sf_dir):
+def test_ivf_layout_partition_prunes_probes(spark, sf_dir, tmp_path):
     """The IVF 'index lives in the table layout' claim (scale_notes /
     similarity.ivf_ann_topk docstring): write the corpus partitioned BY
     cell id, and a query's n_probe cells become partition filters — the
@@ -358,7 +358,7 @@ def test_ivf_layout_partition_prunes_probes(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     cents = SIM.ivf_centroids(emb, "embedding", "vec_id", 8).persist()
     cells = SIM._assign_cells(emb, cents, "embedding", "vec_id", probe=1)
-    path = "/root/repo/.tmp/emb_ivf_cells"
+    path = str(tmp_path / "emb_ivf_cells")
     cells.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
     stored = spark.read.parquet(path)
 
@@ -384,14 +384,14 @@ def test_ivf_layout_partition_prunes_probes(spark, sf_dir):
     cents.unpersist()
 
 
-def test_dynamic_partition_pruning_fires(spark, sf_dir):
+def test_dynamic_partition_pruning_fires(spark, sf_dir, tmp_path):
     """Join-driven DYNAMIC partition pruning: when the fact table is
     directory-partitioned on the join key and the dim side arrives
     filtered, Spark injects a runtime pruning subquery into the fact
     scan's PartitionFilters — only the partitions matching the dim
     survive. The 100 TB pattern behind star joins over date-partitioned
     facts."""
-    path = "/root/repo/.tmp/events_by_type_dpp"
+    path = str(tmp_path / "events_by_type_dpp")
     write_parquet(
         table(spark, sf_dir, "events"), path, partition_by=("event_type",)
     )

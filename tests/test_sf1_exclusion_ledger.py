@@ -56,7 +56,8 @@ def test_sf1_exclusion_list_is_exactly_two():
     """The newest sf1 artifact's exclusion lists must match ALLOWED exactly —
     no new exclusion keys, no new members, nothing silently dropped from the
     sweep."""
-    summary = _newest_sf1_artifact()["summary"]
+    artifact = _newest_sf1_artifact()
+    summary = artifact["summary"]
     excl_keys = {k for k in summary if k.startswith("excluded_")}
     assert excl_keys == set(ALLOWED), (
         f"exclusion categories drifted: {sorted(excl_keys)}"
@@ -69,8 +70,17 @@ def test_sf1_exclusion_list_is_exactly_two():
     assert total_excluded <= 2
     # exclusions + swept oracle-backed queries must account for every oracle
     # the registry had when the artifact was cut (the sweep may predate new
-    # registrations, so <=, never >)
-    assert summary["oracle_backed"] + total_excluded <= len(q.ORACLES)
+    # registrations, so <=, never >). The sweep may also predate deletions:
+    # a row of a query deleted since is allowed only when test_plans.SUBSUMED
+    # pins its subsumer's plan, and it stops counting.
+    from .test_plans import SUBSUMED
+
+    swept = {n for n, row in artifact["queries"].items() if row.get("oracle")}
+    assert len(swept) == summary["oracle_backed"]
+    assert swept - set(q.ORACLES) <= set(SUBSUMED), (
+        f"swept but unregistered: {sorted(swept - set(q.ORACLES) - set(SUBSUMED))}"
+    )
+    assert len(swept & set(q.ORACLES)) + total_excluded <= len(q.ORACLES)
 
 
 def test_q_provenance_is_still_layout_pinned():

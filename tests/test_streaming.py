@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 
 from apachebeam_python_spark.operators import event_time as ET
 
-SCRATCH = "/root/repo/.tmp/streamtest"
-
 
 def _write(spark, path, rows):
     spark.createDataFrame(rows, "user_id long, ts timestamp, value double").coalesce(
@@ -21,11 +19,11 @@ def _write(spark, path, rows):
     ).write.mode("append").parquet(path)
 
 
-def test_watermark_drops_late_data(spark):
+def test_watermark_drops_late_data(spark, tmp_path):
     """A row arriving behind the watermark is dropped; append mode emits a
     window only once the watermark passes its end (Beam: lateness=0,
     discarding panes, on-time pane only)."""
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"wm_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
 
@@ -59,10 +57,10 @@ def test_watermark_drops_late_data(spark):
     assert rows == {(at(10, 0), 3)}
 
 
-def test_stream_stream_interval_join(spark):
+def test_stream_stream_interval_join(spark, tmp_path):
     """Stream-stream inner join with watermarks + time-bound condition
     (Beam windowed CoGBK / interval-join analogue)."""
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"ssj_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
     _write(
@@ -97,7 +95,7 @@ def test_stream_stream_interval_join(spark):
     assert pairs == {(0.0, 10)}  # only the 0→10min pair is within 15 minutes
 
 
-def test_event_time_timer_finalizes_sessions(spark):
+def test_event_time_timer_finalizes_sessions(spark, tmp_path):
     """Per-key event-time timer (Beam @on_timer): a user's session count is
     emitted once the watermark passes last_event+gap — and users whose
     sessions are still open at stream end are NOT emitted."""
@@ -106,7 +104,7 @@ def test_event_time_timer_finalizes_sessions(spark):
 
     from apachebeam_python_spark.streaming.timers import session_finalizer_stream
 
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"timer_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
 
@@ -139,7 +137,7 @@ def test_event_time_timer_finalizes_sessions(spark):
     assert rows == {(1, 3)}  # user 2's session never timed out
 
 
-def test_update_mode_emits_revisions(spark):
+def test_update_mode_emits_revisions(spark, tmp_path):
     """Update output mode (≈ Beam accumulating panes per micro-batch, no
     retractions): a window's row is re-emitted with the new aggregate as
     later micro-batches add events."""
@@ -150,7 +148,7 @@ def test_update_mode_emits_revisions(spark):
 
     from apachebeam_python_spark.operators import event_time as ET
 
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"upd_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
     _write(spark, src, [(1, base + dt.timedelta(minutes=1), 1.0)])
@@ -171,14 +169,14 @@ def test_update_mode_emits_revisions(spark):
     assert emitted == [1, 2]
 
 
-def test_foreach_batch_sink_writes_parquet(spark, sf_dir):
+def test_foreach_batch_sink_writes_parquet(spark, sf_dir, tmp_path):
     """foreachBatch: each micro-batch lands in a parquet dir partitioned by
     batch id — the universal custom-sink pattern (idempotent per batch_id)."""
     import uuid
 
     from apachebeam_python_spark.streaming import jobs
 
-    out_dir = f"{SCRATCH}/fb_{uuid.uuid4().hex[:8]}"
+    out_dir = f"{tmp_path}/fb_{uuid.uuid4().hex[:8]}"
 
     def sink(df, batch_id):
         df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
@@ -212,7 +210,7 @@ def test_observe_metrics_no_extra_pass(spark, sf_dir):
     assert m["n_errors"] == e.filter(F.col("event_type") == "error").count()
 
 
-def test_transform_with_state_running_sum(spark):
+def test_transform_with_state_running_sum(spark, tmp_path):
     """PySpark 4 transformWithStateInPandas (named ValueState across
     micro-batches). xfail where the protobuf state protocol is unavailable
     (round 6, VERDICT r5 #5): this container has no google.protobuf and no
@@ -237,7 +235,7 @@ def test_transform_with_state_running_sum(spark):
             "semantics covered by q_stateful_dedup's applyInPandasWithState"
         )
 
-    src = f"{SCRATCH}/tws_{uuid.uuid4().hex[:8]}"
+    src = f"{tmp_path}/tws_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
     _write(spark, src, [(1, base, 10.0), (1, base, 5.0), (2, base, 1.0)])
     stream = spark.readStream.schema("user_id long, ts timestamp, value double").parquet(src)
@@ -285,16 +283,16 @@ def test_stream_static_join(spark, sf_dir):
     assert got.filter((F.col("event_type") == "error") & (F.col("wv") != 0)).count() == 0
 
 
-def test_checkpoint_recovery_exactly_once(spark):
+def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Stop a checkpointed stream mid-input, restart it with the same
     checkpoint, and verify the idempotent foreachBatch sink holds every
     event exactly once — the end-to-end exactly-once contract."""
     import glob
     import uuid
 
-    src = f"{SCRATCH}/ck_src_{uuid.uuid4().hex[:8]}"
-    ckpt = f"{SCRATCH}/ck_chk_{uuid.uuid4().hex[:8]}"
-    out = f"{SCRATCH}/ck_out_{uuid.uuid4().hex[:8]}"
+    src = f"{tmp_path}/ck_src_{uuid.uuid4().hex[:8]}"
+    ckpt = f"{tmp_path}/ck_chk_{uuid.uuid4().hex[:8]}"
+    out = f"{tmp_path}/ck_out_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
 
     def sink(df, batch_id):
@@ -333,12 +331,12 @@ def test_checkpoint_recovery_exactly_once(spark):
     assert len(glob.glob(f"{out}/batch=*")) >= 2  # second batch came post-recovery
 
 
-def test_drop_duplicates_within_watermark(spark):
+def test_drop_duplicates_within_watermark(spark, tmp_path):
     """Built-in streaming dedup (dropDuplicatesWithinWatermark): a duplicate
     id arriving within the watermark window is suppressed."""
     import uuid
 
-    src = f"{SCRATCH}/ddw_{uuid.uuid4().hex[:8]}"
+    src = f"{tmp_path}/ddw_{uuid.uuid4().hex[:8]}"
     sink = f"ddw_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
     _write(spark, src, [(1, base, 1.0), (1, base + dt.timedelta(minutes=1), 2.0)])
@@ -386,7 +384,7 @@ def test_rocksdb_state_store_runs_streaming_agg(spark, sf_dir):
         spark.conf.set(key, saved)
 
 
-def test_streaming_cdc_upsert_via_foreach_batch(spark, sf_dir):
+def test_streaming_cdc_upsert_via_foreach_batch(spark, sf_dir, tmp_path):
     """Streaming CDC apply: each micro-batch of updates merges into a
     parquet lake through foreachBatch + layout.merge_upsert — the
     streaming half of the lake-maintenance story. The final table must
@@ -398,7 +396,7 @@ def test_streaming_cdc_upsert_via_foreach_batch(spark, sf_dir):
     from apachebeam_python_spark.sources import layout
     from apachebeam_python_spark.streaming import jobs
 
-    path = "/root/repo/.tmp/cdc_lake"
+    path = str(tmp_path / "cdc_lake")
     shutil.rmtree(path, ignore_errors=True)
     base = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
@@ -443,7 +441,7 @@ def test_streaming_cdc_upsert_via_foreach_batch(spark, sf_dir):
     assert {tuple(r) for r in again.collect()} == got_rows
 
 
-def test_threshold_alert_state_carries_across_batches(spark):
+def test_threshold_alert_state_carries_across_batches(spark, tmp_path):
     """threshold_alert_stream must accumulate ACROSS micro-batches and emit
     exactly one alert per key at the crossing event (emit-on-transition) —
     proven with a two-file source processed one file per trigger."""
@@ -451,7 +449,7 @@ def test_threshold_alert_state_carries_across_batches(spark):
 
     from apachebeam_python_spark.streaming.stateful import threshold_alert_stream
 
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"thr_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
     schema = "user_id long, ts timestamp, event_id long, value double"
@@ -492,7 +490,7 @@ def test_threshold_alert_state_carries_across_batches(spark):
     assert got == {1: (1100.0, 3), 2: (1500.0, 1)}, got
 
 
-def test_late_data_census_exact_drop_counts(spark):
+def test_late_data_census_exact_drop_counts(spark, tmp_path):
     """VERDICT r3 #6: make the allowed-lateness divergence OBSERVABLE with
     numbers. Spark's ``withWatermark`` is drop-only (Beam: allowed_lateness=0,
     discarding, on-time pane only); Beam with allowed_lateness>0 would refire
@@ -505,7 +503,7 @@ def test_late_data_census_exact_drop_counts(spark):
     counts late (window, key) state rows, not raw input rows — our 4 late
     input rows arrive as 3 late window-partials (0:00-window ×2 rows,
     1:00-window, then 10:00-window in a later batch)."""
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"census_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
 
@@ -554,7 +552,7 @@ def test_late_data_census_exact_drop_counts(spark):
     assert rows == {(at(10, 0), 3)}
 
 
-def test_processing_time_timer_flushes_idle_keys(spark):
+def test_processing_time_timer_flushes_idle_keys(spark, tmp_path):
     """Processing-time @on_timer (Beam TimeDomain.REAL_TIME): a key idle for
     longer than the timeout is flushed by a later micro-batch's timer sweep
     — no watermark involved. Rows-only by nature (the flush boundary is wall
@@ -571,7 +569,7 @@ def test_processing_time_timer_flushes_idle_keys(spark):
 
     from apachebeam_python_spark.streaming.timers import idle_key_flush_stream
 
-    src = f"{SCRATCH}/{uuid.uuid4().hex}"
+    src = f"{tmp_path}/{uuid.uuid4().hex}"
     sink = f"ptimer_{uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
 
@@ -599,7 +597,7 @@ def test_processing_time_timer_flushes_idle_keys(spark):
     assert rows == {(1, 3)}
 
 
-def test_cdc_materialize_state_upserts_across_batches(spark):
+def test_cdc_materialize_state_upserts_across_batches(spark, tmp_path):
     """cdc_materialize_stream must keep last-write-wins state ACROSS
     micro-batches: an older version arriving in a later batch must NOT
     overwrite a newer one, and each touched key emits one update per
@@ -609,7 +607,7 @@ def test_cdc_materialize_state_upserts_across_batches(spark):
 
     from apachebeam_python_spark.streaming.stateful import cdc_materialize_stream
 
-    src = f"{SCRATCH}/{_uuid.uuid4().hex}"
+    src = f"{tmp_path}/{_uuid.uuid4().hex}"
     sink = f"cdc_{_uuid.uuid4().hex[:8]}"
     base = dt.datetime(2024, 1, 1)
     schema = (
