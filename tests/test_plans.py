@@ -38,7 +38,8 @@ def test_order_limit_uses_take_ordered(spark, sf_dir):
 
 
 def test_semi_anti_plans(spark, sf_dir):
-    df = q.QUERIES["q_join_semi_anti"](spark, sf_dir)
+    """INTERSECT and EXCEPT are planned as semi and anti joins."""
+    df = q.QUERIES["q_setops"](spark, sf_dir)
     assert P.has(df, "LeftSemi") and P.has(df, "LeftAnti")
 
 
@@ -67,6 +68,11 @@ def test_win_functions_single_shuffle(spark, sf_dir):
     exchange serves ranking, navigation, and frame functions."""
     df = q.QUERIES["q_win_functions"](spark, sf_dir)
     assert P.count_exchanges(df) == 1, P.executed_plan(df)
+
+
+def test_join_semi_anti_merged_plans(spark, sf_dir):
+    df = q.QUERIES["q_join_semi_anti"](spark, sf_dir)
+    assert P.has(df, "LeftSemi") and P.has(df, "LeftAnti")
 
 
 def test_doc_features_single_shuffle(spark, sf_dir):
