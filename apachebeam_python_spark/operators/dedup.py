@@ -11,7 +11,7 @@ Scale design (the 100 TB story, per variant):
   (xxhash64 + groupBy), no MLlib dependency, no driver collection.
 - **n-gram Jaccard (exact)**: gram-explode → self-join on gram → shared
   counts → Jaccard filter. Exact but gram-frequency-bounded; at 100 TB run it
-  only on LSH candidates (compose: minhash_lsh_pairs → verify=True does this).
+  only on LSH candidates (minhash_lsh_pairs' verify step does this).
 - **simhash**: 64-bit signature from token hashes; near-dups = small Hamming
   distance; bucket by signature bands to avoid n².
 - **embedding near-dup**: cosine ≥ τ pairs; brute force for small n, LSH
@@ -152,25 +152,6 @@ def _hashed_grams_sql(text_col: str, n: int) -> str:
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str, *, shingle_n: int = 2, num_hashes: int = 32) -> DataFrame:
-    """Per-doc minhash signature array (min over grams of
-    ``xxhash64(gram, i)``) — the same fold the pairs pipeline runs,
-    packaged as one ``array<bigint>`` column for a reusable signature
-    table. Guard predicate at the scan, not over the gram array — see
-    :func:`minhash_lsh_pairs` perf notes."""
-    return (
-        df.filter(
-            F.col(text_col).isNotNull()
-            & (F.size(F.split(F.col(text_col), " ")) >= shingle_n)
-        )
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.expr(_hashed_grams_sql(text_col, shingle_n)).alias("grams"),
-        )
-        .select("doc_id", F.expr(_minhash_signature_sql("grams", num_hashes)).alias("sig"))
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -180,7 +161,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    verify: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs.
@@ -190,8 +170,8 @@ def minhash_lsh_pairs(
     ``bands`` band buckets, each a seed-chained xxhash64 fold over the
     band's signature slice (longs only) → docs sharing any (band, bucket)
     become candidates (the one shuffle that sees all docs, carrying just
-    ids+buckets) → optional exact gram-Jaccard verify ≥ threshold on the
-    (much smaller) candidate set.
+    ids+buckets) → exact gram-Jaccard verify ≥ threshold on the (much
+    smaller) candidate set.
 
     Round-3 perf notes (VERDICT r2 #2, profiled at sf0.1):
     - the round-2 ``filter(size(shingles) > 0)`` was 8× the cost of the
@@ -235,16 +215,15 @@ def minhash_lsh_pairs(
     sigs = grams.withColumn(
         "sig", F.expr(_minhash_signature_sql("grams", num_hashes))
     )
-    if verify:
-        # materialize the gram+signature table once (O(docs × grams) longs);
-        # see the lifecycle note in the docstring
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/minhash_grams"
-            sigs.write.mode("overwrite").parquet(path)
-            sigs = df.sparkSession.read.parquet(path)
-        else:
-            sigs = sigs.persist()
-            _SIG_CACHES.append(sigs)
+    # materialize the gram+signature table once (O(docs × grams) longs);
+    # see the lifecycle note in the docstring
+    if checkpoint_dir is not None:
+        path = f"{checkpoint_dir}/minhash_grams"
+        sigs.write.mode("overwrite").parquet(path)
+        sigs = df.sparkSession.read.parquet(path)
+    else:
+        sigs = sigs.persist()
+        _SIG_CACHES.append(sigs)
 
     banded = sigs.select(
         "doc_id",
@@ -261,8 +240,7 @@ def minhash_lsh_pairs(
     # pair generation stays NARROW (ids only) — the gram arrays would
     # otherwise ride through the bucket join and the dedup shuffle; they are
     # joined back only for the (much smaller) candidate set.
-    ids = banded
-    a, b = ids.alias("a"), ids.alias("b")
+    a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
             b,
@@ -273,8 +251,6 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if not verify:
-        return cand
     sh = sigs.select("doc_id", "grams")
     cand = (
         cand.join(sh.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("sh_a")), "doc_a")
@@ -448,8 +424,8 @@ def ngram_containment_pairs(
     1000-gram doc scores containment 1.0 but Jaccard 0.1. Same plan shape
     as :func:`ngram_jaccard_pairs` (gram-explode equi-join, quadratic in
     per-gram document frequency) — at 100 TB run it on LSH candidates,
-    i.e. swap the pair source for minhash_lsh_pairs(verify=False) and keep
-    this scoring join."""
+    i.e. take the pair source from minhash_lsh_pairs' banded candidates
+    and keep this scoring join."""
     # lazy lineage cut (r10b): counts + BOTH self-join sides consume the
     # explode — without it the shingle subtree plans three times
     grams = checkpoint(
@@ -608,7 +584,6 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    pointer_jump: bool = True,
     small_graph_max_edges: int = 1 << 20,
 ) -> DataFrame:
     """Near-dup pairs → dedup clusters: connected components by iterative
@@ -618,9 +593,9 @@ def connected_components(
     Iterative control flow lives on the driver (converge when no label
     changes — an aggregate check per round); per-round work is one join +
     one aggregate, and ``localCheckpoint`` truncates the growing lineage so
-    round N doesn't replay rounds 1..N-1. With ``pointer_jump`` each round
-    also shortcuts ``label(u) ← label(label(u))`` (one self-join on the
-    O(nodes) label table), halving pointer-chain depth — rounds drop from
+    round N doesn't replay rounds 1..N-1. Each round also shortcuts
+    ``label(u) ← label(label(u))`` (one self-join on the O(nodes) label
+    table), halving pointer-chain depth — rounds drop from
     O(diameter) to O(log diameter), which is what keeps a pathological
     deep chain from blowing the iteration cap at corpus scale. Safe because
     labels are non-increasing, always a component member's id, and any
@@ -673,15 +648,14 @@ def connected_components(
         labels = updated.select("u", F.col("new_label").alias("label"))
         if changed == 0:
             break
-        if pointer_jump:
-            l2 = labels.select(F.col("u").alias("j_u"), F.col("label").alias("j_label"))
-            labels = checkpoint(
-                labels.join(l2, labels.label == F.col("j_u"), "left")
-                .select(
-                    "u",
-                    F.least(F.col("label"), F.coalesce("j_label", "label")).alias("label"),
-                )
+        l2 = labels.select(F.col("u").alias("j_u"), F.col("label").alias("j_label"))
+        labels = checkpoint(
+            labels.join(l2, labels.label == F.col("j_u"), "left")
+            .select(
+                "u",
+                F.least(F.col("label"), F.coalesce("j_label", "label")).alias("label"),
             )
+        )
     else:
         # falling through with changed != 0 would silently return WRONG
         # labels for any component whose diameter exceeds max_iter

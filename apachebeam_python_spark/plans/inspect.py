@@ -18,7 +18,16 @@ from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The whole plan: Spark cuts field lists past maxToStringFields (25,
+    "... 4 more fields") and some nodes read that conf directly, so it is
+    lifted while the plan renders."""
+    conf, key = df.sparkSession.conf, "spark.sql.debug.maxToStringFields"
+    prev = conf.get(key)
+    conf.set(key, str(2**31 - 1))
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        conf.set(key, prev)
 
 
 def formatted(df: DataFrame) -> str:

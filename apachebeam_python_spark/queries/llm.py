@@ -414,7 +414,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recursive-CTE oracle valid)."""
     pairs = D.minhash_lsh_pairs(
         table(spark, sf_dir, "documents"), "text", "doc_id",
-        shingle_n=2, num_hashes=64, bands=32, threshold=0.5, verify=True,
+        shingle_n=2, num_hashes=64, bands=32, threshold=0.5,
     )
     return D.connected_components(pairs)
 
@@ -462,7 +462,7 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     pairs = D.minhash_lsh_pairs(
         table(spark, sf_dir, "documents"), "text", "doc_id",
-        shingle_n=2, num_hashes=64, bands=32, threshold=0.5, verify=True,
+        shingle_n=2, num_hashes=64, bands=32, threshold=0.5,
     )
     clus = D.connected_components(pairs)
     members = docs.join(

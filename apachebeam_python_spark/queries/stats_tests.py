@@ -37,6 +37,13 @@ def _cents(col):
     return F.round(col * 100).cast("long")
 
 
+def _round6(col):
+    """DuckDB's round(x, 6), i.e. round(x·10⁶) / 10⁶. ``F.round(x, 6)``
+    rounds x's decimal repr, which differs past ~2.25e9: x·10⁶ has a 0.5
+    ulp there, so 3234717205.6562853 is …286 in DuckDB, …285 in Spark."""
+    return F.round(col * 1e6) / 1e6
+
+
 # --------------------------------------------------------------------------
 # Chi-square test of independence
 # --------------------------------------------------------------------------
@@ -2820,9 +2827,11 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σvar_item/var_total), THE metric survey and composite-score pipelines
     report before averaging item scores (SURVEY §2.3 statistical
     extensions). Item and total variances derive from exact integer cents
-    moments, each n·Σx² − (Σx)² widened to 128-bit (the q_anova lesson);
-    the item-variance sum adds k doubles before the single 6-dp round.
-    NULL when the total variance is degenerate.
+    moments, each n·Σx² − (Σx)² widened to 128-bit (the q_anova lesson).
+    The k item variances (~3e9 in sum at sf0.1, where one ulp shows at 6
+    dp) add with Neumaier compensation, so no merge order moves the sum;
+    columns round as DuckDB does (:func:`_round6`). NULL when the total
+    variance is degenerate.
 
     Scale: one (user, item) groupBy; item variances are a k-row rollup,
     case totals one more user-keyed partial agg — no global sorts."""
@@ -2850,10 +2859,14 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         hi(F.sum(hi(F.col("item")) * F.col("item"))).alias("ss"),
     )
     iv = item_var.filter(F.col("n") > 1).agg(
-        F.sum(
+        F.collect_list(
             (F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double")
             / (F.col("n").cast("double") * (F.col("n") - 1))
-        ).alias("sum_item_var")
+        ).alias("v")
+    ).selectExpr(
+        "IF(size(v) = 0, NULL, aggregate(array_sort(v), named_struct('s', 0.0D, 'c', 0.0D),"
+        " (x, y) -> named_struct('s', x.s + y, 'c', x.c + IF(abs(x.s) >= abs(y),"
+        " (x.s - (x.s + y)) + y, (y - (x.s + y)) + x.s)), x -> x.s + x.c)) AS sum_item_var"
     )
     totals = mb.groupBy("user_id").agg(F.sum("item").alias("tot"))
     tv = totals.agg(
@@ -2871,9 +2884,9 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         n.cast("long").alias("n_cases"),
         "k",
-        F.round(F.col("sum_item_var"), 6).alias("sum_item_var"),
-        F.round(total_var, 6).alias("total_var"),
-        F.when((k > 1) & (n > 1) & (tvar_num > 0), F.round(alpha, 6)).alias(
+        _round6(F.col("sum_item_var")).alias("sum_item_var"),
+        _round6(total_var).alias("total_var"),
+        F.when((k > 1) & (n > 1) & (tvar_num > 0), _round6(alpha)).alias(
             "cronbach_alpha"
         ),
     )

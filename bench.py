@@ -24,7 +24,6 @@ round-2 bench regression was exactly this serial-scan floor. The warm-up
 rewrites the tables into multi-file copies under a temp dir via
 ``sources.layout.rewrite_for_parallel_scan`` (the lake-maintenance story
 applied to the harness's own inputs) and times queries against those.
-``SPARK_GRAFT_BENCH_COMPACT=0`` disables it to measure the raw layout.
 
 Comparability across rounds (round 4, VERDICT r3 #5): the JSON carries
 ``plan_sha`` — a location-/exprId-stripped sha256 of each headline query's
@@ -64,7 +63,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -171,271 +172,6 @@ def host_probe(spark) -> dict:
     }
 
 
-def _load_base_registry(base_dir: str) -> dict:
-    """Import the BASE ref's query registry in-process, isolated from
-    HEAD's modules: snapshot sys.modules, import the worktree's package,
-    capture its registry + cache-release hook, then restore HEAD's modules.
-    Both versions coexist afterwards as distinct module objects (each
-    function keeps references to ITS OWN defining modules)."""
-    import importlib
-
-    saved = {
-        k: v
-        for k, v in sys.modules.items()
-        if k.split(".")[0] == "apachebeam_python_spark"
-    }
-    for k in saved:
-        del sys.modules[k]
-    sys.path.insert(0, base_dir)
-    try:
-        bq = importlib.import_module("apachebeam_python_spark.queries")
-        bd = importlib.import_module("apachebeam_python_spark.operators.dedup")
-        base_mods = {
-            k: v
-            for k, v in sys.modules.items()
-            if k.split(".")[0] == "apachebeam_python_spark"
-        }
-        return {
-            "queries": dict(bq.QUERIES),
-            "release": bd.release_signature_caches,
-            # the full base module set: query builders routinely do LAZY
-            # function-body imports (``from ..operators.x import y`` at
-            # CALL time), which resolve through sys.modules by NAME — a
-            # base call made under HEAD's modules silently executes HEAD
-            # operators (caught r11: both q_pagerank sides produced the
-            # SAME plan sha). run_ab swaps this set in around every base
-            # call.
-            "modules": base_mods,
-        }
-    finally:
-        sys.path.remove(base_dir)
-        for k in [
-            k
-            for k in list(sys.modules)
-            if k.split(".")[0] == "apachebeam_python_spark"
-        ]:
-            del sys.modules[k]
-        sys.modules.update(saved)
-
-
-def run_ab(base_ref: str, names: list[str] | None = None) -> None:
-    """Interleaved same-session A/B vs a base git ref (r11, VERDICT r10 #3).
-
-    Cross-round bench totals are formally untrusted on this host (both r10
-    runs flagged both tiers — probe-bracket spreads 14–32% within minutes),
-    so the only valid optimization/regression evidence is base and HEAD
-    timed ADJACENTLY in ONE Spark session, where host drift hits both sides
-    equally. This mode standardizes the ad-hoc methodology that proved the
-    r10 setsim levers:
-
-    - the base ref is materialized via ``git worktree`` and its query
-      registry imported in-process (module-isolated from HEAD's);
-    - per query, three base/head pairs run back-to-back with the pair
-      order alternating (BH, HB, BH) so a monotone host drift cancels;
-    - the ratio is base_best / head_best (>1 ⇒ HEAD faster), written with
-      both sides' raw passes and plan fingerprints to BENCH_AB.json;
-    - the whole run is probe-bracketed; the bracket gates only the
-      CROSS-run comparability of the absolute numbers — the ratios are
-      within-session by construction.
-
-    KNOWN CAVEAT (documented in the artifact): Spark's Python workers
-    import modules by NAME, which resolves to HEAD's repo — so a base
-    query whose lever lives in worker-side module-level Python (a Pandas
-    UDF helper in sources/operators) may execute HEAD's worker code.
-    Plan-level levers (join strategies, filters, persists, shuffles) are
-    compared faithfully; worker-side-Python levers still need the inline
-    two-variant method. Closures defined INSIDE query builders are pickled
-    by value and stay faithful to their side.
-    """
-    import shutil
-    import subprocess
-    import tempfile
-
-    from apachebeam_python_spark.operators.dedup import release_signature_caches
-    from apachebeam_python_spark.plans.inspect import plan_fingerprint
-    from apachebeam_python_spark.session import (
-        DEFAULT_SF_DIR,
-        TABLES,
-        get_spark,
-        table,
-    )
-    from apachebeam_python_spark.sources.layout import rewrite_for_parallel_scan
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    head_desc = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        cwd=repo_dir, capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    dirty = bool(
-        subprocess.run(
-            ["git", "status", "--porcelain"],
-            cwd=repo_dir, capture_output=True, text=True, check=True,
-        ).stdout.strip()
-    )
-    base_dir = tempfile.mkdtemp(prefix="spark_graft_ab_base_")
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", base_dir, base_ref],
-        cwd=repo_dir, check=True, capture_output=True,
-    )
-    try:
-        base = _load_base_registry(base_dir)
-        spark = get_spark("bench-ab")
-        spark.sparkContext.setLogLevel("ERROR")
-        table(spark, sf_dir, "lineitem").count()  # warm-up
-        bench_dir = tempfile.mkdtemp(prefix="spark_graft_bench_")
-        rewrite_for_parallel_scan(spark, sf_dir, bench_dir, TABLES)
-        if not names:
-            names = [
-                n for n in HEADLINE + HEADLINE2 if n in base["queries"]
-            ]
-        skipped = [n for n in names if n not in base["queries"]]
-        names = [n for n in names if n in base["queries"]]
-
-        import contextlib
-
-        head_mods = {
-            k: v
-            for k, v in sys.modules.items()
-            if k.split(".")[0] == "apachebeam_python_spark"
-        }
-
-        @contextlib.contextmanager
-        def base_modules():
-            """Swap the base ref's module set into sys.modules for the
-            duration of a base-side call, so the builders' lazy
-            function-body imports resolve to BASE code (see
-            _load_base_registry)."""
-            for k in [
-                k
-                for k in list(sys.modules)
-                if k.split(".")[0] == "apachebeam_python_spark"
-            ]:
-                del sys.modules[k]
-            sys.modules.update(base["modules"])
-            try:
-                yield
-            finally:
-                for k in [
-                    k
-                    for k in list(sys.modules)
-                    if k.split(".")[0] == "apachebeam_python_spark"
-                ]:
-                    del sys.modules[k]
-                sys.modules.update(head_mods)
-
-        def run_one(fn, is_base: bool) -> float:
-            ctx = base_modules() if is_base else contextlib.nullcontext()
-            with ctx:
-                t0 = time.monotonic()
-                materialize(fn(spark, bench_dir))
-                dt = round(time.monotonic() - t0, 3)
-            base["release"]()
-            release_signature_caches()
-            return dt
-
-        pb_before = host_probe(spark)
-        per_query: dict[str, dict] = {}
-        for name in names:
-            b_fn, h_fn = base["queries"][name], q.QUERIES[name]
-            # untimed warm-up pair: codegen/JIT/file-cache warm BOTH sides
-            # before any timed pass, else the first-run side eats the cold
-            # cost (measured: identical plans showed a spurious 1.38× on a
-            # sub-second query without this)
-            run_one(b_fn, True)
-            run_one(h_fn, False)
-            b_times, h_times = [], []
-            for i in range(3):
-                order = [("b", b_fn), ("h", h_fn)]
-                if i == 1:  # alternate pair order: BH, HB, BH
-                    order.reverse()
-                for side, fn in order:
-                    (b_times if side == "b" else h_times).append(
-                        run_one(fn, side == "b")
-                    )
-            b_best, h_best = min(b_times), min(h_times)
-            entry = {
-                "base": b_times,
-                "head": h_times,
-                "base_best": b_best,
-                "head_best": h_best,
-                "ratio_base_over_head": round(b_best / h_best, 3)
-                if h_best
-                else None,
-            }
-            try:
-                with base_modules():
-                    sb = plan_fingerprint(
-                        base["queries"][name](spark, sf_dir)
-                    )
-                sh = plan_fingerprint(q.QUERIES[name](spark, sf_dir))
-                entry["plan_sha_base"] = sb
-                entry["plan_sha_head"] = sh
-                entry["plan_changed"] = sb != sh
-            except Exception:
-                pass
-            base["release"]()
-            release_signature_caches()
-            per_query[name] = entry
-            print(
-                f"AB {name}: base {b_best} head {h_best} "
-                f"ratio {entry['ratio_base_over_head']}",
-                file=sys.stderr,
-            )
-        pb_after = host_probe(spark)
-        lo, hi = sorted([pb_before["total"], pb_after["total"]])
-        spread = round(hi / lo - 1.0, 3) if lo else None
-        out = {
-            "mode": "interleaved_ab",
-            "base_ref": base_ref,
-            "head": head_desc + ("+dirty" if dirty else ""),
-            "sf_dir": sf_dir,
-            "probe_bracket": {
-                "before": pb_before,
-                "after": pb_after,
-                "spread": spread,
-                # gates only cross-RUN use of the absolute numbers; the
-                # per-query ratios are within-session by construction
-                "trusted_for_comparison": spread is not None
-                and spread <= 0.10,
-            },
-            "queries": per_query,
-            "skipped_not_in_base": skipped,
-            "caveat": (
-                "python workers import modules by NAME (resolving to HEAD's "
-                "repo): base-side worker-module Python may execute HEAD "
-                "code — plan-level levers compare faithfully, worker-side-"
-                "Python levers need the inline two-variant method"
-            ),
-        }
-        ab_path = os.environ.get(
-            "SPARK_GRAFT_BENCH_AB", os.path.join(repo_dir, "BENCH_AB.json")
-        )
-        with open(ab_path, "w") as fh:
-            json.dump(out, fh, indent=2)
-            fh.write("\n")
-        shutil.rmtree(bench_dir, ignore_errors=True)
-        print(
-            json.dumps(
-                {
-                    "metric": "ab_ratio_base_over_head",
-                    "base_ref": base_ref,
-                    "queries": {
-                        n: e["ratio_base_over_head"]
-                        for n, e in per_query.items()
-                    },
-                    "probe_spread": spread,
-                }
-            )
-        )
-    finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", base_dir],
-            cwd=repo_dir, capture_output=True,
-        )
-        shutil.rmtree(base_dir, ignore_errors=True)
-
-
 def main() -> None:
     from apachebeam_python_spark.session import DEFAULT_SF_DIR
 
@@ -488,18 +224,12 @@ def main() -> None:
     scale_probe = _scale_probe()
 
     # layout maintenance (see module docstring): queries run against a
-    # multi-row-group rewrite of the fixture so scans parallelize
-    if os.environ.get("SPARK_GRAFT_BENCH_COMPACT", "1") != "0":
-        import tempfile
+    # multi-row-group rewrite of the fixture so scans parallelize; the
+    # rewrite is a full fixture copy, removed on exit
+    from apachebeam_python_spark.sources.layout import rewrite_for_parallel_scan
 
-        from apachebeam_python_spark.sources.layout import rewrite_for_parallel_scan
-
-        bench_dir = tempfile.mkdtemp(prefix="spark_graft_bench_")
-        cleanup_dir = bench_dir  # full fixture copy — remove on exit
-        rewrite_for_parallel_scan(spark, sf_dir, bench_dir, TABLES)
-    else:
-        bench_dir = sf_dir
-        cleanup_dir = None
+    bench_dir = tempfile.mkdtemp(prefix="spark_graft_bench_")
+    rewrite_for_parallel_scan(spark, sf_dir, bench_dir, TABLES)
 
     from apachebeam_python_spark.operators.dedup import release_signature_caches
 
@@ -576,8 +306,6 @@ def main() -> None:
         try:
           if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0" and isinstance(sf, float):
             import math
-            import shutil
-            import tempfile
 
             from apachebeam_python_spark.sources.layout import replicate_scaled
 
@@ -645,10 +373,7 @@ def main() -> None:
             print(f"scaling section skipped: {exc}", file=sys.stderr)
             scaling = None
     finally:
-        if cleanup_dir is not None:
-            import shutil
-
-            shutil.rmtree(cleanup_dir, ignore_errors=True)
+        shutil.rmtree(bench_dir, ignore_errors=True)
 
     # plan fingerprints (VERDICT r3 #5): computed against the ORIGINAL
     # fixture dir (stable location-independent hash) so round-over-round
@@ -887,18 +612,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    # --ab BASE_REF [--ab-queries q1,q2,...]: interleaved same-session A/B
-    # (VERDICT r10 #3). Plain invocation stays the driver's bench contract.
-    if "--ab" in sys.argv:
-        i = sys.argv.index("--ab")
-        ref = sys.argv[i + 1]
-        ab_names = None
-        if "--ab-queries" in sys.argv:
-            ab_names = [
-                s
-                for s in sys.argv[sys.argv.index("--ab-queries") + 1].split(",")
-                if s
-            ]
-        run_ab(ref, ab_names)
-    else:
-        main()
+    main()

@@ -28,7 +28,7 @@ def test_minhash_pairs_equal_exact_pairs(spark, sf_dir):
         (r.doc_a, r.doc_b, r.jaccard)
         for r in D.minhash_lsh_pairs(
             docs, "text", "doc_id",
-            shingle_n=2, num_hashes=64, bands=32, threshold=0.5, verify=True,
+            shingle_n=2, num_hashes=64, bands=32, threshold=0.5,
         ).collect()
     }
     assert lsh == exact, (
@@ -58,8 +58,8 @@ def test_embedding_lsh_recall(spark, sf_dir):
 
 def test_connected_components_deep_chain_pointer_jump(spark):
     """A 300-node path graph converges with pointer jumping inside 12
-    rounds (propagate+jump is O(log diameter)); plain propagation would
-    need ~300 rounds and must raise at a small cap."""
+    rounds (propagate+jump is O(log diameter)), and a cap below log2 of
+    the diameter must raise instead of returning wrong labels."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], "doc_a long, doc_b long"
     )
@@ -79,9 +79,7 @@ def test_connected_components_deep_chain_pointer_jump(spark):
     import pytest
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(
-            pairs, max_iter=12, pointer_jump=False, small_graph_max_edges=0
-        )
+        D.connected_components(pairs, max_iter=3, small_graph_max_edges=0)
 
 
 def test_incremental_dedup_semantics(spark, sf_dir):

@@ -205,7 +205,7 @@ def test_connected_components_paths_identical(spark, sf_dir):
 
     pairs = minhash_lsh_pairs(
         table(spark, sf_dir, "documents"), "text", "doc_id",
-        shingle_n=2, num_hashes=64, bands=32, threshold=0.5, verify=True,
+        shingle_n=2, num_hashes=64, bands=32, threshold=0.5,
     )
     kernel = _rows(connected_components(pairs), "doc_id", "cluster_id")
     release_signature_caches()

@@ -20,6 +20,18 @@ def test_flagship_pushdown_and_pruning(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2, "partial+final aggregate expected"
 
 
+def test_has_sees_fields_past_the_to_string_cut(spark, sf_dir):
+    """q_fn_scalar's Project holds more than 25 fields, Spark's default
+    `maxToStringFields` cut; its coalesce column sits past the cut. The
+    plan renders whole and the session conf is left as it was."""
+    key = "spark.sql.debug.maxToStringFields"
+    before = spark.conf.get(key)
+    df = q.QUERIES["q_fn_scalar"](spark, sf_dir)
+    assert P.has(df, "coalesce(if (")
+    assert "more fields" not in P.executed_plan(df)
+    assert spark.conf.get(key) == before
+
+
 def test_broadcast_join_stays_broadcast(spark, sf_dir):
     df = q.QUERIES["q_join_broadcast"](spark, sf_dir)
     assert P.has(df, "BroadcastHashJoin")
@@ -90,7 +102,7 @@ def test_dedup_clusters_pairs_have_no_gram_self_join(spark, sf_dir):
 
     pairs = D.minhash_lsh_pairs(
         table(spark, sf_dir, "documents"), "text", "doc_id",
-        shingle_n=2, num_hashes=64, bands=32, threshold=0.5, verify=True,
+        shingle_n=2, num_hashes=64, bands=32, threshold=0.5,
     )
     plan = P.executed_plan(pairs)
     assert "xxhash64" in plan, "minhash banding missing from plan"
@@ -825,16 +837,9 @@ SUBSUMED = {
 @pytest.mark.parametrize("deleted", sorted(SUBSUMED))
 def test_subsumer_plan_carries_deleted_operator(spark, sf_dir, deleted):
     """A query folded into another is deleted, not kept registered: the
-    subsumer's executed plan must still carry its operator. Project lists
-    print in full here; Spark truncates them past 25 fields by default."""
+    subsumer's executed plan must still carry its operator."""
     subsumer, needles = SUBSUMED[deleted]
     assert deleted not in q.QUERIES, f"{deleted} is registered again"
-    key = "spark.sql.debug.maxToStringFields"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "1000")
-        plan = P.executed_plan(q.QUERIES[subsumer](spark, sf_dir))
-    finally:
-        spark.conf.set(key, prev)
+    plan = P.executed_plan(q.QUERIES[subsumer](spark, sf_dir))
     missing = [n for n in needles if n not in plan]
     assert not missing, f"{subsumer}'s plan lost {deleted}'s {missing}"

@@ -15,13 +15,25 @@ oracle queries this is a NEGLIGIBLE-probability class (an aggregate must
 land within 1 ulp of a half boundary), but it is the known failure shape
 when a hash mismatch shows two values differing by exactly 1e-6: check the
 boundary before suspecting logic. oracle-parity-gotchas records the rule.
+
+Past ~2.25e9 the class widens: DuckDB computes ``round(x·10⁶) / 10⁶``, and
+there the product x·10⁶ itself rounds (its ulp is 0.5 or more), so
+3234717205.6562853 is …286 in DuckDB and …285 in Spark. A query that
+rounds such magnitudes evaluates DuckDB's formula (``stats_tests._round6``).
 """
 
 from __future__ import annotations
 
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+from apachebeam_python_spark import queries as q
+from apachebeam_python_spark.queries._registry import ORACLES
+from apachebeam_python_spark.queries.stats_tests import _round6
+
+from .parity import assert_parity
 
 pytestmark = pytest.mark.driver  # newest-round evidence → fast gate
 
@@ -94,3 +106,58 @@ def test_round6_half_boundary_class_pinned(spark):
         "pinned examples no longer diverge — an engine changed its rounding; "
         "update the oracle-convention note"
     )
+
+
+def test_duckdb_round6_twin_matches_duckdb(spark):
+    """``_round6`` is DuckDB's round(x, 6) on both sides of every half:
+    the pinned divergent examples, the large-magnitude class and a spread
+    of ordinary values, signed."""
+    vals = _KNOWN_DIVERGENT + [
+        3234717205.6562853,   # q_cronbach_alpha's sum_item_var at sf0.1
+        4438899189.6,
+        0.5e-6,
+        1.5e-6,
+        0.0,
+    ]
+    vals += [k * 987654.3210987 + k / 7 for k in range(1, 60)]
+    vals += [-v for v in vals]
+    df = spark.createDataFrame(list(enumerate(vals)), "i long, v double")
+    got = {r.i: r.r for r in df.select("i", _round6(F.col("v")).alias("r")).collect()}
+    want = _duck_round6(vals)
+    diffs = [(v, got[i], want[i]) for i, v in enumerate(vals) if got[i] != want[i]]
+    assert not diffs, diffs[:5]
+
+
+def test_cronbach_alpha_matches_oracle_past_the_product_ulp(spark, tmp_path):
+    """Five complete cases over three items: the item variances add to
+    the same double in every order, 4438899189.6 (binary …6000004), which
+    ``F.round(x, 6)`` keeps and DuckDB rounds to …189.600001."""
+    cents = [
+        [93568, 70065, 56225],
+        [29676, 33861, 4507],
+        [8276, 1818, 19279],
+        [89459, 71435, 100403],
+        [55398, 66729, 106781],
+    ]
+    types = ["click", "view", "error"]
+    events = pd.DataFrame(
+        [
+            {
+                "event_id": u * len(types) + j,
+                "ts": pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=u),
+                "user_id": u,
+                "event_type": t,
+                "value": c / 100,
+                "props": "{}",
+            }
+            for u, row in enumerate(cents)
+            for j, (t, c) in enumerate(zip(types, row))
+        ]
+    )
+    events["ts"] = events["ts"].astype("datetime64[us]")
+    path = tmp_path / "events.parquet"
+    events.to_parquet(path, index=False)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    df = q.QUERIES["q_cronbach_alpha"](spark, str(tmp_path))
+    assert_parity(df, con, ORACLES["q_cronbach_alpha"], name="q_cronbach_alpha")
