@@ -41,16 +41,6 @@ def safe_cosine_from(dot_val: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.when(denom > 0, dot_val / denom).otherwise(F.lit(0.0))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: F.pow(x.cast("double") - y.cast("double"), 2)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def quantize_scale(a: Column) -> Column:
     """Per-vector symmetric int8 scale: max |x| / 127 (double)."""
     return (

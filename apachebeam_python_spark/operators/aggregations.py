@@ -40,17 +40,6 @@ def distinct_rows(df: DataFrame, *cols: str) -> DataFrame:
     return df.select(*cols).distinct() if cols else df.distinct()
 
 
-def collect_grouped(df: DataFrame, keys: Sequence[str], value: str, *, distinct: bool = False, out: str = "values") -> DataFrame:
-    """Beam ``GroupByKey`` materialized: (K, sorted list[V]).
-
-    Sorted for determinism (oracle parity; Beam PCollections are unordered
-    bags anyway). ``distinct=True`` ≈ ``ToSet``. Avoid at scale when a
-    downstream fold exists — fuse it into agg expressions instead.
-    """
-    coll = F.collect_set(value) if distinct else F.collect_list(value)
-    return df.groupBy(*keys).agg(F.array_sort(coll).alias(out))
-
-
 def top_k_global(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """Beam ``Top.Of(k)``: global top-k. ``orderBy+limit`` → Spark plans
     TakeOrderedAndProject (per-partition partial top-k, no full sort)."""

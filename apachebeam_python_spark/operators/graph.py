@@ -60,6 +60,16 @@ def _id_ddl(df: DataFrame, col: str) -> str:
     return {f.name: f.dataType for f in df.schema.fields}[col].simpleString()
 
 
+def _encode_ids(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Dictionary-encode a kernel's ``(ku, kv)`` edge frame: the sorted
+    node array and each edge's endpoint indices into it."""
+    nodes, inv = np.unique(
+        np.concatenate([pdf["ku"].to_numpy(), pdf["kv"].to_numpy()]),
+        return_inverse=True,
+    )
+    return nodes, inv[: len(pdf)], inv[len(pdf) :]
+
+
 def driver_kernel(
     df: DataFrame,
     max_rows: int,
@@ -396,13 +406,9 @@ def _dag_depth_small_graph(
     rounds = int(max_rounds)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        u = pdf["ku"].to_numpy(dtype="int64")
-        v = pdf["kv"].to_numpy(dtype="int64")
-        nodes_a = np.unique(np.concatenate([u, v]))
+        nodes_a, si, di = _encode_ids(pdf.astype("int64"))
         if len(nodes_a) > max_nodes:
             return None
-        si = np.searchsorted(nodes_a, u)
-        di = np.searchsorted(nodes_a, v)
         d = np.zeros(len(nodes_a), dtype="int64")
         for _ in range(rounds):
             nd = d.copy()
@@ -454,15 +460,15 @@ def hop_distances(
     ``max_d`` hops, source excluded. Returns ``(src, node, d)`` — one row
     per ordered pair with 1 ≤ d = shortest distance ≤ ``max_d``.
 
-    This is q_closeness_centrality's multi-source BFS (and, at max_d=3,
-    exactly q_harmonic_centrality's d1/d2/d3 level sets — BFS level k IS
-    the distance-k class). Distributed shape per round: frontier ⋈ edges,
-    anti-join visited, checkpoint, empty-probe — ~5 scheduler waves to
-    advance a ≤|V|²-row pair table one hop. Small graphs run the whole
-    BFS on the driver (``driver_kernel``) on boolean adjacency matrices:
-    frontier expansion is set algebra on exact integers, so
-    visited/(src,node,d) is identical by construction (pinned in
-    tests/test_graph_kernels.py).
+    This is q_closeness_centrality's multi-source BFS: BFS level k IS the
+    distance-k class, so closeness (n / Σ d) and harmonic (Σ 1/d)
+    centrality both read off one run. Distributed shape per round:
+    frontier ⋈ edges, anti-join visited, checkpoint, empty-probe — ~5
+    scheduler waves to advance a ≤|V|²-row pair table one hop. Small
+    graphs run the whole BFS on the driver (``driver_kernel``) on boolean
+    adjacency matrices: frontier expansion is set algebra on exact
+    integers, so visited/(src,node,d) is identical by construction
+    (pinned in tests/test_graph_kernels.py).
     """
     e0 = checkpoint(edges.select(src, dst), eager=False)
     small = _edge_kernel(
@@ -507,13 +513,8 @@ def hop_distances(
 
 
 def _hop_distances_kernel(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
-    u = pdf["ku"].to_numpy()
-    v = pdf["kv"].to_numpy()
-    nodes_a = np.unique(np.concatenate([u, v]))
-    idx = {val: i for i, val in enumerate(nodes_a)}
+    nodes_a, si, di = _encode_ids(pdf)
     n = len(nodes_a)
-    si = pdf["ku"].map(idx).to_numpy(dtype="int64")
-    di = pdf["kv"].map(idx).to_numpy(dtype="int64")
     adj = np.zeros((n, n), dtype=bool)
     adj[si, di] = True
     adj[di, si] = True  # symmetrize (the distributed union ∪ reverse)
@@ -599,13 +600,8 @@ def closure_census(
 
 
 def _closure_census_kernel(pdf: pd.DataFrame, rounds: int) -> pd.DataFrame:
-    u = pdf["ku"].to_numpy()
-    v = pdf["kv"].to_numpy()
-    nodes_a = np.unique(np.concatenate([u, v]))
-    idx = {val: i for i, val in enumerate(nodes_a)}
+    nodes_a, si, di = _encode_ids(pdf)
     n = len(nodes_a)
-    si = pdf["ku"].map(idx).to_numpy(dtype="int64")
-    di = pdf["kv"].map(idx).to_numpy(dtype="int64")
     adj = np.zeros((n, n), dtype=bool)
     adj[si, di] = True
     reach = adj.copy()
@@ -676,13 +672,8 @@ def kcore_census(
 
 
 def _kcore_census_kernel(pdf: pd.DataFrame, kk: int, rr: int) -> pd.DataFrame:
-    u = pdf["ku"].to_numpy()
-    v = pdf["kv"].to_numpy()
-    nodes_a = np.unique(np.concatenate([u, v]))
-    idx = {val: i for i, val in enumerate(nodes_a)}
+    nodes_a, si0, di0 = _encode_ids(pdf)
     n = len(nodes_a)
-    si0 = pdf["ku"].map(idx).to_numpy(dtype="int64")
-    di0 = pdf["kv"].map(idx).to_numpy(dtype="int64")
     # symmetrize + dedupe (the distributed union ∪ reverse + distinct)
     pair = np.unique(np.concatenate([si0 * n + di0, di0 * n + si0]))
     su, sv = pair // n, pair % n
@@ -755,13 +746,8 @@ def lpa_labels(
 
 
 def _lpa_labels_kernel(pdf: pd.DataFrame, rr: int) -> pd.DataFrame:
-    u = pdf["ku"].to_numpy()
-    v = pdf["kv"].to_numpy()
-    nodes_a = np.unique(np.concatenate([u, v]))
-    idx = {val: i for i, val in enumerate(nodes_a)}
+    nodes_a, si, di = _encode_ids(pdf)
     n = len(nodes_a)
-    si = pdf["ku"].map(idx).to_numpy(dtype="int64")
-    di = pdf["kv"].map(idx).to_numpy(dtype="int64")
     # und = oriented ∪ reversed (u < v ⇒ no dupes to dedupe)
     su = np.concatenate([si, di])
     sv = np.concatenate([di, si])

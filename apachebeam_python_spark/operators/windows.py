@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -28,8 +28,3 @@ def running(
     (running total), ``preceding=k`` → sliding window of k+1 rows."""
     start = Window.unboundedPreceding if preceding is None else -preceding
     return over(partition, order).rowsBetween(start, Window.currentRow)
-
-
-def with_window_columns(df: DataFrame, **exprs: Column) -> DataFrame:
-    """Attach analytic columns (each kwarg an already-``.over(...)``'d expr)."""
-    return df.withColumns(dict(exprs))

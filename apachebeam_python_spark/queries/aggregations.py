@@ -90,32 +90,6 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_approx_distinct", driver=False)  # rows-only: HLL estimate, not oracle-hashable (SURVEY §7.4.3)
-def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ApproximateUnique via HyperLogLog++ (mergeable sketch — scale path)."""
-    return agg.approx_distinct(table(spark, sf_dir, "events"), ["event_type"], "user_id")
-
-
-@register("q_approx_quantiles", driver=False)  # rows-only: sketch-dependent values
-def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ApproximateQuantiles of order totalprice (median, p90, p99). The
-    sketch output array is serialized to a CSV string — even the driver's
-    rows-only count canonicalizes the frame and crashes on raw arrays
-    (VERDICT r1 #2)."""
-    out = agg.approx_quantiles(
-        table(spark, sf_dir, "orders"), ["o_orderstatus"], "o_totalprice", [0.5, 0.9, 0.99]
-    )
-    return out.withColumn(
-        "quantiles", F.array_join(F.transform("quantiles", lambda x: x.cast("string")), ",")
-    )
-
-
-@register("q_sample", driver=False)  # rows-only: nondeterministic across partition layouts
-def q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample.FixedSizeGlobally(100), seeded."""
-    return agg.sample_fixed_global(table(spark, sf_dir, "customer"), 100)
-
-
 @register(
     "q_agg_combine",
     oracle="""
@@ -249,8 +223,7 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_approx_sample", driver=False)  # rows-only: sketch estimates + seeded sampling; off the driver surface since r3 (can't earn a hash-green row — VERDICT r2 #1), recall/property proofs live in pytest
 def q_approx_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The approximate/sampling combiner family in one tagged rows-only
-    driver row (SURVEY §2.3; folds q_approx_distinct / q_approx_quantiles /
-    q_sample, pytest-only): 'hll' = per-event-type HyperLogLog++ distinct
+    driver row (SURVEY §2.3): 'hll' = per-event-type HyperLogLog++ distinct
     users, 'quantiles' = per-orderstatus approx percentile sketch (values
     serialized to CSV — raw arrays crash even the driver's rows-only count),
     'sample' = Sample.FixedSizeGlobally(100) of customers, reported as one

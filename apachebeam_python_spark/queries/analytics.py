@@ -8,7 +8,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import joins as J
-from ..session import broadcast_if_small, checkpoint, table
+from ..session import broadcast_if_small, checkpoint, register_views, table
 from ._registry import register
 
 
@@ -161,10 +161,9 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_funnel",  # driver slot r3-r10; rotated off r11 (wave 6)
-    driver=False,  # rotated off r11 (wave 6) — stays oracle-backed in the local sweep
-    oracle="""
+#: chained-min funnel census: the oracle of q_funnel and of its streaming
+#: twin q_stream_funnel
+_FUNNEL_SQL = """
 WITH s1 AS (
   SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view'
   GROUP BY user_id
@@ -184,7 +183,13 @@ UNION ALL
 SELECT 'click'    AS step, CAST(2 AS INTEGER) AS step_no, CAST(count(*) AS BIGINT) AS n_users FROM s2
 UNION ALL
 SELECT 'purchase' AS step, CAST(3 AS INTEGER) AS step_no, CAST(count(*) AS BIGINT) AS n_users FROM s3
-""",
+"""
+
+
+@register(
+    "q_funnel",  # driver slot r3-r10; rotated off r11 (wave 6)
+    driver=False,  # rotated off r11 (wave 6) — stays oracle-backed in the local sweep
+    oracle=_FUNNEL_SQL,
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel (view → click → purchase, strictly later timestamps):
@@ -822,14 +827,13 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: co-purchase edge threshold shared by q_triangles / q_clustering_coeff —
-#: one constant so the two graph views can never silently desynchronize
+#: co-purchase edge threshold of the brand graph (``_brand_edges``)
 _EDGE_MIN_COPURCHASE = 80
 
 
 def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (order, brand) basket table — the shared input of the
-    market-basket and co-purchase-graph family (q_assoc_rules, q_triangles,
+    market-basket and co-purchase-graph family (q_assoc_rules,
     q_clustering_coeff). Broadcast part onto lineitem, one distinct."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -874,6 +878,31 @@ def _triangle_corners(edges: DataFrame) -> DataFrame:
         .unionByName(tri.select(F.col("b").alias("node")))
         .unionByName(tri.select(F.col("c").alias("node")))
     )
+
+
+#: The nation trade graph of the §2.11 graph queries: supplier nation →
+#: customer nation, one edge per pair that ships at least ``min_count`` line
+#: items across a border. Spark builders run it through ``_trade_edges``;
+#: the DuckDB oracles embed the same text. DuckDB inlines a plain CTE at
+#: every reference, so an oracle that reads the edges more than once (an
+#: unrolled peel, a recursive step) re-runs this four-table join each time:
+#: q_kcore's oracle passed 100 GB at sf0.1 and the recursive closures took
+#: >120 s at sf1 instead of 1.5 s. Those oracles declare it AS MATERIALIZED.
+_TRADE_EDGES_SQL = """\
+  SELECT s_nationkey AS src, c_nationkey AS dst
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  WHERE s_nationkey <> c_nationkey
+  GROUP BY 1, 2 HAVING count(*) >= {min_count}"""
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str, min_count: int) -> DataFrame:
+    """``(src, dst)`` edges of the nation trade graph (``_TRADE_EDGES_SQL``):
+    dims broadcast onto lineitem, one aggregation to |nations|² rows."""
+    register_views(spark, sf_dir)
+    return spark.sql(_TRADE_EDGES_SQL.format(min_count=min_count))
 
 
 @register(
@@ -945,53 +974,6 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lift"),
         )
     )
-
-
-@register(
-    "q_triangles",
-    driver=False,  # §2.9 graph extension — pytest oracle
-    oracle="""
-WITH pairs AS MATERIALIZED (
-  -- MATERIALIZED (r9): pairs is self-joined 3x and tri scanned 3x —
-  -- inlined, the 6M-row basket self-join re-ran per reference (570 s /
-  -- 32 GiB spill at the sf1 replica even when it passed)
-  SELECT a.item AS u, c.item AS v, count(*) AS n_ab
-  FROM (SELECT DISTINCT l_orderkey AS oid, p_brand AS item
-        FROM lineitem JOIN part ON l_partkey = p_partkey) a
-  JOIN (SELECT DISTINCT l_orderkey AS oid, p_brand AS item
-        FROM lineitem JOIN part ON l_partkey = p_partkey) c
-    ON a.oid = c.oid AND a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 80
-), tri AS MATERIALIZED (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM pairs e1
-  JOIN pairs e2 ON e1.v = e2.u
-  JOIN pairs e3 ON e3.u = e1.u AND e3.v = e2.v
-), pernode AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS triangles FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) GROUP BY node
-)
-SELECT node, triangles FROM pernode
-""",
-)
-def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counting over the brand co-purchase graph (edge =
-    brands co-occurring in ≥ 80 orders — the thresholded pair table from
-    q_assoc_rules' family): the clustering-coefficient numerator, third
-    member of the graph family next to q_pagerank and q_dedup_clusters.
-
-    The canonical a<b<c orientation counts each triangle exactly once; the
-    per-node census explodes each triangle to its three corners. Scale:
-    triangle enumeration is two equi-joins on the ORIENTED edge table —
-    orientation (here by id; by degree at scale, low→high) is what bounds
-    the join fan-out, since every wedge is generated only at its smallest
-    corner; edges partition by join key each hop. The co-occurrence edge
-    build reuses the basket self-join shape (fan-out Σ basket²)."""
-    corners = _triangle_corners(_brand_edges(spark, sf_dir))
-    return corners.groupBy("node").agg(F.count("*").alias("triangles"))
 
 
 @register(
@@ -1215,15 +1197,19 @@ FROM deg d LEFT JOIN tri ON d.node = tri.node
 )
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per node: 2·triangles / (deg·(deg−1))
-    over the same thresholded brand co-purchase graph as q_triangles —
-    completing the graph family's neighborhood-density metric (nodes with
-    degree < 2 report 0). Exact integer inputs → the ratio is
+    over the brand co-purchase graph (edge = brands co-occurring in ≥ 80
+    orders, the thresholded pair table of q_assoc_rules' family) — the
+    graph family's neighborhood-density metric (nodes with degree < 2
+    report 0). The ``triangles`` column is the per-node triangle census,
+    0 for nodes on no triangle. Exact integer inputs → the ratio is
     engine-identical before the 6 dp round.
 
     Scale: degree is one shuffle over the symmetrized edge list; triangle
-    counts reuse q_triangles' oriented two-hop join; the coefficient is a
-    broadcast-free left join of two per-node tables that are each
-    O(nodes)."""
+    enumeration joins the ORIENTED (a<b<c) edge table twice, so each
+    triangle is generated once, at its smallest corner (orient by degree,
+    low→high, at scale), then explodes to its three corners; the
+    coefficient is a broadcast-free left join of two per-node tables that
+    are each O(nodes)."""
     edges = _brand_edges(spark, sf_dir)
     und = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -2384,7 +2370,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded identically across engines). The RA term is
     integer-scaled (floor(1e9/deg) per neighbor, summed as BIGINT) so the
     score is exact, order-independent, and engine-identical. Fourth
-    member of the graph family (q_pagerank / q_triangles /
+    member of the graph family (q_pagerank / q_clustering_coeff /
     q_communities_lpa).
 
     Scale: wedges enumerate per CENTER node (e1.u = e2.u) — the join key
@@ -2519,19 +2505,11 @@ def q_activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_kcore",
     driver=False,  # §2.11 graph family (round 4) — pytest oracle
-    oracle="""
+    oracle=f"""
 WITH e0 AS MATERIALIZED (
-  -- MATERIALIZED (round 7): DuckDB inlines plain CTEs per REFERENCE, so
-  -- the three unrolled peel rounds re-evaluated this 4-table join ~7x
-  -- (exponentially through s1/s2) -- the sf0.1 sweep hit a >100 GB blowup
-  -- on what is a 600-edge graph. Forcing one evaluation is semantics-free.
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 120
+  -- MATERIALIZED: the unrolled peel rounds read the join ~7x (exponentially
+  -- through s1/s2); inlined, the sf0.1 sweep passed 100 GB on a 600-edge graph
+{_TRADE_EDGES_SQL.format(min_count=120)}
 ), e AS MATERIALIZED (
   SELECT src AS u, dst AS v FROM e0
   UNION
@@ -2571,20 +2549,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     on power-law webs) rounds grow O(diameter); the standard fix is the
     same pointer-jumping trick as connected components, or switch to the
     O(E) exact peel on a single machine once survivors fit."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 120
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 120)
     # r12 (VERDICT r11 #1): the peel loop moved to operators/graph.
     # kcore_census — the q_pagerank/q_dag_layers kernel pattern: a
     # metadata-sized graph (one bounded edge fetch decides) peels all
@@ -3315,15 +3280,9 @@ def q_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_closeness_centrality",
     driver=False,  # §2.11 graph family (round 5) — pytest oracle
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE e0 AS (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 120
+{_TRADE_EDGES_SQL.format(min_count=120)}
 ), e AS MATERIALIZED (
   SELECT src AS u, dst AS v FROM e0
   UNION
@@ -3356,6 +3315,8 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joins the visited set, and checkpoints (session.checkpoint, the
     shared iterative discipline). Exact, not approximate: the oracle
     replays the same layered expansion as a distinct-recursion CTE.
+    Harmonic centrality Σ 1/d(u,v) is the one of the two that handles
+    disconnected graphs: an unreachable node adds 0, not ∞.
 
     Parity discipline: harmonic centrality Σ 1/d is an ORDER-DEPENDENT
     double sum engine-to-engine, so it is computed as the exact integer
@@ -3369,20 +3330,7 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard move is landmark sampling (BFS from k random sources,
     same loop with a sampled source set) — the frontier machinery is
     unchanged."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 120
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 120)
     # r12 (VERDICT r11 #1): the multi-source BFS moved to operators/graph.
     # hop_distances — metadata-sized graphs (one bounded edge fetch
     # decides) expand all 9 levels on the driver on boolean
@@ -3410,17 +3358,11 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_scc",
     # driver slot since r10 (VERDICT r9 #2, wave 5): second graph algorithm
     # graded externally (directed SCC; betweenness rotated off)
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE e AS MATERIALIZED (
-  -- MATERIALIZED is load-bearing at scale: inlined, DuckDB re-evaluates
-  -- this 4-way fact join EVERY recursion round (>120 s at sf1 vs 1.5 s)
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 150
+  -- MATERIALIZED: inlined, DuckDB re-runs the join every recursion round
+  -- (>120 s at sf1 vs 1.5 s)
+{_TRADE_EDGES_SQL.format(min_count=150)}
 ), reach AS (
   SELECT src AS a, dst AS b FROM e
   UNION
@@ -3457,20 +3399,7 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nations, brands, currencies, org charts). Web-scale SCC uses
     forward-backward label propagation instead; the round structure (join,
     anti-join, checkpoint) is exactly what this query exercises."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 150
-        """
-    ).transform(checkpoint, eager=False)
+    e = _trade_edges(spark, sf_dir, 150).transform(checkpoint, eager=False)
     reach = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     frontier = reach
     for _ in range(8):
@@ -3637,15 +3566,9 @@ def q_geohash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver r6–r9 (4 green rounds); rotated off r10 (VERDICT r9 #2, wave 5)
     # — the graph slot goes to q_scc (never externally graded)
     driver=False,
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE e0 AS (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 190
+{_TRADE_EDGES_SQL.format(min_count=190)}
 ), e AS MATERIALIZED (
   -- MATERIALIZED: inlined, DuckDB re-evaluates the 4-way fact join every
   -- recursion round (the q_cycle_nodes sf1 hang class)
@@ -3719,20 +3642,7 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     betweenness is an entity-graph statistic ANYWHERE (NetworkX included);
     for big graphs the standard swap is source-sampled Brandes (same BFS
     from k sampled sources), which reuses this exact frontier machinery."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 190
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 190)
     e = (
         e0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(e0.select(F.col("dst").alias("u"), F.col("src").alias("v")))
@@ -3802,17 +3712,12 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_dag_layers",
     driver=False,  # §2.11 graph family (round 5) — pytest oracle
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE e AS MATERIALIZED (
-  -- MATERIALIZED is load-bearing at scale: inlined, DuckDB re-evaluates
-  -- this 4-way fact join EVERY recursion round (>120 s at sf1 vs 1.5 s)
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey < c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 100
+  -- MATERIALIZED: inlined, DuckDB re-runs the join every recursion round
+  -- (>120 s at sf1 vs 1.5 s)
+  SELECT src, dst FROM ({_TRADE_EDGES_SQL.format(min_count=100)}) t
+  WHERE src < dst
 ), nodes AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
 walk(v, d) AS (
   SELECT v, CAST(0 AS BIGINT) FROM nodes
@@ -3843,20 +3748,7 @@ def q_dag_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt; rounds grow O(diameter) like q_kcore, and the same
     pointer-jumping doubling applies to deep chains. Depth tables at
     web scale shuffle on v with map-side max partials."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey < c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 100
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 100).filter(F.col("src") < F.col("dst"))
     # r11: the relaxation loop moved to operators/graph.dag_depths — the
     # q_pagerank pattern: metadata-sized DAGs (one bounded fetch decides)
     # run the whole fixpoint on the driver instead of ~10 scheduler
@@ -3878,17 +3770,11 @@ def q_dag_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_cycle_nodes",
     driver=False,  # §2.11 graph family (round 5) — pytest oracle
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE e AS MATERIALIZED (
-  -- MATERIALIZED is load-bearing at scale: inlined, DuckDB re-evaluates
-  -- this 4-way fact join EVERY recursion round (>120 s at sf1 vs 1.5 s)
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 100
+  -- MATERIALIZED: inlined, DuckDB re-runs the join every recursion round
+  -- (>120 s at sf1 vs 1.5 s)
+{_TRADE_EDGES_SQL.format(min_count=100)}
 ), walk(s, v) AS (
   SELECT src, dst FROM e
   UNION
@@ -3928,20 +3814,7 @@ def q_cycle_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB path is SCC condensation first (q_scc's pointer-jumping), then
     cycle membership = |SCC| > 1, which this query's fixture-scale output
     is pinned against in pytest."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 100
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 100)
     # r12 (VERDICT r11 #1): the closure loop moved to operators/graph.
     # closure_census — metadata-sized graphs (one bounded edge fetch
     # decides) run the whole reach ∪= reach·adj fixpoint on the driver
@@ -4323,15 +4196,11 @@ def q_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_assortativity",
     driver=False,  # §2.11 graph family (round 5) — pytest oracle
-    oracle="""
+    oracle=f"""
 WITH e0 AS MATERIALIZED (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 120
+  -- MATERIALIZED: referenced more than once below; inlined, DuckDB runs
+  -- the join once per reference
+{_TRADE_EDGES_SQL.format(min_count=120)}
 ), e AS MATERIALIZED (
   SELECT src AS u, dst AS v FROM e0
   UNION
@@ -4367,7 +4236,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Newman's r, positive when hubs attach to hubs (social networks),
     negative for hub-and-spoke topologies (the Internet, and most
     marketplace graphs); the one-number structural summary read next to
-    q_clustering_coefficient (SURVEY §2.11 graph tier). Degrees are
+    q_clustering_coeff (SURVEY §2.11 graph tier). Degrees are
     exact integer censuses from one groupBy; each half-edge contributes
     an exact (deg_u, deg_v) pair (both orientations — the symmetric
     definition); the correlation assembles from six exact 128-bit
@@ -4376,23 +4245,10 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: degree table joins back to the edge list twice on the node
     key — both broadcastable at dimension scale, both plain hash joins
-    at web scale (the same two-hop shape as q_triangle_count); the
+    at web scale (the same two-hop shape as q_clustering_coeff's triangles); the
     moment census is one row. Plain WITH (no RECURSIVE), so the bare
     UNION dedups correctly here."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 120
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 120)
     e = (
         e0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(e0.select(F.col("dst").alias("u"), F.col("src").alias("v")))
@@ -4433,15 +4289,11 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ktruss",
     driver=False,  # §2.11 graph family — pytest oracle
-    oracle="""
+    oracle=f"""
 WITH e0 AS MATERIALIZED (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 120
+  -- MATERIALIZED: referenced more than once below; inlined, DuckDB runs
+  -- the join once per reference
+{_TRADE_EDGES_SQL.format(min_count=120)}
 ), t1 AS (
   SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM e0
 ), s1 AS (
@@ -4481,20 +4333,7 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     each round's survivor edge list is a checkpoint cut — identical to
     q_kcore's round-table story; truss peels converge in tens of rounds
     on real graphs."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 120
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 120)
     t = (
         e0.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
@@ -4625,15 +4464,11 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver r7→r8; rotated off r9 (VERDICT r8 #1) — q_betweenness keeps the
     # graph family's slot, q_markov_attribution adds the Markov-chain shape
     driver=False,
-    oracle="""
+    oracle=f"""
 WITH e0 AS MATERIALIZED (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 120
+  -- MATERIALIZED: referenced more than once below; inlined, DuckDB runs
+  -- the join once per reference
+{_TRADE_EDGES_SQL.format(min_count=120)}
 ), e AS MATERIALIZED (
   SELECT src AS u, dst AS v FROM e0
   UNION
@@ -4672,20 +4507,7 @@ def q_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     table + one groupBy — the q_pagerank loop shape; the score table
     broadcasts until |V| outgrows it, then co-bucketing on node id takes
     over (operators/graph.py note)."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 120
-        """
-    )
+    e0 = _trade_edges(spark, sf_dir, 120)
     e = (
         e0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(e0.select(F.col("dst").alias("u"), F.col("src").alias("v")))
@@ -4906,103 +4728,6 @@ def q_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rev2_c") - F.col("rev1_c") - F.col("volume_eff_c"))
         .cast("long")
         .alias("price_eff_c"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Harmonic centrality, 3-hop bounded (round 7)
-# --------------------------------------------------------------------------
-@register(
-    "q_harmonic_centrality",
-    driver=False,  # §2.11 graph family beside q_closeness_centrality
-    oracle="""
-WITH e0 AS MATERIALIZED (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 120
-), e AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM e0
-  UNION
-  SELECT dst, src FROM e0
-), d1 AS MATERIALIZED (
-  SELECT u, v FROM e
-), d2 AS MATERIALIZED (
-  SELECT DISTINCT a.u, b.v
-  FROM d1 a JOIN e b ON a.v = b.u
-  WHERE b.v <> a.u
-    AND NOT EXISTS (SELECT 1 FROM d1 x WHERE x.u = a.u AND x.v = b.v)
-), d3 AS (
-  SELECT DISTINCT a.u, b.v
-  FROM d2 a JOIN e b ON a.v = b.u
-  WHERE b.v <> a.u
-    AND NOT EXISTS (SELECT 1 FROM d1 x WHERE x.u = a.u AND x.v = b.v)
-    AND NOT EXISTS (SELECT 1 FROM d2 x WHERE x.u = a.u AND x.v = b.v)
-), scored AS (
-  SELECT u, 6 AS s FROM d1
-  UNION ALL SELECT u, 3 FROM d2
-  UNION ALL SELECT u, 2 FROM d3
-)
-SELECT u AS node,
-       CAST(count(*) AS BIGINT) AS n_reach3,
-       CAST(sum(s) AS BIGINT) AS harmonic6,
-       round(sum(s) / 6.0, 6) AS harmonic
-FROM scored GROUP BY u
-""",
-)
-def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-hop bounded harmonic centrality: Σ 1/d(u,v) over nodes within
-    three hops — the centrality that, unlike closeness, handles
-    disconnected graphs gracefully (unreachable ⇒ contributes 0, no ∞)
-    (SURVEY §2.11 graph tier beside q_closeness_centrality / q_katz).
-    ENGINE-EXACT: with d ∈ {1,2,3}, the contributions 1/d scale to the
-    integers {6,3,2} (LCM trick) — harmonic6 is an exact integer census
-    in both engines; only the final /6 display divide is a double.
-
-    Scale: each hop is one self-join on the edge list + an anti-join
-    against closer levels — the frontier-expansion shape of
-    q_bfs_reachability, broadcastable at dimension scale; at web scale
-    each level is a shuffle join keyed by frontier node. Depth fixed at 3
-    bounds the work regardless of diameter."""
-    from ..session import register_views
-
-    register_views(spark, sf_dir)
-    e0 = spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 120
-        """
-    )
-    # r12 (VERDICT r11 #1): the d1/d2/d3 level construction IS bounded BFS
-    # (level k = the exact distance-k class: any distance-k node has a
-    # k-path, and the anti-joins against closer levels remove everything
-    # nearer — the same sets operators/graph.hop_distances produces), so
-    # the three self-join + double-anti-join rounds collapse into the
-    # shared BFS operator: metadata-sized graphs run on the driver; the
-    # distributed BFS loop is unchanged past the threshold
-    # (tests/test_graph_kernels.py pins level ≡ distance-class equality).
-    from ..operators.graph import hop_distances
-
-    sp = hop_distances(e0, src="src", dst="dst", max_d=3)
-    scored = sp.select(
-        F.col("src").alias("u"),
-        F.when(F.col("d") == 1, 6)
-        .when(F.col("d") == 2, 3)
-        .otherwise(2)
-        .alias("s"),
-    )
-    return scored.groupBy(F.col("u").alias("node")).agg(
-        F.count("*").cast("long").alias("n_reach3"),
-        F.sum("s").cast("long").alias("harmonic6"),
-        F.round(F.sum("s") / 6.0, 6).alias("harmonic"),
     )
 
 

@@ -44,9 +44,9 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_session_window",
-    oracle="""
+#: gap-island sessions (gap 30 min, strict >): the oracle of q_session_window
+#: and of its streaming twin q_stream_session
+_SESSION_SQL = """
 WITH flagged AS (
   SELECT user_id, ts, value, event_id,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -67,7 +67,12 @@ SELECT min(ts)                          AS session_start,
        round(sum(value), 2)             AS sum_value
 FROM islands
 GROUP BY user_id, sid
-""",
+"""
+
+
+@register(
+    "q_session_window",
+    oracle=_SESSION_SQL,
 )
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessions(gap=30min) per user via native ``session_window``. Oracle is

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..session import checkpoint, table
 from ._registry import register
+from .analytics import _TRADE_EDGES_SQL
 
 #: 60-bit portable hash: Spark side. DuckDB twin: CAST('0x'||substr(md5(x),o,15) AS BIGINT)
 def _md5_int(col, offset: int = 1):
@@ -1658,18 +1659,9 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Recursive CTE (Spark 4 WITH RECURSIVE) — declarative transitive closure
 # --------------------------------------------------------------------------
-@register(
-    "q_recursive_cte",
-    # driver slot since r9 (VERDICT r8 #1): first recursive-CTE driver grade
-    oracle="""
+_RECURSIVE_CTE_SQL = f"""
 WITH RECURSIVE e AS (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 50
+{_TRADE_EDGES_SQL.format(min_count=50)}
 ), walk AS (
   SELECT dst AS node, 1 AS hops FROM e WHERE src = 0
   UNION ALL
@@ -1679,7 +1671,13 @@ WITH RECURSIVE e AS (
 )
 SELECT node, CAST(min(hops) AS BIGINT) AS hops
 FROM walk GROUP BY node
-""",
+"""
+
+
+@register(
+    "q_recursive_cte",
+    # driver slot since r9 (VERDICT r8 #1): first recursive-CTE driver grade
+    oracle=_RECURSIVE_CTE_SQL,
 )
 def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative transitive closure via ``WITH RECURSIVE`` — Spark 4's
@@ -1701,36 +1699,13 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(
-        """
-WITH RECURSIVE e AS (
-  SELECT s_nationkey AS src, c_nationkey AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  WHERE s_nationkey <> c_nationkey
-  GROUP BY 1, 2 HAVING count(*) >= 50
-), walk AS (
-  SELECT dst AS node, 1 AS hops FROM e WHERE src = 0
-  UNION ALL
-  SELECT e.dst, walk.hops + 1
-  FROM walk JOIN e ON e.src = walk.node
-  WHERE walk.hops < 4
-)
-SELECT node, CAST(min(hops) AS BIGINT) AS hops
-FROM walk GROUP BY node
-"""
-    )
+    return spark.sql(_RECURSIVE_CTE_SQL)
 
 
 # --------------------------------------------------------------------------
 # LATERAL correlated subquery (per-row dependent computation)
 # --------------------------------------------------------------------------
-@register(
-    "q_lateral_topk",
-    driver=False,  # §2.6 SQL-completeness: LATERAL — pytest oracle
-    oracle="""
+_LATERAL_TOPK_SQL = """
 SELECT n.n_name AS nation, t.c_name, t.c_acctbal
 FROM nation n, LATERAL (
   SELECT c_name, c_acctbal FROM customer c
@@ -1738,7 +1713,13 @@ FROM nation n, LATERAL (
   ORDER BY c_acctbal DESC, c_name
   LIMIT 3
 ) t
-""",
+"""
+
+
+@register(
+    "q_lateral_topk",
+    driver=False,  # §2.6 SQL-completeness: LATERAL — pytest oracle
+    oracle=_LATERAL_TOPK_SQL,
 )
 def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via a LATERAL correlated subquery — the SQL-standard
@@ -1753,17 +1734,7 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(
-        """
-SELECT n.n_name AS nation, t.c_name, t.c_acctbal
-FROM nation n, LATERAL (
-  SELECT c_name, c_acctbal FROM customer c
-  WHERE c.c_nationkey = n.n_nationkey
-  ORDER BY c_acctbal DESC, c_name
-  LIMIT 3
-) t
-"""
-    )
+    return spark.sql(_LATERAL_TOPK_SQL)
 
 
 # --------------------------------------------------------------------------

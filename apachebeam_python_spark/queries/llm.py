@@ -174,15 +174,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_dedup_simhash", driver=False)  # rows-only: xxhash64-derived signatures
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash(64-bit) near-dup pairs at Hamming ≤ 12 via 4-bit band buckets
-    (16 bands — pigeonhole-complete for radius < 16)."""
-    return D.simhash_neardup_pairs(
-        table(spark, sf_dir, "documents"), "text", "doc_id", max_hamming=12, band_bits=4
-    )
-
-
 @register(
     "q_dedup_embedding",
     driver=False,  # demoted from the driver surface in r3 (VERDICT r2 #4):
@@ -545,8 +536,8 @@ def q_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_dedup_sketch", driver=False)  # rows-only: xxhash64-derived signatures aren't DuckDB-portable; off the driver surface since r3 (VERDICT r2 #1), equivalence proofs in pytest
 def q_dedup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The three sketch/LSH near-dup SCALE paths in one tagged rows-only
-    driver row (SURVEY §2.11; folds q_dedup_minhash / q_dedup_simhash and
-    adds the embedding-LSH pair generator of operators.similarity):
+    driver row (SURVEY §2.11; q_dedup_minhash's pairs plus SimHash and
+    the embedding-LSH pair generator of operators.similarity):
 
     - 'minhash':  MinHash(32)+LSH(8 bands) candidates verified at J ≥ 0.2;
     - 'simhash':  64-bit SimHash, Hamming ≤ 12 via 4-bit pigeonhole bands;

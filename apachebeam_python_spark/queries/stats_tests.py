@@ -2795,8 +2795,10 @@ item_var AS (
          CAST(sum(CAST(item AS HUGEINT) * item) AS HUGEINT) AS ss
   FROM mb GROUP BY event_type
 ), iv AS (
-  SELECT sum(CAST(n * ss - s * s AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))
-           AS sum_item_var
+  -- cases are complete blocks, so every item has the same n: one exact
+  -- 128-bit sum, then one division, gives a value no summation order moves
+  SELECT CAST(sum(n * ss - s * s) AS DOUBLE)
+           / (CAST(max(n) AS DOUBLE) * (max(n) - 1)) AS sum_item_var
   FROM item_var WHERE n > 1
 ), totals AS (
   SELECT user_id, CAST(sum(item) AS BIGINT) AS tot FROM mb GROUP BY user_id
@@ -2828,10 +2830,11 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     report before averaging item scores (SURVEY §2.3 statistical
     extensions). Item and total variances derive from exact integer cents
     moments, each n·Σx² − (Σx)² widened to 128-bit (the q_anova lesson).
-    The k item variances (~3e9 in sum at sf0.1, where one ulp shows at 6
-    dp) add with Neumaier compensation, so no merge order moves the sum;
-    columns round as DuckDB does (:func:`_round6`). NULL when the total
-    variance is degenerate.
+    Every item has the same n (complete blocks), so Σvar_item is one exact
+    128-bit sum of the k numerators divided once by n·(n−1): at ~3e9 (sf0.1)
+    one ulp shows at 6 dp, and a double sum of the k variances moves with
+    the merge order. Columns round as DuckDB does (:func:`_round6`). NULL
+    when the total variance is degenerate.
 
     Scale: one (user, item) groupBy; item variances are a k-row rollup,
     case totals one more user-keyed partial agg — no global sorts."""
@@ -2858,15 +2861,12 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         hi(F.sum("item")).alias("s"),
         hi(F.sum(hi(F.col("item")) * F.col("item"))).alias("ss"),
     )
+    n_item = F.max("n")
     iv = item_var.filter(F.col("n") > 1).agg(
-        F.collect_list(
-            (F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double")
-            / (F.col("n").cast("double") * (F.col("n") - 1))
-        ).alias("v")
-    ).selectExpr(
-        "IF(size(v) = 0, NULL, aggregate(array_sort(v), named_struct('s', 0.0D, 'c', 0.0D),"
-        " (x, y) -> named_struct('s', x.s + y, 'c', x.c + IF(abs(x.s) >= abs(y),"
-        " (x.s - (x.s + y)) + y, (y - (x.s + y)) + x.s)), x -> x.s + x.c)) AS sum_item_var"
+        (
+            F.sum(F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double")
+            / (n_item.cast("double") * (n_item - 1))
+        ).alias("sum_item_var")
     )
     totals = mb.groupBy("user_id").agg(F.sum("item").alias("tot"))
     tv = totals.agg(

@@ -10,6 +10,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..session import scratch_dir
 from ..streaming import jobs, stateful
 from ._registry import register
+from .analytics import _FUNNEL_SQL
+from .event_time import _SESSION_SQL
 
 
 def _sink(name: str, sf_dir: str) -> str:
@@ -165,28 +167,7 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stream_session",
     driver=False,  # extra §2.8 streaming proof beyond the driver window
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, ts, value, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800.0
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), islands AS (
-  SELECT user_id, ts, value,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM flagged
-)
-SELECT min(ts)                          AS session_start,
-       max(ts) + INTERVAL 30 MINUTE     AS session_end,
-       user_id,
-       count(*)                         AS n,
-       round(sum(value), 2)             AS sum_value
-FROM islands
-GROUP BY user_id, sid
-""",
+    oracle=_SESSION_SQL,
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessions(gap=30min) computed BY THE STREAMING ENGINE (session_window
@@ -720,27 +701,7 @@ def q_stream_drop_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stream_funnel",
     driver=False,  # §2.9 stateful streaming family (round 5) — pytest oracle
-    oracle="""
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view'
-  GROUP BY user_id
-), s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t1
-  GROUP BY e.user_id
-), s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-  GROUP BY e.user_id
-)
-SELECT 'view'     AS step, CAST(1 AS INTEGER) AS step_no, CAST(count(*) AS BIGINT) AS n_users FROM s1
-UNION ALL
-SELECT 'click'    AS step, CAST(2 AS INTEGER) AS step_no, CAST(count(*) AS BIGINT) AS n_users FROM s2
-UNION ALL
-SELECT 'purchase' AS step, CAST(3 AS INTEGER) AS step_no, CAST(count(*) AS BIGINT) AS n_users FROM s3
-""",
+    oracle=_FUNNEL_SQL,
 )
 def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel computed ONLINE by the streaming engine

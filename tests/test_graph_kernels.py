@@ -27,22 +27,7 @@ from apachebeam_python_spark.operators.graph import (
     kcore_census,
     lpa_labels,
 )
-from apachebeam_python_spark.session import register_views
-
-
-def _nation_edges(spark, sf_dir, min_count):
-    register_views(spark, sf_dir)
-    return spark.sql(
-        f"""
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey <> c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= {min_count}
-        """
-    )
+from apachebeam_python_spark.queries.analytics import _trade_edges
 
 
 def _rows(df, *cols):
@@ -53,7 +38,7 @@ def _rows(df, *cols):
 
 
 def test_hop_distances_paths_identical_on_fixture(spark, sf_dir):
-    e = _nation_edges(spark, sf_dir, 120)
+    e = _trade_edges(spark, sf_dir, 120)
     kernel = _rows(hop_distances(e, max_d=9), "src", "node", "d")
     dist = _rows(
         hop_distances(e, max_d=9, small_graph_max_edges=0), "src", "node", "d"
@@ -88,7 +73,7 @@ def test_hop_distances_chain_and_cap(spark):
 
 
 def test_closure_census_paths_identical_on_fixture(spark, sf_dir):
-    e = _nation_edges(spark, sf_dir, 100)
+    e = _trade_edges(spark, sf_dir, 100)
     kernel = _rows(closure_census(e), "node", "n_reachable", "on_cycle")
     dist = _rows(
         closure_census(e, small_graph_max_edges=0),
@@ -127,7 +112,7 @@ def test_closure_census_cycle_and_tail(spark):
 
 
 def test_kcore_census_paths_identical_on_fixture(spark, sf_dir):
-    e = _nation_edges(spark, sf_dir, 120)
+    e = _trade_edges(spark, sf_dir, 120)
     kernel = _rows(kcore_census(e, k=3, rounds=3), "node", "core_degree")
     dist = _rows(
         kcore_census(e, k=3, rounds=3, small_graph_max_edges=0),

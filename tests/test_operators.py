@@ -1291,20 +1291,9 @@ def test_kcore_peel_reaches_fixpoint(spark, sf_dir):
     core = q.QUERIES["q_kcore"](spark, sf_dir).cache()
     try:
         nodes = core.select("node")
-        from apachebeam_python_spark.session import register_views
+        from apachebeam_python_spark.queries.analytics import _trade_edges
 
-        register_views(spark, sf_dir)
-        e0 = spark.sql(
-            """
-            SELECT s_nationkey AS src, c_nationkey AS dst
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            WHERE s_nationkey <> c_nationkey
-            GROUP BY 1, 2 HAVING count(*) >= 120
-            """
-        )
+        e0 = _trade_edges(spark, sf_dir, 120)
         e = (
             e0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             .union(e0.select(F.col("dst").alias("u"), F.col("src").alias("v")))

@@ -801,6 +801,11 @@ SUBSUMED = {
     "q_rollup": ("q_cube", ("Expand [",)),
     "q_grouping_sets": ("q_cube", ("Expand [",)),
     "q_agg_median": ("q_agg_stats", ("ObjectHashAggregate(", "percentile(")),
+    "q_approx_distinct": ("q_approx_sample", ("approx_count_distinct(user_id",
+                                              "partial_approx_count_distinct(")),
+    "q_approx_quantiles": ("q_approx_sample", ("percentile_approx(o_totalprice",
+                                               "[0.5,0.9,0.99], 10000")),
+    "q_sample": ("q_approx_sample", ("TakeOrderedAndProject(limit=100", "rand(42)")),
     # §2.4 joins
     "q_join_left": ("q_join_equi", ("LeftOuter",)),
     "q_join_semi": ("q_join_semi_anti", ("LeftSemi",)),
@@ -831,6 +836,14 @@ SUBSUMED = {
                                          "regexp_extract_all(")),
     "q_lang_id": ("q_doc_features", ("array_intersect(",)),
     "q_quality_score": ("q_doc_features", ("IN (the,a,of,and,or)",)),
+    # §2.11 near-duplicate detection
+    "q_dedup_simhash": ("q_dedup_sketch", ("xxhash64(tok", "(shiftright(simhash",
+                                           "bit_count((simhash")),
+    # §2.11 graph family
+    "q_triangles": ("q_clustering_coeff", ("SortMergeJoin [b", "SortMergeJoin [a", "Union",
+                                           "triangles#")),
+    "q_harmonic_centrality": ("q_closeness_centrality", ("partial_sum((2520 div d",
+                                                         "harmonic#")),
 }
 
 

@@ -1,9 +1,8 @@
 """Rows-only ledger (VERDICT r7 #5): every query without a DuckDB oracle
 must carry (a) a documented reason in README's ledger table and (b) a pytest
-pinning a STRONGER-than-rowcount property. This module adds the property
-tests for the five queries that previously relied on operator-level tests
-only, plus the completeness check that keeps the README table in sync with
-the registry."""
+pinning a STRONGER-than-rowcount property. This module holds the property
+tests of the rows-only queries that had only operator-level tests, plus the
+completeness check that keeps the README table in sync with the registry."""
 
 from __future__ import annotations
 
@@ -15,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from apachebeam_python_spark import queries as q
+from apachebeam_python_spark.operators import aggregations as agg
 from apachebeam_python_spark.session import table
 
 
@@ -35,28 +35,16 @@ def test_rows_only_ledger_is_complete():
     )
 
 
-def test_approx_distinct_error_bound(spark, sf_dir):
-    """q_approx_distinct (HLL++, rsd=0.05): per-key estimate within 10%
-    (2×rsd) of the exact distinct count — the bound that justifies the
-    sketch as the 100 TB path."""
-    got = {r.event_type: r.approx_nd for r in q.QUERIES["q_approx_distinct"](spark, sf_dir).collect()}
-    exact = {
-        r.event_type: r.nd
-        for r in table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("nd"))
-        .collect()
-    }
-    assert set(got) == set(exact)
-    for k, e in exact.items():
-        assert abs(got[k] - e) <= max(2, 0.10 * e), (k, got[k], e)
-
-
 def test_approx_quantiles_rank_error(spark, sf_dir):
-    """q_approx_quantiles (percentile_approx, accuracy=10000): each
-    returned quantile's TRUE rank must sit within 2% of the requested
-    probability — a rank-error bound, much stronger than 'returns rows'."""
-    rows = q.QUERIES["q_approx_quantiles"](spark, sf_dir).collect()
+    """q_approx_sample's 'quantiles' arm (percentile_approx,
+    accuracy=10000): each returned quantile's TRUE rank must sit within 2%
+    of the requested probability — a rank-error bound, much stronger than
+    'returns rows'."""
+    rows = [
+        r for r in q.QUERIES["q_approx_sample"](spark, sf_dir).collect()
+        if r.tag == "quantiles"
+    ]
+    assert rows, "quantiles arm missing"
     orders = (
         table(spark, sf_dir, "orders")
         .select("o_orderstatus", "o_totalprice")
@@ -67,24 +55,25 @@ def test_approx_quantiles_rank_error(spark, sf_dir):
         by_status.setdefault(r.o_orderstatus, []).append(float(r.o_totalprice))
     probs = (0.5, 0.9, 0.99)
     for r in rows:
-        vals = [float(x) for x in r.quantiles.split(",")]
+        vals = [float(x) for x in r.vals.split(",")]
         assert len(vals) == 3
-        data = sorted(by_status[r.o_orderstatus])
+        data = sorted(by_status[r.key])
         n = len(data)
         for p, v in zip(probs, vals):
             rank_lo = sum(1 for x in data if x < v) / n
             rank_hi = sum(1 for x in data if x <= v) / n
             assert rank_lo - 0.02 <= p <= rank_hi + 0.02, (
-                r.o_orderstatus, p, v, rank_lo, rank_hi,
+                r.key, p, v, rank_lo, rank_hi,
             )
             assert data[0] <= v <= data[-1]
 
 
 def test_fixed_size_sample_properties(spark, sf_dir):
-    """q_sample (Sample.FixedSizeGlobally(100), seeded): exactly 100 rows,
-    every row a REAL customer row (subset, not fabricated), and the draw
-    is reproducible within a session (same seed, same layout)."""
-    a = q.QUERIES["q_sample"](spark, sf_dir)
+    """Sample.FixedSizeGlobally(100), seeded — q_approx_sample's 'sample'
+    arm: exactly 100 rows, every row a REAL customer row (subset, not
+    fabricated), and the draw is reproducible within a session (same
+    seed, same layout)."""
+    a = agg.sample_fixed_global(table(spark, sf_dir, "customer"), 100)
     n_src = table(spark, sf_dir, "customer").count()
     want = min(100, n_src)
     rows_a = a.collect()
@@ -97,7 +86,7 @@ def test_fixed_size_sample_properties(spark, sf_dir):
         .count()
     )
     assert matched == want
-    rows_b = q.QUERIES["q_sample"](spark, sf_dir).collect()
+    rows_b = agg.sample_fixed_global(table(spark, sf_dir, "customer"), 100).collect()
     assert sorted(ids) == sorted(r.c_custkey for r in rows_b)
 
 
@@ -117,6 +106,7 @@ def test_approx_sample_arms_properties(spark, sf_dir):
         .agg(F.countDistinct("user_id").alias("nd"))
         .collect()
     }
+    assert {r.key for r in by_tag["hll"]} == set(exact_nd)
     for r in by_tag["hll"]:
         e = exact_nd[r.key]
         assert abs(r.n - e) <= max(2, 0.10 * e), (r.key, r.n, e)
@@ -142,10 +132,11 @@ def test_approx_sample_arms_properties(spark, sf_dir):
 
 
 def test_simhash_banding_complete_vs_bruteforce(spark, sf_dir):
-    """q_dedup_simhash's pigeonhole claim, proven: with 16 bands of 4 bits
-    the banded candidate join must recover EXACTLY the brute-force set of
-    pairs at Hamming ≤ 12 (radius < #bands ⇒ some band matches — no
-    recall loss, and the verify filter removes false candidates)."""
+    """q_dedup_sketch's 'simhash' arm, pigeonhole claim proven: with 16
+    bands of 4 bits the banded candidate join must recover EXACTLY the
+    brute-force set of pairs at Hamming ≤ 12 (radius < #bands ⇒ some band
+    matches — no recall loss, and the verify filter removes false
+    candidates)."""
     from apachebeam_python_spark.operators.dedup import simhash
 
     sigs = {
@@ -162,8 +153,10 @@ def test_simhash_banding_complete_vs_bruteforce(spark, sf_dir):
         if bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1") <= 12
     }
     got = {
-        (r.doc_a, r.doc_b)
-        for r in q.QUERIES["q_dedup_simhash"](spark, sf_dir).collect()
+        (r.id_a, r.id_b)
+        for r in q.QUERIES["q_dedup_sketch"](spark, sf_dir)
+        .filter(F.col("method") == "simhash")
+        .collect()
     }
     assert got == exact, (
         f"banding lost {len(exact - got)} pairs, invented {len(got - exact)}"

@@ -1386,6 +1386,10 @@ def test_partial_correlation_oracle_matches_numpy(days):
         assert pr == pytest.approx(ref_pr, abs=1e-3)
 
 
+def _duckdb_round6(x: float) -> float:
+    return duckdb.execute("SELECT round(?::DOUBLE, 6)", [x]).fetchone()[0]
+
+
 @settings(max_examples=25, deadline=None)
 @given(
     grid=st.lists(
@@ -1395,28 +1399,37 @@ def test_partial_correlation_oracle_matches_numpy(days):
     )
 )
 def test_cronbach_alpha_oracle_matches_reference(grid):
+    """Exact, not approximate: values of ~1e4–6e5 put Σvar_item at ≥ 1e9
+    whenever an item varies, where one ulp shows at 6 dp. Only an
+    order-free Σvar_item — one exact integer sum of n·ss − s², divided
+    once by n·(n−1) — reproduces bit for bit; a double sum of the item
+    variances moves with the engine's hash-group order. The Python
+    reference rounds with DuckDB's own round(x, 6)."""
+    scale = 9973  # odd, so the cents sums are not round numbers
     rows = [
-        {"event_type": t, "value": float(m), "event_id": u * 5 + j, "user_id": u}
+        {"event_type": t, "value": float(m * scale), "event_id": u * 5 + j, "user_id": u}
         for u, meas in enumerate(grid)
         for j, (t, m) in enumerate(zip(TYPES, meas))
     ]
     frame = pd.DataFrame(rows)
     (n_cases, k, sum_iv, total_var, alpha), = _run_oracle("q_cronbach_alpha", frame)
-    assert (n_cases, k) == (len(grid), 5)
-    cents = [[round(m * 100) for m in meas] for meas in grid]
+    n = len(grid)
+    assert (n_cases, k) == (n, 5)
+    cents = [[m * scale * 100 for m in meas] for meas in grid]
 
-    def var(xs):
-        mu = sum(xs) / len(xs)
-        return sum((x - mu) ** 2 for x in xs) / (len(xs) - 1)
+    def var(xs: list[int]) -> float:
+        return float(n * sum(x * x for x in xs) - sum(xs) ** 2) / (float(n) * (n - 1))
 
     items = [[row[j] for row in cents] for j in range(5)]
-    ref_iv = sum(var(it) for it in items)
-    totals = [sum(row) for row in cents]
-    ref_tv = var(totals)
-    assert sum_iv == pytest.approx(ref_iv, abs=1e-3)
-    assert total_var == pytest.approx(ref_tv, abs=1e-3)
+    num_iv = sum(n * sum(x * x for x in it) - sum(it) ** 2 for it in items)
+    ref_iv = float(num_iv) / (float(n) * (n - 1))
+    ref_tv = var([sum(row) for row in cents])
+    if num_iv > 0:
+        assert ref_iv >= 1e9
+    assert sum_iv == _duckdb_round6(ref_iv)
+    assert total_var == _duckdb_round6(ref_tv)
     if ref_tv > 0:
-        assert alpha == pytest.approx(5 / 4 * (1 - ref_iv / ref_tv), abs=1e-4)
+        assert alpha == _duckdb_round6(5 / 4 * (1.0 - ref_iv / ref_tv))
     else:
         assert alpha is None
 
