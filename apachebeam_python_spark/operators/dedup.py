@@ -584,7 +584,6 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    small_graph_max_edges: int = 1 << 20,
 ) -> DataFrame:
     """Near-dup pairs → dedup clusters: connected components by iterative
     min-label propagation (the downstream step that turns pairwise matches
@@ -606,20 +605,20 @@ def connected_components(
     applied to the dedup tail): when the PAIR table is bounded (one
     bounded fetch of the checkpointed pair projection decides — near-dup
     pair sets are a small fraction of any corpus, but the gate keeps the
-    distributed loop live for degenerate generators), the whole closure
-    runs as min-rooted UNION-FIND on the driver
-    (``graph.driver_kernel``): cluster id = min member is the identical
-    partition + labeling by construction (pinned both paths in
-    tests/test_graph_kernels.py). Past the gate the propagation loop
-    below runs unchanged."""
+    distributed loop live for degenerate generators), the same
+    propagate-plus-pointer-jump runs in numpy on the driver
+    (``graph.driver_kernel`` with ``_components_kernel``): cluster id =
+    min member is the identical partition + labeling by construction
+    (pinned both paths in tests/test_graph_kernels.py). Past the gate the
+    propagation loop below runs unchanged."""
     p = checkpoint(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
         eager=False,  # the gate fetch materializes it; the loop reuses it
     )
-    from .graph import _edge_kernel
+    from .graph import _SPARSE_MAX_ROWS, _edge_kernel
 
     small = _edge_kernel(
-        p, "u", "v", small_graph_max_edges, _union_find_clusters,
+        p, "u", "v", _SPARSE_MAX_ROWS, _components_kernel,
         "doc_id {id}, cluster_id {id}",
     )
     if small is not None:
@@ -668,32 +667,31 @@ def connected_components(
     return labels.select(F.col("u").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def _union_find_clusters(pdf):
-    """Bounded-pair fast path: min-rooted union-find over the raw pair
-    rows ``(ku, kv)``. Attaching the larger root under the smaller keeps
-    every root the MINIMUM member of its set, so the final find(x) equals
-    the propagation fixpoint's min-label exactly; node set = all pair
-    endpoints, matching the distributed labels' domain."""
+def _components_kernel(pdf):
+    """The distributed loop's propagate-plus-pointer-jump over
+    dictionary-encoded ``(ku, kv)`` pairs, until no label moves. Labels
+    are indices into the sorted ids and only ever fall to a member of the
+    same component, so the fixpoint's label is each component's minimum
+    member; nodes are all pair endpoints, the distributed labels' domain.
+    Propagation lowers the label of each endpoint's LABEL (its root), not
+    only the endpoint's own: a plain min-propagation took 93 rounds on
+    2^20 random pairs over 2^21 ids, this takes 8."""
+    import numpy as np
     import pandas as pd
 
-    parent: dict = {}
+    from .graph import _encode_ids
 
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for u, v in zip(pdf["ku"], pdf["kv"]):
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            if rv < ru:
-                ru, rv = rv, ru
-            parent[rv] = ru
-    nodes = sorted(set(pdf["ku"]) | set(pdf["kv"]))
-    return pd.DataFrame({"doc_id": nodes, "cluster_id": [find(x) for x in nodes]})
+    ids, su, sv = _encode_ids(pdf)
+    lab = np.arange(len(ids))
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, lab[su], lab[sv])
+        np.minimum.at(nxt, lab[sv], lab[su])
+        nxt = np.minimum(nxt, nxt[lab])
+        if (nxt == lab).all():
+            break
+        lab = nxt[nxt]  # pointer jump: label(u) ← label(label(u))
+    return pd.DataFrame({"doc_id": ids, "cluster_id": ids[lab]})
 
 
 def fuzzy_pairs(

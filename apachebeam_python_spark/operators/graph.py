@@ -40,24 +40,33 @@ _KERNEL_ID_TYPES = (
     T.StringType,
 )
 
+#: The driver kernels' size gates, one per memory class. Every node is an
+#: endpoint of a fetched row, so n ≤ 2·rows and each cap bounds the
+#: driver's memory by construction; no caller can raise one.
+#:
+#: Dense kernels hold n×n matrices (hop_distances, closure_census,
+#: lpa_labels): 2048 edges ⇒ n ≤ 4096. Peak at that size (2048 disjoint
+#: edges, tracemalloc): 352 MiB in hop_distances (an int64 distance
+#: matrix and three float32 products), 256 MiB in lpa_labels, 224 MiB in
+#: closure_census.
+_DENSE_MAX_EDGES = 2048
+#: Sparse kernels hold O(n + e) arrays (kcore_census, dag_depths,
+#: connected_components, pagerank): 2^20 rows ⇒ n ≤ 2^21. Peak at that
+#: size (2^20 random rows, tracemalloc): 102–114 MiB in each.
+_SPARSE_MAX_ROWS = 1 << 20
 
-def _kernel_ids_ok(df: DataFrame, *cols: str) -> bool:
-    by_name = {f.name: f.dataType for f in df.schema.fields}
-    return all(isinstance(by_name[c], _KERNEL_ID_TYPES) for c in cols)
 
-
-def _integral_ids(df: DataFrame, *cols: str) -> bool:
-    """Stricter gate for kernels that CAST ids to long (the pagerank /
-    dag-depths carriers): integral input only (ADVICE r11 #2)."""
-    by_name = {f.name: f.dataType for f in df.schema.fields}
-    return all(
-        isinstance(by_name[c], _KERNEL_ID_TYPES[:-1]) for c in cols
-    )
-
-
-def _id_ddl(df: DataFrame, col: str) -> str:
-    """DDL type name of an id column, for pass-through kernel schemas."""
-    return {f.name: f.dataType for f in df.schema.fields}[col].simpleString()
+def _kernel_id_type(*cols: tuple[DataFrame, str]) -> str | None:
+    """The DDL type the id columns share, which a kernel's ids pass through
+    in; None (run the loop) when they differ or when the type's kernel
+    ordering could differ from Spark's."""
+    types = {
+        {f.name: f.dataType for f in df.schema.fields}[c] for df, c in cols
+    }
+    t = types.pop()
+    if types or not isinstance(t, _KERNEL_ID_TYPES):
+        return None
+    return t.simpleString()
 
 
 def _encode_ids(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -73,7 +82,7 @@ def _encode_ids(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 def driver_kernel(
     df: DataFrame,
     max_rows: int,
-    kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+    kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
 ) -> DataFrame | None:
     """Run a size-gated graph kernel on the DRIVER; None means "over the
@@ -84,17 +93,15 @@ def driver_kernel(
     kernel's input and then read it again pays one Spark action instead
     of two. Over ``max_rows`` rows the result is None. Otherwise
     ``kernel`` gets the rows as one pandas frame and returns the result
-    in ``schema``'s column order, or None to decline on a size it derives
-    from the rows (``dag_depths``' node count). An empty input gives an
-    empty result without calling the kernel, as zero ``applyInPandas``
-    groups did.
+    in ``schema``'s column order. An empty input gives an empty result
+    without calling the kernel, as zero ``applyInPandas`` groups did.
 
     Why the driver: the bounded kernels used to run as one
     ``groupBy(lit(1)).applyInPandas`` task, which starts a Python daemon
     and worker. On a cold session that costs ~2 s and ~180 MB RSS to run
     a kernel of well under a second. The driver already holds numpy,
-    pandas and pyarrow, and the fetch is capped at ``max_rows + 1`` rows,
-    so the driver's share is bounded by the gate. The kernel runs while
+    pandas and pyarrow, and ``max_rows`` is one of the two memory-class
+    caps above, so the driver's share is bounded. The kernel runs while
     the query is built, where the gate count used to run.
     """
     table = df.limit(max_rows + 1).toArrow()
@@ -103,30 +110,28 @@ def driver_kernel(
     spark = df.sparkSession
     if table.num_rows == 0:
         return spark.createDataFrame([], schema)
-    out = kernel(table.to_pandas())
-    return None if out is None else spark.createDataFrame(out, schema)
+    return spark.createDataFrame(kernel(table.to_pandas()), schema)
 
 
 def _edge_kernel(
     e: DataFrame,
     src: str,
     dst: str,
-    max_edges: int,
-    kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+    max_rows: int,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    ids_ok: Callable[..., bool] = _kernel_ids_ok,
 ) -> DataFrame | None:
     """``driver_kernel`` over an edge list as ``(ku, kv)``; ``{id}`` in
     ``schema`` stands for the id columns' type, which passes through. None
-    (run the loop) past the gate, or for an id type whose kernel ordering
-    could differ from Spark's (``ids_ok``)."""
-    if not ids_ok(e, src, dst):
+    (run the loop) past the gate, or for ids ``_kernel_id_type`` refuses."""
+    id_type = _kernel_id_type((e, src), (e, dst))
+    if id_type is None:
         return None
     return driver_kernel(
         e.select(F.col(src).alias("ku"), F.col(dst).alias("kv")),
-        max_edges,
+        max_rows,
         kernel,
-        schema.format(id=_id_ddl(e, src)),
+        schema.format(id=id_type),
     )
 
 
@@ -141,7 +146,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 10,
     round_dp: int = 9,
-    small_graph_max_nodes: int = 65536,
 ) -> DataFrame:
     """Weighted PageRank with dangling-mass redistribution, fixed iteration
     count. Returns ``(node, r)``.
@@ -165,30 +169,51 @@ def pagerank(
     every 3 rounds instead of every round measured ≈ 1.02× (the eager
     jobs were not the cost; a 3-deep lazy plan pays it back in planning
     + nested broadcasts), and is NOT kept. What IS kept: when the node
-    count is bounded (``small_graph_max_nodes``), the whole recurrence
-    runs on the driver (``driver_kernel``: a numpy kernel with identical
-    per-round half-away 9-dp rounding) — the heavy, data-sized work
-    (the edge aggregation) stays distributed, and iterating a
-    metadata-sized vector through 10 scheduler waves was the
-    anti-pattern. At web scale (nodes ≫ threshold) the distributed
-    loop below runs unchanged: bucket edges by ``src``, co-bucket the
-    rank table, exchange-free rounds.
+    and edge rows are bounded (``_SPARSE_MAX_ROWS``), the whole
+    recurrence runs on the driver (``driver_kernel`` with
+    ``_pagerank_kernel``, identical per-round half-away 9-dp rounding) —
+    the heavy, data-sized work (the edge aggregation) stays distributed,
+    and iterating a metadata-sized vector through 10 scheduler waves was
+    the anti-pattern. At web scale the distributed loop below runs
+    unchanged: bucket edges by ``src``, co-bucket the rank table,
+    exchange-free rounds. Both paths return ``node`` in the input's type.
     """
     en = edges.withColumn(
         "p", F.col(weight) / F.sum(weight).over(Window.partitionBy(src))
     ).select(src, dst, "p")
-    # small-graph kernel (r11): the aggregated (src, dst, p) table and the
-    # rank vector are metadata-sized here. No checkpoint on this path
-    # (r11b): the kernel reads `en` exactly once, so the eager parquet
-    # write+read that cuts lineage for the ITERATING path below is pure
-    # overhead here
-    small = _pagerank_small_graph(
-        en, nodes, src=src, dst=dst, node=node, damping=damping,
-        iterations=iterations, round_dp=round_dp,
-        max_nodes=small_graph_max_nodes,
-    )
-    if small is not None:
-        return small
+    # the kernel fetches node rows ∪ edge rows, tagged by ``edge``, under
+    # one gate; no id column may hold nulls (pandas would turn the ids to
+    # float64), so a node row repeats its id and an edge with a null dst
+    # points at its own src with p = 0: it marks src non-dangling, as in
+    # the loop, and adds nothing. No checkpoint on this path (r11b): the
+    # kernel reads `en` once
+    id_type = _kernel_id_type((nodes, node), (en, src), (en, dst))
+    if id_type is not None:
+        rows = nodes.select(
+            F.lit(False).alias("edge"),
+            F.col(node).alias("ku"),
+            F.col(node).alias("kv"),
+            F.lit(0.0).alias("p"),
+        ).unionByName(
+            en.filter(F.col(src).isNotNull()).select(
+                F.lit(True).alias("edge"),
+                F.col(src).alias("ku"),
+                F.coalesce(dst, src).alias("kv"),
+                F.coalesce(
+                    F.when(F.col(dst).isNotNull(), F.col("p")), F.lit(0.0)
+                ).alias("p"),
+            )
+        )
+        small = driver_kernel(
+            rows,
+            _SPARSE_MAX_ROWS,
+            lambda pdf: _pagerank_kernel(
+                pdf, float(damping), int(iterations), int(round_dp)
+            ),
+            f"{node} {id_type}, r double",
+        )
+        if small is not None:
+            return small
     en = checkpoint(en)
     srcs = checkpoint(en.select(src).distinct())
     nn = nodes.agg(F.count("*").alias("n"))
@@ -235,85 +260,43 @@ def pagerank(
     return ranks
 
 
-def _pagerank_small_graph(
-    en: DataFrame,
-    nodes: DataFrame,
-    *,
-    src: str,
-    dst: str,
-    node: str,
-    damping: float,
-    iterations: int,
-    round_dp: int,
-    max_nodes: int,
-) -> DataFrame | None:
-    """The metadata-sized fast path: the full power iteration on the
-    driver (``driver_kernel``), or None past ``max_nodes`` node rows. The
-    fetched table is the node list with each node's out-edges attached
-    as one list, so its row count IS the node count the gate has always
-    counted, and one fetch both gates and loads the graph. Arithmetic
-    contract mirrors the distributed loop exactly — out-edge
-    probabilities arrive precomputed in ``en``; each round is
-    teleport/n + d·(Σ r·p per dst + dangling_mass/n), rounded HALF-AWAY to
-    ``round_dp`` decimals (``floor(x·10^k + 0.5)`` — ranks are positive —
-    the same expression the distributed loop evaluates, and the decision
-    DuckDB's round makes on the binary value; the per-round 1e-9 round
-    swallows numpy-vs-SQL sum-order drift exactly as it swallows
-    Spark-vs-DuckDB drift in the distributed path). Edges whose endpoints
-    are not in the node list are ignored, matching the distributed joins'
-    semantics."""
-    damping_f, iters, dp = float(damping), int(iterations), int(round_dp)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        nodes_a = np.sort(pdf["ksrc"].to_numpy(dtype="int64"))
-        idx = {int(v): i for i, v in enumerate(nodes_a)}
-        n = len(nodes_a)
-        out = pdf.explode("out").dropna(subset=["out"])
-        e_all = pd.DataFrame(
-            {
-                "ksrc": out["ksrc"].to_numpy(),
-                "kdst": [o["kdst"] for o in out["out"]],
-                "kp": [o["kp"] for o in out["out"]],
-            }
+def _pagerank_kernel(
+    pdf: pd.DataFrame, damping: float, iterations: int, round_dp: int
+) -> pd.DataFrame:
+    """The distributed loop's arithmetic on the driver: out-edge
+    probabilities arrive precomputed; each round is teleport/n + d·(Σ r·p
+    per dst + dangling_mass/n), rounded HALF-AWAY to ``round_dp`` decimals
+    (``floor(x·10^k + 0.5)`` — ranks are positive — the expression the
+    loop evaluates, and the decision DuckDB's round makes on the binary
+    value; the per-round 1e-9 round swallows numpy-vs-SQL sum-order drift
+    exactly as it swallows Spark-vs-DuckDB drift). Edges with an endpoint
+    outside the node list add nothing, as in the loop's joins."""
+    ids, ku, kv = _encode_ids(pdf)
+    edge = pdf["edge"].to_numpy(dtype=bool)
+    is_node = np.zeros(len(ids), dtype=bool)
+    is_node[ku[~edge]] = True
+    n = max(int(is_node.sum()), 1)  # no node rows: an empty result
+    # dangling mask from ALL edge srcs (r12, VERDICT r11 #7): the loop
+    # derives non-dangling from en.select(src).distinct() BEFORE any dst
+    # filtering — a node whose only out-edge points outside the node list
+    # is NOT dangling there, so not here either
+    dangling = is_node.copy()
+    dangling[ku[edge]] = False
+    keep = edge & is_node[ku] & is_node[kv]
+    si, di = ku[keep], kv[keep]
+    p = pdf["p"].to_numpy(dtype="float64")[keep]
+    scale = 10.0 ** round_dp
+    teleport = 1.0 - damping
+    r = np.full(len(ids), 1.0 / n)
+    for _ in range(iterations):
+        con = np.zeros(len(ids))
+        np.add.at(con, di, r[si] * p)
+        dm = float(r[dangling].sum())
+        r = (
+            np.floor((teleport / n + damping * (con + dm / n)) * scale + 0.5)
+            / scale
         )
-        # dangling mask from ALL edge srcs (r12, VERDICT r11 #7): the
-        # distributed loop derives non-dangling from en.select(src).distinct()
-        # BEFORE any dst filtering — a node whose only out-edge points
-        # outside the node list is NOT dangling there, so not here either
-        dangling = np.ones(n, dtype=bool)
-        src_in = e_all.loc[e_all["ksrc"].isin(idx), "ksrc"]
-        dangling[src_in.map(idx).to_numpy(dtype="int64")] = False
-        e = e_all[e_all["ksrc"].isin(idx) & e_all["kdst"].isin(idx)]
-        si = e["ksrc"].map(idx).to_numpy(dtype="int64")
-        di = e["kdst"].map(idx).to_numpy(dtype="int64")
-        p = e["kp"].to_numpy(dtype="float64")
-        scale = 10.0 ** dp
-        teleport = 1.0 - damping_f
-        r = np.full(n, 1.0 / n)
-        for _ in range(iters):
-            con = np.zeros(n)
-            np.add.at(con, di, r[si] * p)
-            dm = float(r[dangling].sum())
-            r = (
-                np.floor(
-                    (teleport / n + damping_f * (con + dm / n)) * scale + 0.5
-                )
-                / scale
-            )
-        return pd.DataFrame({"node": nodes_a, "r": r})
-
-    out_edges = en.groupBy(F.col(src).cast("long").alias("ksrc")).agg(
-        F.collect_list(
-            F.struct(
-                F.col(dst).cast("long").alias("kdst"),
-                F.col("p").cast("double").alias("kp"),
-            )
-        ).alias("out")
-    )
-    rows = nodes.select(F.col(node).cast("long").alias("ksrc")).join(
-        out_edges, "ksrc", "left"
-    )
-    return driver_kernel(rows, max_nodes, kernel, f"{node} long, r double")
+    return pd.DataFrame({"node": ids[is_node], "r": r[is_node]})
 
 
 def dag_depths(
@@ -322,8 +305,6 @@ def dag_depths(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 64,
-    small_graph_max_nodes: int = 65536,
-    small_graph_max_edges: int = 1 << 22,
 ) -> DataFrame:
     """Longest-path (topological-layer) depth per node of a DAG — the
     distributed Bellman-Ford specialization q_dag_layers runs: depth
@@ -331,9 +312,9 @@ def dag_depths(
     fixpoint, capped at ``max_rounds``. Returns ``(node, d)``. Nodes are
     src ∪ dst of the edge list.
 
-    r11 (the q_pagerank kernel pattern): when the edge and node counts
-    are bounded (one bounded fetch of the edges decides both) the whole
-    fixpoint runs on the driver (``driver_kernel``) — each distributed
+    r11 (the q_pagerank kernel pattern): when the edge list is bounded
+    (``_SPARSE_MAX_ROWS``) the whole fixpoint runs on the driver
+    (``driver_kernel`` with ``_dag_depths_kernel``) — each distributed
     round costs a broadcast join + union + max-groupBy + eager checkpoint
     + a Σd convergence action, ~10 scheduler waves to advance a ≤|V|-row
     table.
@@ -344,16 +325,10 @@ def dag_depths(
     per-round join is exchange-free; depth tables shuffle on the node
     key with map-side max partials."""
     e = checkpoint(edges.select(src, dst), eager=False)
-    # kernel gate (r12, ADVICE r11 #2/#3): ids must be integral (the kernel
-    # casts them to long — strings/decimals fall through to the distributed
-    # loop, which handles any type), and BOTH dimensions must be bounded —
-    # node count caps the depth vector, edge count caps the fetched
-    # payload (a dense small-node DAG could otherwise funnel ~|V|² edges
-    # onto the driver). One bounded fetch of the edges decides both: the
-    # node set is src ∪ dst of the fetched rows
-    small = _dag_depth_small_graph(
-        e, src=src, dst=dst, max_rounds=max_rounds,
-        max_nodes=small_graph_max_nodes, max_edges=small_graph_max_edges,
+    small = _edge_kernel(
+        e, src, dst, _SPARSE_MAX_ROWS,
+        lambda pdf: _dag_depths_kernel(pdf, int(max_rounds)),
+        "node {id}, d long",
     )
     if small is not None:
         return small
@@ -374,54 +349,22 @@ def dag_depths(
         if cur == prev:
             break
         prev = cur
-    # cast node to long for schema parity with the kernel path (ADVICE
-    # r11 #2) — the kernel always emits long node ids
-    return depth.select(
-        F.col("v").cast("long").alias("node"), F.col("d").alias("d")
-    )
+    return depth.select(F.col("v").alias("node"), "d")
 
 
-def _dag_depth_small_graph(
-    edges: DataFrame,
-    *,
-    src: str,
-    dst: str,
-    max_rounds: int,
-    max_nodes: int,
-    max_edges: int,
-) -> DataFrame | None:
-    """Longest-path (topological-layer) depth per node for a
-    METADATA-SIZED DAG, computed on the driver (``driver_kernel``), or
-    None past ``max_edges`` edges or ``max_nodes`` nodes or for
-    non-integral ids (the kernel casts them to long) — the r11
-    q_pagerank kernel pattern applied to q_dag_layers' relaxation loop
-    (each distributed round there was a broadcast join + union +
-    max-groupBy + eager checkpoint + a Σd convergence action, all to
-    advance a ≤|V|-row table one hop). Arithmetic contract mirrors the
-    distributed loop exactly: simultaneous relaxation
-    d(v) ← max(d(v), d(u)+1) over incoming edges until a fixpoint, capped
-    at ``max_rounds`` (the loop's backstop) — integers, order-free, so
-    the fixpoint is identical by construction. The node list is src ∪ dst
-    of the edges, as the loop's."""
-    rounds = int(max_rounds)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        nodes_a, si, di = _encode_ids(pdf.astype("int64"))
-        if len(nodes_a) > max_nodes:
-            return None
-        d = np.zeros(len(nodes_a), dtype="int64")
-        for _ in range(rounds):
-            nd = d.copy()
-            np.maximum.at(nd, di, d[si] + 1)
-            if (nd == d).all():
-                break
-            d = nd
-        return pd.DataFrame({"node": nodes_a, "d": d})
-
-    return _edge_kernel(
-        edges, src, dst, max_edges, kernel, "node long, d long",
-        ids_ok=_integral_ids,
-    )
+def _dag_depths_kernel(pdf: pd.DataFrame, rounds: int) -> pd.DataFrame:
+    """The loop's simultaneous relaxation d(v) ← max(d(v), d(u)+1) until a
+    fixpoint or ``rounds`` (its backstop): integers, order-free, so the
+    fixpoint is identical by construction. Nodes are src ∪ dst."""
+    nodes_a, si, di = _encode_ids(pdf)
+    d = np.zeros(len(nodes_a), dtype="int64")
+    for _ in range(rounds):
+        nd = d.copy()
+        np.maximum.at(nd, di, d[si] + 1)
+        if (nd == d).all():
+            break
+        d = nd
+    return pd.DataFrame({"node": nodes_a, "d": d})
 
 
 # --------------------------------------------------------------------------
@@ -429,21 +372,15 @@ def _dag_depth_small_graph(
 # Same pattern as pagerank/dag_depths above — the heavy, data-sized work
 # (the 4-table edge aggregation) stays distributed; iterating a
 # metadata-sized node/pair table through scheduler waves was the
-# anti-pattern. Every kernel below is INTEGER counting over
-# dictionary-encoded ids (no id arithmetic, no doubles), so the fixpoint /
-# census is identical to the distributed loop by construction; node ids
+# anti-pattern. Every kernel below is exact counting or set algebra over
+# dictionary-encoded ids (no id arithmetic), so the fixpoint / census is
+# identical to the distributed loop by construction; node ids
 # pass through with their input dtype (schema-preserving), gated on types
-# whose kernel ordering matches Spark's (_KERNEL_ID_TYPES).
-#
-# Gate: ONE bounded fetch of the (distinct, checkpointed) edge list —
-# |E| ≤ small_graph_max_edges — through _edge_kernel / driver_kernel, which
-# also loads the kernel's input. Distinct edges imply |V| ≤ 2·|E|, so the
-# default gate (2048 edges ⇒ ≤4096 nodes) bounds the kernels' dense n×n
-# work matrices at ~134 MB on the driver (ADVICE r11 #3's
-# both-dimensions rule, collapsed to one fetch because the input is
-# distinct by construction). Past the gate the distributed loops run
-# unchanged: edges bucketed by src at scale, per-round joins exchange-free,
-# node-keyed state shuffles with map-side partials.
+# whose kernel ordering matches Spark's (_KERNEL_ID_TYPES). The gate is
+# the memory-class cap of each kernel (_DENSE_MAX_EDGES or
+# _SPARSE_MAX_ROWS). Past it the distributed loops run unchanged: edges
+# bucketed by src at scale, per-round joins exchange-free, node-keyed
+# state shuffles with map-side partials.
 # --------------------------------------------------------------------------
 
 
@@ -453,7 +390,6 @@ def hop_distances(
     src: str = "src",
     dst: str = "dst",
     max_d: int = 9,
-    small_graph_max_edges: int = 2048,
 ) -> DataFrame:
     """All-pairs shortest hop distances over the UNDIRECTED graph of a
     DIRECTED distinct edge list (symmetrized internally), bounded at
@@ -472,7 +408,7 @@ def hop_distances(
     """
     e0 = checkpoint(edges.select(src, dst), eager=False)
     small = _edge_kernel(
-        e0, src, dst, small_graph_max_edges,
+        e0, src, dst, _DENSE_MAX_EDGES,
         lambda pdf: _hop_distances_kernel(pdf, int(max_d)),
         "src {id}, node {id}, d long",
     )
@@ -512,6 +448,15 @@ def hop_distances(
     return visited
 
 
+def _reaches(frontier: np.ndarray, adj_f: np.ndarray) -> np.ndarray:
+    """One-step reachability ``frontier · adj > 0`` as a float32 BLAS
+    product: numpy multiplies bool (or uint8) matrices in a non-BLAS O(n³)
+    loop, ~150× slower at n = 2580. Exact: every term is 0 or 1, so a
+    positive sum cannot round to 0 (and a uint8 product, which counted
+    paths mod 256, lost pairs joined by 256·k of them)."""
+    return (frontier.astype(np.float32) @ adj_f) > 0
+
+
 def _hop_distances_kernel(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
     nodes_a, si, di = _encode_ids(pdf)
     n = len(nodes_a)
@@ -522,11 +467,10 @@ def _hop_distances_kernel(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
     dist = np.zeros((n, n), dtype="int64")
     dist[adj] = 1
     reached = adj | np.eye(n, dtype=bool)  # v == src never enters visited
+    adj_f = adj.astype(np.float32)
     frontier = adj
     for d in range(2, cap + 1):
-        # bool @ bool is logical OR over AND: a uint8 product counted
-        # paths mod 256 and lost pairs joined by 256·k of them
-        nxt = (frontier @ adj) & ~reached
+        nxt = _reaches(frontier, adj_f) & ~reached
         if not nxt.any():
             break
         dist[nxt] = d
@@ -544,7 +488,6 @@ def closure_census(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 64,
-    small_graph_max_edges: int = 2048,
 ) -> DataFrame:
     """Directed transitive-closure census: per node of ``src ∪ dst``, the
     size of its reachable set (≥1 step) and whether it can reach itself
@@ -559,7 +502,7 @@ def closure_census(
     Exact set algebra ⇒ identical fixpoint by construction."""
     e = checkpoint(edges.select(src, dst), eager=False)
     small = _edge_kernel(
-        e, src, dst, small_graph_max_edges,
+        e, src, dst, _DENSE_MAX_EDGES,
         lambda pdf: _closure_census_kernel(pdf, int(max_rounds)),
         "node {id}, n_reachable long, on_cycle boolean",
     )
@@ -604,9 +547,10 @@ def _closure_census_kernel(pdf: pd.DataFrame, rounds: int) -> pd.DataFrame:
     n = len(nodes_a)
     adj = np.zeros((n, n), dtype=bool)
     adj[si, di] = True
+    adj_f = adj.astype(np.float32)
     reach = adj.copy()
     for _ in range(rounds):
-        nxt = reach | (reach @ adj)  # bool matmul: OR over AND, no overflow
+        nxt = reach | _reaches(reach, adj_f)
         if (nxt == reach).all():
             break
         reach = nxt
@@ -626,7 +570,6 @@ def kcore_census(
     dst: str = "dst",
     k: int = 3,
     rounds: int = 3,
-    small_graph_max_edges: int = 2048,
 ) -> DataFrame:
     """Bounded k-core peel over the UNDIRECTED graph of a DIRECTED
     distinct edge list (symmetrized + deduped internally): ``rounds``
@@ -640,7 +583,7 @@ def kcore_census(
     the distributed one exactly."""
     e0 = checkpoint(edges.select(src, dst), eager=False)
     small = _edge_kernel(
-        e0, src, dst, small_graph_max_edges,
+        e0, src, dst, _SPARSE_MAX_ROWS,
         lambda pdf: _kcore_census_kernel(pdf, int(k), int(rounds)),
         "node {id}, core_degree long",
     )
@@ -693,7 +636,6 @@ def lpa_labels(
     src: str = "u",
     dst: str = "v",
     rounds: int = 3,
-    small_graph_max_edges: int = 2048,
 ) -> DataFrame:
     """Synchronous label propagation over the UNDIRECTED graph of an
     ORIENTED (u < v) distinct edge list: every node starts as its own
@@ -711,7 +653,7 @@ def lpa_labels(
     since UTF-8 byte order preserves code points."""
     e0 = checkpoint(edges.select(src, dst), eager=False)
     small = _edge_kernel(
-        e0, src, dst, small_graph_max_edges,
+        e0, src, dst, _DENSE_MAX_EDGES,
         lambda pdf: _lpa_labels_kernel(pdf, int(rounds)),
         "node {id}, label {id}",
     )

@@ -647,6 +647,30 @@ FROM r{iterations} JOIN nation ON node = n_nationkey
     return head + iters + tail
 
 
+def _pagerank_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """q_pagerank's input: the weighted trade edges ``(src, dst, w)``, w =
+    lineitem count per supplier nation → customer nation (self-trade
+    included, no count cut), and the node list ``(node)``, every nation."""
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    edges = (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("w"))
+    )
+    nodes = table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("node")
+    )
+    return edges, nodes
+
+
 @register(
     "q_pagerank",
     driver=True,  # §2.9 iterative-algorithm extension — rotated in r11 (wave 6)
@@ -668,22 +692,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count (not convergence) so the oracle can unroll it."""
     from ..operators.graph import pagerank as _pr
 
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-    )
-    nodes = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node")
-    )
-    ranks = _pr(edges, nodes, damping=0.85, iterations=10)
+    ranks = _pr(*_pagerank_graph(spark, sf_dir), damping=0.85, iterations=10)
     nat = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return ranks.join(
         F.broadcast(nat), F.col("node") == F.col("n_nationkey")

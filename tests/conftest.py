@@ -54,3 +54,18 @@ def _release_operator_caches():
     from apachebeam_python_spark.operators.dedup import release_signature_caches
 
     release_signature_caches()
+
+
+
+def distributed_loop(op, *args, **kwargs):
+    """``op(*args, **kwargs)`` on its distributed loop: a size-gated graph
+    operator (operators/graph.py, ``dedup.connected_components``) whose
+    ``graph.driver_kernel`` declines, as it does past its gate. The gate
+    runs when the operator is called, so the returned DataFrame can be
+    collected anywhere. Built on ``MonkeyPatch.context()`` so hypothesis
+    test bodies can use it."""
+    from apachebeam_python_spark.operators import graph
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "driver_kernel", lambda *_: None)
+        return op(*args, **kwargs)

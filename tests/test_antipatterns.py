@@ -23,9 +23,11 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "apachebeam_python_spark"
 #: `.collect()` and `.toArrow()` calls (both pull rows to the driver)
 ALLOWED_COLLECTS = {
     # driver_kernel: the one fetch every size-gated graph kernel goes
-    # through — limit(max_rows + 1) caps it at the kernel's own gate
-    # (≤ 2048 edges for the r12 kernels, 1<<20 dedup pairs, 1<<22 DAG
-    # edges, 65536 pagerank nodes), so it is never a full-table pull
+    # through — limit(max_rows + 1) caps it at the kernel's memory-class
+    # constant (graph._DENSE_MAX_EDGES = 2048 edges for hop, closure and
+    # LPA; graph._SPARSE_MAX_ROWS = 1<<20 rows for k-core, dag depths,
+    # components and pagerank's node ∪ edge rows), so it is never a
+    # full-table pull
     "operators/graph.py": 1,
     "operators/clustering.py": 4,  # seeds (k) + centroid sums (k*dim) + k-center seed (1) + per-round argmax (1)
     "operators/decomposition.py": 1,  # PCA moment partials (dim^2+dim+1 rows)

@@ -1,11 +1,12 @@
 """DAG-layering path equivalence (r11, the q_pagerank kernel pattern).
 
-operators/graph.dag_depths runs the single-task Arrow kernel at every
-fixture scale (the nation DAG is ≤50 nodes ≤ small_graph_max_nodes), so
-the distributed relaxation loop — the code path that runs at web scale —
+operators/graph.dag_depths runs its driver kernel at every fixture scale
+(the nation DAG has ≤ 25 nodes, far under graph._SPARSE_MAX_ROWS), so the
+distributed relaxation loop — the code path that runs at web scale —
 would otherwise be exercised by no test. This module forces BOTH paths on
-the same edges and asserts value-identical depths; the relaxation is
-integer and order-free, so equality is exact, not approximate.
+q_dag_layers' own edges and asserts value-identical depths; the
+relaxation is integer and order-free, so equality is exact, not
+approximate.
 """
 
 from __future__ import annotations
@@ -17,22 +18,14 @@ pytestmark = pytest.mark.driver  # fast-gate tier: guards a registry query
 from pyspark.sql import functions as F
 
 from apachebeam_python_spark.operators.graph import dag_depths
-from apachebeam_python_spark.session import register_views
+from apachebeam_python_spark.queries.analytics import _trade_edges
+
+from .conftest import distributed_loop
 
 
 def _edges(spark, sf_dir):
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT s_nationkey AS src, c_nationkey AS dst
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s_nationkey < c_nationkey
-        GROUP BY 1, 2 HAVING count(*) >= 100
-        """
-    )
+    """q_dag_layers' own input: the ≥100 trade edges, oriented src < dst."""
+    return _trade_edges(spark, sf_dir, 100).filter(F.col("src") < F.col("dst"))
 
 
 def test_kernel_and_distributed_depths_identical(spark, sf_dir):
@@ -40,7 +33,7 @@ def test_kernel_and_distributed_depths_identical(spark, sf_dir):
     kernel = {r["node"]: r["d"] for r in dag_depths(e).collect()}
     distributed = {
         r["node"]: r["d"]
-        for r in dag_depths(e, small_graph_max_nodes=0).collect()
+        for r in distributed_loop(dag_depths, e).collect()
     }
     assert kernel == distributed
     # at sf0.001 the HAVING edge cut leaves an empty DAG (both paths must
@@ -61,6 +54,6 @@ def test_kernel_handles_chain_and_diamond(spark):
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 1}
     got_dist = {
         r["node"]: r["d"]
-        for r in dag_depths(e, small_graph_max_nodes=0).collect()
+        for r in distributed_loop(dag_depths, e).collect()
     }
     assert got_dist == got

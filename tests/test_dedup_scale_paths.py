@@ -13,6 +13,7 @@ from apachebeam_python_spark import queries as q
 from apachebeam_python_spark.operators import dedup as D
 from apachebeam_python_spark.session import table
 
+from .conftest import distributed_loop
 
 def test_minhash_pairs_equal_exact_pairs(spark, sf_dir):
     """64 hashes / 32 bands / exact-Jaccard verify at 0.5 must reproduce the
@@ -63,10 +64,10 @@ def test_connected_components_deep_chain_pointer_jump(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], "doc_a long, doc_b long"
     )
-    # force the DISTRIBUTED loop (r12: the bounded-pair union-find kernel
-    # would otherwise absorb this graph without iterating at all — the
-    # round-cap and pointer-jump contracts under test belong to the loop)
-    out = D.connected_components(pairs, max_iter=12, small_graph_max_edges=0)
+    # force the DISTRIBUTED loop (the bounded-pair driver kernel would
+    # otherwise absorb this graph — the round-cap and per-round
+    # pointer-jump contracts under test belong to the loop)
+    out = distributed_loop(D.connected_components, pairs, max_iter=12)
     got = {r.doc_id: r.cluster_id for r in out.collect()}
     assert set(got.values()) == {0} and len(got) == 301
     # the kernel path must agree on the same labeling
@@ -79,7 +80,7 @@ def test_connected_components_deep_chain_pointer_jump(spark):
     import pytest
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(pairs, max_iter=3, small_graph_max_edges=0)
+        distributed_loop(D.connected_components, pairs, max_iter=3)
 
 
 def test_incremental_dedup_semantics(spark, sf_dir):

@@ -377,3 +377,31 @@ def test_readme_registry_counts_match_registry():
         assert oracled == len(q.ORACLES), (
             f"README claims {oracled} oracle-backed, registry has {len(q.ORACLES)}"
         )
+
+
+def test_coverage_tables_name_registered_queries():
+    """Doc-pin: every query SURVEY §2's operator tables and README's
+    "Capability coverage" section name as proof is registered. A deleted
+    query is named there by its subsumer (tests/test_plans.py::SUBSUMED),
+    so a deletion that leaves a table pointing at nothing fails here."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+
+    def section(doc, head):
+        text = (root / doc).read_text()
+        start = text.index(head)
+        return text[start : text.index("\n## ", start + len(head))]
+
+    #: not query names: README's DSIR row writes the formula ln(p_target/q_raw)
+    formula_tokens = {"q_raw"}
+    named = set(
+        re.findall(
+            r"\bq_[a-z0-9_]+",
+            section("SURVEY.md", "## 2. Operator inventory")
+            + section("README.md", "## Capability coverage"),
+        )
+    )
+    assert len(named) > 100, "coverage tables not found — heading drift"
+    assert sorted(named - formula_tokens - set(q.QUERIES)) == []

@@ -7,8 +7,8 @@ driver_kernel), and both sides of each gate agree on adversarial graphs.
 - Reachability counts paths as booleans: a uint8 matmul wrapped at 256
   paths and dropped pairs the distributed loop returns.
 - Kernel ≡ loop as a property for all seven operators
-  (``small_graph_max_edges=0`` or ``small_graph_max_nodes=0`` forces the
-  loop), with explicit high fan-in, chain, clique and empty graphs. These
+  (``conftest.distributed_loop`` forces the loop), with explicit high
+  fan-in, chain, clique and empty graphs. These
   run the distributed loops dozens of times, so they stay out of the fast
   ``driver`` gate.
 """
@@ -28,6 +28,8 @@ from apachebeam_python_spark.operators.graph import (
     lpa_labels,
     pagerank,
 )
+
+from .conftest import distributed_loop
 
 #: 0 → {1..256} → 1000: 512 edges, under the 2048-edge gate, and exactly
 #: 256 two-step paths from 0 to 1000
@@ -79,12 +81,12 @@ def test_reachability_survives_256_paths(spark):
     hops = _rows(hop_distances(e, max_d=9), "src", "node", "d")
     assert (0, 1000, 2) in hops
     assert hops == _rows(
-        hop_distances(e, max_d=9, small_graph_max_edges=0), "src", "node", "d"
+        distributed_loop(hop_distances, e, max_d=9), "src", "node", "d"
     )
     census = _rows(closure_census(e), "node", "n_reachable", "on_cycle")
     assert (0, 257, False) in census
     assert census == _rows(
-        closure_census(e, small_graph_max_edges=0),
+        distributed_loop(closure_census, e),
         "node",
         "n_reachable",
         "on_cycle",
@@ -100,7 +102,7 @@ def test_reachability_survives_256_paths(spark):
 def test_hop_distances_kernel_matches_loop(spark, edges):
     e = _edges(spark, edges)
     assert _rows(hop_distances(e, max_d=9), "src", "node", "d") == _rows(
-        hop_distances(e, max_d=9, small_graph_max_edges=0), "src", "node", "d"
+        distributed_loop(hop_distances, e, max_d=9), "src", "node", "d"
     )
 
 
@@ -114,7 +116,7 @@ def test_closure_census_kernel_matches_loop(spark, edges):
     e = _edges(spark, edges)
     cols = ("node", "n_reachable", "on_cycle")
     assert _rows(closure_census(e), *cols) == _rows(
-        closure_census(e, small_graph_max_edges=0), *cols
+        distributed_loop(closure_census, e), *cols
     )
 
 
@@ -128,7 +130,7 @@ def test_connected_components_kernel_matches_loop(spark, edges):
     pairs = _edges(spark, edges, "doc_a long, doc_b long")
     cols = ("doc_id", "cluster_id")
     assert _rows(connected_components(pairs), *cols) == _rows(
-        connected_components(pairs, small_graph_max_edges=0), *cols
+        distributed_loop(connected_components, pairs), *cols
     )
 
 
@@ -146,7 +148,7 @@ def test_pagerank_kernel_matches_loop(spark, edges):
     ids = sorted(set(range(12)).union(*map(set, edges)))
     nodes = spark.createDataFrame([(i,) for i in ids], "node long")
     assert _rows(pagerank(e, nodes), "node", "r") == _rows(
-        pagerank(e, nodes, small_graph_max_nodes=0), "node", "r"
+        distributed_loop(pagerank, e, nodes), "node", "r"
     )
 
 
@@ -159,7 +161,7 @@ def test_pagerank_kernel_matches_loop(spark, edges):
 def test_dag_depths_kernel_matches_loop(spark, edges):
     e = _edges(spark, _oriented(edges))
     assert _rows(dag_depths(e), "node", "d") == _rows(
-        dag_depths(e, small_graph_max_edges=0), "node", "d"
+        distributed_loop(dag_depths, e), "node", "d"
     )
 
 
@@ -173,7 +175,7 @@ def test_kcore_census_kernel_matches_loop(spark, edges):
     e = _edges(spark, edges)
     cols = ("node", "core_degree")
     assert _rows(kcore_census(e), *cols) == _rows(
-        kcore_census(e, small_graph_max_edges=0), *cols
+        distributed_loop(kcore_census, e), *cols
     )
 
 
@@ -186,5 +188,62 @@ def test_kcore_census_kernel_matches_loop(spark, edges):
 def test_lpa_labels_kernel_matches_loop(spark, edges):
     e = _edges(spark, _oriented(edges), "u long, v long")
     assert _rows(lpa_labels(e), "node", "label") == _rows(
-        lpa_labels(e, small_graph_max_edges=0), "node", "label"
+        distributed_loop(lpa_labels, e), "node", "label"
     )
+
+
+
+def _pagerank_typed(spark, edges, t):
+    """Weighted edges over their endpoints plus an isolated node, 99."""
+    weighted = [(a, b, i % 3 + 1) for i, (a, b) in enumerate(edges)]
+    isolated = "99" if t == "string" else 99
+    nodes = sorted({(v,) for e in edges for v in e} | {(isolated,)})
+    return pagerank(
+        spark.createDataFrame(weighted, f"src {t}, dst {t}, w long"),
+        spark.createDataFrame(nodes, f"node {t}"),
+    )
+
+
+#: per operator: its call over distinct edges with ids of type ``t``,
+#: oriented in that type's own order where the input contract asks for it
+CALLS = {
+    "hop_distances": lambda sp, ed, t: hop_distances(
+        _edges(sp, ed, f"src {t}, dst {t}"), max_d=9
+    ),
+    "closure_census": lambda sp, ed, t: closure_census(
+        _edges(sp, ed, f"src {t}, dst {t}")
+    ),
+    "kcore_census": lambda sp, ed, t: kcore_census(
+        _edges(sp, ed, f"src {t}, dst {t}"), k=2
+    ),
+    "dag_depths": lambda sp, ed, t: dag_depths(
+        _edges(sp, _oriented(ed), f"src {t}, dst {t}")
+    ),
+    "lpa_labels": lambda sp, ed, t: lpa_labels(
+        _edges(sp, _oriented(ed), f"u {t}, v {t}")
+    ),
+    "connected_components": lambda sp, ed, t: connected_components(
+        _edges(sp, ed, f"doc_a {t}, doc_b {t}")
+    ),
+    "pagerank": _pagerank_typed,
+}
+
+
+@settings(max_examples=3, deadline=None)
+@given(edges=EDGES)
+@example(edges=CHAIN + [(2, 9), (9, 10), (10, 11)])
+@pytest.mark.parametrize("t", ["string", "int"])
+@pytest.mark.parametrize("op", list(CALLS))
+def test_kernel_and_loop_keep_the_id_type(spark, op, t, edges):
+    """Both paths return the same rows in the same schema, with ids in the
+    input's type: int32 stays int, and strings ("10" < "9") order as
+    Spark orders them. Names and types are compared, not nullability:
+    the kernels' DDL schemas are all nullable, where the loops' count
+    columns are not."""
+    conv = str if t == "string" else int
+    ed = [(conv(a), conv(b)) for a, b in edges]
+    kernel = CALLS[op](spark, ed, t)
+    loop = distributed_loop(CALLS[op], spark, ed, t)
+    assert kernel.schema.simpleString() == loop.schema.simpleString()
+    assert t in [f.dataType.simpleString() for f in kernel.schema]
+    assert sorted(kernel.collect()) == sorted(loop.collect())

@@ -6,7 +6,7 @@ bounded-round loops, VERDICT r11 #1).
 The kernels run at every fixture scale (nation/brand graphs are far under
 the edge gate), so the distributed loops — the code paths that run at web
 scale — would otherwise be exercised by no test. Each test forces BOTH
-paths on the same edges (``small_graph_max_edges=0`` forces distributed)
+paths on the same edges (``conftest.distributed_loop`` forces the loop)
 and asserts value-identical results; every kernel is integer set
 algebra / counting over dictionary-encoded ids, so equality is exact,
 not approximate. Synthetic graphs pin structure (cycles, peel cascades,
@@ -29,6 +29,8 @@ from apachebeam_python_spark.operators.graph import (
 )
 from apachebeam_python_spark.queries.analytics import _trade_edges
 
+from .conftest import distributed_loop
+
 
 def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
@@ -41,7 +43,7 @@ def test_hop_distances_paths_identical_on_fixture(spark, sf_dir):
     e = _trade_edges(spark, sf_dir, 120)
     kernel = _rows(hop_distances(e, max_d=9), "src", "node", "d")
     dist = _rows(
-        hop_distances(e, max_d=9, small_graph_max_edges=0), "src", "node", "d"
+        distributed_loop(hop_distances, e, max_d=9), "src", "node", "d"
     )
     assert kernel == dist
     if kernel:
@@ -65,7 +67,7 @@ def test_hop_distances_chain_and_cap(spark):
             exp.append((a, b, d))
     assert got == sorted(exp)
     assert got == _rows(
-        hop_distances(e, max_d=3, small_graph_max_edges=0), "src", "node", "d"
+        distributed_loop(hop_distances, e, max_d=3), "src", "node", "d"
     )
 
 
@@ -76,7 +78,7 @@ def test_closure_census_paths_identical_on_fixture(spark, sf_dir):
     e = _trade_edges(spark, sf_dir, 100)
     kernel = _rows(closure_census(e), "node", "n_reachable", "on_cycle")
     dist = _rows(
-        closure_census(e, small_graph_max_edges=0),
+        distributed_loop(closure_census, e),
         "node",
         "n_reachable",
         "on_cycle",
@@ -103,7 +105,7 @@ def test_closure_census_cycle_and_tail(spark):
     }
     dist = {
         r["node"]: (r["n_reachable"], r["on_cycle"])
-        for r in closure_census(e, small_graph_max_edges=0).collect()
+        for r in distributed_loop(closure_census, e).collect()
     }
     assert dist == got
 
@@ -115,7 +117,7 @@ def test_kcore_census_paths_identical_on_fixture(spark, sf_dir):
     e = _trade_edges(spark, sf_dir, 120)
     kernel = _rows(kcore_census(e, k=3, rounds=3), "node", "core_degree")
     dist = _rows(
-        kcore_census(e, k=3, rounds=3, small_graph_max_edges=0),
+        distributed_loop(kcore_census, e, k=3, rounds=3),
         "node",
         "core_degree",
     )
@@ -133,7 +135,7 @@ def test_kcore_census_peel_cascade(spark):
     got = _rows(kcore_census(e, k=3, rounds=3), "node", "core_degree")
     assert got == [(0, 3), (1, 3), (2, 3), (3, 3)]
     assert got == _rows(
-        kcore_census(e, k=3, rounds=3, small_graph_max_edges=0),
+        distributed_loop(kcore_census, e, k=3, rounds=3),
         "node",
         "core_degree",
     )
@@ -148,7 +150,7 @@ def test_lpa_labels_paths_identical_on_fixture(spark, sf_dir):
     e = _brand_edges(spark, sf_dir)
     kernel = _rows(lpa_labels(e, rounds=3), "node", "label")
     dist = _rows(
-        lpa_labels(e, rounds=3, small_graph_max_edges=0), "node", "label"
+        distributed_loop(lpa_labels, e, rounds=3), "node", "label"
     )
     assert kernel == dist
 
@@ -162,7 +164,7 @@ def test_lpa_labels_string_ties_break_to_smallest(spark):
         [("a", "b"), ("a", "c"), ("b", "c"), ("a", "d")], "u string, v string"
     )
     kernel = _rows(lpa_labels(e, rounds=3), "node", "label")
-    dist = _rows(lpa_labels(e, rounds=3, small_graph_max_edges=0), "node", "label")
+    dist = _rows(distributed_loop(lpa_labels, e, rounds=3), "node", "label")
     assert kernel == dist
     # round 1: a→b (neighbors b,c,d tie ⇒ smallest b); b→a; c→a; d→a
     # round 2: a's neighbors labeled a,a,a ⇒ a; b's: b,a ties ⇒ a; etc.
@@ -195,7 +197,7 @@ def test_connected_components_paths_identical(spark, sf_dir):
     kernel = _rows(connected_components(pairs), "doc_id", "cluster_id")
     release_signature_caches()
     dist = _rows(
-        connected_components(pairs, small_graph_max_edges=0),
+        distributed_loop(connected_components, pairs),
         "doc_id",
         "cluster_id",
     )
@@ -214,7 +216,7 @@ def test_connected_components_kernel_min_root_chain(spark):
     assert got == {3: 3, 4: 3, 5: 3, 9: 3, 7: 7, 8: 7}
     dist = dict(
         _rows(
-            connected_components(pairs, small_graph_max_edges=0),
+            distributed_loop(connected_components, pairs),
             "doc_id",
             "cluster_id",
         )

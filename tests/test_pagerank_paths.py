@@ -1,12 +1,14 @@
 """PageRank path equivalence (r11, VERDICT r10 #5).
 
-The small-graph Arrow kernel (operators/graph._pagerank_small_graph) is the
-live path at every fixture scale (25 nation nodes ≤ small_graph_max_nodes),
-so the distributed loop — the code path that actually runs at web scale —
-would otherwise be exercised by no test at all. This module forces BOTH
-paths on the same inputs and asserts value-identical ranks, which is also
-the arithmetic contract the oracle replay depends on (per-round half-away
-9-dp rounding swallows sum-order drift in either engine AND either path).
+The driver kernel (operators/graph._pagerank_kernel) is the live path at
+every fixture scale (25 nation nodes and ≤ 625 edges, far under
+graph._SPARSE_MAX_ROWS), so the distributed loop — the code path that
+actually runs at web scale — would otherwise be exercised by no test at
+all. This module forces BOTH paths on q_pagerank's own inputs
+(``analytics._pagerank_graph``) and asserts value-identical ranks, which
+is also the arithmetic contract the oracle replay depends on (per-round
+half-away 9-dp rounding swallows sum-order drift in either engine AND
+either path).
 """
 
 from __future__ import annotations
@@ -15,43 +17,22 @@ import pytest
 
 pytestmark = pytest.mark.driver  # fast-gate tier: guards a driver query
 
-from pyspark.sql import functions as F
-
 from apachebeam_python_spark.operators.graph import pagerank
-from apachebeam_python_spark.session import table
+from apachebeam_python_spark.queries.analytics import _pagerank_graph
 
-
-def _edges_nodes(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-    )
-    nodes = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node")
-    )
-    return edges, nodes
+from .conftest import distributed_loop
 
 
 def test_kernel_and_distributed_ranks_identical(spark, sf_dir):
-    edges, nodes = _edges_nodes(spark, sf_dir)
+    edges, nodes = _pagerank_graph(spark, sf_dir)
     kernel = {
         r["node"]: r["r"]
         for r in pagerank(edges, nodes, damping=0.85, iterations=10).collect()
     }
     distributed = {
         r["node"]: r["r"]
-        for r in pagerank(
-            edges, nodes, damping=0.85, iterations=10, small_graph_max_nodes=0
+        for r in distributed_loop(
+            pagerank, edges, nodes, damping=0.85, iterations=10
         ).collect()
     }
     assert set(kernel) == set(distributed)
@@ -69,12 +50,12 @@ def test_distributed_path_durable_checkpoint(spark, sf_dir, tmp_path, monkeypatc
     """r11b: the small-graph kernel no longer checkpoints (its lineage is
     consumed once — the eager cut was pure overhead), so the durable-mode
     engagement guard for operators/graph.py moves HERE, onto the
-    distributed loop that actually iterates: forcing small_graph_max_nodes=0
-    under SPARK_GRAFT_DURABLE_CHECKPOINT must write round dirs and produce
-    the same ranks as the kernel path."""
+    distributed loop that actually iterates: forced through
+    ``conftest.distributed_loop`` under SPARK_GRAFT_DURABLE_CHECKPOINT, it
+    must write round dirs and produce the same ranks as the kernel path."""
     root = tmp_path / "ckpt"
     monkeypatch.setenv("SPARK_GRAFT_DURABLE_CHECKPOINT", str(root))
-    edges, nodes = _edges_nodes(spark, sf_dir)
+    edges, nodes = _pagerank_graph(spark, sf_dir)
     kernel = {
         r["node"]: r["r"]
         for r in pagerank(edges, nodes, damping=0.85, iterations=10).collect()
@@ -84,8 +65,8 @@ def test_distributed_path_durable_checkpoint(spark, sf_dir, tmp_path, monkeypatc
     )
     distributed = {
         r["node"]: r["r"]
-        for r in pagerank(
-            edges, nodes, damping=0.85, iterations=10, small_graph_max_nodes=0
+        for r in distributed_loop(
+            pagerank, edges, nodes, damping=0.85, iterations=10
         ).collect()
     }
     assert list(root.glob("round_*")), "durable mode never wrote a round"
@@ -110,8 +91,8 @@ def test_dangling_mask_matches_distributed_when_dst_outside_nodes(spark):
     }
     distributed = {
         r["node"]: r["r"]
-        for r in pagerank(
-            edges, nodes, damping=0.85, iterations=5, small_graph_max_nodes=0
+        for r in distributed_loop(
+            pagerank, edges, nodes, damping=0.85, iterations=5
         ).collect()
     }
     assert kernel == distributed
