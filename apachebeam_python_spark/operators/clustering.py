@@ -294,7 +294,7 @@ def gmm_em_1d(
     assignment, giving overlap-aware price/latency band models.
 
     Determinism without RNG: initial means are the rank-picked 25th/75th
-    percentile values (integer rank positions, the q_levene convention),
+    percentile values (integer rank positions, no interpolation),
     weights start 0.5/0.5, and both variances start at the population
     variance; EM then runs a FIXED n_iter iterations. Each iteration is
     ONE aggregation: per-row responsibilities are codegen arithmetic

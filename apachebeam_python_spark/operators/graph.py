@@ -410,7 +410,7 @@ def hop_distances(
     small = _edge_kernel(
         e0, src, dst, _DENSE_MAX_EDGES,
         lambda pdf: _hop_distances_kernel(pdf, int(max_d)),
-        "src {id}, node {id}, d long",
+        "src {id}, node {id}, d long NOT NULL",
     )
     if small is not None:
         return small
@@ -504,7 +504,7 @@ def closure_census(
     small = _edge_kernel(
         e, src, dst, _DENSE_MAX_EDGES,
         lambda pdf: _closure_census_kernel(pdf, int(max_rounds)),
-        "node {id}, n_reachable long, on_cycle boolean",
+        "node {id}, n_reachable long NOT NULL, on_cycle boolean NOT NULL",
     )
     if small is not None:
         return small
@@ -585,7 +585,7 @@ def kcore_census(
     small = _edge_kernel(
         e0, src, dst, _SPARSE_MAX_ROWS,
         lambda pdf: _kcore_census_kernel(pdf, int(k), int(rounds)),
-        "node {id}, core_degree long",
+        "node {id}, core_degree long NOT NULL",
     )
     if small is not None:
         return small

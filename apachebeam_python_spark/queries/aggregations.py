@@ -997,7 +997,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule: the smallest value whose cumulative weight reaches half the
     total — the robust central estimate computed WITHOUT a row-level
     sort (SURVEY §2.3 aggregation extensions; the lower weighted median,
-    the same no-interpolation convention as q_levene's rank median).
+    the same no-interpolation convention as q_runs_test's rank median).
     Values first collapse to distinct cents with exact integer weights
     (the q_cliffs_delta contraction), so the ordered window runs over
     the value DOMAIN, not the row count, and the 2·cw ≥ tw test is an

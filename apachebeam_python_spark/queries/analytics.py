@@ -2921,7 +2921,7 @@ def q_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic tie-break) so the allocations sum EXACTLY to the
     rebate — the billing/revenue-recognition op every financial pipeline
     needs, impossible with naive float splits (SURVEY §2.11 curation-tier
-    exactness; same integer discipline as q_anova).
+    exactness; the exact-integer discipline of the §2.3 statistics).
 
     Parity: every quantity is an exact BIGINT (cents, products ≤ ~5e13);
     both engines floor-divide and rank remainders identically.
@@ -3532,7 +3532,7 @@ def q_geohash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: encode is row-local codegen (zero shuffle, zero UDF); the
     rollup is one groupBy on a low-cardinality prefix. At 100 TB the same
     column is the repartition/Z-order key that co-locates spatially-near
-    rows — the lakehouse layout trick q_zorder_census measures."""
+    rows — the lakehouse layout trick q_zorder_cluster measures."""
     pts = _spatial_pts(spark, sf_dir)
     x = F.floor((F.col("lon") + 180.0) / 360.0 * 8192.0)
     y = F.floor((F.col("lat") + 90.0) / 180.0 * 4096.0)
@@ -3641,10 +3641,10 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair-counting identity B(v) = Σ_{s<t} σ_sv·σ_vt/σ_st over pairs
     with d_sv + d_vt = d_st — no backward sweep, no order-dependent double
     accumulation: each term is the INTEGER (σ_sv·σ_vt·720720) div σ_st
-    (the q_closeness 2520-census trick; 720720 = 2⁴·3²·5·7·11·13 makes
+    (the q_closeness_centrality 2520-census trick; 720720 = 2⁴·3²·5·7·11·13 makes
     every σ_st ≤ 16 exact and truncates identically in both engines
     beyond), summed exactly and divided once at the end. Products widen
-    to DECIMAL/HUGEINT before the scale multiply (the q_anova lesson).
+    to DECIMAL/HUGEINT before the scale multiply (the ADVICE r4 lesson).
     Nodes on no shortest path are absent (betweenness 0).
 
     Scale: BFS state is O(n²) pairs and the scoring join O(n³) — exact

@@ -792,7 +792,7 @@ def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric (SURVEY §2.11 time-series tier, the WINDOWED counterpart of
     the recursive q_ewma). Rolling moments (n, Σc, Σc²) come from ONE
     frame window over exact integer cents; the variance numerator
-    n·Σc² − (Σc)² widens to 128-bit (the q_anova lesson) before one
+    n·Σc² − (Σc)² widens to 128-bit (the ADVICE r4 lesson) before one
     double conversion, and band edges + breakout comparisons evaluate
     the identical IEEE tree in both engines — even the booleans are
     hash-stable because their operands are bit-identical.
@@ -843,8 +843,9 @@ def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete-Fourier periodogram of the mean-centered daily revenue
     series: spectral power at the first 20 Fourier frequencies — the
-    seasonality detector that picks the period q_seasonal_naive and
-    q_stl_decompose then assume (SURVEY §2.11 time-series tier). For
+    seasonality detector that picks the period q_forecast_backtest's
+    seasonal-naive baseline and q_stl_decompose then assume (SURVEY §2.11
+    time-series tier). For
     each frequency k, P(k) = (2/n)·[(Σy_t·cos(2πkt/n))² +
     (Σy_t·sin(2πkt/n))²] over the day-ranked series; the dominant k
     flags the cycle length n/k.

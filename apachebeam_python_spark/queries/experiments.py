@@ -2279,71 +2279,6 @@ def q_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Differential-privacy-shaped noisy release (round 4)
-# --------------------------------------------------------------------------
-@register(
-    "q_dp_counts",
-    driver=False,  # §2.11 privacy tier (round 4, next to q_k_anonymity/q_pii_scrub) — pytest oracle
-    oracle="""
-WITH clamped AS (
-  SELECT event_type,
-         CAST(round(least(greatest(value, 0.0), 200.0) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL
-), agg AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents) AS BIGINT) AS s
-  FROM clamped GROUP BY event_type
-), noise AS (
-  SELECT event_type, n, s,
-         CAST('0x' || substr(md5('cnt|' || event_type), 1, 15) AS BIGINT)
-           / 1152921504606846976.0 AS u1,
-         CAST('0x' || substr(md5('sum|' || event_type), 1, 15) AS BIGINT)
-           / 1152921504606846976.0 AS u2
-  FROM agg
-)
-SELECT event_type,
-       round(n + (-1.0) * sign(u1 - 0.5)
-                 * ln(greatest(1.0 - 2.0 * abs(u1 - 0.5), 1e-12)), 3) AS noisy_count,
-       round(s / 100.0
-             + (-200.0) * sign(u2 - 0.5)
-               * ln(greatest(1.0 - 2.0 * abs(u2 - 0.5), 1e-12)), 3)   AS noisy_sum,
-       CAST(1.0 AS DOUBLE) AS epsilon
-FROM noise
-""",
-)
-def q_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differential-privacy-SHAPED release (§2.11 privacy tier, beside
-    q_k_anonymity and q_pii_scrub): the real DP pipeline mechanics —
-    per-row contribution CLAMPING to [0, 200] (bounds sensitivity), exact
-    aggregation, then Laplace noise calibrated to sensitivity/ε (1/ε for
-    counts, 200/ε for the clamped sum) via the inverse-CDF transform.
-    Noise here is derived from md5(key) so the release is REPLAYABLE and
-    oracle-checkable — a production release swaps in real entropy
-    (one-line change) and this query becomes its test harness, which is
-    exactly how DP libraries validate mechanisms.
-
-    Scale: clamp is fused into the scan; one partial/final groupBy; the
-    noise transform runs on k rows of metadata."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = F.round(F.least(F.greatest(F.col("value"), F.lit(0.0)), F.lit(200.0)) * 100).cast("long")
-    agg = e.select("event_type", cents.alias("cents")).groupBy("event_type").agg(
-        F.count("*").alias("n"), F.sum("cents").alias("s")
-    )
-    u1 = _md5_int(F.concat(F.lit("cnt|"), F.col("event_type"))) / F.lit(1152921504606846976.0)
-    u2 = _md5_int(F.concat(F.lit("sum|"), F.col("event_type"))) / F.lit(1152921504606846976.0)
-    lap = lambda u, b: F.lit(-b) * F.signum(u - 0.5) * F.log(
-        F.greatest(1.0 - 2.0 * F.abs(u - 0.5), F.lit(1e-12))
-    )
-    return agg.select(
-        "event_type",
-        F.round(F.col("n") + lap(u1, 1.0), 3).alias("noisy_count"),
-        F.round(F.col("s") / 100.0 + lap(u2, 200.0), 3).alias("noisy_sum"),
-        F.lit(1.0).alias("epsilon"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Z-order (Morton) clustering keys — layout diagnostics as a query
 # --------------------------------------------------------------------------
 _Z_BITS = 10
@@ -2564,7 +2499,7 @@ aggregate(
 # --------------------------------------------------------------------------
 @register(
     "q_dp_median",
-    driver=False,  # §2.11 privacy tier (round 5, beside q_dp_counts) — pytest oracle
+    driver=False,  # §2.11 privacy tier (round 5) — pytest oracle
     oracle="""
 WITH c AS (
   SELECT event_type,
@@ -2607,12 +2542,12 @@ FROM pick WHERE rn = 1
 def q_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private MEDIAN per event type via the EXPONENTIAL
     MECHANISM (SURVEY §2.11 privacy tier — the selection-query companion
-    to q_dp_counts' Laplace releases): candidates are a fixed $5 grid over
+    to Laplace count releases): candidates are a fixed $5 grid over
     the clamped value range; each candidate's utility is −|2·rank(c) − n|
     (distance from the median in rank space, sensitivity 2 under
     add/remove); selection uses the Gumbel-max trick — argmax of
     ε·u/(2Δu) + Gumbel(md5-seed) IS an exponential-mechanism draw — so
-    the release is md5-replayable exactly like q_dp_counts (production
+    the release is md5-replayable (production
     swaps real entropy; this query becomes its test harness).
 
     Scale: the rank census is a value-HISTOGRAM join (candidates ×
@@ -2744,91 +2679,6 @@ def q_hash_chain_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "aggregate(items, 'GENESIS', (a, b) -> md5(concat(a, '|', b)))"
         ).alias("chain_head"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Confusion matrix / threshold-classifier evaluation (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_confusion_matrix",
-    driver=False,  # §2.11 classifier-eval extension (round 5) — pytest oracle
-    oracle="""
-WITH pu AS (
-  SELECT user_id,
-         sum(CASE WHEN event_type = 'click'
-                  THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS click_c,
-         sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS pur_c
-  FROM events GROUP BY user_id
-), cells AS (
-  SELECT CAST(sum(CASE WHEN click_c >= 65000 AND pur_c >= 60000 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         CAST(sum(CASE WHEN click_c >= 65000 AND pur_c < 60000 THEN 1 ELSE 0 END) AS BIGINT)  AS fp,
-         CAST(sum(CASE WHEN click_c < 65000 AND pur_c >= 60000 THEN 1 ELSE 0 END) AS BIGINT)  AS fn,
-         CAST(sum(CASE WHEN click_c < 65000 AND pur_c < 60000 THEN 1 ELSE 0 END) AS BIGINT)   AS tn
-  FROM pu
-)
-SELECT tp, fp, fn, tn,
-       round((tp + tn) / CAST(tp + fp + fn + tn AS DOUBLE), 6) AS accuracy,
-       CASE WHEN tp + fp > 0 THEN round(tp / CAST(tp + fp AS DOUBLE), 6) END AS precision_,
-       CASE WHEN tp + fn > 0 THEN round(tp / CAST(tp + fn AS DOUBLE), 6) END AS recall_,
-       CASE WHEN 2 * tp + fp + fn > 0
-            THEN round(2.0 * tp / CAST(2 * tp + fp + fn AS DOUBLE), 6) END AS f1,
-       CASE WHEN (tp + fp) * CAST(tp + fn AS DOUBLE) * (tn + fp) * (tn + fn) > 0 THEN
-         round((tp * CAST(tn AS DOUBLE) - fp * CAST(fn AS DOUBLE))
-               / sqrt((tp + fp) * CAST(tp + fn AS DOUBLE) * (tn + fp) * (tn + fn)), 6)
-       END AS mcc
-FROM cells
-""",
-)
-def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confusion matrix + accuracy/precision/recall/F1/MCC for a threshold
-    classifier: "total click spend ≥ $650 predicts a ≥ $600 purchaser" —
-    the per-candidate-threshold evaluation a quality-classifier sweep
-    runs next to q_auc_brier's threshold-free ranking metrics
-    (SURVEY §2.11 classifier-eval family). The 2×2 census is exact
-    integers from per-user cent totals; every rate guards its zero
-    denominator with NULL; MCC routes all four marginal products through
-    DOUBLE before multiplying (counts² overflows 64-bit at corpus scale —
-    the q_anova lesson).
-
-    Scale: one user_id groupBy with map-side partials, then a 1-row
-    census. The threshold sweep variant is this same plan with a
-    posexplode'd literal threshold array — still one pass."""
-    pu = (
-        table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == "click", F.round(F.col("value") * 100).cast("long")).otherwise(0)
-            ).alias("click_c"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", F.round(F.col("value") * 100).cast("long")).otherwise(0)
-            ).alias("pur_c"),
-        )
-    )
-    pred = F.col("click_c") >= 65000
-    actual = F.col("pur_c") >= 60000
-    cells = pu.agg(
-        F.sum(F.when(pred & actual, 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(pred & ~actual, 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~pred & actual, 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(~pred & ~actual, 1).otherwise(0)).alias("tn"),
-    )
-    tp, fp, fn, tn = F.col("tp"), F.col("fp"), F.col("fn"), F.col("tn")
-    denom_mcc = (tp + fp) * (tp + fn).cast("double") * (tn + fp) * (tn + fn)
-    return cells.select(
-        "tp", "fp", "fn", "tn",
-        F.round((tp + tn) / (tp + fp + fn + tn).cast("double"), 6).alias("accuracy"),
-        F.when(tp + fp > 0, F.round(tp / (tp + fp).cast("double"), 6)).alias("precision_"),
-        F.when(tp + fn > 0, F.round(tp / (tp + fn).cast("double"), 6)).alias("recall_"),
-        F.when(
-            2 * tp + fp + fn > 0, F.round(2.0 * tp / (2 * tp + fp + fn).cast("double"), 6)
-        ).alias("f1"),
-        F.when(
-            denom_mcc > 0,
-            F.round((tp * tn.cast("double") - fp * fn.cast("double")) / F.sqrt(denom_mcc), 6),
-        ).alias("mcc"),
     )
 
 
@@ -2986,7 +2836,7 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     misclassification count (tie → smaller threshold), so the argmin is
     engine-deterministic with no float comparison. The weighted Gini of
     the chosen split is reported through one shared IEEE tree (squares
-    widen to DOUBLE before multiplying — the q_anova lesson).
+    widen to DOUBLE before multiplying — the ADVICE r4 lesson).
 
     Scale: one groupBy on the feature + one prefix-sum window. The window
     here is a global ORDER BY over distinct feature values — fine for a
@@ -3145,226 +2995,13 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Multiple linear regression via Cramer's rule on exact moments (round 5)
-# --------------------------------------------------------------------------
-@register(
-    "q_multiple_regression",
-    driver=False,  # §2.11 ML-eval family (round 5) — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS x1,
-         CAST(count(*) AS BIGINT) AS x2,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-), m AS (
-  SELECT CAST(count(*) AS HUGEINT)      AS n,
-         CAST(sum(x1) AS HUGEINT)       AS sx1,
-         CAST(sum(x2) AS HUGEINT)       AS sx2,
-         CAST(sum(x1 * x1) AS HUGEINT)  AS s11,
-         CAST(sum(x1 * x2) AS HUGEINT)  AS s12,
-         CAST(sum(x2 * x2) AS HUGEINT)  AS s22,
-         CAST(sum(y) AS HUGEINT)        AS sy,
-         CAST(sum(x1 * y) AS HUGEINT)   AS s1y,
-         CAST(sum(x2 * y) AS HUGEINT)   AS s2y,
-         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-  FROM daily
-), det AS (
-  SELECT *,
-         n   * (s11 * s22 - s12 * s12)
-       - sx1 * (sx1 * s22 - s12 * sx2)
-       + sx2 * (sx1 * s12 - s11 * sx2) AS d,
-         sy  * (s11 * s22 - s12 * s12)
-       - sx1 * (s1y * s22 - s12 * s2y)
-       + sx2 * (s1y * s12 - s11 * s2y) AS d0,
-         n   * (s1y * s22 - s12 * s2y)
-       - sy  * (sx1 * s22 - s12 * sx2)
-       + sx2 * (sx1 * s2y - s1y * sx2) AS d1,
-         n   * (s11 * s2y - s1y * s12)
-       - sx1 * (sx1 * s2y - s1y * sx2)
-       + sy  * (sx1 * s12 - s11 * sx2) AS d2
-  FROM m
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-       round(CAST(d0 AS DOUBLE) / CAST(d AS DOUBLE), 6) AS beta0,
-       round(CAST(d1 AS DOUBLE) / CAST(d AS DOUBLE), 6) AS beta1,
-       round(CAST(d2 AS DOUBLE) / CAST(d AS DOUBLE), 6) AS beta2,
-       round(1.0 - (CAST(syy AS DOUBLE)
-                    - (CAST(d0 AS DOUBLE) * CAST(sy AS DOUBLE)
-                       + CAST(d1 AS DOUBLE) * CAST(s1y AS DOUBLE)
-                       + CAST(d2 AS DOUBLE) * CAST(s2y AS DOUBLE))
-                      / CAST(d AS DOUBLE))
-                   / (CAST(syy AS DOUBLE)
-                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)
-                        / CAST(n AS DOUBLE)), 6) AS r2
-FROM det WHERE d <> 0
-""",
-)
-def q_multiple_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiple linear regression — daily revenue (cents) on day index and
-    event count, y = β₀ + β₁·day + β₂·n_events — solved EXACTLY by
-    Cramer's rule over the 3×3 normal equations (SURVEY §2.11 ML-eval
-    tier; the multi-feature extension of q_ols_trend). Every moment of
-    X'X and X'y is an exact 128-bit integer sum (day index is rebased to
-    2024-01-01 so all products stay far inside DECIMAL(38,0)/HUGEINT);
-    the four 3×3 determinants expand in a FIXED cofactor order, so both
-    engines compute bit-identical integers and each β is ONE double
-    division. R² assembles from the same moments via
-    SSE = y'y − β'X'y (no residual pass). The closed-form solve is the
-    100 TB story: ONE partial/final aggregation regardless of row count —
-    no gradient iterations, no driver-side matrix library.
-
-    Scale: the daily rollup is the only data-sized shuffle; the moment
-    census and determinant assembly are one metadata row. For p features
-    the same shape carries a p²-sized moment struct (p ≤ ~30 before
-    Cramer gives way to a broadcast Cholesky on the driver)."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("x1")
-    ).agg(
-        F.count("*").alias("x2"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"),
-    )
-    hi = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    m = daily.agg(
-        hi(F.count("*")).alias("n"),
-        hi(F.sum("x1")).alias("sx1"),
-        hi(F.sum("x2")).alias("sx2"),
-        hi(F.sum(F.col("x1") * F.col("x1"))).alias("s11"),
-        hi(F.sum(F.col("x1") * F.col("x2"))).alias("s12"),
-        hi(F.sum(F.col("x2") * F.col("x2"))).alias("s22"),
-        hi(F.sum("y")).alias("sy"),
-        hi(F.sum(F.col("x1") * F.col("y"))).alias("s1y"),
-        hi(F.sum(F.col("x2") * F.col("y"))).alias("s2y"),
-        hi(F.sum(hi(F.col("y")) * F.col("y"))).alias("syy"),
-    )
-    n, sx1, sx2 = F.col("n"), F.col("sx1"), F.col("sx2")
-    s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
-    sy, s1y, s2y, syy = F.col("sy"), F.col("s1y"), F.col("s2y"), F.col("syy")
-    det = m.select(
-        "*",
-        (
-            n * (s11 * s22 - s12 * s12)
-            - sx1 * (sx1 * s22 - s12 * sx2)
-            + sx2 * (sx1 * s12 - s11 * sx2)
-        ).alias("d"),
-        (
-            sy * (s11 * s22 - s12 * s12)
-            - sx1 * (s1y * s22 - s12 * s2y)
-            + sx2 * (s1y * s12 - s11 * s2y)
-        ).alias("d0"),
-        (
-            n * (s1y * s22 - s12 * s2y)
-            - sy * (sx1 * s22 - s12 * sx2)
-            + sx2 * (sx1 * s2y - s1y * sx2)
-        ).alias("d1"),
-        (
-            n * (s11 * s2y - s1y * s12)
-            - sx1 * (sx1 * s2y - s1y * sx2)
-            + sy * (sx1 * s12 - s11 * sx2)
-        ).alias("d2"),
-    )
-    dd = F.col("d").cast("double")
-    sse = syy.cast("double") - (
-        F.col("d0").cast("double") * sy.cast("double")
-        + F.col("d1").cast("double") * s1y.cast("double")
-        + F.col("d2").cast("double") * s2y.cast("double")
-    ) / dd
-    sst = syy.cast("double") - sy.cast("double") * sy.cast("double") / n.cast("double")
-    return det.filter(F.col("d") != 0).select(
-        n.cast("long").alias("n_days"),
-        F.round(F.col("d0").cast("double") / dd, 6).alias("beta0"),
-        F.round(F.col("d1").cast("double") / dd, 6).alias("beta1"),
-        F.round(F.col("d2").cast("double") / dd, 6).alias("beta2"),
-        F.round(1.0 - sse / sst, 6).alias("r2"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Sample-ratio-mismatch guard (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_srm_check",
-    driver=False,  # §2.11 experimentation family (round 5) — pytest oracle
-    oracle="""
-WITH assign AS (
-  SELECT CASE WHEN CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-                   AS BIGINT) % 2 = 0 THEN 'control' ELSE 'treatment' END AS arm
-  FROM (SELECT DISTINCT user_id FROM events)
-), counts AS (
-  SELECT arm, CAST(count(*) AS BIGINT) AS n FROM assign GROUP BY arm
-), w AS (
-  SELECT max(CASE WHEN arm = 'control' THEN n END)   AS n_c,
-         max(CASE WHEN arm = 'treatment' THEN n END) AS n_t
-  FROM counts
-)
-SELECT n_c, n_t,
-       round((n_c - (n_c + n_t) * 0.5)
-             * CAST(n_c - (n_c + n_t) * 0.5 AS DOUBLE)
-             / ((n_c + n_t) * 0.5)
-             + (n_t - (n_c + n_t) * 0.5)
-               * CAST(n_t - (n_c + n_t) * 0.5 AS DOUBLE)
-               / ((n_c + n_t) * 0.5), 6) AS chi2,
-       (n_c - (n_c + n_t) * 0.5) * (n_c - (n_c + n_t) * 0.5)
-         / ((n_c + n_t) * 0.5)
-       + (n_t - (n_c + n_t) * 0.5) * (n_t - (n_c + n_t) * 0.5)
-         / ((n_c + n_t) * 0.5) > 3.841459 AS srm_flag
-FROM w
-""",
-)
-def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch guard: the FIRST check any A/B readout must
-    pass — do the md5-hash-assigned arms actually land 50/50, by a
-    goodness-of-fit χ² against the design ratio (flag at the 3.84
-    α=0.05 critical value)? SRM is the canonical symptom of broken
-    randomization / selective logging, and a readout on an SRM'd
-    experiment is invalid no matter the lift (SURVEY §2.11
-    experimentation tier, the integrity gate in front of q_ab_test /
-    q_cuped / q_two_proportion). Assignment replays q_split_assign's
-    md5-band determinism (zero RNG); counts are exact; the χ² and the
-    flag evaluate one shared IEEE tree — the flag compares the
-    UN-rounded statistic so the boolean is engine-identical.
-
-    Scale: one distinct-user contraction + a 2-row census; the arm
-    assignment fuses into the scan."""
-    users = table(spark, sf_dir, "events").select("user_id").distinct()
-    arm = F.when(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 2
-        == 0,
-        "control",
-    ).otherwise("treatment")
-    counts = users.select(arm.alias("arm")).groupBy("arm").agg(
-        F.count("*").alias("n")
-    )
-    w = counts.agg(
-        F.max(F.when(F.col("arm") == "control", F.col("n"))).alias("n_c"),
-        F.max(F.when(F.col("arm") == "treatment", F.col("n"))).alias("n_t"),
-    )
-    n_c, n_t = F.col("n_c"), F.col("n_t")
-    exp = (n_c + n_t) * 0.5
-    chi2 = (n_c - exp) * (n_c - exp).cast("double") / exp + (n_t - exp) * (
-        n_t - exp
-    ).cast("double") / exp
-    return w.select(
-        "n_c",
-        "n_t",
-        F.round(chi2, 6).alias("chi2"),
-        (chi2 > 3.841459).alias("srm_flag"),
-    )
-
-
 @register("q_gmm_em", driver=False)  # rows-only: EM responsibilities chain exp/sqrt libm per row across 10 iterations (SURVEY §7.4.4); numpy-replay-pinned in tests
 def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-component 1-D Gaussian mixture fit by EM over purchase values
     (operators/clustering.gmm_em_1d): soft price-band modeling where
     k-means' hard assignment misleads — overlapping components get
     responsibility-weighted parameters instead of a boundary cut (SURVEY
-    §2.11 clustering tier beside q_kmeans/q_semdedup). Initialization is
+    §2.11 clustering tier beside q_kmeans/q_semantic_dedup). Initialization is
     RNG-free (rank-picked quartile means, population variance) and EM
     runs a fixed 10 iterations, so the fit is a deterministic function
     of the data; each iteration is ONE scan + ONE moment aggregation
@@ -3396,175 +3033,6 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             for comp, w, mu, v in params
         ],
         "component int, weight double, mean_dollars double, sd_dollars double",
-    )
-
-
-# --------------------------------------------------------------------------
-# Granger causality (lag-1, round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_granger",
-    driver=False,  # §2.11 experimentation/time-series family (round 5) — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-), rows_ AS (
-  SELECT y,
-         lag(y) OVER (ORDER BY d) AS yl,
-         lag(x) OVER (ORDER BY d) AS xl
-  FROM daily
-), kept AS (SELECT y, yl, xl FROM rows_ WHERE yl IS NOT NULL),
-m AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(yl) AS HUGEINT) AS s1, CAST(sum(xl) AS HUGEINT) AS s2,
-         CAST(sum(y) AS HUGEINT) AS sy,
-         CAST(sum(CAST(yl AS HUGEINT) * yl) AS HUGEINT) AS s11,
-         CAST(sum(CAST(yl AS HUGEINT) * xl) AS HUGEINT) AS s12,
-         CAST(sum(CAST(xl AS HUGEINT) * xl) AS HUGEINT) AS s22,
-         CAST(sum(CAST(yl AS HUGEINT) * y) AS HUGEINT) AS s1y,
-         CAST(sum(CAST(xl AS HUGEINT) * y) AS HUGEINT) AS s2y,
-         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-  FROM kept
-), unres AS (
-  -- 3x3 normal equations [1, yl, xl] via Cramer (fixed cofactor order)
-  SELECT *,
-         n   * (s11 * s22 - s12 * s12)
-       - s1  * (s1  * s22 - s12 * s2)
-       + s2  * (s1  * s12 - s11 * s2) AS du,
-         sy  * (s11 * s22 - s12 * s12)
-       - s1  * (s1y * s22 - s12 * s2y)
-       + s2  * (s1y * s12 - s11 * s2y) AS du0,
-         n   * (s1y * s22 - s12 * s2y)
-       - sy  * (s1  * s22 - s12 * s2)
-       + s2  * (s1  * s2y - s1y * s2) AS du1,
-         n   * (s11 * s2y - s1y * s12)
-       - s1  * (s1  * s2y - s1y * s2)
-       + sy  * (s1  * s12 - s11 * s2) AS du2
-  FROM m
-), sses AS (
-  SELECT CAST(n AS BIGINT) AS n_obs,
-         -- unrestricted SSE = y'y − β'X'y
-         CAST(syy AS DOUBLE)
-           - (CAST(du0 AS DOUBLE) * CAST(sy AS DOUBLE)
-              + CAST(du1 AS DOUBLE) * CAST(s1y AS DOUBLE)
-              + CAST(du2 AS DOUBLE) * CAST(s2y AS DOUBLE))
-             / CAST(du AS DOUBLE) AS sse_u,
-         -- restricted (drop xl): simple OLS on yl
-         (CAST(n * syy - sy * sy AS DOUBLE)
-          - CAST(n * s1y - s1 * sy AS DOUBLE)
-            * CAST(n * s1y - s1 * sy AS DOUBLE)
-            / CAST(n * s11 - s1 * s1 AS DOUBLE)) / CAST(n AS DOUBLE) AS sse_r,
-         CAST(n AS DOUBLE) AS nd
-  FROM unres
-  WHERE du <> 0 AND n * s11 - s1 * s1 > 0
-)
-SELECT n_obs, round(sse_r, 6) AS sse_restricted, round(sse_u, 6) AS sse_unrestricted,
-       CASE WHEN sse_u > 0 AND n_obs > 3 THEN
-         round((sse_r - sse_u) / (sse_u / (nd - 3.0)), 6)
-       END AS f_stat
-FROM sses
-""",
-)
-def q_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Granger causality at lag 1: does yesterday's event COUNT improve
-    today's revenue forecast beyond yesterday's revenue alone —
-    F = (SSE_restricted − SSE_unrestricted)/(SSE_u/(n−3)) comparing the
-    AR(1) against the bivariate lag regression (SURVEY §2.11
-    experimentation/time-series tier; the lead-indicator screen before
-    any metric is promoted to a leading KPI). Both regressions solve in
-    closed form from ONE exact 128-bit moment census — the unrestricted
-    via the q_multiple_regression Cramer machinery (fixed cofactor
-    order, bit-identical determinants), the restricted via centered
-    simple-OLS sums — so each SSE is one shared IEEE tree and the F
-    assembly is engine-exact.
-
-    Scale: one daily rollup, one lag window over the metadata-sized day
-    series, one moment row — closed-form like its siblings."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("long")
-        .alias("d")
-    ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"),
-        F.count("*").alias("x"),
-    )
-    wl = Window.orderBy("d")
-    kept = daily.select(
-        "y",
-        F.lag("y").over(wl).alias("yl"),
-        F.lag("x").over(wl).alias("xl"),
-    ).filter(F.col("yl").isNotNull())
-    hi = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    m = kept.agg(
-        hi(F.count("*")).alias("n"),
-        hi(F.sum("yl")).alias("s1"),
-        hi(F.sum("xl")).alias("s2"),
-        hi(F.sum("y")).alias("sy"),
-        hi(F.sum(hi(F.col("yl")) * F.col("yl"))).alias("s11"),
-        hi(F.sum(hi(F.col("yl")) * F.col("xl"))).alias("s12"),
-        hi(F.sum(hi(F.col("xl")) * F.col("xl"))).alias("s22"),
-        hi(F.sum(hi(F.col("yl")) * F.col("y"))).alias("s1y"),
-        hi(F.sum(hi(F.col("xl")) * F.col("y"))).alias("s2y"),
-        hi(F.sum(hi(F.col("y")) * F.col("y"))).alias("syy"),
-    )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
-    sy, s1y, s2y, syy = F.col("sy"), F.col("s1y"), F.col("s2y"), F.col("syy")
-    unres = m.select(
-        "*",
-        (
-            n * (s11 * s22 - s12 * s12)
-            - s1 * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s12 - s11 * s2)
-        ).alias("du"),
-        (
-            sy * (s11 * s22 - s12 * s12)
-            - s1 * (s1y * s22 - s12 * s2y)
-            + s2 * (s1y * s12 - s11 * s2y)
-        ).alias("du0"),
-        (
-            n * (s1y * s22 - s12 * s2y)
-            - sy * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s2y - s1y * s2)
-        ).alias("du1"),
-        (
-            n * (s11 * s2y - s1y * s12)
-            - s1 * (s1 * s2y - s1y * s2)
-            + sy * (s1 * s12 - s11 * s2)
-        ).alias("du2"),
-    )
-    du = F.col("du").cast("double")
-    sse_u = syy.cast("double") - (
-        F.col("du0").cast("double") * sy.cast("double")
-        + F.col("du1").cast("double") * s1y.cast("double")
-        + F.col("du2").cast("double") * s2y.cast("double")
-    ) / du
-    s1c = (n * s11 - s1 * s1).cast("double")
-    sse_r = (
-        (n * syy - sy * sy).cast("double")
-        - (n * s1y - s1 * sy).cast("double")
-        * (n * s1y - s1 * sy).cast("double")
-        / s1c
-    ) / n.cast("double")
-    sses = unres.filter((F.col("du") != 0) & ((n * s11 - s1 * s1) > 0)).select(
-        n.cast("long").alias("n_obs"),
-        sse_u.alias("sse_u"),
-        sse_r.alias("sse_r"),
-        n.cast("double").alias("nd"),
-    )
-    f = (F.col("sse_r") - F.col("sse_u")) / (F.col("sse_u") / (F.col("nd") - 3.0))
-    return sses.select(
-        "n_obs",
-        F.round(F.col("sse_r"), 6).alias("sse_restricted"),
-        F.round(F.col("sse_u"), 6).alias("sse_unrestricted"),
-        F.when((F.col("sse_u") > 0) & (F.col("n_obs") > 3), F.round(f, 6)).alias(
-            "f_stat"
-        ),
     )
 
 
@@ -3610,12 +3078,12 @@ def q_uplift_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment uplift (two-model difference): treatment-minus-control
     conversion rate inside activity segments — WHERE does the treatment
     work, the heterogeneous-treatment-effect readout that follows a
-    passing q_srm_check and a significant q_ab_test (SURVEY §2.11
-    experimentation tier). Arms replay the md5-deterministic assignment
-    (zero RNG, same hash as q_srm_check so the queries describe the same
-    experiment); conversion is ever-purchased per user; segments are
-    activity bands. All censuses are exact integers from ONE user-level
-    rollup; uplift is one double subtraction per segment.
+    passing sample-ratio check and a significant q_ab_test (SURVEY §2.11
+    experimentation tier). Arms replay an md5-deterministic assignment
+    (zero RNG, recomputable anywhere); conversion is ever-purchased per
+    user; segments are activity bands. All censuses are exact integers
+    from ONE user-level rollup; uplift is one double subtraction per
+    segment.
 
     Scale: one user-keyed partial/final agg (the contraction), then a
     3-row segment census — the same shape at any corpus size."""
@@ -3672,185 +3140,6 @@ def q_uplift_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ),
         ).alias("uplift"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Empirical-Bayes (beta-binomial) rate shrinkage (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_eb_shrinkage",
-    driver=False,  # §2.11 experimentation family (round 5) — pytest oracle
-    oracle="""
-WITH u AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS k
-  FROM events GROUP BY user_id
-), mom AS (
-  -- method-of-moments over per-user raw rates (exact integer ratios)
-  SELECT CAST(count(*) AS BIGINT) AS n_users,
-         sum(k / CAST(n AS DOUBLE)) / count(*) AS mu,
-         sum((k / CAST(n AS DOUBLE)) * (k / CAST(n AS DOUBLE))) / count(*)
-           - (sum(k / CAST(n AS DOUBLE)) / count(*))
-             * (sum(k / CAST(n AS DOUBLE)) / count(*)) AS var
-  FROM u
-), prior AS (
-  SELECT n_users, mu, var,
-         CASE WHEN var > 0 AND mu * (1 - mu) > var
-              THEN mu * (mu * (1 - mu) / var - 1) END AS alpha,
-         CASE WHEN var > 0 AND mu * (1 - mu) > var
-              THEN (1 - mu) * (mu * (1 - mu) / var - 1) END AS beta
-  FROM mom
-)
-SELECT u.user_id, u.n, u.k,
-       round(u.k / CAST(u.n AS DOUBLE), 6) AS raw_rate,
-       round((u.k + p.alpha) / (u.n + p.alpha + p.beta), 6) AS eb_rate
-FROM u, prior p
-WHERE p.alpha IS NOT NULL AND u.user_id % 7 = 0
-""",
-)
-def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bayes beta-binomial shrinkage of per-user purchase rates:
-    estimate a Beta(α, β) prior from the population by method of moments,
-    then post each user's rate as (k+α)/(n+α+β) — the smoothing every
-    CTR / conversion ranking applies so a 1-for-1 user doesn't outrank a
-    980-for-1000 one (SURVEY §2.11 experimentation tier; the shrinkage
-    sibling of q_cuped's variance reduction). Per-user (n, k) are exact
-    integers; μ and the raw-rate variance are double sums of exact
-    ratios (bounded terms, one rounding at the end); the α/β and the
-    posted rates evaluate the same IEEE tree in both engines. Output is
-    fenced to a deterministic user subset (id % 7) to keep the compare
-    compact — the full posting is the same projection.
-
-    Scale: one user rollup + a 1-row broadcast prior — the posting fuses
-    into the scan of the rollup; no additional shuffles."""
-    u = (
-        table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("k"),
-        )
-    )
-    rate = F.col("k") / F.col("n").cast("double")
-    mom = u.agg(
-        F.count("*").alias("n_users"),
-        (F.sum(rate) / F.count("*")).alias("mu"),
-        (
-            F.sum(rate * rate) / F.count("*")
-            - (F.sum(rate) / F.count("*")) * (F.sum(rate) / F.count("*"))
-        ).alias("var"),
-    )
-    mu, var = F.col("mu"), F.col("var")
-    common = mu * (1 - mu) / var - 1
-    prior = mom.select(
-        "n_users", "mu", "var",
-        F.when((var > 0) & (mu * (1 - mu) > var), mu * common).alias("alpha"),
-        F.when((var > 0) & (mu * (1 - mu) > var), (1 - mu) * common).alias("beta"),
-    )
-    return (
-        u.filter(F.col("user_id") % 7 == 0)
-        .crossJoin(F.broadcast(prior))
-        .filter(F.col("alpha").isNotNull())
-        .select(
-            "user_id",
-            "n",
-            "k",
-            F.round(rate, 6).alias("raw_rate"),
-            F.round(
-                (F.col("k") + F.col("alpha"))
-                / (F.col("n") + F.col("alpha") + F.col("beta")),
-                6,
-            ).alias("eb_rate"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Difference-in-differences read-out (round 6)
-# --------------------------------------------------------------------------
-@register(
-    "q_diff_in_diff",
-    driver=False,  # §2.3 experimentation tier — pytest oracle
-    oracle="""
-WITH cell AS (
-  SELECT user_id % 2 AS treated,
-         CASE WHEN ts >= TIMESTAMP '2024-02-01' THEN 1 ELSE 0 END AS post,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s_c
-  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-  GROUP BY 1, 2
-), w AS (
-  SELECT
-    max(CASE WHEN treated = 1 AND post = 1 THEN s_c * 1.0 / n END) AS tp,
-    max(CASE WHEN treated = 1 AND post = 0 THEN s_c * 1.0 / n END) AS tr,
-    max(CASE WHEN treated = 0 AND post = 1 THEN s_c * 1.0 / n END) AS cp,
-    max(CASE WHEN treated = 0 AND post = 0 THEN s_c * 1.0 / n END) AS cr,
-    CAST(sum(n) AS BIGINT) AS n_total
-  FROM cell
-)
-SELECT n_total,
-       round(tp / 100.0, 6) AS treat_post,
-       round(tr / 100.0, 6) AS treat_pre,
-       round(cp / 100.0, 6) AS ctrl_post,
-       round(cr / 100.0, 6) AS ctrl_pre,
-       round(((tp - tr) - (cp - cr)) / 100.0, 6) AS did_estimate
-FROM w
-""",
-)
-def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences read-out (SURVEY §2.3 experimentation
-    tier, the q_ab_test → q_cuped → q_uplift_segments chain's
-    quasi-experimental sibling): purchase value means in the four
-    (treated × pre/post) cells with the '2024-02-01' policy cut and the
-    same ``user_id % 2`` assignment the rest of the experiment family
-    replays; DiD = (T_post − T_pre) − (C_post − C_pre) cancels both the
-    group baseline and the common time trend. Cell means are exact cents
-    sums over exact counts — one divide per cell, engine-identical.
-
-    Scale: one partial+final agg to 4 rows, then a 1-row assembly —
-    the same anywhere from 10 GB to 100 TB."""
-    e = table(spark, sf_dir, "events").filter(
-        (F.col("event_type") == "purchase") & F.col("value").isNotNull()
-    )
-    cell = e.groupBy(
-        (F.col("user_id") % 2).alias("treated"),
-        F.when(F.col("ts") >= F.lit("2024-02-01").cast("timestamp"), 1)
-        .otherwise(0)
-        .alias("post"),
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("s_c"),
-    )
-
-    def pick(t, p):
-        return F.max(
-            F.when(
-                (F.col("treated") == t) & (F.col("post") == p),
-                F.col("s_c") * 1.0 / F.col("n"),
-            )
-        )
-
-    w = cell.agg(
-        pick(1, 1).alias("tp"),
-        pick(1, 0).alias("tr"),
-        pick(0, 1).alias("cp"),
-        pick(0, 0).alias("cr"),
-        F.sum("n").alias("n_total"),
-    )
-    return w.select(
-        "n_total",
-        F.round(F.col("tp") / 100.0, 6).alias("treat_post"),
-        F.round(F.col("tr") / 100.0, 6).alias("treat_pre"),
-        F.round(F.col("cp") / 100.0, 6).alias("ctrl_post"),
-        F.round(F.col("cr") / 100.0, 6).alias("ctrl_pre"),
-        F.round(
-            ((F.col("tp") - F.col("tr")) - (F.col("cp") - F.col("cr"))) / 100.0, 6
-        ).alias("did_estimate"),
     )
 
 
@@ -3971,7 +3260,7 @@ WITH scored AS (
   FROM grp WINDOW w AS (ORDER BY score DESC
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ), terms AS (
-  -- integer-scaled exact group terms (the q_katz/q_dsir quantization
+  -- integer-scaled exact group terms (the q_katz/q_dsir_select quantization
   -- discipline): term = tp_g · precision_after_group, scaled by 1e9 and
   -- floored — identical integers in both engines. The product is widened
   -- to HUGEINT (Spark: decimal(38,0)) because past tp_g·cumTP ≈ 9.2e9 a
@@ -4328,7 +3617,7 @@ def q_changepoint_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "q_bandit_posteriors",
-    driver=False,  # §2.11 experimentation tier beside q_ab_experiment
+    driver=False,  # §2.11 experimentation tier beside q_ab_test
     oracle="""
 WITH arms AS (
   SELECT event_type AS arm,
@@ -4366,7 +3655,7 @@ def q_bandit_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (α, β), the posterior mean α/(α+β), its sd, and the arm
     ranking — the table a bandit scheduler reads to allocate the next
     batch of traffic (SURVEY §2.11 experimentation tier beside
-    q_ab_experiment: the A/B test decides once, the bandit reallocates
+    q_ab_test: the A/B test decides once, the bandit reallocates
     continuously). The sampling step itself is per-request randomness and
     stays out of the oracle by design; everything the sampler consumes is
     exact and hash-pinned. mean_rank orders arms by the CROSS-MULTIPLIED
@@ -4436,56 +3725,3 @@ def q_bandit_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mean_rank"),
     )
 
-
-# --------------------------------------------------------------------------
-# Stratified k-fold assignment (round 7, wave 4)
-# --------------------------------------------------------------------------
-@register(
-    "q_stratified_kfold",
-    driver=False,  # §2.11 ML-data tier beside q_train_test_split
-    oracle="""
-WITH labeled AS (
-  SELECT doc_id, lang AS label FROM documents
-), folded AS (
-  SELECT doc_id, label,
-         CAST((row_number() OVER (PARTITION BY label ORDER BY doc_id) - 1)
-              % 5 AS BIGINT) AS fold
-  FROM labeled
-)
-SELECT fold, label,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(min(doc_id) AS BIGINT) AS min_doc,
-       CAST(max(doc_id) AS BIGINT) AS max_doc
-FROM folded GROUP BY fold, label
-""",
-)
-def q_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified 5-fold assignment: within each label (document lang),
-    rows are dealt round-robin into folds in doc_id order — every fold
-    gets the SAME label distribution to within one row, which is the
-    whole point of stratification, and the assignment is a deterministic
-    pure function of (label, doc_id) so any job can recompute membership
-    without a stored mapping (SURVEY §2.11 ML-data tier; the k-fold
-    sibling of q_train_test_split's hash split). The census output (per
-    fold × label counts and id ranges) is what a training pipeline audits
-    before trusting the folds.
-
-    Scale: one window per label partition (range-partition the per-label
-    order at 100 TB, or swap the row_number for the hash split when exact
-    equality-within-one is not required); the census is k·|labels| rows."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.col("lang").alias("label")
-    )
-    w = Window.partitionBy("label").orderBy("doc_id")
-    folded = d.select(
-        "doc_id",
-        "label",
-        ((F.row_number().over(w) - 1) % 5).cast("long").alias("fold"),
-    )
-    return folded.groupBy("fold", "label").agg(
-        F.count("*").cast("long").alias("n"),
-        F.min("doc_id").cast("long").alias("min_doc"),
-        F.max("doc_id").cast("long").alias("max_doc"),
-    )

@@ -141,7 +141,7 @@ def q_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-sized shuffle to the per-part rollup; the cumulative
     window runs over the |part|-sized aggregate (range-partitioned global
-    order at 100 TB — the same pattern as q_abc's equi-depth cousins), and
+    order at 100 TB — the same pattern as equi-depth binning), and
     the class census is 3 rows."""
     li = table(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -414,11 +414,11 @@ FROM mom WHERE n > 1
 )
 def q_realized_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annualized realized volatility per event_type — stddev of daily
-    log returns × √252 (SURVEY §2.5 time-series tier beside q_bollinger /
+    log returns × √252 (SURVEY §2.5 time-series tier beside q_bollinger_bands /
     q_ewma). Returns quantize to integer MICRO-units (round(ln(ratio)·1e6)
     — one libm ln per row, identical input ⇒ identical double ⇒ identical
     rounding), so Σr and Σr² are exact int64/128-bit sums and the variance
-    uses the q_anova quotient split: engine drift is impossible until the
+    uses an exact-integer quotient split: engine drift is impossible until the
     final sqrt. n−1 denominator (sample vol).
 
     Scale: one (type, day) rollup shuffle + one |days|-row window per

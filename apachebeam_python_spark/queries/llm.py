@@ -3010,7 +3010,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     between temporal and grouped splitting.
 
     Scale: one shuffle to (event_type, user) with conditional partial
-    aggs, then a per-type census on one row per user — the q_anova
+    aggs, then a per-type census on one row per user — the q_bootstrap_ci
     two-level reduction shape."""
     e = table(spark, sf_dir, "events")
     tagged = e.select(
@@ -4379,7 +4379,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``source = 'src0'``; Laplace-smoothed bucket log-ratios
     ln(p_tgt/q_raw) are quantized to integer MICRO-units so each doc's
     weight Σ c_b·lr_b is an EXACT int64 sum — order-independent across
-    engines (the q_anova discipline applied to a log-likelihood ratio;
+    engines (the exact-integer discipline applied to a log-likelihood ratio;
     a raw double dot product over 256 buckets drifts at the 6th decimal).
 
     Scale: the bucket table is 256 rows → broadcast; scoring is one

@@ -3,7 +3,7 @@
 SURVEY §2.3 statistical extensions, same tier as q_ab_test/q_ols_trend:
 the inferential-statistics layer a training-data / experimentation
 pipeline runs at corpus scale — chi-square independence, Mann-Whitney U,
-two-sample Kolmogorov-Smirnov, and one-way ANOVA, each over the
+and two-sample Kolmogorov-Smirnov, each over the
 ``events`` table and each DuckDB-oracle-backed.
 
 Engine-parity discipline (SURVEY §7.4.4 + auto-memory
@@ -23,8 +23,6 @@ tables here, flagged per-query below).
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -301,190 +299,7 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# One-way ANOVA
-# --------------------------------------------------------------------------
-@register(
-    "q_anova",
-    driver=False,  # §2.3 statistical extension — pytest oracle
-    oracle="""
-WITH g AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT)                                    AS n_g,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)     AS s_g,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)
-                  * CAST(round(value * 100) AS BIGINT)) AS BIGINT)   AS ss_g
-  FROM events WHERE value IS NOT NULL
-  GROUP BY event_type
-), t AS (
-  -- exact-sum discipline: s_g²/n_g is split into integer quotient +
-  -- sub-unit remainder fraction so the cross-group sums are an exact
-  -- BIGINT plus a sum of k tiny doubles — order-independent in both
-  -- engines to ~1e-15, where a raw double sum of s_g²/n_g terms is
-  -- order-dependent at the rounding boundary. Squares are widened to
-  -- HUGEINT (Spark twin: DECIMAL(38,0)) before squaring: s² is already
-  -- ~2.2e18 at sf0.01, within 4x of the int64 limit
-  SELECT CAST(count(*) AS BIGINT)  AS k,
-         CAST(sum(n_g) AS BIGINT)  AS n,
-         CAST(sum(s_g) AS BIGINT)  AS s,
-         CAST(sum(ss_g) AS BIGINT) AS ss,
-         CAST(sum((CAST(s_g AS HUGEINT) * s_g) // n_g) AS BIGINT)       AS q,
-         sum(CAST((CAST(s_g AS HUGEINT) * s_g) % n_g AS DOUBLE) / CAST(n_g AS DOUBLE)) AS fr
-  FROM g
-), gr AS (
-  SELECT k, n, s, ss, q, fr,
-         CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT)                  AS gq,
-         CAST((CAST(s AS HUGEINT) * s) % n AS DOUBLE) / CAST(n AS DOUBLE) AS gfr
-  FROM t
-)
-SELECT k, n,
-       round(((q - gq) + (fr - gfr)) / 10000.0, 4)                        AS ss_between,
-       round(((ss - q) - fr) / 10000.0, 4)                                AS ss_within,
-       round((((q - gq) + (fr - gfr)) / (k - 1))
-             / (((ss - q) - fr) / CAST(n - k AS DOUBLE)), 6)              AS f_stat,
-       round(((q - gq) + (fr - gfr)) / ((ss - gq) - gfr), 6)              AS eta_sq
-FROM gr
-""",
-)
-def q_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA of value across the five event types: per-group
-    (n, Σx, Σx²) in exact integer cents, then SSB = Σ s_g²/n_g − S²/N and
-    SSW = ΣΣx² − Σ s_g²/n_g assembled identically in both engines; emits
-    F, effect size η², and the sums of squares back in value units.
-
-    Scale: the classic two-level reduction — one partial/final groupBy on
-    event_type, then a k-row statistic assembly; nothing after the first
-    shuffle is data-sized."""
-    c = _cents(F.col("value"))
-    g = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_g"),
-            F.sum(c).alias("s_g"),
-            F.sum(c * c).alias("ss_g"),
-        )
-    )
-    # squares widen to DECIMAL(38,0) (DuckDB twin: HUGEINT) before the
-    # quotient/remainder split — s² is ~2.2e18 at sf0.01, so a raw BIGINT
-    # square overflows from sf0.04 on; the per-group s_g² follows suit for
-    # the same reason one scale decade later
-    t = g.agg(
-        F.count("*").alias("k"),
-        F.sum("n_g").alias("n"),
-        F.sum("s_g").alias("s"),
-        F.sum("ss_g").alias("ss"),
-        # exact-sum split: integer quotients sum in BIGINT, remainders are
-        # k sub-unit doubles — order-independent to ~1e-15 (oracle twin
-        # carries the identical split)
-        F.sum(
-            F.expr("(cast(s_g as decimal(19,0)) * cast(s_g as decimal(19,0))) div n_g")
-        ).alias("q"),
-        F.sum(
-            F.expr(
-                "cast((cast(s_g as decimal(19,0)) * cast(s_g as decimal(19,0))) % n_g as double)"
-            )
-            / F.col("n_g").cast("double")
-        ).alias("fr"),
-    )
-    grand_q = F.expr("(cast(s as decimal(19,0)) * cast(s as decimal(19,0))) div n")
-    grand_fr = F.expr(
-        "cast((cast(s as decimal(19,0)) * cast(s as decimal(19,0))) % n as double)"
-    ) / F.col("n").cast("double")
-    ssb = (F.col("q") - grand_q) + (F.col("fr") - grand_fr)
-    ssw = (F.col("ss") - F.col("q")) - F.col("fr")
-    sst = (F.col("ss") - grand_q) - grand_fr
-    return t.select(
-        "k",
-        "n",
-        F.round(ssb / 10000.0, 4).alias("ss_between"),
-        F.round(ssw / 10000.0, 4).alias("ss_within"),
-        F.round((ssb / (F.col("k") - 1)) / (ssw / (F.col("n") - F.col("k")).cast("double")), 6).alias("f_stat"),
-        F.round(ssb / sst, 6).alias("eta_sq"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Pearson correlation (per group, exact integer moments)
-# --------------------------------------------------------------------------
 _HI = "decimal(38,0)"  # Spark twin of DuckDB HUGEINT: exact 128-bit-ish ints
-
-
-@register(
-    "q_correlation",
-    driver=False,  # §2.3 statistical extension — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type,
-         CAST(round(value * 100) AS BIGINT)    AS x,
-         CAST(EXTRACT(hour FROM ts) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-), g AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT)   AS n,
-         CAST(sum(x) AS BIGINT)     AS sx,
-         CAST(sum(y) AS BIGINT)     AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM s GROUP BY event_type
-)
-SELECT event_type, n,
-       CASE WHEN CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx > 0
-             AND CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy > 0 THEN
-         round(CAST(CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-               / (sqrt(CAST(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE))
-                  * sqrt(CAST(CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE))), 6)
-       END AS pearson_r
-FROM g
-""",
-)
-def q_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type Pearson correlation between value (integer cents) and
-    hour-of-day — the feature-relationship scan a curation pipeline runs
-    before mixing signals (SURVEY §2.3 statistical extensions).
-
-    Parity discipline: the five moment sums (n, Σx, Σy, Σx², Σy², Σxy) are
-    exact BIGINTs from one groupBy; the assembled numerator/variances
-    n·Σxy − Σx·Σy would overflow 64 bits (n·Σx² ≈ 3.6e19 at sf0.01), so
-    both engines widen to exact 128-bit integers (Spark DECIMAL(38,0) ↔
-    DuckDB HUGEINT) and convert the identical integer to double only for
-    the final sqrt/divide — same IEEE value in both engines, then a 6-dp
-    round. Zero-variance groups yield NULL under identical guards.
-
-    Scale: one partial/final shuffle on event_type; the correlation
-    assembly is k rows of metadata. The moment-sum shape is the textbook
-    single-pass distributed corr at any scale."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    s = e.select(
-        "event_type",
-        _cents(F.col("value")).alias("x"),
-        F.hour("ts").cast("long").alias("y"),
-    )
-    g = s.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-
-    def hi(c):
-        return c.cast(_HI)
-
-    covn = hi(F.col("n")) * hi(F.col("sxy")) - hi(F.col("sx")) * hi(F.col("sy"))
-    varx = hi(F.col("n")) * hi(F.col("sxx")) - hi(F.col("sx")) * hi(F.col("sx"))
-    vary = hi(F.col("n")) * hi(F.col("syy")) - hi(F.col("sy")) * hi(F.col("sy"))
-    r = covn.cast("double") / (
-        F.sqrt(varx.cast("double")) * F.sqrt(vary.cast("double"))
-    )
-    return g.select(
-        "event_type",
-        "n",
-        F.when((varx > 0) & (vary > 0), F.round(r, 6)).alias("pearson_r"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -531,7 +346,7 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson over average ranks, where each average rank (min-rank +
     (ties−1)/2, a multiple of 0.5) is carried as the INTEGER doubled rank
     2·rmin + t − 1 — so the whole computation stays in exact integers and
-    the shared 128-bit assembly of :func:`q_correlation` applies verbatim
+    the shared 128-bit Pearson assembly applies verbatim
     (doubling both variables leaves ρ unchanged). SURVEY §2.3.
 
     Scale: the per-group rank is a partitioned window (one shuffle on
@@ -628,7 +443,7 @@ def q_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity: day index = exact epoch-day integer in both engines; daily
     sums are BIGINT; second moments widen PER TERM to 128-bit (daily cents
-    squared brushes 2^63), then the q_correlation assembly runs per lag.
+    squared brushes 2^63), then the q_spearman Pearson assembly runs per lag.
 
     Scale: the daily rollup is the only data-sized shuffle; the series is
     metadata (O(days)), so the 8-lag self-join is a broadcast over a
@@ -671,209 +486,6 @@ def q_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lag").cast("long").alias("lag"),
         F.col("n").alias("n_pairs"),
         F.when((varx > 0) & (vary > 0), F.round(r, 6)).alias("xcorr_r"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Welch's two-sample t-test (unequal variances)
-# --------------------------------------------------------------------------
-@register(
-    "q_welch_ttest",
-    driver=False,  # §2.3 statistical extension — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type AS grp, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-), g AS (
-  SELECT grp,
-         CAST(count(*) AS BIGINT)   AS n,
-         CAST(sum(c) AS BIGINT)     AS s,
-         CAST(sum(c * c) AS BIGINT) AS ss
-  FROM s GROUP BY grp
-), w AS (
-  SELECT max(CASE WHEN grp = 'click' THEN n END)  AS n1,
-         max(CASE WHEN grp = 'click' THEN s END)  AS s1,
-         max(CASE WHEN grp = 'click' THEN ss END) AS ss1,
-         max(CASE WHEN grp = 'view' THEN n END)   AS n2,
-         max(CASE WHEN grp = 'view' THEN s END)   AS s2,
-         max(CASE WHEN grp = 'view' THEN ss END)  AS ss2
-  FROM g
-), v AS (
-  SELECT n1, n2, s1, s2,
-         CAST(CAST(n1 AS HUGEINT) * ss1 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
-           / (CAST(n1 AS DOUBLE) * (n1 - 1)) / n1 AS se1,
-         CAST(CAST(n2 AS HUGEINT) * ss2 - CAST(s2 AS HUGEINT) * s2 AS DOUBLE)
-           / (CAST(n2 AS DOUBLE) * (n2 - 1)) / n2 AS se2
-  FROM w
-)
-SELECT n1, n2,
-       round(s1 / (100.0 * n1), 4) AS mean_click,
-       round(s2 / (100.0 * n2), 4) AS mean_view,
-       round((s1 / CAST(n1 AS DOUBLE) - s2 / CAST(n2 AS DOUBLE))
-             / sqrt(se1 + se2), 6) AS t_stat,
-       round((se1 + se2) * (se1 + se2)
-             / (se1 * se1 / (n1 - 1) + se2 * se2 / (n2 - 1)), 4) AS dof_welch
-FROM v
-""",
-)
-def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test: click vs view event values. Per-group
-    moments (n, Σx, Σx²) are exact integer cents from one groupBy; the
-    variance numerator n·Σx² − (Σx)² widens to 128-bit (Spark DECIMAL(38,0)
-    ↔ DuckDB HUGEINT — it brushes 2⁶³ at sf0.1) before ONE double
-    conversion, then t and the Welch–Satterthwaite dof assemble through the
-    identical IEEE tree in both engines (sqrt is correctly rounded — safe).
-    SURVEY §2.3 statistical extensions, the two-sample companion to
-    q_anova's k-group F.
-
-    Scale: one partial/final shuffle on event_type; the two-row pivot and
-    statistic assembly are metadata."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("click", "view") & F.col("value").isNotNull())
-        .select(F.col("event_type").alias("grp"), _cents(F.col("value")).alias("c"))
-    )
-    g = s.groupBy("grp").agg(
-        F.count("*").alias("n"),
-        F.sum("c").alias("s"),
-        F.sum(F.col("c") * F.col("c")).alias("ss"),
-    )
-    w = g.agg(
-        F.max(F.when(F.col("grp") == "click", F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("grp") == "click", F.col("s"))).alias("s1"),
-        F.max(F.when(F.col("grp") == "click", F.col("ss"))).alias("ss1"),
-        F.max(F.when(F.col("grp") == "view", F.col("n"))).alias("n2"),
-        F.max(F.when(F.col("grp") == "view", F.col("s"))).alias("s2"),
-        F.max(F.when(F.col("grp") == "view", F.col("ss"))).alias("ss2"),
-    )
-
-    def hi(c):
-        return c.cast(_HI)
-
-    def se(n, s_, ss):
-        vnum = hi(F.col(n)) * hi(F.col(ss)) - hi(F.col(s_)) * hi(F.col(s_))
-        return vnum.cast("double") / (
-            F.col(n).cast("double") * (F.col(n) - 1)
-        ) / F.col(n)
-
-    v = w.select(
-        "n1",
-        "n2",
-        "s1",
-        "s2",
-        se("n1", "s1", "ss1").alias("se1"),
-        se("n2", "s2", "ss2").alias("se2"),
-    )
-    tnum = F.col("s1") / F.col("n1").cast("double") - F.col("s2") / F.col("n2").cast("double")
-    sesum = F.col("se1") + F.col("se2")
-    return v.select(
-        "n1",
-        "n2",
-        F.round(F.col("s1") / (100.0 * F.col("n1")), 4).alias("mean_click"),
-        F.round(F.col("s2") / (100.0 * F.col("n2")), 4).alias("mean_view"),
-        F.round(tnum / F.sqrt(sesum), 6).alias("t_stat"),
-        F.round(
-            sesum * sesum
-            / (
-                F.col("se1") * F.col("se1") / (F.col("n1") - 1)
-                + F.col("se2") * F.col("se2") / (F.col("n2") - 1)
-            ),
-            4,
-        ).alias("dof_welch"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Kendall tau-b over the daily (revenue, activity) series
-# --------------------------------------------------------------------------
-@register(
-    "q_kendall_tau",
-    driver=False,  # §2.3 statistical extension — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
-         CAST(count(*) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-), pairs AS (
-  -- coalesce: a 0/1-day series has NO pairs — sum over the empty join is
-  -- NULL in both engines; the census must read (0, 0), not (NULL, NULL)
-  SELECT coalesce(CAST(sum(CASE WHEN (b.x > a.x AND b.y > a.y)
-                         OR (b.x < a.x AND b.y < a.y) THEN 1 ELSE 0 END) AS BIGINT), 0) AS c,
-         coalesce(CAST(sum(CASE WHEN (b.x > a.x AND b.y < a.y)
-                         OR (b.x < a.x AND b.y > a.y) THEN 1 ELSE 0 END) AS BIGINT), 0) AS d,
-         coalesce(CAST(sum(CASE WHEN b.x = a.x THEN 1 ELSE 0 END) AS BIGINT), 0) AS tx,
-         coalesce(CAST(sum(CASE WHEN b.y = a.y THEN 1 ELSE 0 END) AS BIGINT), 0) AS ty
-  FROM daily a JOIN daily b ON b.d > a.d
-), n AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_days,
-         CAST(count(*) AS BIGINT) * (CAST(count(*) AS BIGINT) - 1) / 2 AS n0
-  FROM daily
-)
-SELECT n_days, c AS concordant, d AS discordant,
-       round((c - d) / sqrt((n0 - tx) * CAST(n0 - ty AS DOUBLE)), 6) AS tau_b
-FROM pairs, n
-""",
-)
-def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between daily revenue (exact cents) and daily event
-    count — the rank-concordance companion to q_spearman, robust to the
-    monotone-but-nonlinear relationships a forecasting pipeline screens
-    for (SURVEY §2.3 statistical extensions). Concordant/discordant/tie
-    censuses are exact integer pair counts; tau-b divides by one sqrt of an
-    exact integer product — identical IEEE in both engines.
-
-    Scale: the daily rollup is the only data-sized shuffle; the O(days²)
-    pair join runs over the metadata-sized series with the right side
-    broadcast — same shape at 100 TB (days grow linearly, not with rows).
-    For row-level tau at scale the O(n log n) merge-sort inversion count
-    replaces the pair join."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("long")
-        .alias("d")
-    ).agg(
-        F.sum(_cents(F.col("value"))).alias("x"),
-        F.count("*").alias("y"),
-    )
-    b = daily.select(
-        F.col("d").alias("bd"), F.col("x").alias("bx"), F.col("y").alias("by")
-    )
-    conc = (F.col("bx") > F.col("x")) & (F.col("by") > F.col("y")) | (
-        F.col("bx") < F.col("x")
-    ) & (F.col("by") < F.col("y"))
-    disc = (F.col("bx") > F.col("x")) & (F.col("by") < F.col("y")) | (
-        F.col("bx") < F.col("x")
-    ) & (F.col("by") > F.col("y"))
-    # coalesce: a 0/1-day series has no pairs — sum over the empty join is
-    # NULL; the census must read (0, 0) in both engines (hypothesis-found)
-    pairs = daily.join(F.broadcast(b), F.col("bd") > F.col("d")).agg(
-        F.coalesce(F.sum(F.when(conc, 1).otherwise(0)), F.lit(0)).alias("c"),
-        F.coalesce(F.sum(F.when(disc, 1).otherwise(0)), F.lit(0)).alias("d"),
-        F.coalesce(
-            F.sum(F.when(F.col("bx") == F.col("x"), 1).otherwise(0)), F.lit(0)
-        ).alias("tx"),
-        F.coalesce(
-            F.sum(F.when(F.col("by") == F.col("y"), 1).otherwise(0)), F.lit(0)
-        ).alias("ty"),
-    )
-    n = daily.agg(
-        F.count("*").alias("n_days"),
-        (F.count("*") * (F.count("*") - 1) / 2).cast("long").alias("n0"),
-    )
-    j = pairs.crossJoin(F.broadcast(n))
-    return j.select(
-        "n_days",
-        F.col("c").alias("concordant"),
-        F.col("d").alias("discordant"),
-        F.round(
-            (F.col("c") - F.col("d"))
-            / F.sqrt((F.col("n0") - F.col("tx")) * (F.col("n0") - F.col("ty")).cast("double")),
-            6,
-        ).alias("tau_b"),
     )
 
 
@@ -1017,7 +629,7 @@ FROM d
 def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's d / Hedges' g standardized effect size between click and
     purchase values (SURVEY §2.3 statistical extensions) — the pooled-SD
-    companion to q_welch_ttest's unequal-variance t: significance says a
+    companion to a two-sample t-test: significance says a
     difference exists; d says whether anyone should care. Per-group moments
     are exact integer cents, the variance numerators widen to 128-bit
     (DECIMAL(38,0) ↔ HUGEINT) before ONE double conversion, and the pooled
@@ -1068,121 +680,6 @@ def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(m2 / 100.0, 4).alias("mean_purchase"),
         F.round(d, 6).alias("cohens_d"),
         F.round(d * j, 6).alias("hedges_g"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Brown–Forsythe (median-based Levene) variance-homogeneity test (round 5)
-# --------------------------------------------------------------------------
-@register(
-    "q_levene",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type AS grp, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-), r AS (
-  SELECT grp, c,
-         row_number() OVER (PARTITION BY grp ORDER BY c) AS rn,
-         CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n_g
-  FROM s
-), med AS (
-  -- LOWER median by rank: position (n+1)//2 — identical integer pick in
-  -- both engines, no interpolation (interpolated medians of even counts
-  -- would reintroduce engine-specific x.5 handling)
-  SELECT grp, c AS m FROM r WHERE rn = (n_g + 1) // 2
-), z AS (
-  SELECT s.grp, abs(s.c - med.m) AS z
-  FROM s JOIN med ON s.grp = med.grp
-), g AS (
-  SELECT grp,
-         CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(z) AS BIGINT)   AS s_g,
-         CAST(sum(z * z) AS BIGINT) AS ss_g
-  FROM z GROUP BY grp
-), t AS (
-  SELECT CAST(count(*) AS BIGINT)  AS k,
-         CAST(sum(n_g) AS BIGINT)  AS n,
-         CAST(sum(s_g) AS BIGINT)  AS s,
-         CAST(sum(ss_g) AS BIGINT) AS ss,
-         CAST(sum((CAST(s_g AS HUGEINT) * s_g) // n_g) AS BIGINT) AS q,
-         sum(CAST((CAST(s_g AS HUGEINT) * s_g) % n_g AS DOUBLE) / CAST(n_g AS DOUBLE)) AS fr
-  FROM g
-), gr AS (
-  SELECT k, n, q, fr, ss,
-         CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT) AS gq,
-         CAST((CAST(s AS HUGEINT) * s) % n AS DOUBLE) / CAST(n AS DOUBLE) AS gfr
-  FROM t
-)
-SELECT k, n,
-       round((((q - gq) + (fr - gfr)) / (k - 1))
-             / (((ss - q) - fr) / CAST(n - k AS DOUBLE)), 6) AS bf_stat
-FROM gr
-""",
-)
-def q_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown–Forsythe test (the median-based Levene): are the five event
-    types' value VARIANCES equal — the assumption q_anova's F quietly makes
-    (SURVEY §2.3 statistical extensions). Per-group LOWER medians are picked
-    by integer rank position ((n+1) div 2 — no interpolation, so no
-    engine-specific x.5 handling), absolute deviations |c − med| stay exact
-    integer cents, and the one-way F on those deviations reuses q_anova's
-    exact quotient/remainder machinery with 128-bit-widened squares.
-
-    Scale: the median needs one per-group sort (a rank window over the
-    grouped data — the same shuffle ANOVA pays anyway); everything after is
-    the k-row statistic assembly. At extreme group sizes swap the rank
-    median for a fixed-point quantile sketch and keep the F assembly."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("event_type").alias("grp"), _cents(F.col("value")).alias("c"))
-    )
-    wr = Window.partitionBy("grp").orderBy("c")
-    r = s.select(
-        "grp",
-        "c",
-        F.row_number().over(wr).alias("rn"),
-        F.count("*").over(Window.partitionBy("grp")).alias("n_g"),
-    )
-    med = r.filter(F.col("rn") == F.expr("(n_g + 1) div 2")).select(
-        "grp", F.col("c").alias("m")
-    )
-    z = s.join(med, "grp").select("grp", F.abs(F.col("c") - F.col("m")).alias("z"))
-    g = z.groupBy("grp").agg(
-        F.count("*").alias("n_g"),
-        F.sum("z").alias("s_g"),
-        F.sum(F.col("z") * F.col("z")).alias("ss_g"),
-    )
-    t = g.agg(
-        F.count("*").alias("k"),
-        F.sum("n_g").alias("n"),
-        F.sum("s_g").alias("s"),
-        F.sum("ss_g").alias("ss"),
-        F.sum(
-            F.expr("(cast(s_g as decimal(19,0)) * cast(s_g as decimal(19,0))) div n_g")
-        ).alias("q"),
-        F.sum(
-            F.expr(
-                "cast((cast(s_g as decimal(19,0)) * cast(s_g as decimal(19,0))) % n_g as double)"
-            )
-            / F.col("n_g").cast("double")
-        ).alias("fr"),
-    )
-    gq = F.expr("(cast(s as decimal(19,0)) * cast(s as decimal(19,0))) div n")
-    gfr = F.expr(
-        "cast((cast(s as decimal(19,0)) * cast(s as decimal(19,0))) % n as double)"
-    ) / F.col("n").cast("double")
-    ssb = (F.col("q") - gq) + (F.col("fr") - gfr)
-    ssw = (F.col("ss") - F.col("q")) - F.col("fr")
-    return t.select(
-        "k",
-        "n",
-        F.round(
-            (ssb / (F.col("k") - 1))
-            / (ssw / (F.col("n") - F.col("k")).cast("double")),
-            6,
-        ).alias("bf_stat"),
     )
 
 
@@ -1296,7 +793,7 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Two-proportion z-test with Wilson intervals (round 5)
+# Odds ratio / relative risk with log-scale CIs (round 5)
 # --------------------------------------------------------------------------
 _PROP_2X2 = """
 WITH per_user AS (
@@ -1320,97 +817,6 @@ WITH per_user AS (
 
 
 @register(
-    "q_two_proportion",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle=_PROP_2X2
-    + """
-SELECT a + b AS n_exposed, c + d AS n_unexposed,
-       round(a / CAST(a + b AS DOUBLE), 6) AS p_exposed,
-       round(c / CAST(c + d AS DOUBLE), 6) AS p_unexposed,
-       round((a / CAST(a + b AS DOUBLE) - c / CAST(c + d AS DOUBLE))
-             / sqrt((a + c) / CAST(a + b + c + d AS DOUBLE)
-                    * (1.0 - (a + c) / CAST(a + b + c + d AS DOUBLE))
-                    * (1.0 / (a + b) + 1.0 / (c + d))), 6) AS z_stat,
-       round((a / CAST(a + b AS DOUBLE) + 1.9599639845400545 * 1.9599639845400545 / (2.0 * (a + b))
-              - 1.9599639845400545 * sqrt(a / CAST(a + b AS DOUBLE) * (1.0 - a / CAST(a + b AS DOUBLE)) / (a + b)
-                           + 1.9599639845400545 * 1.9599639845400545 / (4.0 * (a + b) * CAST(a + b AS DOUBLE))))
-             / (1.0 + 1.9599639845400545 * 1.9599639845400545 / (a + b)), 6) AS wilson_lo_exposed,
-       round((a / CAST(a + b AS DOUBLE) + 1.9599639845400545 * 1.9599639845400545 / (2.0 * (a + b))
-              + 1.9599639845400545 * sqrt(a / CAST(a + b AS DOUBLE) * (1.0 - a / CAST(a + b AS DOUBLE)) / (a + b)
-                           + 1.9599639845400545 * 1.9599639845400545 / (4.0 * (a + b) * CAST(a + b AS DOUBLE))))
-             / (1.0 + 1.9599639845400545 * 1.9599639845400545 / (a + b)), 6) AS wilson_hi_exposed
-FROM cells
-""",
-)
-def q_two_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test of later high-value purchase conversion,
-    week-1 high-value clickers vs everyone else (all four 2×2 cells are
-    populated at every fixture sf — the trivial any-click/any-purchase
-    split is degenerate here), with the WILSON score interval for the
-    exposed rate
-    (SURVEY §2.3 statistical extensions — the proportion counterpart to
-    q_welch_ttest): the 2×2 census is exact per-user integers from one
-    groupBy; the pooled-SE z and the Wilson bounds (the interval that
-    stays inside [0,1] and behaves at small n, unlike Wald) assemble
-    through one shared IEEE tree with the z=1.96 critical value spelled to
-    full double precision in both engines.
-
-    Scale: one shuffle to user_id for the exposure/outcome census, then a
-    1-row statistic assembly."""
-    z = 1.9599639845400545
-    per_user = (
-        table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("value") >= 100)
-                    & (F.to_date("ts") < F.lit("2024-01-08").cast("date")),
-                    1,
-                ).otherwise(0)
-            ).alias("exposed"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("value") >= 150)
-                    & (F.to_date("ts") >= F.lit("2024-01-08").cast("date")),
-                    1,
-                ).otherwise(0)
-            ).alias("outcome"),
-        )
-    )
-    cells = per_user.agg(
-        F.sum(F.when((F.col("exposed") == 1) & (F.col("outcome") == 1), 1).otherwise(0)).alias("a"),
-        F.sum(F.when((F.col("exposed") == 1) & (F.col("outcome") == 0), 1).otherwise(0)).alias("b"),
-        F.sum(F.when((F.col("exposed") == 0) & (F.col("outcome") == 1), 1).otherwise(0)).alias("c"),
-        F.sum(F.when((F.col("exposed") == 0) & (F.col("outcome") == 0), 1).otherwise(0)).alias("d"),
-    )
-    a, b, c, d = F.col("a"), F.col("b"), F.col("c"), F.col("d")
-    n1 = (a + b).cast("double")
-    n2 = (c + d).cast("double")
-    p1 = a / n1
-    p2 = c / n2
-    pp = (a + c) / (a + b + c + d).cast("double")
-    zstat = (p1 - p2) / F.sqrt(pp * (1.0 - pp) * (1.0 / (a + b) + 1.0 / (c + d)))
-    center = p1 + z * z / (2.0 * (a + b))
-    half = z * F.sqrt(p1 * (1.0 - p1) / (a + b) + z * z / (4.0 * (a + b) * n1))
-    denom = 1.0 + z * z / (a + b)
-    return cells.select(
-        (a + b).alias("n_exposed"),
-        (c + d).alias("n_unexposed"),
-        F.round(p1, 6).alias("p_exposed"),
-        F.round(p2, 6).alias("p_unexposed"),
-        F.round(zstat, 6).alias("z_stat"),
-        F.round((center - half) / denom, 6).alias("wilson_lo_exposed"),
-        F.round((center + half) / denom, 6).alias("wilson_hi_exposed"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Odds ratio / relative risk with log-scale CIs (round 5)
-# --------------------------------------------------------------------------
-@register(
     "q_odds_ratio",
     driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
     oracle=_PROP_2X2
@@ -1430,13 +836,12 @@ def q_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     week-1 high-value click, with the standard log-scale (Woolf)
     confidence interval (SURVEY §2.3
     statistical extensions — the effect-measure companion to
-    q_two_proportion's significance z): the 2×2 cells are exact per-user
+    a two-proportion z-test): the 2×2 cells are exact per-user
     integers, OR = ad/bc and RR assemble in one shared double tree, and
     the CI exponentiates ln(OR) ± 1.96·√(Σ 1/cell) — ln/exp at the very
     end only, 6-dp rounded (the q_token_entropy libm discipline).
 
-    Scale: identical to q_two_proportion — one user-keyed census shuffle,
-    1-row assembly."""
+    Scale: one user-keyed census shuffle, then a 1-row assembly."""
     z = 1.9599639845400545
     per_user = (
         table(spark, sf_dir, "events")
@@ -1479,228 +884,6 @@ def q_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(rr, 6).alias("relative_risk"),
         F.round(F.exp(F.log(orr) - z * se), 6).alias("or_ci_lo"),
         F.round(F.exp(F.log(orr) + z * se), 6).alias("or_ci_hi"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Kruskal-Wallis H (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_kruskal_wallis",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type AS grp, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL
-), ranked AS (
-  SELECT grp,
-         rank() OVER (ORDER BY cents) + (count(*) OVER (PARTITION BY cents) - 1) / 2.0
-           AS avg_rank
-  FROM s
-), pergrp AS (
-  SELECT grp, CAST(count(*) AS BIGINT) AS ni, sum(avg_rank) AS ri
-  FROM ranked GROUP BY grp
-), ties AS (
-  SELECT coalesce(sum(CAST(t AS HUGEINT) * t * t - t), 0) AS tie3
-  FROM (SELECT CAST(count(*) AS BIGINT) AS t FROM s GROUP BY cents) u
-  WHERE t > 1
-), agg AS (
-  SELECT CAST(sum(ni) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k,
-         sum(ri * ri / ni) AS rsq
-  FROM pergrp
-)
-SELECT n, k, CAST(k - 1 AS BIGINT) AS dof,
-       CASE WHEN CAST(tie3 AS HUGEINT) < CAST(n AS HUGEINT) * n * n - n THEN
-         round(
-           (12.0 * rsq / (CAST(n AS DOUBLE) * (n + 1)) - 3.0 * (n + 1))
-           / (1.0 - CAST(tie3 AS DOUBLE)
-                    / CAST(CAST(n AS HUGEINT) * n * n - n AS DOUBLE)),
-           6)
-       END AS h_stat
-FROM agg, ties
-""",
-)
-def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal-Wallis H across ALL event types — the k-sample extension of
-    q_mann_whitney (SURVEY §2.3 statistical extensions). Average ranks are
-    min-rank + (ties−1)/2 (exact 0.5 multiples), per-group rank sums stay
-    exact in doubles, and the tie-corrected H assembles integer
-    (n, k, Σ(t³−t)) through one shared IEEE tree. The cubes N³ and t³
-    widen to DECIMAL/HUGEINT before multiplying (the q_anova overflow
-    lesson, ADVICE r4): 64-bit squares of large totals are the class of
-    bug that passes at sf0.01 and throws at sf0.04.
-
-    Scale: like q_mann_whitney, ranking is a global sort (one window task
-    here); at 100 TB swap in range-partitioned ranking. Everything after
-    is a k-row metadata assembly."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("event_type").alias("grp"), _cents(F.col("value")).alias("cents"))
-    )
-    ranked = s.select(
-        "grp",
-        (
-            F.rank().over(Window.orderBy("cents"))
-            + (F.count("*").over(Window.partitionBy("cents")) - 1) / 2.0
-        ).alias("avg_rank"),
-    )
-    pergrp = ranked.groupBy("grp").agg(
-        F.count("*").alias("ni"), F.sum("avg_rank").alias("ri")
-    )
-    td = F.col("t").cast("decimal(12,0)")
-    ties = (
-        s.groupBy("cents")
-        .agg(F.count("*").alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(F.coalesce(F.sum(td * td * td - td), F.lit(0).cast("decimal(38,0)")).alias("tie3"))
-    )
-    agg = pergrp.agg(
-        F.sum("ni").alias("n"),
-        F.count("*").alias("k"),
-        F.sum(F.col("ri") * F.col("ri") / F.col("ni")).alias("rsq"),
-    )
-    j = agg.crossJoin(F.broadcast(ties))
-    n, k = F.col("n"), F.col("k")
-    nd = n.cast("decimal(12,0)")
-    n3 = (nd * nd * nd - nd).cast("double")
-    h = (12.0 * F.col("rsq") / (n.cast("double") * (n + 1)) - 3.0 * (n + 1)) / (
-        1.0 - F.col("tie3").cast("double") / n3
-    )
-    # all-values-identical degenerate case: tie3 == N³−N ⇒ denominator 0
-    h = F.when(F.col("tie3").cast("decimal(38,0)") < (nd * nd * nd - nd), F.round(h, 6))
-    return j.select("n", "k", (k - 1).cast("long").alias("dof"), h.alias("h_stat"))
-
-
-# --------------------------------------------------------------------------
-# McNemar paired-proportions test (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_mcnemar",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH u AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'click' AND value >= 120 THEN 1 ELSE 0 END)    AS x,
-         max(CASE WHEN event_type = 'purchase' AND value >= 120 THEN 1 ELSE 0 END) AS y
-  FROM events GROUP BY user_id
-), cells AS (
-  SELECT CAST(sum(CASE WHEN x = 1 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-         CAST(sum(CASE WHEN x = 1 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n10,
-         CAST(sum(CASE WHEN x = 0 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n01,
-         CAST(sum(CASE WHEN x = 0 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n00
-  FROM u
-)
-SELECT n11, n10, n01, n00,
-       CASE WHEN n10 + n01 > 0 THEN
-         round((abs(n10 - n01) - 1) * CAST(abs(n10 - n01) - 1 AS DOUBLE)
-               / (n10 + n01), 6)
-       END AS mcnemar_chi2
-FROM cells
-""",
-)
-def q_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar's test on PAIRED per-user binaries: "ever a high-value
-    click" vs "ever a high-value purchase" (≥ $120) — the
-    marginal-homogeneity companion to q_two_proportion, which compares
-    INDEPENDENT groups (SURVEY §2.3 statistical extensions). Only the
-    discordant cells n10/n01 carry signal; the continuity-corrected
-    statistic (|n10−n01|−1)²/(n10+n01) assembles exact integers in one
-    shared double tree, NULL when no discordant pairs exist.
-
-    Scale: one conditional-max groupBy on user_id (map-side partials),
-    then a 1-row census — the cheapest paired-design shape."""
-    per_user = (
-        table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when((F.col("event_type") == "click") & (F.col("value") >= 120), 1).otherwise(0)
-            ).alias("x"),
-            F.max(
-                F.when((F.col("event_type") == "purchase") & (F.col("value") >= 120), 1).otherwise(0)
-            ).alias("y"),
-        )
-    )
-    cells = per_user.agg(
-        F.sum(F.when((F.col("x") == 1) & (F.col("y") == 1), 1).otherwise(0)).alias("n11"),
-        F.sum(F.when((F.col("x") == 1) & (F.col("y") == 0), 1).otherwise(0)).alias("n10"),
-        F.sum(F.when((F.col("x") == 0) & (F.col("y") == 1), 1).otherwise(0)).alias("n01"),
-        F.sum(F.when((F.col("x") == 0) & (F.col("y") == 0), 1).otherwise(0)).alias("n00"),
-    )
-    disc = F.col("n10") + F.col("n01")
-    dev = F.abs(F.col("n10") - F.col("n01")) - 1
-    stat = F.when(disc > 0, F.round(dev * dev.cast("double") / disc, 6))
-    return cells.select("n11", "n10", "n01", "n00", stat.alias("mcnemar_chi2"))
-
-
-# --------------------------------------------------------------------------
-# Cohen's kappa inter-rater agreement (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_cohen_kappa",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH cells AS (
-  SELECT CAST(sum(CASE WHEN value >= 100 AND event_type IN ('purchase', 'click')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN value >= 100 AND event_type NOT IN ('purchase', 'click')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(sum(CASE WHEN value < 100 AND event_type IN ('purchase', 'click')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(sum(CASE WHEN value < 100 AND event_type NOT IN ('purchase', 'click')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM events WHERE value IS NOT NULL
-)
-SELECT a + b + c + d AS n,
-       round((a + d) / CAST(a + b + c + d AS DOUBLE), 6) AS po,
-       round(((a + b) * CAST(a + c AS DOUBLE) + (c + d) * CAST(b + d AS DOUBLE))
-             / (CAST(a + b + c + d AS DOUBLE) * (a + b + c + d)), 6) AS pe,
-       CASE WHEN ((a + b) * CAST(a + c AS DOUBLE) + (c + d) * CAST(b + d AS DOUBLE))
-                 / (CAST(a + b + c + d AS DOUBLE) * (a + b + c + d)) < 1.0 THEN
-         round(((a + d) / CAST(a + b + c + d AS DOUBLE)
-                - ((a + b) * CAST(a + c AS DOUBLE) + (c + d) * CAST(b + d AS DOUBLE))
-                  / (CAST(a + b + c + d AS DOUBLE) * (a + b + c + d)))
-               / (1.0 - ((a + b) * CAST(a + c AS DOUBLE) + (c + d) * CAST(b + d AS DOUBLE))
-                        / (CAST(a + b + c + d AS DOUBLE) * (a + b + c + d))), 6)
-       END AS kappa
-FROM cells
-""",
-)
-def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between two deterministic "raters" over every event:
-    rater A labels by value band (≥ $100), rater B by intent class
-    (purchase/click vs rest) — chance-corrected agreement, the
-    label-quality metric an annotation pipeline reports per batch
-    (SURVEY §2.3 statistical extensions / §2.11 quality family). The 2×2
-    census is exact integers; po, pe, and κ = (po−pe)/(1−pe) assemble in
-    one shared IEEE tree; marginal products go through DOUBLE before
-    multiplying so the pe numerator cannot overflow 64-bit at corpus
-    scale (the q_anova lesson, ADVICE r4).
-
-    Scale: a single conditional-sum pass over events — no shuffle beyond
-    the final 1-row agg."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    hi = F.col("value") >= 100
-    intent = F.col("event_type").isin("purchase", "click")
-    cells = e.agg(
-        F.sum(F.when(hi & intent, 1).otherwise(0)).alias("a"),
-        F.sum(F.when(hi & ~intent, 1).otherwise(0)).alias("b"),
-        F.sum(F.when(~hi & intent, 1).otherwise(0)).alias("c"),
-        F.sum(F.when(~hi & ~intent, 1).otherwise(0)).alias("d"),
-    )
-    a, b, c, d = F.col("a"), F.col("b"), F.col("c"), F.col("d")
-    n = a + b + c + d
-    po = (a + d) / n.cast("double")
-    pe = ((a + b) * (a + c).cast("double") + (c + d) * (b + d).cast("double")) / (
-        n.cast("double") * n
-    )
-    # single-category degenerate case: pe == 1 ⇒ κ undefined
-    return cells.select(
-        n.alias("n"),
-        F.round(po, 6).alias("po"),
-        F.round(pe, 6).alias("pe"),
-        F.when(pe < 1.0, F.round((po - pe) / (1.0 - pe), 6)).alias("kappa"),
     )
 
 
@@ -1752,7 +935,7 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents total; every row then centers on the integer pivot μ0 = Σc div n,
     so the power sums Σy², Σy³, Σy⁴ are EXACT integers (widened to
     DECIMAL/HUGEINT — per-row y⁴ fits 64-bit but the sums do not, the
-    q_anova overflow class). The fractional mean remainder δ = (Σc mod n)/n
+    ADVICE r4 overflow class). The fractional mean remainder δ = (Σc mod n)/n
     corrects the moments in one shared IEEE tree — no catastrophic
     cancellation, because |y| is spread-sized, not total-sized. skew
     g1 = m3/m2^1.5, excess kurtosis g2 = m4/m2²−3, JB = n/6·(g1²+g2²/4);
@@ -1889,81 +1072,6 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Fleiss' kappa multi-rater agreement (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_fleiss_kappa",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH r AS (
-  SELECT (CASE WHEN value >= 100 THEN 1 ELSE 0 END)
-         + (CASE WHEN event_type IN ('purchase', 'click') THEN 1 ELSE 0 END)
-         + (CASE WHEN value >= 80 THEN 1 ELSE 0 END) AS n_hi
-  FROM events WHERE value IS NOT NULL
-), census AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_items,
-         CAST(sum(n_hi) AS BIGINT) AS s_hi,
-         CAST(sum(n_hi * n_hi + (3 - n_hi) * (3 - n_hi)) AS BIGINT) AS s_sq
-  FROM r
-)
-SELECT n_items,
-       round((s_sq - 3.0 * n_items) / (6.0 * n_items), 6) AS p_bar,
-       round((s_hi / (3.0 * n_items)) * (s_hi / (3.0 * n_items))
-             + (1.0 - s_hi / (3.0 * n_items)) * (1.0 - s_hi / (3.0 * n_items)), 6)
-         AS p_e,
-       CASE WHEN (s_hi / (3.0 * n_items)) * (s_hi / (3.0 * n_items))
-                 + (1.0 - s_hi / (3.0 * n_items)) * (1.0 - s_hi / (3.0 * n_items))
-                 < 1.0 THEN
-         round(((s_sq - 3.0 * n_items) / (6.0 * n_items)
-                - ((s_hi / (3.0 * n_items)) * (s_hi / (3.0 * n_items))
-                   + (1.0 - s_hi / (3.0 * n_items)) * (1.0 - s_hi / (3.0 * n_items))))
-               / (1.0 - ((s_hi / (3.0 * n_items)) * (s_hi / (3.0 * n_items))
-                         + (1.0 - s_hi / (3.0 * n_items))
-                           * (1.0 - s_hi / (3.0 * n_items)))), 6)
-       END AS fleiss_kappa
-FROM census
-""",
-)
-def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fleiss' kappa over THREE deterministic labeling functions per event
-    (value ≥ $100, intent event type, value ≥ $80) — the weak-supervision
-    agreement readout: m=3 raters, 2 categories, every item rated by all
-    raters (SURVEY §2.3 statistical extensions; the multi-rater
-    generalization of q_cohen_kappa). Per-item agreement
-    P_i = (Σ_j n_ij² − m)/(m(m−1)) needs only the exact integer census
-    (N, Σn_hi, Σ(n_hi²+n_lo²)); P̄, P_e = Σ p_j², and
-    κ = (P̄−P_e)/(1−P_e) assemble in one shared IEEE tree, NULL when all
-    ratings land in one category (P_e = 1).
-
-    Scale: the ratings are row-local expressions — a single map-side
-    census with no shuffle beyond the 1-row agg, at any corpus size."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    n_hi = (
-        F.when(F.col("value") >= 100, 1).otherwise(0)
-        + F.when(F.col("event_type").isin("purchase", "click"), 1).otherwise(0)
-        + F.when(F.col("value") >= 80, 1).otherwise(0)
-    )
-    census = e.select(n_hi.alias("n_hi")).agg(
-        F.count("*").alias("n_items"),
-        F.sum("n_hi").alias("s_hi"),
-        F.sum(
-            F.col("n_hi") * F.col("n_hi")
-            + (3 - F.col("n_hi")) * (3 - F.col("n_hi"))
-        ).alias("s_sq"),
-    )
-    n = F.col("n_items")
-    p_hi = F.col("s_hi") / (3.0 * n)
-    p_bar = (F.col("s_sq") - 3.0 * n) / (6.0 * n)
-    p_e = p_hi * p_hi + (1.0 - p_hi) * (1.0 - p_hi)
-    return census.select(
-        "n_items",
-        F.round(p_bar, 6).alias("p_bar"),
-        F.round(p_e, 6).alias("p_e"),
-        F.when(p_e < 1.0, F.round((p_bar - p_e) / (1.0 - p_e), 6)).alias("fleiss_kappa"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Friedman test (repeated-measures rank test, round 5 continuation)
 # --------------------------------------------------------------------------
 @register(
@@ -2009,14 +1117,14 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Friedman test on repeated measures: blocks = users, treatments =
     event types, measurement = the user's exact spend (cents) per type
     (SURVEY §2.3 statistical extensions — the within-subject companion to
-    q_kruskal_wallis, which compares INDEPENDENT samples). Only COMPLETE
+    Kruskal-Wallis, which compares INDEPENDENT samples). Only COMPLETE
     blocks enter (users observed under every treatment — the textbook
     requirement); within-block average ranks are exact 0.5 multiples, so
     rank sums are exact in doubles. The statistic uses the tie-corrected
     variant Q/C with C = 1 − Σ(t³−t)/(n·k·(k²−1)) (the same correction
     family as Kruskal-Wallis; within-block ties on exact cent sums are
     rare but handled). t³ widens to DECIMAL/HUGEINT before multiplying
-    (the q_anova overflow lesson, ADVICE r4); NULL when every block is
+    (the overflow lesson of ADVICE r4); NULL when every block is
     all-ties (C = 0).
 
     Scale: one (user, type) groupBy, then ranking PARTITIONED BY user —
@@ -2074,97 +1182,6 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         (k - 1).cast("long").alias("dof"),
         F.when(F.col("tie3").cast("double") < denom3, F.round(q, 6)).alias("q_stat"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Cochran's Q test (k paired binary treatments, round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_cochran_q",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH obs AS (
-  SELECT user_id, event_type,
-         CAST(max(CASE WHEN value >= 100 THEN 1 ELSE 0 END) AS BIGINT) AS resp
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-), dense AS (
-  SELECT u.user_id, t.event_type, coalesce(o.resp, 0) AS resp
-  FROM (SELECT DISTINCT user_id FROM obs) u
-  CROSS JOIN (SELECT DISTINCT event_type FROM obs) t
-  LEFT JOIN obs o ON o.user_id = u.user_id AND o.event_type = t.event_type
-), gj AS (
-  SELECT event_type, CAST(sum(resp) AS BIGINT) AS g FROM dense GROUP BY event_type
-), li AS (
-  SELECT user_id, CAST(sum(resp) AS BIGINT) AS l FROM dense GROUP BY user_id
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(CAST(g AS HUGEINT) * g) AS HUGEINT) AS gsq,
-         CAST(sum(g) AS HUGEINT) AS big_n
-  FROM gj
-), rows_ AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_blocks,
-         CAST(sum(CAST(l AS HUGEINT) * l) AS HUGEINT) AS lsq
-  FROM li
-)
-SELECT n_blocks, k, CAST(k - 1 AS BIGINT) AS dof,
-       CASE WHEN k * big_n - lsq > 0 THEN
-         round((k - 1) * CAST(k * gsq - big_n * big_n AS DOUBLE)
-               / CAST(k * big_n - lsq AS DOUBLE), 6)
-       END AS q_stat
-FROM tot, rows_
-""",
-)
-def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran's Q over k PAIRED binary treatments: did user i ever record
-    a high-value (≥ $100) event of type j? — the k-treatment extension of
-    q_mcnemar (2 treatments) and the binary counterpart of q_friedman
-    (SURVEY §2.3 statistical extensions). Blocks are densified (a user
-    with no events of a type responds 0 — absence IS the negative
-    response), column totals G_j, row totals L_i and the grand total N
-    stay exact integers, and Q = (k−1)(kΣG² − N²)/(kN − ΣL²) assembles
-    through one shared IEEE tree. Squares widen to HUGEINT/decimal before
-    multiplying (the q_anova lesson); NULL when every block responds
-    identically under all treatments (denominator 0).
-
-    Scale: one (user, type) groupBy; the densify cross join is
-    |users| × k with k a handful of treatments — a broadcast of the k-row
-    type list against the user table, then two partial-agg shuffles."""
-    obs = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .groupBy("user_id", "event_type")
-        .agg(F.max(F.when(F.col("value") >= 100, 1).otherwise(0)).alias("resp"))
-    )
-    users = obs.select("user_id").distinct()
-    types = obs.select("event_type").distinct()
-    dense = (
-        users.crossJoin(F.broadcast(types))
-        .join(obs, ["user_id", "event_type"], "left")
-        .select("user_id", "event_type", F.coalesce("resp", F.lit(0)).alias("resp"))
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    gj = dense.groupBy("event_type").agg(F.sum("resp").alias("g"))
-    li = dense.groupBy("user_id").agg(F.sum("resp").alias("l"))
-    tot = gj.agg(
-        F.count("*").alias("k"),
-        F.sum(dec(F.col("g")) * F.col("g")).alias("gsq"),
-        F.sum("g").cast("decimal(38,0)").alias("big_n"),
-    )
-    rows_ = li.agg(
-        F.count("*").alias("n_blocks"),
-        F.sum(dec(F.col("l")) * F.col("l")).alias("lsq"),
-    )
-    j = rows_.crossJoin(F.broadcast(tot))
-    k, big_n, gsq, lsq = F.col("k"), F.col("big_n"), F.col("gsq"), F.col("lsq")
-    denom = k * big_n - lsq
-    q = (k - 1) * (k * gsq - big_n * big_n).cast("double") / denom.cast("double")
-    return j.select(
-        "n_blocks",
-        "k",
-        (k - 1).cast("long").alias("dof"),
-        F.when(denom > 0, F.round(q, 6)).alias("q_stat"),
     )
 
 
@@ -2259,102 +1276,6 @@ def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n1").cast("double") * F.col("n2")),
             6,
         ).alias("cliffs_delta"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Bartlett's test for homogeneity of variances (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_bartlett",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type AS grp, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-), g AS (
-  SELECT grp,
-         CAST(count(*) AS BIGINT)   AS n_g,
-         CAST(sum(c) AS BIGINT)     AS s_g,
-         CAST(sum(c * c) AS BIGINT) AS ss_g
-  FROM s GROUP BY grp
-), per AS (
-  SELECT n_g,
-         CAST(CAST(n_g AS HUGEINT) * ss_g - CAST(s_g AS HUGEINT) * s_g AS DOUBLE)
-           / (CAST(n_g AS DOUBLE) * (n_g - 1)) AS var_g
-  FROM g WHERE n_g > 1
-), ok AS (SELECT * FROM per WHERE var_g > 0),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(n_g) AS BIGINT) AS n,
-         sum((n_g - 1) * var_g)   AS pooled_num,
-         sum((n_g - 1) * ln(var_g)) AS sum_ln,
-         sum(1.0 / (n_g - 1))     AS sum_inv
-  FROM ok
-)
-SELECT n, k, CAST(k - 1 AS BIGINT) AS dof,
-       CASE WHEN k > 1 THEN
-         round(((n - k) * ln(pooled_num / (n - k)) - sum_ln)
-               / (1.0 + (sum_inv - 1.0 / (n - k)) / (3.0 * (k - 1))), 6)
-       END AS bartlett_t
-FROM agg
-""",
-)
-def q_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartlett's test: are the k event types' value variances equal —
-    the parametric (normality-assuming) counterpart of q_levene's
-    Brown-Forsythe, closing the variance-homogeneity pair every ANOVA
-    pre-check runs (SURVEY §2.3 statistical extensions). Per-group
-    moments are exact integer cents; each variance numerator
-    n·Σc² − (Σc)² widens to 128-bit before ONE double conversion (the
-    q_anova lesson), then T = ((N−k)·ln(s_p²) − Σ(n_g−1)·ln(s_g²)) / C
-    with the Bartlett correction C = 1 + (Σ1/(n_g−1) − 1/(N−k))/(3(k−1))
-    assembles through the identical IEEE tree (ln on identical doubles —
-    the q_naive_bayes convention; k=5 terms summed before a 6-dp round).
-    Degenerate groups (n=1 or zero variance) are excluded from k, and
-    NULL is returned when fewer than two groups survive.
-
-    Scale: one partial/final shuffle on event_type; everything after is
-    the k-row statistic assembly."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("event_type").alias("grp"), _cents(F.col("value")).alias("c"))
-    )
-    g = s.groupBy("grp").agg(
-        F.count("*").alias("n_g"),
-        F.sum("c").alias("s_g"),
-        F.sum(F.col("c") * F.col("c")).alias("ss_g"),
-    )
-
-    def hi(c):
-        return c.cast(_HI)
-
-    per = g.filter(F.col("n_g") > 1).select(
-        "n_g",
-        (
-            (hi(F.col("n_g")) * hi(F.col("ss_g")) - hi(F.col("s_g")) * hi(F.col("s_g")))
-            .cast("double")
-            / (F.col("n_g").cast("double") * (F.col("n_g") - 1))
-        ).alias("var_g"),
-    )
-    ok = per.filter(F.col("var_g") > 0)
-    agg = ok.agg(
-        F.count("*").alias("k"),
-        F.sum("n_g").alias("n"),
-        F.sum((F.col("n_g") - 1) * F.col("var_g")).alias("pooled_num"),
-        F.sum((F.col("n_g") - 1) * F.log(F.col("var_g"))).alias("sum_ln"),
-        F.sum(1.0 / (F.col("n_g") - 1)).alias("sum_inv"),
-    )
-    n, k = F.col("n"), F.col("k")
-    t = (
-        (n - k) * F.log(F.col("pooled_num") / (n - k)) - F.col("sum_ln")
-    ) / (1.0 + (F.col("sum_inv") - 1.0 / (n - k)) / (3.0 * (k - 1)))
-    return agg.select(
-        "n",
-        "k",
-        (k - 1).cast("long").alias("dof"),
-        F.when(k > 1, F.round(t, 6)).alias("bartlett_t"),
     )
 
 
@@ -2482,16 +1403,16 @@ FROM v
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test on the daily revenue series — the
     nonparametric companion to q_ols_trend's parametric slope and the
-    temporal sibling of q_kendall_tau (SURVEY §2.3 statistical
+    temporal sibling of Kendall's tau (SURVEY §2.3 statistical
     extensions; THE standard is-this-metric-drifting test in
     environmental and ops monitoring). S = Σ_{i<j} sign(x_j − x_i) is an
     exact integer census over day pairs; the tie-corrected variance
     [n(n−1)(2n+5) − Σt(t−1)(2t+5)]/18 widens the tie term to 128-bit
-    (the q_anova lesson), and the continuity-corrected z assembles
+    (the ADVICE r4 lesson), and the continuity-corrected z assembles
     through one shared IEEE tree.
 
     Scale: the pair join runs on the METADATA-sized daily series (days²
-    pairs — the q_kendall_tau adjudication); the data-sized work is one
+    pairs); the data-sized work is one
     daily rollup. For per-key trend tests at 100 TB, the O(n log n)
     merge-sort S computation replaces the pair join per key."""
     e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
@@ -2597,7 +1518,7 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive autocorrelation (regimes), too many means oscillation — the
     independence check that should precede q_acf's parametric lags
     (SURVEY §2.3 statistical extensions). The lower median is picked by
-    integer rank position (the q_levene convention — no interpolation),
+    integer rank position (no interpolation),
     exactly-median days are dropped (the textbook rule), runs count from
     one lag window over the day order, and μ_R = 2n₁n₂/n + 1 with the
     Wald-Wolfowitz σ assemble from exact integers through one shared
@@ -2652,122 +1573,6 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (2.0 * n1 * n2 * (2.0 * n1 * n2 - nk) > 0),
             F.round((rr - mu) / F.sqrt(var), 6),
         ).alias("z_stat"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Partial correlation (controls for the day index, round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_partial_correlation",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS z,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
-         CAST(count(*) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-), m AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-         CAST(sum(z) AS HUGEINT) AS sz,
-         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-         CAST(sum(CAST(z AS HUGEINT) * z) AS HUGEINT) AS szz,
-         CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-         CAST(sum(CAST(x AS HUGEINT) * z) AS HUGEINT) AS sxz,
-         CAST(sum(CAST(y AS HUGEINT) * z) AS HUGEINT) AS syz
-  FROM daily
-), r AS (
-  SELECT CAST(n AS BIGINT) AS n,
-         CAST(n * sxy - sx * sy AS DOUBLE)
-           / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-              * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) AS rxy,
-         CAST(n * sxz - sx * sz AS DOUBLE)
-           / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-              * sqrt(CAST(n * szz - sz * sz AS DOUBLE))) AS rxz,
-         CAST(n * syz - sy * sz AS DOUBLE)
-           / (sqrt(CAST(n * syy - sy * sy AS DOUBLE))
-              * sqrt(CAST(n * szz - sz * sz AS DOUBLE))) AS ryz
-  FROM m
-  WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        AND n * szz - sz * sz > 0
-)
-SELECT n, round(rxy, 6) AS r_xy, round(rxz, 6) AS r_xz, round(ryz, 6) AS r_yz,
-       CASE WHEN (1.0 - rxz * rxz) * (1.0 - ryz * ryz) > 0 THEN
-         round((rxy - rxz * ryz)
-               / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)), 6)
-       END AS r_xy_given_z
-FROM r
-""",
-)
-def q_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial correlation of daily revenue (x) and daily event count (y)
-    CONTROLLING for the day index (z): r_xy·z = (r_xy − r_xz·r_yz) /
-    √((1−r_xz²)(1−r_yz²)) — the detrended association, answering "do
-    revenue and activity co-move beyond their shared time trend?"
-    (SURVEY §2.3 statistical extensions; completes the correlation family
-    beside Pearson, Spearman, Kendall, cross-correlation). All nine
-    moments are exact 128-bit integer sums from ONE aggregation; the
-    three first-order correlations and the partial assemble through a
-    shared IEEE tree (sqrt correctly rounded), NULL when any variance is
-    degenerate or either control correlation is ±1.
-
-    Scale: one data-sized daily rollup, one metadata moment row —
-    closed-form like q_multiple_regression (whose residualized-x-on-z
-    regression this is equivalent to)."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("z")
-    ).agg(
-        F.sum(_cents(F.col("value"))).alias("x"),
-        F.count("*").alias("y"),
-    )
-
-    def hi(c):
-        return c.cast(_HI)
-
-    m = daily.agg(
-        hi(F.count("*")).alias("n"),
-        hi(F.sum("x")).alias("sx"),
-        hi(F.sum("y")).alias("sy"),
-        hi(F.sum("z")).alias("sz"),
-        hi(F.sum(hi(F.col("x")) * F.col("x"))).alias("sxx"),
-        hi(F.sum(hi(F.col("y")) * F.col("y"))).alias("syy"),
-        hi(F.sum(hi(F.col("z")) * F.col("z"))).alias("szz"),
-        hi(F.sum(hi(F.col("x")) * F.col("y"))).alias("sxy"),
-        hi(F.sum(hi(F.col("x")) * F.col("z"))).alias("sxz"),
-        hi(F.sum(hi(F.col("y")) * F.col("z"))).alias("syz"),
-    )
-    n = F.col("n")
-    vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    vz = n * F.col("szz") - F.col("sz") * F.col("sz")
-
-    def corr(cov, va, vb):
-        return cov.cast("double") / (
-            F.sqrt(va.cast("double")) * F.sqrt(vb.cast("double"))
-        )
-
-    r = m.filter((vx > 0) & (vy > 0) & (vz > 0)).select(
-        n.cast("long").alias("n"),
-        corr(n * F.col("sxy") - F.col("sx") * F.col("sy"), vx, vy).alias("rxy"),
-        corr(n * F.col("sxz") - F.col("sx") * F.col("sz"), vx, vz).alias("rxz"),
-        corr(n * F.col("syz") - F.col("sy") * F.col("sz"), vy, vz).alias("ryz"),
-    )
-    rxy, rxz, ryz = F.col("rxy"), F.col("rxz"), F.col("ryz")
-    den = (1.0 - rxz * rxz) * (1.0 - ryz * ryz)
-    return r.select(
-        "n",
-        F.round(rxy, 6).alias("r_xy"),
-        F.round(rxz, 6).alias("r_xz"),
-        F.round(ryz, 6).alias("r_yz"),
-        F.when(den > 0, F.round((rxy - rxz * ryz) / F.sqrt(den), 6)).alias(
-            "r_xy_given_z"
-        ),
     )
 
 
@@ -2829,7 +1634,7 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σvar_item/var_total), THE metric survey and composite-score pipelines
     report before averaging item scores (SURVEY §2.3 statistical
     extensions). Item and total variances derive from exact integer cents
-    moments, each n·Σx² − (Σx)² widened to 128-bit (the q_anova lesson).
+    moments, each n·Σx² − (Σx)² widened to 128-bit (the ADVICE r4 lesson).
     Every item has the same n (complete blocks), so Σvar_item is one exact
     128-bit sum of the k numerators divided once by n·(n−1): at ~3e9 (sf0.1)
     one ulp shows at 6 dp, and a double sum of the k variances moves with
@@ -2929,7 +1734,7 @@ FROM pairs
 def q_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goodman-Kruskal gamma between ordinal value bands and time-of-day
     bands — the ordinal-association measure that IGNORES ties (unlike
-    q_kendall_tau's tau-b), the right choice for coarse ordered
+    Kendall's tau-b), the right choice for coarse ordered
     categories (SURVEY §2.3 statistical extensions; completes the
     ordinal family). Concordant/discordant pair counts come from the
     k×m CONTINGENCY-CELL cross product, not a row-pair join: each cell
@@ -2987,629 +1792,6 @@ def q_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
             conc + disc > 0,
             F.round((conc - disc).cast("double") / (conc + disc).cast("double"), 6),
         ).alias("gamma"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Intraclass correlation ICC(1,1) (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_icc",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT user_id AS g, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-), grp AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS n_g, CAST(sum(c) AS BIGINT) AS s_g
-  FROM s GROUP BY g HAVING count(*) >= 2
-), kept AS (SELECT s.* FROM s JOIN grp USING (g)),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS HUGEINT) AS st,
-         CAST(sum(CAST(c AS HUGEINT) * c) AS HUGEINT) AS sst
-  FROM kept
-), gq AS (
-  -- quotient/remainder split (the q_anova discipline): the integer parts
-  -- sum exactly; the k remainder doubles are each < 1, so engine addition
-  -- order cannot move the 6-dp round
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum((CAST(s_g AS HUGEINT) * s_g) // n_g) AS HUGEINT) AS gq_int,
-         sum(CAST((CAST(s_g AS HUGEINT) * s_g) % n_g AS DOUBLE)
-             / CAST(n_g AS DOUBLE)) AS gq_fr,
-         CAST(sum(CAST(n_g AS HUGEINT) * n_g) AS HUGEINT) AS sum_n2
-  FROM grp
-), ms AS (
-  SELECT tot.n, gq.k,
-         (CAST(gq.gq_int AS DOUBLE) + gq.gq_fr
-          - CAST(CAST(tot.st AS HUGEINT) * tot.st AS DOUBLE) / tot.n)
-           / (gq.k - 1) AS msb,
-         (CAST(tot.sst AS DOUBLE) - (CAST(gq.gq_int AS DOUBLE) + gq.gq_fr))
-           / (tot.n - gq.k) AS msw,
-         (tot.n - CAST(gq.sum_n2 AS DOUBLE) / tot.n) / (gq.k - 1) AS k0
-  FROM tot, gq
-  WHERE gq.k > 1 AND tot.n > gq.k
-)
-SELECT n, k, round(k0, 6) AS k0, round(msb, 6) AS ms_between,
-       round(msw, 6) AS ms_within,
-       CASE WHEN msb + (k0 - 1) * msw > 0 THEN
-         round((msb - msw) / (msb + (k0 - 1) * msw), 6)
-       END AS icc1
-FROM ms
-""",
-)
-def q_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intraclass correlation ICC(1,1), one-way random effects: how much
-    of event-value variance is BETWEEN users vs within them — the
-    repeatability / rater-agreement statistic (and the design-effect
-    input for clustered experiment power; SURVEY §2.3 statistical
-    extensions, reusing q_anova's MS machinery with users as the random
-    factor). Groups need ≥ 2 measurements; unequal group sizes use the
-    standard k₀ = (N − Σn²/N)/(k−1) correction. Between/within mean
-    squares assemble from exact integer cents moments (per-group squared
-    sums widen to 128-bit before ONE double division each — the same
-    quotient discipline as q_anova), and ICC = (MSB − MSW)/(MSB +
-    (k₀−1)·MSW) is one shared IEEE tree.
-
-    Scale: one user-keyed partial/final agg for group moments, one
-    global moment row — no sorts, no windows; user count only affects
-    the k-row group table (itself reduced to one row)."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("user_id").alias("g"), _cents(F.col("value")).alias("c"))
-    )
-    grp = (
-        s.groupBy("g")
-        .agg(F.count("*").alias("n_g"), F.sum("c").alias("s_g"))
-        .filter(F.col("n_g") >= 2)
-    )
-    kept = s.join(grp.select("g"), "g", "left_semi")
-
-    def hi(c):
-        return c.cast(_HI)
-
-    tot = kept.agg(
-        F.count("*").alias("n"),
-        hi(F.sum("c")).alias("st"),
-        hi(F.sum(hi(F.col("c")) * F.col("c"))).alias("sst"),
-    )
-    # quotient/remainder split (the q_anova discipline): exact integer parts
-    # + k sub-1 remainder doubles, so addition order cannot move the round
-    gq = grp.agg(
-        F.count("*").alias("k"),
-        hi(
-            F.sum(
-                F.expr("(cast(s_g as decimal(38,0)) * s_g) div n_g")
-            )
-        ).alias("gq_int"),
-        F.sum(
-            F.expr(
-                "cast((cast(s_g as decimal(38,0)) * s_g) % n_g as double)"
-            )
-            / F.col("n_g").cast("double")
-        ).alias("gq_fr"),
-        hi(F.sum(hi(F.col("n_g")) * F.col("n_g"))).alias("sum_n2"),
-    )
-    j = tot.crossJoin(F.broadcast(gq))
-    n, k = F.col("n"), F.col("k")
-    sum_gq = F.col("gq_int").cast("double") + F.col("gq_fr")
-    msb = (
-        sum_gq
-        - (F.col("st") * F.col("st")).cast("double") / n
-    ) / (k - 1)
-    msw = (F.col("sst").cast("double") - sum_gq) / (n - k)
-    k0 = (n - F.col("sum_n2").cast("double") / n) / (k - 1)
-    ms = j.filter((k > 1) & (n > k)).select(
-        "n", "k",
-        k0.alias("k0_"), msb.alias("msb_"), msw.alias("msw_"),
-    )
-    icc = (F.col("msb_") - F.col("msw_")) / (
-        F.col("msb_") + (F.col("k0_") - 1) * F.col("msw_")
-    )
-    return ms.select(
-        "n",
-        "k",
-        F.round(F.col("k0_"), 6).alias("k0"),
-        F.round(F.col("msb_"), 6).alias("ms_between"),
-        F.round(F.col("msw_"), 6).alias("ms_within"),
-        F.when(
-            F.col("msb_") + (F.col("k0_") - 1) * F.col("msw_") > 0,
-            F.round(icc, 6),
-        ).alias("icc1"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Sequential probability ratio test (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_sprt",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH ordered AS (
-  SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-         row_number() OVER (ORDER BY ts, event_id) AS t
-  FROM events
-), llr AS (
-  SELECT t,
-         CAST(sum(y) OVER (ORDER BY t) AS BIGINT) AS y_cum,
-         CAST(t AS BIGINT) AS n_seen
-  FROM ordered
-), scored AS (
-  SELECT t,
-         y_cum * ln(2.0) + (n_seen - y_cum) * ln(0.8 / 0.9) AS s
-  FROM llr
-), bounds AS (
-  SELECT ln(0.05 / 0.95) AS lo, ln(0.95 / 0.05) AS hi
-), crossings AS (
-  SELECT min(CASE WHEN s >= hi THEN t END) AS first_reject,
-         min(CASE WHEN s <= lo THEN t END) AS first_accept,
-         CAST(max(t) AS BIGINT) AS n
-  FROM scored, bounds
-)
-SELECT n, first_accept, first_reject,
-       CASE
-         WHEN first_accept IS NOT NULL
-              AND (first_reject IS NULL OR first_accept < first_reject)
-           THEN 'accept_h0'
-         WHEN first_reject IS NOT NULL
-              AND (first_accept IS NULL OR first_reject <= first_accept)
-           THEN 'reject_h0'
-         ELSE 'continue'
-       END AS decision
-FROM crossings
-""",
-)
-def q_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald's sequential probability ratio test: stream events in (ts,
-    event_id) order and test H₀: purchase rate = 0.10 against H₁: rate
-    = 0.20 with α = β = 0.05, stopping at the FIRST log-likelihood-ratio
-    boundary crossing — the always-valid sequential monitor that replaces
-    fixed-horizon q_ab_test peeking (SURVEY §2.3 statistical extensions).
-    The LLR after t events is y·ln(p₁/p₀) + (t−y)·ln((1−p₁)/(1−p₀)) with
-    y the cumulative purchase count — exact integers times two shared
-    libm constants, so every partial sum is the identical IEEE product
-    tree in both engines and the crossing indexes are engine-exact.
-
-    Scale: one global-order cumulative window (at 100 TB: range-partition
-    by time + per-partition offsets, the distributed-ranking pattern);
-    the crossing scan is a single min-aggregate over the same pass. The
-    sequential decision is also the natural streaming shape —
-    applyInPandasWithState carrying (t, y) per experiment key."""
-    ordered = table(spark, sf_dir, "events").select(
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        F.row_number().over(Window.orderBy("ts", "event_id")).alias("t"),
-    )
-    w = Window.orderBy("t")
-    llr = ordered.select(
-        "t",
-        F.sum("y").over(w).alias("y_cum"),
-        F.col("t").cast("long").alias("n_seen"),
-    )
-    a = math.log(2.0)
-    b = math.log(0.8 / 0.9)
-    lo = math.log(0.05 / 0.95)
-    hi_b = math.log(0.95 / 0.05)
-    scored = llr.select(
-        "t", (F.col("y_cum") * a + (F.col("n_seen") - F.col("y_cum")) * b).alias("s")
-    )
-    crossings = scored.agg(
-        F.min(F.when(F.col("s") >= hi_b, F.col("t"))).alias("first_reject"),
-        F.min(F.when(F.col("s") <= lo, F.col("t"))).alias("first_accept"),
-        F.max("t").cast("long").alias("n"),
-    )
-    fa, fr = F.col("first_accept"), F.col("first_reject")
-    return crossings.select(
-        "n",
-        "first_accept",
-        "first_reject",
-        F.when(fa.isNotNull() & (fr.isNull() | (fa < fr)), "accept_h0")
-        .when(fr.isNotNull() & (fa.isNull() | (fr <= fa)), "reject_h0")
-        .otherwise("continue")
-        .alias("decision"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Mood's median test (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_mood_median",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type AS grp, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-), med AS (
-  SELECT c AS m FROM (
-    SELECT c, row_number() OVER (ORDER BY c) AS rn, count(*) OVER () AS n
-    FROM s
-  ) WHERE rn = (n + 1) // 2
-), cls AS (
-  SELECT grp,
-         CAST(sum(CASE WHEN c > m THEN 1 ELSE 0 END) AS BIGINT) AS above,
-         CAST(sum(CASE WHEN c < m THEN 1 ELSE 0 END) AS BIGINT) AS below
-  FROM s, med GROUP BY grp
-), tot AS (
-  SELECT CAST(sum(above) AS BIGINT) AS ta,
-         CAST(sum(below) AS BIGINT) AS tb,
-         CAST(sum(above + below) AS BIGINT) AS n,
-         CAST(count(*) AS BIGINT) AS k
-  FROM cls
-)
-SELECT max(n) AS n, max(k) AS k, CAST(max(k) - 1 AS BIGINT) AS dof,
-       round(sum(
-         CASE WHEN ta > 0 THEN
-           (n * above - (above + below) * ta)
-             * CAST(n * above - (above + below) * ta AS DOUBLE)
-             / (CAST(n AS DOUBLE) * (above + below) * ta) ELSE 0.0 END
-         + CASE WHEN tb > 0 THEN
-           (n * below - (above + below) * tb)
-             * CAST(n * below - (above + below) * tb AS DOUBLE)
-             / (CAST(n AS DOUBLE) * (above + below) * tb) ELSE 0.0 END), 6)
-         AS chi2
-FROM cls, tot
-""",
-)
-def q_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mood's median test: do the k event types share a common median —
-    the coarsest, most outlier-proof k-sample location test (it reduces
-    each observation to above/below the GRAND median and runs the
-    χ² independence machinery; SURVEY §2.3 statistical extensions,
-    completing the location-test ladder under Kruskal-Wallis and ANOVA).
-    The grand lower median is picked by integer rank position (the
-    q_levene convention), exactly-median values are dropped (textbook),
-    and the χ² over the k×2 above/below table reuses q_chi_square's
-    exact-integer-numerator IEEE tree.
-
-    Scale: one global rank for the median (at 100 TB: a fixed-point
-    quantile sketch — the median itself is the only global object), one
-    event_type groupBy, then a k-row assembly."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("event_type").alias("grp"), _cents(F.col("value")).alias("c"))
-    )
-    r = s.select(
-        "c",
-        F.row_number().over(Window.orderBy("c")).alias("rn"),
-        F.count("*").over(Window.partitionBy()).alias("n"),
-    )
-    med = r.filter(F.col("rn") == F.expr("(n + 1) div 2")).select(
-        F.col("c").alias("m")
-    )
-    cls = (
-        s.crossJoin(F.broadcast(med))
-        .groupBy("grp")
-        .agg(
-            F.sum(F.when(F.col("c") > F.col("m"), 1).otherwise(0)).alias("above"),
-            F.sum(F.when(F.col("c") < F.col("m"), 1).otherwise(0)).alias("below"),
-        )
-    )
-    tot = cls.agg(
-        F.sum("above").alias("ta"),
-        F.sum("below").alias("tb"),
-        F.sum(F.col("above") + F.col("below")).alias("n"),
-        F.count("*").alias("k"),
-    )
-    cells = cls.crossJoin(F.broadcast(tot))
-    n, ta, tb = F.col("n"), F.col("ta"), F.col("tb")
-    ab = F.col("above") + F.col("below")
-
-    def term(obs, ct):
-        num = n * obs - ab * ct
-        return F.when(
-            ct > 0,
-            num * num.cast("double") / (n.cast("double") * ab * ct),
-        ).otherwise(F.lit(0.0))
-
-    return cells.agg(
-        F.max("n").alias("n"),
-        F.max("k").alias("k"),
-        (F.max("k") - 1).cast("long").alias("dof"),
-        F.round(
-            F.sum(term(F.col("above"), ta) + term(F.col("below"), tb)), 6
-        ).alias("chi2"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Cochran-Armitage trend test (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_cochran_armitage",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH b AS (
-  SELECT CAST(CASE WHEN value < 50 THEN 0 WHEN value < 150 THEN 1
-              WHEN value < 300 THEN 2 ELSE 3 END AS BIGINT) AS dose,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-), g AS (
-  SELECT dose, CAST(count(*) AS BIGINT) AS n_i, CAST(sum(y) AS BIGINT) AS r_i
-  FROM b GROUP BY dose
-), tot AS (
-  SELECT CAST(sum(n_i) AS HUGEINT) AS n, CAST(sum(r_i) AS HUGEINT) AS r,
-         CAST(sum(CAST(n_i AS HUGEINT) * dose) AS HUGEINT) AS snd,
-         CAST(sum(CAST(n_i AS HUGEINT) * dose * dose) AS HUGEINT) AS sndd,
-         CAST(sum(CAST(r_i AS HUGEINT) * dose) AS HUGEINT) AS srd
-  FROM g
-), v AS (
-  SELECT CAST(n AS BIGINT) AS n_obs,
-         CAST(n * srd - r * snd AS HUGEINT) AS tnum,
-         CAST(r AS HUGEINT) AS r, n, snd, sndd
-  FROM tot
-)
-SELECT n_obs, CAST(tnum AS BIGINT) AS t_num,
-       CASE WHEN r > 0 AND r < n AND n * sndd - snd * snd > 0 THEN
-         round(CAST(tnum AS DOUBLE)
-               / sqrt(CAST(r * (n - r) AS DOUBLE)
-                      * CAST(n * sndd - snd * snd AS DOUBLE) / n), 6)
-       END AS z_stat
-FROM v
-""",
-)
-def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Armitage trend test: does purchase propensity rise
-    MONOTONICALLY across ordered value bands (dose levels 0..3) — the
-    ordered-alternative refinement of q_chi_square, the standard
-    dose-response / tiering analysis (SURVEY §2.3 statistical
-    extensions). With scores d_i, the statistic is T = Σr_i·d_i −
-    R·Σn_i·d_i/N, z = T/√(R(N−R)/N · (Σn_i·d_i² − (Σn_i·d_i)²/N) / N)
-    — every census (N, R, Σnd, Σnd², Σrd) is an exact 128-bit integer
-    from ONE groupBy, T's numerator is computed as the exact integer
-    N·Σrd − R·Σnd, and z is one shared IEEE tree. NULL when responses
-    are degenerate (all or none) or the score variance is 0.
-
-    Scale: one partial/final agg on the 4-row dose table; nothing else
-    touches data size."""
-    b = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            F.when(F.col("value") < 50, 0)
-            .when(F.col("value") < 150, 1)
-            .when(F.col("value") < 300, 2)
-            .otherwise(3)
-            .cast("long")
-            .alias("dose"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("y"),
-        )
-    )
-    g = b.groupBy("dose").agg(
-        F.count("*").alias("n_i"), F.sum("y").alias("r_i")
-    )
-
-    def hi(c):
-        return c.cast(_HI)
-
-    tot = g.agg(
-        hi(F.sum("n_i")).alias("n"),
-        hi(F.sum("r_i")).alias("r"),
-        hi(F.sum(hi(F.col("n_i")) * F.col("dose"))).alias("snd"),
-        hi(F.sum(hi(F.col("n_i")) * F.col("dose") * F.col("dose"))).alias("sndd"),
-        hi(F.sum(hi(F.col("r_i")) * F.col("dose"))).alias("srd"),
-    )
-    n, r = F.col("n"), F.col("r")
-    tnum = n * F.col("srd") - r * F.col("snd")
-    scorevar = n * F.col("sndd") - F.col("snd") * F.col("snd")
-    z = tnum.cast("double") / F.sqrt(
-        (r * (n - r)).cast("double") * scorevar.cast("double") / n
-    )
-    return tot.select(
-        n.cast("long").alias("n_obs"),
-        tnum.cast("long").alias("t_num"),
-        F.when((r > 0) & (r < n) & (scorevar > 0), F.round(z, 6)).alias("z_stat"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Tukey HSD post-hoc pairwise comparisons (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_tukey_hsd",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_type AS grp, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-), g AS (
-  SELECT grp,
-         CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(c) AS BIGINT) AS s_g,
-         CAST(sum(c * c) AS BIGINT) AS ss_g
-  FROM s GROUP BY grp
-), msw AS (
-  -- pooled within-group variance via the quotient/remainder split
-  SELECT CAST(sum(n_g) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k,
-         (CAST(sum(ss_g) AS DOUBLE)
-          - (CAST(sum((CAST(s_g AS HUGEINT) * s_g) // n_g) AS DOUBLE)
-             + sum(CAST((CAST(s_g AS HUGEINT) * s_g) % n_g AS DOUBLE)
-                   / CAST(n_g AS DOUBLE))))
-           / (sum(n_g) - count(*)) AS ms_within
-  FROM g
-)
-SELECT a.grp AS grp_a, b.grp AS grp_b,
-       round((a.s_g / CAST(a.n_g AS DOUBLE)
-              - b.s_g / CAST(b.n_g AS DOUBLE)) / 100.0, 6) AS mean_diff,
-       CASE WHEN msw.ms_within > 0 THEN
-         round((a.s_g / CAST(a.n_g AS DOUBLE) - b.s_g / CAST(b.n_g AS DOUBLE))
-               / sqrt(msw.ms_within / 2.0
-                      * (1.0 / a.n_g + 1.0 / b.n_g)), 6)
-       END AS q_stat
-FROM g a JOIN g b ON a.grp < b.grp, msw
-""",
-)
-def q_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey HSD post-hoc comparisons: after q_anova rejects equal means,
-    WHICH pairs of event types differ — the studentized-range q for every
-    unordered pair, with the Tukey-Kramer unequal-n correction
-    q = (m_a − m_b)/√(MSW/2·(1/n_a + 1/n_b)) (SURVEY §2.3 statistical
-    extensions; the pairwise readout every ANOVA report ends with).
-    Group moments are exact integer cents; the pooled MSW takes the
-    quotient/remainder split (the q_anova/q_icc discipline) so k group
-    remainders cannot move the 6-dp round; each pair's mean difference
-    and q assemble through one shared IEEE tree. Pairs are oriented
-    grp_a < grp_b so each comparison appears once.
-
-    Scale: one event_type groupBy; the pair join is k²/2 metadata rows
-    against a 1-row MSW — nothing else touches data size."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("event_type").alias("grp"), _cents(F.col("value")).alias("c"))
-    )
-    g = s.groupBy("grp").agg(
-        F.count("*").alias("n_g"),
-        F.sum("c").alias("s_g"),
-        F.sum(F.col("c") * F.col("c")).alias("ss_g"),
-    )
-    msw = g.agg(
-        F.sum("n_g").alias("n"),
-        F.count("*").alias("k"),
-        (
-            (
-                F.sum("ss_g").cast("double")
-                - (
-                    F.sum(
-                        F.expr("(cast(s_g as decimal(38,0)) * s_g) div n_g")
-                    ).cast("double")
-                    + F.sum(
-                        F.expr(
-                            "cast((cast(s_g as decimal(38,0)) * s_g) % n_g as double)"
-                        )
-                        / F.col("n_g").cast("double")
-                    )
-                )
-            )
-            / (F.sum("n_g") - F.count("*"))
-        ).alias("ms_within"),
-    )
-    a, b = g.alias("a"), g.alias("b")
-    pairs = a.join(b, F.col("a.grp") < F.col("b.grp")).crossJoin(F.broadcast(msw))
-    mean_a = F.col("a.s_g") / F.col("a.n_g").cast("double")
-    mean_b = F.col("b.s_g") / F.col("b.n_g").cast("double")
-    qs = (mean_a - mean_b) / F.sqrt(
-        F.col("ms_within") / 2.0 * (1.0 / F.col("a.n_g") + 1.0 / F.col("b.n_g"))
-    )
-    return pairs.select(
-        F.col("a.grp").alias("grp_a"),
-        F.col("b.grp").alias("grp_b"),
-        F.round((mean_a - mean_b) / 100.0, 6).alias("mean_diff"),
-        F.when(F.col("ms_within") > 0, F.round(qs, 6)).alias("q_stat"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Ljung-Box portmanteau autocorrelation test (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_ljung_box",
-    driver=False,  # §2.3 statistical extension (round 5) — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-), idx AS (
-  SELECT y, row_number() OVER (ORDER BY d) AS t,
-         CAST(count(*) OVER () AS BIGINT) AS n,
-         CAST(sum(y) OVER () AS BIGINT) AS s,
-         CAST(sum(CAST(y AS HUGEINT) * y) OVER () AS HUGEINT) AS ss
-  FROM daily
-), lags AS (SELECT unnest(range(1, 9)) AS k),
-pairs AS (
-  SELECT l.k, a.n, a.s, a.ss,
-         CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(CAST(a.y AS HUGEINT) * b.y) AS HUGEINT) AS sxy,
-         CAST(sum(a.y) AS BIGINT) AS sh,
-         CAST(sum(b.y) AS BIGINT) AS st
-  FROM idx a JOIN lags l ON a.t > l.k
-  JOIN idx b ON b.t = a.t - l.k
-  GROUP BY l.k, a.n, a.s, a.ss
-), rk AS (
-  SELECT k, n,
-         (CAST(sxy AS DOUBLE)
-          - (CAST(s AS DOUBLE) / n) * (sh + st)
-          + m * (CAST(s AS DOUBLE) / n) * (CAST(s AS DOUBLE) / n))
-           / (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * s / n) AS r
-  FROM pairs
-  WHERE CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * s / n > 0
-)
-SELECT max(n) AS n, CAST(count(*) AS BIGINT) AS n_lags,
-       round(max(n) * (max(n) + 2.0) * sum(r * r / (n - k)), 6) AS lb_q
-FROM rk
-""",
-)
-def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ljung-Box portmanteau test: is the daily revenue series white
-    noise, jointly across lags 1..8 — Q = n(n+2)·Σ r_k²/(n−k), the
-    standard residual-diagnostics statistic after any forecast fit
-    (SURVEY §2.3 statistical extensions; the JOINT version of q_acf's
-    per-lag readouts). Each autocorrelation uses the time-series
-    definition (fixed global mean, total-variance denominator — not
-    pairwise Pearson): its numerator expands to
-    Σy_t·y_{t−k} − ȳ(S_head+S_tail) + m·ȳ² with every sum an exact
-    64/128-bit integer, so r_k is one shared IEEE tree and Q sums 8
-    such terms before the 6-dp round.
-
-    Scale: one data-sized daily rollup; the lag joins run on the
-    metadata-sized day series × 8 lags (the q_acf adjudication)."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("long")
-        .alias("d")
-    ).agg(F.sum(_cents(F.col("value"))).alias("y"))
-
-    def hi(c):
-        return c.cast(_HI)
-
-    wall = Window.partitionBy()
-    idx = daily.select(
-        "y",
-        F.row_number().over(Window.orderBy("d")).alias("t"),
-        F.count("*").over(wall).alias("n"),
-        F.sum("y").over(wall).alias("s"),
-        F.sum(hi(F.col("y")) * F.col("y")).over(wall).alias("ss"),
-    )
-    lags = spark.range(1, 9).select(F.col("id").alias("k"))
-    a = idx.alias("a")
-    b = idx.select(F.col("t").alias("bt"), F.col("y").alias("by")).alias("b")
-    pairs = (
-        a.crossJoin(F.broadcast(lags))
-        .filter(F.col("a.t") > F.col("k"))
-        .join(b, F.col("bt") == F.col("a.t") - F.col("k"))
-        .groupBy("k", "n", "s", "ss")
-        .agg(
-            F.count("*").alias("m"),
-            F.sum(hi(F.col("a.y")) * F.col("by")).alias("sxy"),
-            F.sum(F.col("a.y")).alias("sh"),
-            F.sum(F.col("by")).alias("st"),
-        )
-    )
-    n, s = F.col("n"), F.col("s")
-    ybar = s.cast("double") / n
-    denom = F.col("ss").cast("double") - s.cast("double") * s / n
-    r = (
-        F.col("sxy").cast("double")
-        - ybar * (F.col("sh") + F.col("st"))
-        + F.col("m") * ybar * ybar
-    ) / denom
-    rk = pairs.filter(denom > 0).select("k", "n", r.alias("r"))
-    return rk.agg(
-        F.max("n").alias("n"),
-        F.count("*").alias("n_lags"),
-        F.round(
-            F.max("n") * (F.max("n") + 2.0)
-            * F.sum(F.col("r") * F.col("r") / (F.col("n") - F.col("k"))),
-            6,
-        ).alias("lb_q"),
     )
 
 
@@ -3787,13 +1969,13 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Durbin-Levinson recursion UNROLLED to closed form — the AR-order
     selector read next to q_acf (a PACF cutoff at lag p says fit AR(p);
     SURVEY §2.3 statistical extensions, completing the ACF/Ljung-Box
-    family). The autocorrelations r₁..r₄ use the same exact-integer
-    fixed-mean censuses as q_ljung_box, and because Durbin-Levinson at
+    family). The autocorrelations r₁..r₄ use exact-integer fixed-mean
+    censuses, and because Durbin-Levinson at
     fixed depth is a rational function of the r_k, both engines evaluate
     the IDENTICAL expression tree — no iteration, hash-checkable.
     Guarded NULL where a recursion denominator degenerates.
 
-    Scale: identical to q_ljung_box — one daily rollup, metadata lag
+    Scale: one daily rollup, metadata lag
     joins, then pure scalar algebra on one row."""
     e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = e.groupBy(
@@ -3954,77 +2136,3 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mi_nats"),
     )
 
-
-# --------------------------------------------------------------------------
-# Overdispersion census (round 7, wave 4)
-# --------------------------------------------------------------------------
-@register(
-    "q_dispersion_index",
-    driver=False,  # §2.11 data-quality stats beside q_chi_square
-    oracle="""
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), mom AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(CAST(c AS HUGEINT) * c) AS BIGINT) AS ss
-  FROM daily GROUP BY event_type
-)
-SELECT event_type, n, s,
-       round(s * 1.0 / n, 6) AS mean_daily,
-       round((ss - CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT) * 1.0)
-             / (n - 1), 6) AS var_daily,
-       round(((ss - CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT) * 1.0)
-              / (n - 1)) / (s * 1.0 / n), 6) AS dispersion,
-       CAST(CASE WHEN CAST(ss - CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT)
-                           AS HUGEINT) * n * 100
-                      > 150 * CAST(s AS HUGEINT) * (n - 1)
-                 THEN 1 ELSE 0 END AS BIGINT) AS overdispersed
-FROM mom WHERE n > 1
-""",
-)
-def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dispersion index (variance/mean of daily counts) per event_type —
-    the Poisson-ness check for count data: ≈1 for a Poisson arrival
-    process, ≫1 (overdispersed) when traffic is bursty/contagious, the
-    precondition check before any Poisson-model alert threshold is
-    trusted (SURVEY §2.11 data-quality stats beside q_chi_square /
-    q_interarrival). Moments are exact integers with the q_anova quotient
-    split; the OVERDISPERSED FLAG (dispersion > 1.5) is decided by the
-    cross-multiplied 128-bit integer comparison (ss−s²divn)·n·100 >
-    150·s·(n−1) — a boundary fixture can't flip it on a double ulp
-    (auto-memory boolean-flag rule).
-
-    Scale: one (type, day) rollup + a k-row moment census — partial+final
-    all the way."""
-    hi = "decimal(38,0)"
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count("*").cast("long").alias("c"))
-    mom = daily.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("c").cast("long").alias("s"),
-        F.sum(F.col("c").cast(hi) * F.col("c")).cast("long").alias("ss"),
-    )
-    q_term = F.expr("cast((cast(s as decimal(38,0)) * s) div n as bigint)")
-    var_d = (F.col("ss") - q_term * 1.0) / (F.col("n") - 1)
-    flag_lhs = F.expr(
-        "(ss - cast((cast(s as decimal(38,0)) * s) div n as bigint))"
-    ).cast(hi) * F.col("n") * 100
-    flag_rhs = F.lit(150).cast(hi) * F.col("s") * (F.col("n") - 1)
-    return mom.filter(F.col("n") > 1).select(
-        "event_type",
-        "n",
-        "s",
-        F.round(F.col("s") * 1.0 / F.col("n"), 6).alias("mean_daily"),
-        F.round(var_d, 6).alias("var_daily"),
-        F.round(var_d / (F.col("s") * 1.0 / F.col("n")), 6).alias("dispersion"),
-        F.when(flag_lhs > flag_rhs, 1).otherwise(0).cast("long").alias(
-            "overdispersed"
-        ),
-    )

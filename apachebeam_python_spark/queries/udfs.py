@@ -156,7 +156,7 @@ def q_run_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_inference_stub",
-    driver=False,  # r7 rotation: UDF family keeps q_pandas_udf_scalar/q_udaf/q_udtf/q_grouped_map
+    driver=False,  # r7 rotation: UDF family keeps q_pandas_udf_scalar/q_udaf_weighted_avg/q_python_udtf/q_grouped_map_zscore
     # the stub model is deterministic arithmetic, so its predictions ARE
     # SQL-expressible: both sides accumulate in float64 and round to 6 dp,
     # burying the pairwise-vs-sequential summation ulp (upgraded from

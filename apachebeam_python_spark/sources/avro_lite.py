@@ -126,27 +126,6 @@ def _field_types(avro_schema: dict) -> list[tuple[str, str, bool]]:
     return out
 
 
-def _encode_rows(pdf: pd.DataFrame, fields: list[tuple[str, str, bool]]) -> bytes:
-    buf = bytearray()
-    cols = {name: pdf[name].tolist() for name, _, _ in fields}
-    for i in range(len(pdf)):
-        for name, base, nullable in fields:
-            v = cols[name][i]
-            is_null = v is None or (isinstance(v, float) and v != v)
-            if nullable:
-                if is_null:
-                    buf += _enc_long(0)  # union branch 0 = null
-                    continue
-                buf += _enc_long(1)  # union branch 1 = value
-            if base == "long":
-                buf += _enc_long(int(v))
-            elif base == "double":
-                buf += struct.pack("<d", float(v))
-            else:
-                buf += _enc_str(str(v))
-    return bytes(buf)
-
-
 def _decode_header(data: bytes) -> tuple[dict, str, bytes, int]:
     """Parse just the container header → (schema, codec, sync, pos-after-
     header). O(header bytes) — never touches the data blocks, so schema
@@ -246,34 +225,23 @@ def _decode_blocks(data: bytes) -> tuple[dict, list[dict]]:
 # --------------------------------------------------------------------------
 def write_avro(df: DataFrame, path: str, codec: str = "null") -> None:
     """Write ``df`` as Avro container part-files under ``path``. ``codec``
-    is ``null`` or ``deflate`` (raw RFC-1951, spec-conform). Encoding runs
-    task-side in ``mapInPandas`` — parallel with the data, nothing gathers
-    on the driver; each task writes ``part-<uuid>.avro`` (a production
-    sink adds the rename-commit step)."""
+    is ``null``, ``deflate`` (raw RFC-1951, spec-conform) or ``bzip2``.
+    Encoding runs task-side in ``mapInPandas`` — parallel with the data,
+    nothing gathers on the driver; each task writes ``part-<uuid>.avro``
+    (a production sink adds the rename-commit step)."""
     if codec not in ("null", "deflate", "bzip2"):
         raise ValueError(
             f"codec must be 'null', 'deflate', or 'bzip2', got {codec!r}"
         )
     os.makedirs(path, exist_ok=True)
-    schema = _avro_schema(df.schema)
-    fields = _field_types(schema)
-    header = (
-        _MAGIC
-        + _enc_long(2)
-        + _enc_str("avro.schema")
-        + (lambda b: _enc_long(len(b)) + b)(json.dumps(schema).encode())
-        + _enc_str("avro.codec")
-        + (lambda b: _enc_long(len(b)) + b)(codec.encode())
-        + _enc_long(0)
-        + _SYNC
-    )
+    header, fields = _header_for_spark_schema(df.schema, codec)
 
     def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = bytearray()
         n_rows = 0
         for pdf in batches:
             if len(pdf):
-                enc = _encode_rows(pdf, fields)
+                enc = _encode_rows_py(pdf.itertuples(index=False, name=None), fields)
                 if codec == "deflate":
                     c = zlib.compressobj(6, zlib.DEFLATED, -15)  # raw deflate
                     enc = c.compress(enc) + c.flush()
@@ -317,41 +285,35 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     return files.select("content").mapInPandas(decode, schema=out_schema)
 
 
-def _header_for_spark_schema(spark_schema) -> tuple[bytes, list]:
+def _header_for_spark_schema(spark_schema, codec: str = "null") -> tuple[bytes, list]:
     """(container header bytes, union-normalized field list) for a Spark
     StructType — shared by write_avro and the Python DataSource writer."""
     schema = _avro_schema(spark_schema)
-    fields = _field_types(schema)
     header = (
         _MAGIC
         + _enc_long(2)
         + _enc_str("avro.schema")
-        + (lambda b: _enc_long(len(b)) + b)(json.dumps(schema).encode())
+        + _enc_str(json.dumps(schema))
         + _enc_str("avro.codec")
-        + (lambda b: _enc_long(len(b)) + b)(b"null")
+        + _enc_str(codec)
         + _enc_long(0)
         + _SYNC
     )
-    return header, fields
+    return header, _field_types(schema)
 
 
 def _encode_rows_py(rows, fields) -> bytes:
-    """Encode an iterable of Row/tuple records (attribute or positional
-    access by field order) — the non-pandas twin of ``_encode_rows`` for
-    the Python DataSource writer."""
+    """Encode an iterable of records (Rows or tuples, values in field
+    order) — shared by write_avro and the Python DataSource writer."""
     buf = bytearray()
     for row in rows:
-        for idx, (name, base, nullable) in enumerate(fields):
-            try:
-                v = row[name]
-            except (TypeError, KeyError, IndexError):
-                v = row[idx]
+        for v, (_, base, nullable) in zip(row, fields):
             is_null = v is None or (isinstance(v, float) and v != v)
             if nullable:
                 if is_null:
-                    buf += _enc_long(0)
+                    buf += _enc_long(0)  # union branch 0 = null
                     continue
-                buf += _enc_long(1)
+                buf += _enc_long(1)  # union branch 1 = value
             if base == "long":
                 buf += _enc_long(int(v))
             elif base == "double":

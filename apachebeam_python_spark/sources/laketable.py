@@ -738,7 +738,8 @@ def merge_apply(
     delete-then-insert window where a key is missing.
 
     Duplicate source keys are rejected like ``merge`` (a binlog batch
-    must be pre-compacted to final-state-per-key — q_stream_cdc's job)."""
+    must be pre-compacted to final-state-per-key — the job of
+    q_stream_cdc_materialize)."""
     from pyspark.sql.types import StructType
 
     # exactly-once under foreachBatch (round 6): a replayed micro-batch

@@ -60,22 +60,24 @@ def _table_stream(spark: SparkSession, sf_dir: str, table_file: str, schema):
     )
 
 
+#: streaming state partitions: each is a state-store instance with a fixed
+#: per-micro-batch cost, so tiny local state wants few of them
+_STREAM_SHUFFLE = 8
+
+
 def stream_tuned(spark: SparkSession) -> None:
     """Size streaming STATE partitions to the state, not the core count.
 
     Every shuffle partition of a stateful streaming operator materializes a
     state-store instance, and each micro-batch pays a fixed per-instance
     cost (open/commit/snapshot) — so tiny-state local streams want FEW
-    partitions (default 8 here; ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides),
-    while a 100 TB deployment raises it toward executors × cores to spread
-    state. Partition count never changes results — only where state lives.
-    Batch queries are unaffected: every registered query re-applies
-    ``tune()`` (32 + AQE) at build time, and streaming has no AQE, which is
-    exactly why it needs this static right-sizing."""
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-    )
+    partitions (``_STREAM_SHUFFLE``), while a 100 TB deployment raises it
+    toward executors × cores to spread state. Partition count never
+    changes results — only where state lives. Batch queries are
+    unaffected: every registered query re-applies ``tune()`` (32 + AQE)
+    at build time, and streaming has no AQE, which is exactly why it needs
+    this static right-sizing."""
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE))
 
 
 def run_to_memory(result: DataFrame, name: str, *, output_mode: str) -> None:

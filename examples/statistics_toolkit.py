@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Example 9 — round-4 statistics & governance toolkit: classical
-hypothesis tests (chi-square, Mann-Whitney, KS, one-way ANOVA) over the
+hypothesis tests (chi-square, Mann-Whitney, KS, Friedman) over the
 events stream, seasonal-trend decomposition, exact activity bitmaps, the
 grid-bucketed spatial join, k-core graph peeling, token entropy quality
-scoring, and a DP-shaped noisy release.
+scoring, and a differentially private median.
 
 Run: python examples/statistics_toolkit.py [sf_dir]
 """
@@ -33,8 +33,8 @@ def main() -> None:
     print("two-sample Kolmogorov-Smirnov: click vs view")
     QUERIES["q_ks_test"](spark, sf_dir).show()
 
-    print("one-way ANOVA across event types (F, eta^2)")
-    QUERIES["q_anova"](spark, sf_dir).show()
+    print("Friedman test across event types (users as blocks)")
+    QUERIES["q_friedman"](spark, sf_dir).show()
 
     print("seasonal-trend decomposition of hourly revenue (first day)")
     QUERIES["q_stl_decompose"](spark, sf_dir).orderBy("day", "h").show(24)
@@ -51,8 +51,8 @@ def main() -> None:
     print("token entropy quality scores (first 10 docs)")
     QUERIES["q_token_entropy"](spark, sf_dir).orderBy("doc_id").show(10)
 
-    print("DP-shaped noisy release (clamped, Laplace 1/eps)")
-    QUERIES["q_dp_counts"](spark, sf_dir).orderBy("event_type").show()
+    print("DP median per event type (exponential mechanism)")
+    QUERIES["q_dp_median"](spark, sf_dir).orderBy("event_type").show()
     # no spark.stop(): examples run in-process inside the test suite against
     # the shared session (tests/test_antipatterns.py pins this)
 

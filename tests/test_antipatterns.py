@@ -95,9 +95,8 @@ ALLOWED_BROADCASTS = {
     "queries/analytics.py": 40,  # r11 -1: the DAG-depth round-table broadcast moved to operators/graph.dag_depths; r12 -2: q_kcore's survivor-set semi-join broadcasts moved to operators/graph.kcore_census
     # dims, 1-row CUPED/AB moments, k-row quantile cuts + calendars +
     # the 41-row DP candidate grid + the decision stump's 1-row class total
-    # + the EB-shrinkage 1-row prior
     # + the conformal radius (a 1-row quantile scalar, r6)
-    "queries/experiments.py": 25,  # r7 +3: WOE 1-row bounds + 1-row totals, bandit 1-row posterior totals
+    "queries/experiments.py": 24,  # r7 +3: WOE 1-row bounds + 1-row totals, bandit 1-row posterior totals
     # broadcast query sets (bounded by contract), df/idf vocab caps,
     # 1-row thresholds/global means, k-row centroid tables
     # + the t-closeness band spine / global distribution / 1-row total
@@ -115,13 +114,13 @@ ALLOWED_BROADCASTS = {
     # 1-row global aggregates, nation dim, k-row histogram/sketch bounds
     "queries/aggregations.py": 11,
     # 1-row moment/statistic assemblies (k groups at most; incl. the
-    # Kruskal-Wallis tie census, the Jarque-Bera integer pivot, and the
-    # mutual-information marginal/entropy tables — all 1-row or k-row)
-    # + the r5 wave: Friedman k/tie/rank-sum tables, Cochran type list,
-    #   Grubbs/Mann-Kendall/runs-test/ICC/Cronbach/Mood/Tukey 1-row
-    #   moment+median+MSW pivots (all 1-row or k-row)
-    # + Ljung-Box's 8-row and PACF's 4-row lag lists
-    "queries/stats_tests.py": 40,  # r7 +3: mutual-info margin/total tables (k-row, bounded by |types|x4)
+    # Jarque-Bera integer pivot and the mutual-information
+    # marginal/entropy tables — all 1-row or k-row)
+    # + the r5 wave: Friedman k/tie/rank-sum tables,
+    #   Grubbs/Mann-Kendall/runs-test/Cronbach 1-row moment+median
+    #   pivots (all 1-row or k-row)
+    # + PACF's 4-row lag list
+    "queries/stats_tests.py": 30,  # r7 +3: mutual-info margin/total tables (k-row, bounded by |types|x4)
     # query-set broadcasts (bounded by contract), 1-row norms, and the PQ
     # metadata tables: seeds/codebooks (m·k rows) + per-query ADC distance
     # tables (n_q·m·k rows) — all independent of corpus size

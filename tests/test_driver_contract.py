@@ -383,7 +383,9 @@ def test_coverage_tables_name_registered_queries():
     """Doc-pin: every query SURVEY §2's operator tables and README's
     "Capability coverage" section name as proof is registered. A deleted
     query is named there by its subsumer (tests/test_plans.py::SUBSUMED),
-    so a deletion that leaves a table pointing at nothing fails here."""
+    so a deletion that leaves a table pointing at nothing fails here; the
+    package's docstrings, comments and notes and the examples must not
+    name a deleted query either."""
     import pathlib
     import re
 
@@ -405,3 +407,19 @@ def test_coverage_tables_name_registered_queries():
     )
     assert len(named) > 100, "coverage tables not found — heading drift"
     assert sorted(named - formula_tokens - set(q.QUERIES)) == []
+
+    from .test_plans import SUBSUMED
+
+    texts = [
+        p
+        for d in ("apachebeam_python_spark", "examples")
+        for p in sorted((root / d).rglob("*"))
+        if p.suffix in (".py", ".md")
+    ]
+    assert len(texts) > 50, "package sources not found"
+    stale = sorted(
+        f"{p.relative_to(root)}: {n}"
+        for p in texts
+        for n in set(re.findall(r"\bq_[a-z0-9_]+\b", p.read_text())) & set(SUBSUMED)
+    )
+    assert stale == [], stale

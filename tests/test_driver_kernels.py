@@ -235,15 +235,13 @@ CALLS = {
 @pytest.mark.parametrize("t", ["string", "int"])
 @pytest.mark.parametrize("op", list(CALLS))
 def test_kernel_and_loop_keep_the_id_type(spark, op, t, edges):
-    """Both paths return the same rows in the same schema, with ids in the
-    input's type: int32 stays int, and strings ("10" < "9") order as
-    Spark orders them. Names and types are compared, not nullability:
-    the kernels' DDL schemas are all nullable, where the loops' count
-    columns are not."""
+    """Both paths return the same rows in the same schema, nullability
+    included, with ids in the input's type: int32 stays int, and strings
+    ("10" < "9") order as Spark orders them."""
     conv = str if t == "string" else int
     ed = [(conv(a), conv(b)) for a, b in edges]
     kernel = CALLS[op](spark, ed, t)
     loop = distributed_loop(CALLS[op], spark, ed, t)
-    assert kernel.schema.simpleString() == loop.schema.simpleString()
+    assert kernel.schema == loop.schema
     assert t in [f.dataType.simpleString() for f in kernel.schema]
     assert sorted(kernel.collect()) == sorted(loop.collect())

@@ -1620,38 +1620,6 @@ def test_entropy_l_diversity_invariants(spark, sf_dir):
         )
 
 
-def test_multiple_regression_matches_numpy_lstsq(spark, sf_dir):
-    """Cramer's-rule betas and R² vs an independent numpy least-squares
-    solve over the same daily design matrix rebuilt in DuckDB."""
-    import duckdb
-    import numpy as np
-    import pytest
-
-    from apachebeam_python_spark import queries as q
-
-    (row,) = q.QUERIES["q_multiple_regression"](spark, sf_dir).collect()
-    con = duckdb.connect()
-    df = con.execute(
-        f"""
-        SELECT CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS x1,
-               CAST(count(*) AS BIGINT) AS x2,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-        FROM read_parquet('{sf_dir}/events.parquet')
-        WHERE value IS NOT NULL GROUP BY 1
-        """
-    ).df()
-    X = np.column_stack([np.ones(len(df)), df.x1, df.x2]).astype(float)
-    y = df.y.to_numpy(dtype=float)
-    beta, *_ = np.linalg.lstsq(X, y, rcond=None)
-    resid = y - X @ beta
-    r2 = 1.0 - (resid @ resid) / ((y - y.mean()) @ (y - y.mean()))
-    assert row.n_days == len(df)
-    assert row.beta0 == pytest.approx(beta[0], rel=1e-6, abs=1e-3)
-    assert row.beta1 == pytest.approx(beta[1], rel=1e-6, abs=1e-3)
-    assert row.beta2 == pytest.approx(beta[2], rel=1e-6, abs=1e-3)
-    assert row.r2 == pytest.approx(r2, abs=1e-5)
-
-
 def test_misra_gries_exact_and_complete(spark, sf_dir):
     """q_misra_gries must equal the exact GROUP BY heavy-hitter set —
     the two-pass construction makes the sketch's approximation vanish."""

@@ -15,7 +15,7 @@ Documented bounds (the "would it survive 100 TB" analysis per query):
 - q_cliffs_delta / q_gk_gamma: pair censuses ≤ n₁·n₂ ≤ N² — int64 dies at
   N ≈ 3×10⁹ per side; both accumulate in 128-bit and only the driver-facing
   OUTPUT column narrows to BIGINT (valid until N² > 9.2×10¹⁸ actual pairs).
-- q_kruskal_wallis: tie correction Σ t³ ≤ N³ — int64 dies at N ≈ 2×10⁶;
+- q_friedman: tie correction Σ t³ ≤ N³ — int64 dies at N ≈ 2×10⁶;
   accumulated in decimal(38,0) (good to N ≈ 4×10¹²).
 - q_mann_kendall: tie term Σ t(t−1)(2t+5) ≤ 2N³ + lower orders — same N³
   profile, widened to 128-bit.
@@ -41,10 +41,7 @@ DEC38_MAX = 10**38 - 1
 RISKY = {
     "q_cliffs_delta": ("apachebeam_python_spark.queries.stats_tests", "q_cliffs_delta"),
     "q_gk_gamma": ("apachebeam_python_spark.queries.stats_tests", "q_gk_gamma"),
-    "q_kruskal_wallis": (
-        "apachebeam_python_spark.queries.stats_tests",
-        "q_kruskal_wallis",
-    ),
+    "q_friedman": ("apachebeam_python_spark.queries.stats_tests", "q_friedman"),
     "q_mann_kendall": ("apachebeam_python_spark.queries.stats_tests", "q_mann_kendall"),
     "q_betweenness": ("apachebeam_python_spark.queries.analytics", "q_betweenness"),
     # tp_g·cumTP·1e9 wraps int64 past tp_g·cumTP ≈ 9.2e9 — widened in r7
@@ -61,7 +58,7 @@ def test_widened_casts_present(name):
     """The 128-bit widening must exist in BOTH engines' formulations: the
     Spark source uses decimal(38,0) (directly or via the _HI alias) and the
     DuckDB oracle uses HUGEINT. Dropping either silently reintroduces the
-    q_anova bug ADVICE caught in round 4."""
+    int64 overflow ADVICE caught in round 4."""
     import importlib
 
     mod_name, fn_name = RISKY[name]
@@ -86,7 +83,7 @@ def test_pair_census_headroom(spark, sf_dir, ddb):
 
 
 def test_tie_cube_headroom(spark, sf_dir, ddb):
-    """Σ t³ profile (q_kruskal_wallis / q_mann_kendall tie terms): N³ at
+    """Σ t³ profile (q_friedman / q_mann_kendall tie terms): N³ at
     the live fixture must keep ≥64× headroom inside decimal(38,0)."""
     (n,) = ddb.execute("SELECT count(*) FROM events WHERE value IS NOT NULL").fetchone()
     assert 2 * n**3 * 64 < DEC38_MAX
