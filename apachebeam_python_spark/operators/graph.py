@@ -55,6 +55,11 @@ _DENSE_MAX_EDGES = 2048
 #: size (2^20 random rows, tracemalloc): 102–114 MiB in each.
 _SPARSE_MAX_ROWS = 1 << 20
 
+#: ``pagerank`` sums each node's in-edge contributions ``r·p`` as integers
+#: in units of 1/_CON_UNITS (one per dst is at most the rank mass, ~1, so
+#: the sum stays far inside int64)
+_CON_UNITS = 1e18
+
 
 def _kernel_id_type(*cols: tuple[DataFrame, str]) -> str | None:
     """The DDL type the id columns share, which a kernel's ids pass through
@@ -150,12 +155,20 @@ def pagerank(
     """Weighted PageRank with dangling-mass redistribution, fixed iteration
     count. Returns ``(node, r)``.
 
-    Determinism contract (what makes this oracle-replayable): out-edge
-    probabilities are exact integer ratios evaluated in double; each
-    iteration's rank is rounded to ``round_dp`` decimals — double-sum order
-    drift is ~1e-16 relative, so a 1e-9 round makes both engines' per-round
-    vectors IDENTICAL, and identical inputs to round N+1 keep them so. The
-    teleport term is computed as ``1.0 - damping`` in double on both sides.
+    Determinism contract (what makes the kernel and the loop agree to the
+    bit): out-edge probabilities are exact integer ratios evaluated in
+    double; each iteration's rank is rounded half-away to ``round_dp``
+    decimals; the round's two sums are exact integer sums — each in-edge
+    contribution ``r·p`` in units of 1/``_CON_UNITS``, each dangling rank
+    in units of 10^-``round_dp`` — so neither depends on the order the
+    rows arrive in. A double sum's order drift is ~1e-16 relative, which
+    the 9-dp round swallows except on an exact tie: with 8 dangling nodes
+    out of 12, a rank with no in-edge is 0.0125 + 0.85·dm/12, and dm =
+    K·1e-9 with K ≡ 120 (mod 240) puts it exactly on a half. Identical
+    inputs to round N+1 keep both paths identical. The teleport term is
+    computed as ``1.0 - damping`` in double on both sides. The DuckDB
+    oracle keeps plain double sums; on a tie it may differ by 1e-9, below
+    the 6-dp result ``q_pagerank`` compares.
 
     Per iteration: one broadcast join (edges ⋈ ranks) + one partial/final
     agg on ``dst``, one LEFT ANTI for dangling mass (1-row broadcast), one
@@ -220,16 +233,27 @@ def pagerank(
     base = checkpoint(nodes.select(node).crossJoin(F.broadcast(nn)))
     teleport = F.lit(1.0) - F.lit(damping)
     scale = F.lit(10.0 ** round_dp)
+    con_units = F.lit(_CON_UNITS)
     ranks = base.select(node, (F.lit(1.0) / F.col("n")).alias("r"))
     for i in range(iterations):
         contrib = (
             en.join(F.broadcast(ranks), F.col(src) == F.col(node))
             .groupBy(dst)
-            .agg(F.sum(F.col("r") * F.col("p")).alias("con"))
+            .agg(
+                (
+                    F.sum(_fixed(F.col("r") * F.col("p"), con_units))
+                    / con_units
+                ).alias("con")
+            )
         )
         dang = ranks.join(
             srcs, ranks[node] == srcs[src], "left_anti"
-        ).agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dm"))
+        ).agg(
+            (
+                F.coalesce(F.sum(_fixed(F.col("r"), scale)), F.lit(0))
+                / scale
+            ).alias("dm")
+        )
         ranks = (
             base.join(F.broadcast(contrib), F.col(node) == F.col(dst), "left")
             .crossJoin(F.broadcast(dang))
@@ -260,6 +284,12 @@ def pagerank(
     return ranks
 
 
+def _fixed(x: F.Column, units: F.Column) -> F.Column:
+    """``x`` as a long count of 1/``units``, rounded half-away on the
+    binary value: ``_pagerank_kernel``'s ``floor(x·units + 0.5)``."""
+    return F.floor(x * units + F.lit(0.5))
+
+
 def _pagerank_kernel(
     pdf: pd.DataFrame, damping: float, iterations: int, round_dp: int
 ) -> pd.DataFrame:
@@ -268,9 +298,10 @@ def _pagerank_kernel(
     per dst + dangling_mass/n), rounded HALF-AWAY to ``round_dp`` decimals
     (``floor(x·10^k + 0.5)`` — ranks are positive — the expression the
     loop evaluates, and the decision DuckDB's round makes on the binary
-    value; the per-round 1e-9 round swallows numpy-vs-SQL sum-order drift
-    exactly as it swallows Spark-vs-DuckDB drift). Edges with an endpoint
-    outside the node list add nothing, as in the loop's joins."""
+    value). Both sums are int64 sums of the loop's fixed-point units, so
+    numpy's order and Spark's cannot part on a rounding tie. Edges with
+    an endpoint outside the node list add nothing, as in the loop's
+    joins."""
     ids, ku, kv = _encode_ids(pdf)
     edge = pdf["edge"].to_numpy(dtype=bool)
     is_node = np.zeros(len(ids), dtype=bool)
@@ -289,14 +320,20 @@ def _pagerank_kernel(
     teleport = 1.0 - damping
     r = np.full(len(ids), 1.0 / n)
     for _ in range(iterations):
-        con = np.zeros(len(ids))
-        np.add.at(con, di, r[si] * p)
-        dm = float(r[dangling].sum())
+        con = np.zeros(len(ids), dtype=np.int64)
+        np.add.at(con, di, _fixed_np(r[si] * p, _CON_UNITS))
+        con = con / _CON_UNITS
+        dm = int(_fixed_np(r[dangling], scale).sum()) / scale
         r = (
             np.floor((teleport / n + damping * (con + dm / n)) * scale + 0.5)
             / scale
         )
     return pd.DataFrame({"node": ids[is_node], "r": r[is_node]})
+
+
+def _fixed_np(x: np.ndarray, units: float) -> np.ndarray:
+    """``_fixed`` in numpy: the same long counts of 1/``units``."""
+    return np.floor(x * units + 0.5).astype(np.int64)
 
 
 def dag_depths(
