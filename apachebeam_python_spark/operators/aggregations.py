@@ -167,33 +167,6 @@ def rolling_distinct_hll(
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    key_col: str,
-    id_col: str,
-    rates: dict[str, float],
-    default_rate: float = 0.25,
-) -> DataFrame:
-    """Deterministic per-stratum Bernoulli sampling with PORTABLE hashing
-    (Beam/Spark ``sampleBy`` shape, reproducible across engines): each row
-    draws u ∈ [0, 1) from the first 4 hex chars of ``md5(id)`` — the same
-    engine-agnostic trick as the pure-SQL CMS — and survives iff
-    u < rate(key). Unlike ``DataFrame.sampleBy`` (partition-layout-dependent
-    RNG), the SAME rows are kept on any cluster, any partitioning, and the
-    selection is replayable in plain SQL — which is what makes a sampled
-    corpus auditable. Zero shuffle: a scan-level filter. At 100 TB the
-    filter rides the scan and the sample lands without any exchange."""
-    u = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10)
-        .cast("double")
-        / 65536.0
-    )
-    rate = F.lit(default_rate)
-    for k, r in sorted(rates.items()):
-        rate = F.when(F.col(key_col) == k, F.lit(r)).otherwise(rate)
-    return df.filter(u < rate)
-
-
 def sample_fixed_global(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
     """Beam ``Sample.FixedSizeGlobally``: uniform-ish n via seeded rand order.
     (TakeOrdered over rand() — avoids full-sort; nondeterministic across

@@ -76,19 +76,15 @@ def main() -> None:
         "q_image_pipeline",
         "q_audio_pipeline",
         "q_dedup_containment",
-        "q_stratified_sample",
         "q_histogram_equidepth",
         "q_scd2_dims",
         "q_rolling_distinct_hll",
         # round-3 experimentation/statistics waves
-        "q_ab_test",
         "q_cuped",
         "q_ols_trend",
         "q_seasonal_anomaly",
         "q_skyline",
-        "q_sample_per_key",
         "q_shipping_priority",
-        "q_rolling_quantile",
         "q_bloom_decontaminate",
         "q_sequence_mining",
         "q_bfs_reachability",
@@ -105,8 +101,6 @@ def main() -> None:
         "q_market_share",
         "q_returned_items",
         "q_cust_order_distribution",
-        "q_promo_revenue",
-        "q_small_qty_revenue",
         "q_large_orders",
         "q_setsim_join",
         "q_bpe_apply",
@@ -123,25 +117,19 @@ def main() -> None:
         "q_theilsen",
         "q_bootstrap_ci",
         "q_communities_lpa",
-        "q_gini_concentration",
         "q_covariate_balance",
         "q_rfm_segments",
         "q_fk_integrity",
         "q_incremental_agg",
         "q_cohort_ltv",
-        "q_keywords_tfidf",
         "q_source_overlap",
         "q_interarrival",
-        "q_hhi_concentration",
         "q_concurrency_sweep",
-        "q_basket_growth",
         "q_fulfillment_sla",
         # round-3 TPC-H completion wave (Q2/Q4/Q6/Q9/Q11/Q12/Q15/Q16/Q19/
         # Q20/Q21/Q22 shapes — the full 22-query decision-support kit)
-        "q_forecast_revenue",
         "q_priority_fulfillment",
         "q_top_supplier",
-        "q_delay_priority_census",
         "q_bracket_revenue",
         "q_dormant_customers",
         "q_min_cost_supplier",
@@ -152,7 +140,6 @@ def main() -> None:
         "q_waiting_orders",
         # round-3 sixth wave: graph link prediction + LLM training-data ops
         "q_link_prediction",
-        "q_hard_negatives",
         "q_temperature_mix",
         "q_url_normalize",
         "q_binary_hamming",

@@ -384,48 +384,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n"))
 
 
-_MD5_U16 = (
-    "((strpos('0123456789abcdef', substr(md5(CAST({id} AS VARCHAR)), 1, 1))-1)*4096"
-    " + (strpos('0123456789abcdef', substr(md5(CAST({id} AS VARCHAR)), 2, 1))-1)*256"
-    " + (strpos('0123456789abcdef', substr(md5(CAST({id} AS VARCHAR)), 3, 1))-1)*16"
-    " + (strpos('0123456789abcdef', substr(md5(CAST({id} AS VARCHAR)), 4, 1))-1))"
-)
-
-
-@register(
-    "q_stratified_sample",
-    driver=False,  # extra §2.3 sampling proof — pytest-only oracle
-    oracle=f"""
-SELECT event_type,
-       CAST(count(*) AS BIGINT)      AS n_kept,
-       CAST(sum(event_id) AS BIGINT) AS id_sum
-FROM events
-WHERE {_MD5_U16.format(id='event_id')} / 65536.0 <
-      CASE event_type WHEN 'view' THEN 0.1 WHEN 'purchase' THEN 0.5 ELSE 0.25 END
-GROUP BY event_type
-""",
-)
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic PORTABLE stratified sampling (operators.aggregations
-    .stratified_sample): per-event-type Bernoulli rates with the uniform
-    drawn from an md5 slice of the row id — the same rows survive on any
-    engine, any partitioning, so the oracle replays the EXACT selection
-    (census: per-stratum kept-count + id checksum pins membership, not just
-    counts). This is the auditable alternative to ``DataFrame.sampleBy``,
-    whose partition-seeded RNG can't be replayed in SQL. Zero shuffle: the
-    filter rides the scan; the census is one partial+final agg."""
-    from ..operators.aggregations import stratified_sample
-
-    kept = stratified_sample(
-        table(spark, sf_dir, "events"), "event_type", "event_id",
-        rates={"view": 0.1, "purchase": 0.5}, default_rate=0.25,
-    )
-    return kept.groupBy("event_type").agg(
-        F.count("*").alias("n_kept"),
-        F.sum("event_id").alias("id_sum"),
-    )
-
-
 @register(
     "q_histogram_equidepth",
     driver=False,  # extra §2.3 analytics shape — pytest-only oracle
@@ -468,7 +426,7 @@ def q_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: portable 48-bit hash from the first 12 md5 nibbles — DuckDB has no conv(),
-#: so the oracle expands the hex digits positionally (same trick as _MD5_U16)
+#: so the oracle expands the hex digits positionally
 _MD5_U48 = (
     "("
     + " + ".join(
@@ -914,122 +872,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("n") == F.col("fn")) & (F.col("s") == F.col("fs"))).alias(
             "matches_full_recompute"
         ),
-    )
-
-
-@register(
-    "q_mode_per_key",
-    driver=False,  # §2.3 grouping extension — pytest oracle
-    oracle="""
-WITH counts AS (
-  SELECT l_returnflag,
-         CAST(round(l_quantity) AS BIGINT) AS qty,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM lineitem GROUP BY 1, 2
-), ranked AS (
-  SELECT *, row_number() OVER (
-           PARTITION BY l_returnflag ORDER BY cnt DESC, qty ASC) AS rk
-  FROM counts
-)
-SELECT l_returnflag, qty AS mode_qty, cnt AS mode_count
-FROM ranked WHERE rk = 1
-""",
-)
-def q_mode_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical mode per key (most frequent l_quantity per returnflag,
-    smallest value on count ties) — Beam's ``Top.PerKey`` over per-element
-    counts, i.e. the two-stage mode idiom (SURVEY §2.3: Count.PerElement +
-    Top). Deterministic tie-break makes the result oracle-exact.
-
-    Scale: first groupBy shuffles on the COMPOSITE (key, value) — the
-    high-cardinality stage with full map-side partial aggregation — then
-    the per-key argmax windows over the collapsed (key, distinct-value)
-    table, orders of magnitude smaller. No all-values-per-key collection
-    anywhere, so a skewed key costs its distinct-value count, not its row
-    count."""
-    from pyspark.sql import Window
-
-    li = table(spark, sf_dir, "lineitem")
-    counts = (
-        li.select(
-            "l_returnflag", F.round("l_quantity").cast("long").alias("qty")
-        )
-        .groupBy("l_returnflag", "qty")
-        .agg(F.count("*").alias("cnt"))
-    )
-    w = Window.partitionBy("l_returnflag").orderBy(F.desc("cnt"), F.asc("qty"))
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("l_returnflag", F.col("qty").alias("mode_qty"), F.col("cnt").alias("mode_count"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Weighted median (round 5 continuation)
-# --------------------------------------------------------------------------
-@register(
-    "q_weighted_median",
-    driver=False,  # §2.3 aggregation extension (round 5) — pytest oracle
-    oracle="""
-WITH w AS (
-  SELECT event_type,
-         CAST(round(value * 100) AS BIGINT) AS c,
-         CAST(count(*) AS BIGINT) AS wt
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, c, wt,
-         sum(wt) OVER (PARTITION BY event_type ORDER BY c
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-         sum(wt) OVER (PARTITION BY event_type) AS tw
-  FROM w
-)
-SELECT event_type,
-       CAST(min(CASE WHEN 2 * cw >= tw THEN c END) AS BIGINT)
-         AS weighted_median_cents,
-       CAST(max(tw) AS BIGINT) AS n
-FROM cum GROUP BY event_type
-""",
-)
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted (frequency) median per event type via the cumulative-weight
-    rule: the smallest value whose cumulative weight reaches half the
-    total — the robust central estimate computed WITHOUT a row-level
-    sort (SURVEY §2.3 aggregation extensions; the lower weighted median,
-    the same no-interpolation convention as q_runs_test's rank median).
-    Values first collapse to distinct cents with exact integer weights
-    (the q_cliffs_delta contraction), so the ordered window runs over
-    the value DOMAIN, not the row count, and the 2·cw ≥ tw test is an
-    exact integer comparison — engine-identical by construction.
-
-    Scale: one data-sized groupBy to (type, cents) weights; the per-type
-    cumulative window is domain-sized. This is how a median at 100 TB
-    should be computed when the value domain is bounded (prices, ages,
-    ratings) — the contraction IS the optimization."""
-    from pyspark.sql import Window
-
-    w = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .groupBy("event_type", F.round(F.col("value") * 100).cast("long").alias("c"))
-        .agg(F.count("*").alias("wt"))
-    )
-    wc = Window.partitionBy("event_type").orderBy("c").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = w.select(
-        "event_type",
-        "c",
-        "wt",
-        F.sum("wt").over(wc).alias("cw"),
-        F.sum("wt").over(Window.partitionBy("event_type")).alias("tw"),
-    )
-    return cum.groupBy("event_type").agg(
-        F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("c")))
-        .cast("long")
-        .alias("weighted_median_cents"),
-        F.max("tw").cast("long").alias("n"),
     )
 
 

@@ -280,41 +280,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_event_transitions",
-    driver=False,  # extra §2.5 analytics proof — pytest-only oracle
-    oracle="""
-SELECT event_type AS from_type, next_type AS to_type,
-       CAST(count(*) AS BIGINT) AS n
-FROM (
-  SELECT event_type,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_type
-  FROM events
-)
-WHERE next_type IS NOT NULL
-GROUP BY 1, 2
-""",
-)
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-transition (Markov) matrix: counts of consecutive event-type
-    pairs per user journey — lead() over (user_id, ts, event_id): one
-    shuffle on user_id, per-partition sort, and the matrix aggregate is
-    |types|² rows. The (ts, event_id) order is total, so both engines walk
-    identical journeys."""
-    from pyspark.sql import Window
-
-    from ..session import table
-
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = e.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).filter(F.col("to_type").isNotNull())
-    return pairs.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))
-
-
-@register(
     "q_skew_report",
     driver=False,  # extra scale-tooling proof — pytest-only oracle
     oracle="""
@@ -504,60 +469,6 @@ def q_scd2_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("valid_from"),
         F.lead("ts").over(close).alias("valid_to"),
         F.lead("ts").over(close).isNull().alias("is_current"),
-    )
-
-
-@register(
-    "q_activity_streaks",
-    driver=False,  # extra §2.5 analytics shape — pytest-only oracle
-    oracle="""
-WITH du AS (
-  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
-  FROM events
-), grp AS (
-  SELECT user_id, day,
-         CAST(epoch(day) AS BIGINT) // 86400
-           - row_number() OVER (PARTITION BY user_id ORDER BY day) AS g
-  FROM du
-), streaks AS (
-  SELECT user_id, g, CAST(count(*) AS BIGINT) AS len
-  FROM grp GROUP BY user_id, g
-)
-SELECT user_id,
-       CAST(max(len) AS BIGINT)   AS longest_streak,
-       CAST(count(*) AS BIGINT)   AS n_streaks,
-       CAST(sum(len) AS BIGINT)   AS active_days
-FROM streaks GROUP BY user_id
-""",
-)
-def q_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive-day activity streaks — the SQL gaps-and-islands pattern:
-    day_number − row_number is constant within a run of consecutive days,
-    so it IS the streak id; one groupBy later each user has longest-streak
-    / streak-count / active-day totals (the retention-analysis shape next
-    to q_cohort_retention). Two stages over ONE user_id shuffle: the
-    window sort and the streak aggs share partitioning; day-dedup is the
-    only wide op touching raw events."""
-    from pyspark.sql import Window
-
-    e = table(spark, sf_dir, "events")
-    du = e.select(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).distinct()
-    g = (
-        F.col("day").cast("long") / F.lit(86400)
-    ).cast("long") - F.row_number().over(
-        Window.partitionBy("user_id").orderBy("day")
-    )
-    streaks = (
-        du.select("user_id", "day", g.alias("g"))
-        .groupBy("user_id", "g")
-        .agg(F.count("*").alias("len"))
-    )
-    return streaks.groupBy("user_id").agg(
-        F.max("len").alias("longest_streak"),
-        F.count("*").alias("n_streaks"),
-        F.sum("len").alias("active_days"),
     )
 
 
@@ -841,9 +752,9 @@ _EDGE_MIN_COPURCHASE = 80
 
 
 def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (order, brand) basket table — the shared input of the
-    market-basket and co-purchase-graph family (q_assoc_rules,
-    q_clustering_coeff). Broadcast part onto lineitem, one distinct."""
+    """Distinct (order, brand) basket table — the input of
+    q_clustering_coeff's co-purchase graph. Broadcast part onto
+    lineitem, one distinct."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
@@ -912,77 +823,6 @@ def _trade_edges(spark: SparkSession, sf_dir: str, min_count: int) -> DataFrame:
     dims broadcast onto lineitem, one aggregation to |nations|² rows."""
     register_views(spark, sf_dir)
     return spark.sql(_TRADE_EDGES_SQL.format(min_count=min_count))
-
-
-@register(
-    "q_assoc_rules",
-    driver=False,  # §2.3 market-basket extension — pytest oracle
-    oracle="""
-WITH b AS (
-  SELECT DISTINCT l_orderkey AS oid, p_brand AS item
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), nb AS (
-  SELECT count(DISTINCT oid) AS n FROM b
-), ni AS (
-  SELECT item, count(*) AS n_i FROM b GROUP BY item
-), pr AS (
-  SELECT a.item AS ante, c.item AS cons, count(*) AS n_ab
-  FROM b a JOIN b c ON a.oid = c.oid AND a.item <> c.item
-  GROUP BY 1, 2 HAVING count(*) >= 50
-)
-SELECT ante, cons, n_ab,
-       round(n_ab / nb.n, 6)                    AS support,
-       round(n_ab / na.n_i, 6)                  AS confidence,
-       round((n_ab * nb.n) / (na.n_i * nc.n_i), 6) AS lift
-FROM pr
-JOIN ni na ON ante = na.item
-JOIN ni nc ON cons = nc.item
-CROSS JOIN nb
-""",
-)
-def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association-rule mining (market-basket): brand pairs co-purchased in
-    the same order, with support / confidence / lift — the FPGrowth-style
-    census over (basket = order, item = part brand), rules kept at pair
-    support ≥ 50. All three measures are exact integer ratios evaluated in
-    double, so cross-engine values are identical before the 6 dp round.
-
-    Scale: pair expansion joins the basket table to ITSELF ON THE BASKET
-    KEY — fan-out is Σ basket_size², bounded by real-world basket width,
-    never items²; hot items don't skew the join because the key is the
-    basket id. Item counts and the basket total are tiny broadcasts onto
-    the support-pruned pair table (prune FIRST via HAVING). The distinct
-    pass, pair count, and final joins share one shuffle each — at 100 TB
-    the basket table is the thing to bucket by oid."""
-    b = _brand_baskets(spark, sf_dir)
-    nb = b.select("oid").distinct().agg(F.count("*").alias("n"))
-    ni = b.groupBy("item").agg(F.count("*").alias("n_i"))
-    a = b.select("oid", F.col("item").alias("ante"))
-    c = b.select("oid", F.col("item").alias("cons"))
-    pr = (
-        a.join(c, "oid")
-        .filter(F.col("ante") != F.col("cons"))
-        .groupBy("ante", "cons")
-        .agg(F.count("*").alias("n_ab"))
-        .filter(F.col("n_ab") >= 50)
-    )
-    na = ni.select(F.col("item").alias("ante"), F.col("n_i").alias("n_a"))
-    nc = ni.select(F.col("item").alias("cons"), F.col("n_i").alias("n_c"))
-    return (
-        pr.join(F.broadcast(na), "ante")
-        .join(F.broadcast(nc), "cons")
-        .crossJoin(F.broadcast(nb))
-        .select(
-            "ante",
-            "cons",
-            "n_ab",
-            F.round(F.col("n_ab") / F.col("n"), 6).alias("support"),
-            F.round(F.col("n_ab") / F.col("n_a"), 6).alias("confidence"),
-            F.round(
-                (F.col("n_ab") * F.col("n")) / (F.col("n_a") * F.col("n_c")), 6
-            ).alias("lift"),
-        )
-    )
 
 
 @register(
@@ -1207,7 +1047,7 @@ FROM deg d LEFT JOIN tri ON d.node = tri.node
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per node: 2·triangles / (deg·(deg−1))
     over the brand co-purchase graph (edge = brands co-occurring in ≥ 80
-    orders, the thresholded pair table of q_assoc_rules' family) — the
+    orders, the thresholded brand-pair table) — the
     graph family's neighborhood-density metric (nodes with degree < 2
     report 0). The ``triangles`` column is the per-node triangle census,
     0 for nodes on no triangle. Exact integer inputs → the ratio is
@@ -1896,83 +1736,6 @@ def q_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Gini concentration of revenue across customers
-# --------------------------------------------------------------------------
-@register(
-    "q_gini_concentration",
-    driver=False,  # §2.5 concentration-metric extension — pytest oracle
-    oracle="""
-WITH cr AS (
-  SELECT o_custkey,
-         round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2)
-           AS rev
-  FROM orders GROUP BY o_custkey
-), ranked AS (
-  SELECT rev,
-         CAST(row_number() OVER (ORDER BY rev, o_custkey) AS BIGINT) AS i
-  FROM cr
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(rev AS DECIMAL(18,2))) AS DOUBLE) AS total,
-         CAST(sum(i * CAST(rev AS DECIMAL(18,2))) AS DOUBLE) AS weighted
-  FROM ranked
-)
-SELECT n,
-       round(total, 2) AS total_revenue,
-       round(2.0 * weighted / (n * total) - (n + 1.0) / n, 6) AS gini
-FROM agg
-""",
-)
-def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue concentration (Gini coefficient) across customers — the
-    inequality metric behind "what share of revenue comes from the top
-    customers": G = 2·Σᵢ i·xᵢ / (n·Σx) − (n+1)/n over the revenue-sorted
-    customer list. Per-customer revenue and both sums route through
-    DECIMAL (exact, order-independent); ranks come from a total order
-    with a custkey tiebreak, so rank×revenue products are identical in
-    both engines and the Gini is exact before its 6 dp round.
-
-    Scale: one custkey rollup, then ONE global sort of |customers| rows
-    (the same cost class as any ranked report — far below the fact scan),
-    then a single-row aggregate. For sort-free approximation at extreme
-    scale, bin revenues with the histogram sketch
-    (q_quantile_histogram_rollup) and integrate the Lorenz curve over
-    bins."""
-    from pyspark.sql import Window
-
-    o = table(spark, sf_dir, "orders")
-    cr = o.groupBy("o_custkey").agg(
-        F.round(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double"),
-            2,
-        ).alias("rev")
-    )
-    ranked = cr.select(
-        "rev",
-        F.row_number()
-        .over(Window.orderBy("rev", "o_custkey"))
-        .cast("long")
-        .alias("i"),
-    )
-    agg = ranked.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("rev").cast("decimal(18,2)")).cast("double").alias("total"),
-        F.sum(F.col("i") * F.col("rev").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("weighted"),
-    )
-    return agg.select(
-        "n",
-        F.round("total", 2).alias("total_revenue"),
-        F.round(
-            2.0 * F.col("weighted") / (F.col("n") * F.col("total"))
-            - (F.col("n") + 1.0) / F.col("n"),
-            6,
-        ).alias("gini"),
-    )
-
-
-# --------------------------------------------------------------------------
 # RFM customer segmentation (recency / frequency / monetary quintiles)
 # --------------------------------------------------------------------------
 @register(
@@ -2120,160 +1883,6 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_active",
         F.round(F.col("rev").cast("double"), 6).alias("revenue"),
         F.round(F.sum("rev").over(w).cast("double"), 6).alias("cum_revenue"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Herfindahl-Hirschman market concentration per nation
-# --------------------------------------------------------------------------
-@register(
-    "q_hhi_concentration",
-    driver=False,  # §2.5 market-structure extension — pytest oracle
-    oracle="""
-WITH rev AS (
-  SELECT n.n_name AS nation, p.p_brand AS brand,
-         CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                       AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS r
-  FROM lineitem l
-  JOIN part p ON p.p_partkey = l.l_partkey
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN nation n ON n.n_nationkey = s.s_nationkey
-  GROUP BY 1, 2
-)
-SELECT nation,
-       CAST(count(*) AS BIGINT) AS n_brands,
-       round(CAST(sum(r * r) AS DOUBLE)
-             / (CAST(sum(r) AS DOUBLE) * CAST(sum(r) AS DOUBLE)), 6)
-         AS hhi
-FROM rev GROUP BY nation
-""",
-)
-def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market concentration (Herfindahl-Hirschman index) of brand revenue
-    within each supplier nation: HHI = Σ share² = Σ r² / (Σ r)², computed
-    WITHOUT materializing float shares — both Σ r and Σ r² sum exact
-    DECIMALs (order-independent), and the single double division happens
-    once per nation. 1/n_brands ≤ HHI ≤ 1; the Gini's (q_gini_concentration)
-    market-structure sibling.
-
-    Scale: the (nation, brand) rollup rides the broadcast star join —
-    dims broadcast, lineitem shuffles once; the HHI table is
-    |nations| rows from a |nations|×|brands| intermediate."""
-    li = table(spark, sf_dir, "lineitem")
-    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), F.col("p_brand").alias("brand"))
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("decimal(28,4)")
-            .alias("r")
-        )
-    )
-    return rev.groupBy("nation").agg(
-        F.count("*").alias("n_brands"),
-        F.round(
-            F.sum(F.col("r") * F.col("r")).cast("double")
-            / (
-                F.sum("r").cast("double") * F.sum("r").cast("double")
-            ),
-            6,
-        ).alias("hhi"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Comparable-sales (common-basket) month-over-month growth
-# --------------------------------------------------------------------------
-@register(
-    "q_basket_growth",
-    driver=False,  # §2.5 economic-index extension — pytest oracle
-    oracle="""
-WITH pm AS (
-  SELECT l_partkey,
-         CAST(year(l_shipdate) * 12 + month(l_shipdate) AS BIGINT) AS m,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(28,2))
-           AS spend,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS qty
-  FROM lineitem GROUP BY 1, 2
-), paired AS (
-  SELECT cur.m,
-         CAST(count(*) AS BIGINT) AS n_parts,
-         CAST(sum(cur.spend) AS DECIMAL(38,2)) AS cur_spend,
-         CAST(sum(base.spend) AS DECIMAL(38,2)) AS base_spend,
-         CAST(sum(cur.qty) AS DECIMAL(38,2)) AS cur_qty,
-         CAST(sum(base.qty) AS DECIMAL(38,2)) AS base_qty
-  FROM pm cur JOIN pm base
-    ON base.l_partkey = cur.l_partkey AND base.m = cur.m - 1
-  GROUP BY cur.m
-)
-SELECT m, n_parts,
-       round(CAST(cur_spend AS DOUBLE), 2) AS cur_spend,
-       round(CAST(base_spend AS DOUBLE), 2) AS base_spend,
-       round(100.0 * CAST(cur_spend AS DOUBLE) / CAST(base_spend AS DOUBLE),
-             6) AS spend_index,
-       round((CAST(cur_spend AS DOUBLE) / CAST(cur_qty AS DOUBLE))
-             / (CAST(base_spend AS DOUBLE) / CAST(base_qty AS DOUBLE))
-             * 100.0, 6) AS unit_price_index
-FROM paired
-""",
-)
-def q_basket_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Comparable-sales index — month-over-month growth restricted to the
-    COMMON part basket (parts traded in both months), the retail
-    "same-store sales" control for assortment churn: spend_index = 100 ×
-    Σspend_t / Σspend_{t−1}, plus an aggregate unit-price index from the
-    same exact sums. Every Σ is DECIMAL (order-independent); the only
-    float ops are the final divisions of already-exact totals — one IEEE
-    op each, engine-identical (per-part unit-price quotients are
-    deliberately avoided: rounding raw double quotients at fixed
-    precision is NOT engine-stable — round-impl boundary disagreements).
-
-    Scale: one (part, month) rollup is the only fact shuffle; the
-    month-pair join runs on the collapsed |parts|×|months| table; output
-    is |months| rows."""
-    li = table(spark, sf_dir, "lineitem")
-    m = (F.year("l_shipdate") * 12 + F.month("l_shipdate")).cast("long")
-    pm = li.groupBy(F.col("l_partkey"), m.alias("m")).agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("decimal(28,2)")
-        .alias("spend"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-        .cast("decimal(28,2)")
-        .alias("qty"),
-    )
-    cur = pm.select("l_partkey", "m", F.col("spend").alias("cs"),
-                    F.col("qty").alias("cq"))
-    base = pm.select(
-        "l_partkey",
-        (F.col("m") + 1).alias("m"),
-        F.col("spend").alias("bs"),
-        F.col("qty").alias("bq"),
-    )
-    paired = cur.join(base, ["l_partkey", "m"]).groupBy("m").agg(
-        F.count("*").alias("n_parts"),
-        F.sum("cs").cast("decimal(38,2)").alias("cur_spend"),
-        F.sum("bs").cast("decimal(38,2)").alias("base_spend"),
-        F.sum("cq").cast("decimal(38,2)").alias("cur_qty"),
-        F.sum("bq").cast("decimal(38,2)").alias("base_qty"),
-    )
-    cs, bs = F.col("cur_spend").cast("double"), F.col("base_spend").cast("double")
-    cq, bq = F.col("cur_qty").cast("double"), F.col("base_qty").cast("double")
-    return paired.select(
-        "m",
-        "n_parts",
-        F.round(cs, 2).alias("cur_spend"),
-        F.round(bs, 2).alias("base_spend"),
-        F.round(100.0 * cs / bs, 6).alias("spend_index"),
-        F.round((cs / cq) / (bs / bq) * 100.0, 6).alias("unit_price_index"),
     )
 
 
@@ -2880,87 +2489,6 @@ def q_attribution_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return norm.groupBy("channel").agg(
         F.countDistinct("conv_id").alias("n_conversions"),
         F.round(F.sum(F.col("w") / F.col("tot")), 6).alias("credit"),
-    )
-
-
-@register(
-    "q_proration",
-    driver=False,  # §2.11 exact-money allocation — pytest oracle
-    oracle="""
-WITH base AS (
-  SELECT l.l_orderkey, l.l_linenumber,
-         CAST(round(l.l_extendedprice * 100) AS BIGINT) AS w,
-         CAST(round(o.o_totalprice * 100) AS BIGINT) // 10 AS rebate
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-), sized AS (
-  SELECT *,
-         CAST(sum(w) OVER (PARTITION BY l_orderkey) AS BIGINT) AS tot_w
-  FROM base
-), shares AS (
-  SELECT *,
-         (rebate * w) // tot_w AS floor_c,
-         (rebate * w) % tot_w  AS rem
-  FROM sized
-), ranked AS (
-  SELECT *,
-         CAST(sum(floor_c) OVER (PARTITION BY l_orderkey) AS BIGINT) AS floor_sum,
-         CAST(row_number() OVER (
-           PARTITION BY l_orderkey ORDER BY rem DESC, l_linenumber ASC) AS BIGINT) AS rk
-  FROM shares
-)
-SELECT l_orderkey, l_linenumber,
-       floor_c + CASE WHEN rk <= rebate - floor_sum THEN 1 ELSE 0 END AS alloc_cents
-FROM ranked
-""",
-)
-def q_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Penny-exact pro-rata allocation by the largest-remainder method: a
-    10 % order-level rebate (floored to whole cents) is distributed across
-    the order's line items proportional to extended price, floor shares
-    first, then one extra cent to the largest remainders (line number as
-    the deterministic tie-break) so the allocations sum EXACTLY to the
-    rebate — the billing/revenue-recognition op every financial pipeline
-    needs, impossible with naive float splits (SURVEY §2.11 curation-tier
-    exactness; the exact-integer discipline of the §2.3 statistics).
-
-    Parity: every quantity is an exact BIGINT (cents, products ≤ ~5e13);
-    both engines floor-divide and rank remainders identically.
-
-    Scale: one fact-fact join on the order key (co-partitioned — at 100 TB
-    bucket both tables by orderkey and the join is shuffle-free), then two
-    windows over the SAME order-key partitioning — Spark reuses one
-    exchange for both; per-order groups are ≤ 7 rows, no skew."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    base = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("w"),
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT) div 10").alias("rebate"),
-    )
-    wp = Window.partitionBy("l_orderkey")
-    sized = base.withColumn("tot_w", F.sum("w").over(wp))
-    shares = sized.withColumns(
-        {
-            "floor_c": F.expr("(rebate * w) div tot_w"),
-            "rem": (F.col("rebate") * F.col("w")) % F.col("tot_w"),
-        }
-    )
-    ranked = shares.withColumns(
-        {
-            "floor_sum": F.sum("floor_c").over(wp),
-            "rk": F.row_number()
-            .over(wp.orderBy(F.desc("rem"), F.asc("l_linenumber")))
-            .cast("long"),
-        }
-    )
-    return ranked.select(
-        "l_orderkey",
-        "l_linenumber",
-        (
-            F.col("floor_c")
-            + F.when(F.col("rk") <= F.col("rebate") - F.col("floor_sum"), 1).otherwise(0)
-        ).alias("alloc_cents"),
     )
 
 
@@ -4081,7 +3609,9 @@ def q_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("*").cast("double"),
             6,
         ).alias("null_rate"),
-        F.count_distinct("event_type").alias("n_types"),
+        # the type domain is categorical and small: a set, not a second
+        # distinct group (two would plan an Expand in hash order)
+        F.size(F.collect_set("event_type")).cast("long").alias("n_types"),
         F.count_distinct("user_id").alias("n_users"),
         F.min(cents).alias("min_cents"),
         F.max(cents).alias("max_cents"),
@@ -4376,96 +3906,6 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Nelson-Aalen cumulative hazard (round 6)
-# --------------------------------------------------------------------------
-@register(
-    "q_nelson_aalen",
-    driver=False,  # §2.5 survival-analysis extension — pytest oracle
-    oracle="""
-WITH u AS (
-  SELECT user_id,
-         min(ts) AS t0,
-         min(CASE WHEN event_type = 'purchase' THEN ts END) AS conv_ts,
-         max(ts) AS last_ts
-  FROM events GROUP BY user_id
-), dur AS (
-  SELECT CASE WHEN conv_ts IS NOT NULL
-              THEN date_diff('day', CAST(t0 AS DATE), CAST(conv_ts AS DATE))
-              ELSE date_diff('day', CAST(t0 AS DATE), CAST(last_ts AS DATE))
-         END AS t,
-         CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS death
-  FROM u
-), tt AS (
-  SELECT t, CAST(sum(death) AS BIGINT) AS d,
-         CAST(sum(1 - death) AS BIGINT) AS c
-  FROM dur GROUP BY t
-), o AS (
-  SELECT t, d, c,
-         CAST(sum(d + c) OVER (ORDER BY t
-              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-           AS n_at_risk
-  FROM tt
-)
-SELECT t AS t_days, n_at_risk, d AS d_events, c AS c_censored,
-       round(sum(CAST(d AS DOUBLE) / n_at_risk) OVER (ORDER BY t
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-         AS cum_hazard
-FROM o
-""",
-)
-def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nelson-Aalen cumulative hazard H(t) = Σ_{tᵢ≤t} dᵢ/nᵢ over the same
-    right-censored time-to-first-purchase durations as q_survival_km —
-    the additive estimator that stays stable where KM's product
-    underflows, and the direct input to hazard-ratio eyeballing. Unlike
-    KM's sequential PRODUCT (which needs the grouped-map replay), the
-    hazard is a running SUM of per-time d/n terms in a fixed order —
-    plain ordered windows in both engines, each term one IEEE divide,
-    identical accumulation order ⇒ identical doubles; zero UDFs.
-
-    Scale: identical profile to q_survival_km minus the sequential tail —
-    one user-keyed agg, then windows over the |distinct durations|-row
-    risk table (bounded by the observation window, not event volume)."""
-    from pyspark.sql import Window
-
-    e = table(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "conv_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    dur = u.select(
-        F.when(
-            F.col("conv_ts").isNotNull(),
-            F.datediff(F.to_date("conv_ts"), F.to_date("t0")),
-        )
-        .otherwise(F.datediff(F.to_date("last_ts"), F.to_date("t0")))
-        .alias("t"),
-        F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("death"),
-    )
-    tt = dur.groupBy("t").agg(
-        F.sum("death").cast("long").alias("d"),
-        F.sum(1 - F.col("death")).cast("long").alias("c"),
-    )
-    w_risk = Window.orderBy("t").rowsBetween(0, Window.unboundedFollowing)
-    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    o = tt.withColumn(
-        "n_at_risk", F.sum(F.col("d") + F.col("c")).over(w_risk).cast("long")
-    )
-    return o.select(
-        F.col("t").alias("t_days"),
-        "n_at_risk",
-        F.col("d").alias("d_events"),
-        F.col("c").alias("c_censored"),
-        F.round(
-            F.sum(F.col("d").cast("double") / F.col("n_at_risk")).over(w_cum), 6
-        ).alias("cum_hazard"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Katz centrality, integer-quantized (round 6)
 # --------------------------------------------------------------------------
 @register(
@@ -4551,7 +3991,7 @@ def q_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_item_cf",
     # driver slot since r7 (VERDICT r6 #3): the recsys family's first
-    # driver-green row (§2.11 tier beside q_assoc_rules)
+    # driver-green row (§2.11 tier)
     oracle="""
 WITH bi AS (
   SELECT DISTINCT o_orderkey AS basket, l_partkey AS item
@@ -4578,18 +4018,18 @@ FROM ranked WHERE rk <= 3
 """,
 )
 def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-item collaborative filtering (SURVEY §2.11 recsys tier, the
-    normalized sibling of q_assoc_rules): cosine similarity over basket
-    co-occurrence — cos(i,j) = c_ij / √(n_i·n_j) — with top-3 neighbors
-    per item. Ranking compares the EXACT scaled rational c²·10¹²/(n_i·n_j)
-    (128-bit widened; c² alone reaches 2.25e18 at sf0.01 — past int64/4)
-    so neighbor order can never flip on a double ulp; the cosine itself
-    is one sqrt of that integer, for display.
+    """Item-item collaborative filtering (SURVEY §2.11 recsys tier):
+    cosine similarity over basket co-occurrence — cos(i,j) =
+    c_ij / √(n_i·n_j) — with top-3 neighbors per item. Ranking compares
+    the EXACT scaled rational c²·10¹²/(n_i·n_j) (128-bit widened; c²
+    alone reaches 2.25e18 at sf0.01 — past int64/4) so neighbor order
+    can never flip on a double ulp; the cosine itself is one sqrt of
+    that integer, for display.
 
     Scale: pair generation is the basket self-join — work is
     Σ_b |basket|² , bounded by the basket-size cap the feed enforces
-    upstream (the q_assoc_rules note); norms broadcast-join the pair
-    table at |items| rows; top-k is one WindowGroupLimit per item."""
+    upstream; norms broadcast-join the pair table at |items| rows; top-k
+    is one WindowGroupLimit per item."""
     from ..session import register_views
 
     register_views(spark, sf_dir)
@@ -4643,7 +4083,7 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "q_mix_shift",
-    driver=False,  # §2.11 BI decomposition tier beside q_basket_growth
+    driver=False,  # §2.11 BI decomposition tier beside q_cohort_ltv
     oracle="""
 WITH o AS (
   SELECT o_orderpriority AS priority,

@@ -271,134 +271,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_domain_cap",
-    driver=False,  # §2.11 curation extension — pytest oracle
-    oracle="""
-SELECT source, doc_id, n_chars, rk FROM (
-  SELECT source, doc_id, n_chars,
-         CAST(row_number() OVER (PARTITION BY source
-                                 ORDER BY n_chars DESC, doc_id) AS INT) AS rk
-  FROM documents
-) WHERE rk <= 100
-""",
-)
-def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain quota capping: keep at most 100 documents per source,
-    preferring longer documents (n_chars DESC, doc_id tiebreak) — the
-    anti-domination guard a web-corpus mixture applies so no single domain
-    floods the training set (the per-key sibling of q_mixture_resample's
-    global ratios).
-
-    Scale: rank-within-key ≤ k plans as WindowGroupLimit — each map task
-    keeps only its local top-k per key BEFORE the shuffle (same asserted
-    plan shape as q_topk_per_key, tests/test_plans.py), so the exchange
-    carries O(domains × k), not the corpus. Skewed domains are exactly the
-    point: the pre-shuffle limit bounds the hot key's traffic too."""
-    d = table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(F.desc("n_chars"), "doc_id")
-    return (
-        d.select("source", "doc_id", "n_chars")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 100)
-    )
-
-
-@register(
-    "q_sparse_cosine",
-    driver=False,  # §2.11 sparse-similarity extension — pytest oracle
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, w, count(*) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-  GROUP BY doc_id, w
-), dft AS (
-  SELECT w, count(*) AS df FROM tok GROUP BY w
-), nd AS (
-  SELECT count(*) AS n FROM documents
-), wt AS (
-  SELECT doc_id, t.w, tf * ln(n / df) AS wgt
-  FROM tok t JOIN dft USING (w) CROSS JOIN nd
-  WHERE df <= 40
-), nrm AS (
-  SELECT doc_id, sqrt(sum(wgt * wgt)) AS nrm FROM wt GROUP BY doc_id
-), pair AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         sum(a.wgt * b.wgt) AS dot, count(*) AS n_shared
-  FROM wt a JOIN wt b ON a.w = b.w AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       round(dot / (na.nrm * nb.nrm), 6) AS cos_sim
-FROM pair
-JOIN nrm na ON doc_a = na.doc_id
-JOIN nrm nb ON doc_b = nb.doc_id
-WHERE round(dot / (na.nrm * nb.nrm), 6) >= 0.3
-""",
-)
-def q_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse TF-IDF cosine similarity: document pairs scored by cosine in
-    TOKEN space (tf·idf weights over the shared-token inverted index), kept
-    at cos ≥ 0.3 — the sparse-vector sibling of q_dedup_embedding's dense
-    cosine and the scoring engine behind "more like this" retrieval.
-
-    Scale: the pair space is NOT all-pairs — pairs exist only through
-    shared tokens, and the df ≤ 40 prune (the same discriminative band as
-    q_inverted_index) bounds per-token fan-out at C(40,2), making total
-    work Σ_tokens df² — the standard prune that turns sparse similarity
-    from O(n²) into index-join shaped. The weighted-postings table is the
-    persist/bucket-by-token artifact at 100 TB (three consumers: norms and
-    both join sides — here recomputed, tiny). Thresholding happens on the
-    ROUNDED cosine in both engines so the boundary row set is identical;
-    ln-input doubles are engine-identical integer ratios so the 6 dp round
-    swallows any libm ulp."""
-    d = table(spark, sf_dir, "documents")
-    tok = (
-        d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("tf"))
-    )
-    dft = tok.groupBy("w").agg(F.count("*").alias("df"))
-    nd = d.agg(F.count("*").alias("n"))
-    wt = (
-        tok.join(F.broadcast(dft), "w")
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") <= 40)
-        .select(
-            "doc_id",
-            "w",
-            (F.col("tf") * F.log(F.col("n") / F.col("df"))).alias("wgt"),
-        )
-    )
-    nrm = wt.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("wgt") * F.col("wgt"))).alias("nrm")
-    )
-    a = wt.select(
-        F.col("doc_id").alias("doc_a"), "w", F.col("wgt").alias("wa")
-    )
-    b = wt.select(
-        F.col("doc_id").alias("doc_b"), "w", F.col("wgt").alias("wb")
-    )
-    pair = (
-        a.join(b, "w")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.sum(F.col("wa") * F.col("wb")).alias("dot"),
-            F.count("*").alias("n_shared"),
-        )
-    )
-    na = nrm.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
-    nb = nrm.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
-    cos = F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6)
-    return (
-        pair.join(F.broadcast(na), "doc_a")
-        .join(F.broadcast(nb), "doc_b")
-        .select("doc_a", "doc_b", "n_shared", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.3)
-    )
-
-
-@register(
     "q_compress_ratio",
     driver=False,
     oracle=None,  # zlib isn't expressible in DuckDB SQL — exact Python
@@ -775,77 +647,6 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_token_entropy",
-    driver=False,  # §2.11 text-analysis extension (round 4) — pytest oracle
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-), cnt AS (
-  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY doc_id, w
-), wn AS (
-  SELECT doc_id, c,
-         CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n
-  FROM cnt
-), per AS (
-  SELECT doc_id,
-         CAST(max(n) AS BIGINT)   AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_distinct,
-         round(-sum((c / CAST(n AS DOUBLE)) * ln(c / CAST(n AS DOUBLE))), 6) AS entropy
-  FROM wn
-  GROUP BY doc_id
-)
-SELECT doc_id, n_tokens, n_distinct, entropy,
-       CASE WHEN n_distinct > 1
-            THEN round(entropy / round(ln(CAST(n_distinct AS DOUBLE)), 9), 6) END AS norm_entropy
-FROM per
-""",
-)
-def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token Shannon entropy H = −Σ p·ln p plus the
-    [0,1]-normalized H/ln(V) — the repetition/diversity quality signal
-    (low entropy = boilerplate or keyword stuffing; complements
-    q_repetition_filter's hard n-gram rules with a graded score).
-
-    Parity: p = c/n uses exact integer inputs so each term is the same
-    IEEE double in both engines; the per-doc sum is order-drift-bounded
-    and rounded at 6 dp (the q_unigram_lm_score discipline); ln(V) is
-    pre-rounded at 9 dp before the ratio so the normalized value can't
-    straddle a 6-dp boundary differently per engine.
-
-    Scale: one (doc, token) groupBy shuffle, then a doc-keyed aggregate —
-    the window total rides the same doc partitioning (no extra
-    exchange)."""
-    d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("w"))
-    cnt = tok.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
-    from pyspark.sql import Window as W
-
-    n_tot = F.sum("c").over(W.partitionBy("doc_id"))
-    p = F.col("c") / n_tot.cast("double")
-    per = (
-        cnt.select("doc_id", "c", (-p * F.log(p)).alias("term"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_tokens"),
-            F.count("*").alias("n_distinct"),
-            F.round(F.sum("term"), 6).alias("entropy"),
-        )
-    )
-    return per.select(
-        "doc_id",
-        "n_tokens",
-        "n_distinct",
-        "entropy",
-        F.when(
-            F.col("n_distinct") > 1,
-            F.round(
-                F.col("entropy") / F.round(F.log(F.col("n_distinct").cast("double")), 9), 6
-            ),
-        ).alias("norm_entropy"),
-    )
-
-
 # --------------------------------------------------------------------------
 # Bigram LM with stupid backoff — held-out scoring (round 5)
 # --------------------------------------------------------------------------
@@ -1010,7 +811,7 @@ FROM m
 )
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORCAST readability grade per document (SURVEY §2.11 text-quality
-    tier, beside q_doc_features' quality score and q_token_entropy):
+    tier, beside q_doc_features' quality score):
     grade = 20 − 15·(share of monosyllabic words), the one classic
     readability formula that needs NO sentence boundaries — which is
     exactly what whitespace-tokenized training corpora lack. Syllables are

@@ -747,98 +747,8 @@ def q_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bollinger bands over the daily revenue series (round 5 continuation)
+# Periodogram of the daily revenue series (round 5 continuation)
 # --------------------------------------------------------------------------
-@register(
-    "q_bollinger_bands",
-    driver=False,  # §2.11 time-series tier (round 5) — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-), win AS (
-  SELECT day, cents,
-         CAST(count(*) OVER w AS BIGINT) AS n_w,
-         CAST(sum(cents) OVER w AS BIGINT) AS s_w,
-         CAST(sum(CAST(cents AS HUGEINT) * cents) OVER w AS HUGEINT) AS ss_w
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-), bands AS (
-  SELECT day, cents, n_w, s_w,
-         CASE WHEN n_w > 1 THEN
-           sqrt(CAST(n_w * ss_w - CAST(s_w AS HUGEINT) * s_w AS DOUBLE)
-                / (CAST(n_w AS DOUBLE) * (n_w - 1)))
-         END AS sd_c
-  FROM win
-)
-SELECT CAST(day AS TIMESTAMP) AS day, round(cents / 100.0, 2) AS close,
-       n_w AS n_win,
-       round(s_w / (100.0 * n_w), 4) AS mid,
-       round((s_w / CAST(n_w AS DOUBLE) + 2.0 * sd_c) / 100.0, 4) AS upper_band,
-       round((s_w / CAST(n_w AS DOUBLE) - 2.0 * sd_c) / 100.0, 4) AS lower_band,
-       CASE WHEN sd_c IS NOT NULL
-            THEN cents > s_w / CAST(n_w AS DOUBLE) + 2.0 * sd_c END AS breakout_up,
-       CASE WHEN sd_c IS NOT NULL
-            THEN cents < s_w / CAST(n_w AS DOUBLE) - 2.0 * sd_c END AS breakout_down
-FROM bands
-""",
-)
-def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bollinger bands on the daily revenue series: 7-day rolling mean ±
-    2 rolling standard deviations, with breakout flags — the volatility
-    envelope anomaly monitors and trading-style alerting draw around any
-    metric (SURVEY §2.11 time-series tier, the WINDOWED counterpart of
-    the recursive q_ewma). Rolling moments (n, Σc, Σc²) come from ONE
-    frame window over exact integer cents; the variance numerator
-    n·Σc² − (Σc)² widens to 128-bit (the ADVICE r4 lesson) before one
-    double conversion, and band edges + breakout comparisons evaluate
-    the identical IEEE tree in both engines — even the booleans are
-    hash-stable because their operands are bit-identical.
-
-    Scale: the daily rollup is the only data-sized shuffle; the rolling
-    window runs over the metadata-sized day series (range-partition by
-    coarse time at 100 TB, overlapping 6-day fringes — the standard
-    sliding-window split)."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
-    )
-    hi = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    w = Window.orderBy("day").rowsBetween(-6, 0)
-    win = daily.select(
-        "day",
-        "cents",
-        F.count("*").over(w).alias("n_w"),
-        F.sum("cents").over(w).alias("s_w"),
-        F.sum(hi(F.col("cents")) * F.col("cents")).over(w).alias("ss_w"),
-    )
-    n_w, s_w = F.col("n_w"), F.col("s_w")
-    sd_c = F.when(
-        n_w > 1,
-        F.sqrt(
-            (n_w * F.col("ss_w") - hi(s_w) * s_w).cast("double")
-            / (n_w.cast("double") * (n_w - 1))
-        ),
-    )
-    bands = win.select("day", "cents", "n_w", "s_w", sd_c.alias("sd_c"))
-    mean_c = s_w / n_w.cast("double")
-    up = mean_c + 2.0 * F.col("sd_c")
-    dn = mean_c - 2.0 * F.col("sd_c")
-    # DATE-vs-TIMESTAMP canon parity: DuckDB dates come back datetime64
-    return bands.select(
-        F.col("day").cast("timestamp").alias("day"),
-        F.round(F.col("cents") / 100.0, 2).alias("close"),
-        n_w.alias("n_win"),
-        F.round(s_w / (100.0 * n_w), 4).alias("mid"),
-        F.round(up / 100.0, 4).alias("upper_band"),
-        F.round(dn / 100.0, 4).alias("lower_band"),
-        F.when(F.col("sd_c").isNotNull(), F.col("cents") > up).alias("breakout_up"),
-        F.when(F.col("sd_c").isNotNull(), F.col("cents") < dn).alias("breakout_down"),
-    )
-
-
 @register("q_periodogram", driver=False)  # rows-only: libm cos/sin sums accumulate cross-engine ulp drift (SURVEY §7.4.4); numpy-FFT-replay-pinned in tests
 def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete-Fourier periodogram of the mean-centered daily revenue

@@ -33,103 +33,6 @@ def _md5_int(col, offset: int = 1):
 
 
 # --------------------------------------------------------------------------
-# A/B experiment read-out
-# --------------------------------------------------------------------------
-@register(
-    "q_ab_test",
-    driver=False,  # §2.3 statistical extension — pytest oracle
-    oracle="""
-WITH pu AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value > 150
-                  THEN 1 ELSE 0 END) AS conv
-  FROM events GROUP BY user_id
-), v AS (
-  SELECT user_id % 2 AS variant,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(conv) AS BIGINT) AS c
-  FROM pu GROUP BY 1
-), w AS (
-  SELECT max(CASE WHEN variant = 0 THEN n END) AS n0,
-         max(CASE WHEN variant = 0 THEN c END) AS c0,
-         max(CASE WHEN variant = 1 THEN n END) AS n1,
-         max(CASE WHEN variant = 1 THEN c END) AS c1
-  FROM v
-)
-SELECT n0, c0, n1, c1,
-       round(c0 / CAST(n0 AS DOUBLE), 6) AS rate0,
-       round(c1 / CAST(n1 AS DOUBLE), 6) AS rate1,
-       CASE WHEN c0 > 0 THEN
-         round((c1 / CAST(n1 AS DOUBLE) - c0 / CAST(n0 AS DOUBLE))
-               / (c0 / CAST(n0 AS DOUBLE)), 6) END AS rel_lift,
-       CASE WHEN c0 + c1 > 0 AND c0 + c1 < n0 + n1 THEN
-         round((c1 / CAST(n1 AS DOUBLE) - c0 / CAST(n0 AS DOUBLE))
-               / sqrt(((c0 + c1) / CAST(n0 + n1 AS DOUBLE))
-                      * (1.0 - (c0 + c1) / CAST(n0 + n1 AS DOUBLE))
-                      * (1.0 / n0 + 1.0 / n1)), 6) END AS z_stat
-FROM w
-""",
-)
-def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion A/B read-out: users split into variants by id parity
-    (a stand-in for the hash-bucketing an experiment framework applies),
-    conversion = any purchase above a value threshold; emits per-variant
-    counts, rates, relative lift, and the pooled two-proportion z
-    statistic. The z formula is written as the same expression tree in
-    both engines so the doubles agree bit-for-bit before the 6 dp round;
-    the degenerate cases (no conversions / all converted → zero pooled
-    variance) emit NULL under identical guards rather than tripping
-    ANSI-mode division-by-zero.
-
-    Scale: per-user conversion flags are one partial+final agg on user_id;
-    the variant rollup is 2 rows; the final read-out is a 1-row select —
-    the only shuffle is the user_id agg, unavoidable and key-uniform."""
-    e = table(spark, sf_dir, "events")
-    pu = e.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 150),
-                1,
-            ).otherwise(0)
-        ).alias("conv")
-    )
-    v = pu.groupBy(F.pmod(F.col("user_id"), F.lit(2)).alias("variant")).agg(
-        F.count("*").alias("n"), F.sum("conv").alias("c")
-    )
-    w = v.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("variant") == 0, F.col("c"))).alias("c0"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("variant") == 1, F.col("c"))).alias("c1"),
-    )
-    n0, c0 = F.col("n0"), F.col("c0")
-    n1, c1 = F.col("n1"), F.col("c1")
-    p0 = c0 / n0.cast("double")
-    p1 = c1 / n1.cast("double")
-    pp = (c0 + c1) / (n0 + n1).cast("double")
-    return w.select(
-        "n0",
-        "c0",
-        "n1",
-        "c1",
-        F.round(p0, 6).alias("rate0"),
-        F.round(p1, 6).alias("rate1"),
-        F.when(c0 > 0, F.round((p1 - p0) / p0, 6)).alias("rel_lift"),
-        F.when(
-            (c0 + c1 > 0) & (c0 + c1 < n0 + n1),
-            F.round(
-                (p1 - p0)
-                / F.sqrt(
-                    pp * (F.lit(1.0) - pp)
-                    * (F.lit(1.0) / n0 + F.lit(1.0) / n1)
-                ),
-                6,
-            ),
-        ).alias("z_stat"),
-    )
-
-
-# --------------------------------------------------------------------------
 # OLS trend per key
 # --------------------------------------------------------------------------
 @register(
@@ -389,50 +292,6 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Deterministic fixed-size per-key sample (Beam Sample.FixedSizePerKey)
-# --------------------------------------------------------------------------
-@register(
-    "q_sample_per_key",
-    driver=False,  # §2.3 Sample.FixedSizePerKey — pytest oracle
-    oracle="""
-WITH r AS (
-  SELECT event_type, event_id,
-         row_number() OVER (
-           PARTITION BY event_type
-           ORDER BY md5(CAST(event_id AS VARCHAR)), event_id
-         ) AS sample_rank
-  FROM events
-)
-SELECT event_type, event_id, CAST(sample_rank AS BIGINT) AS sample_rank
-FROM r WHERE sample_rank <= 5
-""",
-)
-def q_sample_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam ``Sample.FixedSizePerKey(5)`` with a DETERMINISTIC uniform
-    order: rank rows per key by md5 of their id — a fixed pseudo-random
-    permutation both engines reproduce exactly, so even the *sample* is
-    hash-checkable (the usual rows-only escape hatch is unnecessary).
-    Folds Beam's ``Sample.FixedSizeGlobally`` (drop the partition key).
-
-    Scale: row_number ≤ k over a partitioned window is rewritten by Spark
-    into WindowGroupLimit — each map task keeps only its local top-k per
-    key BEFORE the shuffle (asserted in tests/test_plans.py), so the
-    exchange carries ≈ k·keys rows, not the table."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(
-        F.md5(F.col("event_id").cast("string")), F.col("event_id")
-    )
-    return (
-        e.select(
-            "event_type",
-            "event_id",
-            F.row_number().over(w).cast("long").alias("sample_rank"),
-        )
-        .filter(F.col("sample_rank") <= 5)
-    )
-
-
-# --------------------------------------------------------------------------
 # TPC-H Q3 shape: shipping priority
 # --------------------------------------------------------------------------
 @register(
@@ -493,74 +352,6 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
-    )
-
-
-# --------------------------------------------------------------------------
-# Rolling window quantile
-# --------------------------------------------------------------------------
-@register(
-    "q_rolling_quantile",
-    driver=False,  # §2.5 frame-quantile extension — pytest oracle
-    oracle="""
-WITH d AS (
-  SELECT l_returnflag AS flag,
-         CAST(date_trunc('day', l_shipdate) AS TIMESTAMP) AS day,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-                       AS BIGINT)) AS BIGINT) AS rev_u
-  FROM lineitem GROUP BY 1, 2
-)
-SELECT flag, day, round(rev_u / 10000.0, 4) AS rev,
-       CAST(quantile_cont(rev_u, 0.5) OVER (
-         PARTITION BY flag ORDER BY day
-         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
-       ) AS DOUBLE) AS p50_7d_u
-FROM d
-""",
-)
-def q_rolling_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-observation median of daily revenue per return flag — the
-    robust moving-average alternative (median shrugs off the single-day
-    spikes that drag a mean). Spark's exact ``percentile`` works as a
-    window aggregate over the rows frame, matching DuckDB's
-    ``quantile_cont`` frame semantics.
-
-    Engine parity (round-7 fix, caught by the sf0.1 sweep): interpolating
-    a median over DOUBLES diverged in the last ulp on 2 of 7497 rows —
-    Spark computes lower + d·(higher−lower), DuckDB a differently-ordered
-    midpoint, and at 10× rows two even-count frames landed on a 4-dp
-    rounding boundary. The percentile now runs over EXACT integer 1e-4
-    revenue units: every interpolation is (a+b)/2 of int64s — an exact
-    binary half, bit-identical in both engines — and the median is
-    emitted IN UNITS (``p50_7d_u``) with no rounding to hit a boundary.
-    (Sum bound: daily revenue ×1e4 ≈ 1e11 at sf1 — widen past sf~1000.)
-
-    Scale: one (flag, day) partial+final agg collapses the table to the
-    day grid; the window then shuffles only day-level rows on flag. The
-    frame recomputes a 7-element median per row — constant work/row."""
-    li = table(spark, sf_dir, "lineitem")
-    d = li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.date_trunc("day", "l_shipdate").alias("day"),
-    ).agg(
-        F.sum(
-            F.round(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 10000
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("rev_u")
-    )
-    w = (
-        Window.partitionBy("flag")
-        .orderBy("day")
-        .rowsBetween(-6, 0)
-    )
-    return d.select(
-        "flag",
-        "day",
-        F.round(F.col("rev_u") / 10000.0, 4).alias("rev"),
-        F.percentile("rev_u", F.lit(0.5)).over(w).cast("double").alias("p50_7d_u"),
     )
 
 
@@ -787,7 +578,7 @@ def q_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential pattern mining: ordered event-type pairs a→b occurring
     within 30 minutes for the same user (distinct per user), with support,
     confidence (vs users showing a at all) and lift vs independence —
-    the non-adjacent complement to q_event_transitions' Markov matrix.
+    the non-adjacent complement to a one-hop Markov matrix.
     Time math in exact integer microseconds (no float timestamps).
 
     Scale: the pair join is user-keyed — one co-partitioned shuffle; the
@@ -1409,8 +1200,8 @@ LIMIT 10
 def q_funnel_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top user journeys: the 10 most common 3-step event-type paths over
     each user's (ts, event_id)-ordered stream — the path-analysis
-    complement to q_funnel (fixed steps) and q_event_transitions (single
-    hops). String concat makes NULL tails (streams shorter than 3) drop
+    complement to q_funnel (fixed steps) and to one-hop transition
+    matrices. String concat makes NULL tails (streams shorter than 3) drop
     in both engines identically.
 
     Scale: both leads share ONE user-keyed window sort; the path census
@@ -1984,8 +1775,7 @@ def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune to the outlier days that drag q_ols_trend's least-squares fit.
     Daily totals go through DECIMAL and are rounded before differencing,
     so every pairwise slope is the same IEEE division in both engines and
-    the exact median interpolates identically (the q_rolling_quantile
-    percentile discipline).
+    the exact median interpolates identically.
 
     Scale: the pairwise self-join runs on the DAY-level series (~365
     rows/series/year → ~66k pairs), never on raw events — the events scan
@@ -2215,7 +2005,7 @@ FROM wide
 )
 def q_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment hygiene — covariate balance: before reading out an A/B
-    test (q_ab_test, q_cuped), check that PRE-metrics are balanced across
+    test (q_cuped), check that PRE-metrics are balanced across
     variants via the standardized mean difference, SMD = (μ_A − μ_B) /
     √((s²_A + s²_B)/2), per covariate (events per user, mean value,
     distinct types). |SMD| ≲ 0.1 is the conventional "balanced" bar; a
@@ -3078,7 +2868,7 @@ def q_uplift_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment uplift (two-model difference): treatment-minus-control
     conversion rate inside activity segments — WHERE does the treatment
     work, the heterogeneous-treatment-effect readout that follows a
-    passing sample-ratio check and a significant q_ab_test (SURVEY §2.11
+    passing sample-ratio check and a significant A/B read-out (SURVEY §2.11
     experimentation tier). Arms replay an md5-deterministic assignment
     (zero RNG, recomputable anywhere); conversion is ever-purchased per
     user; segments are activity bands. All censuses are exact integers
@@ -3617,7 +3407,7 @@ def q_changepoint_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "q_bandit_posteriors",
-    driver=False,  # §2.11 experimentation tier beside q_ab_test
+    driver=False,  # §2.11 experimentation tier beside q_cuped
     oracle="""
 WITH arms AS (
   SELECT event_type AS arm,
@@ -3655,7 +3445,7 @@ def q_bandit_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (α, β), the posterior mean α/(α+β), its sd, and the arm
     ranking — the table a bandit scheduler reads to allocate the next
     batch of traffic (SURVEY §2.11 experimentation tier beside
-    q_ab_test: the A/B test decides once, the bandit reallocates
+    q_cuped: the A/B test decides once, the bandit reallocates
     continuously). The sampling step itself is per-request randomness and
     stays out of the oracle by design; everything the sampler consumes is
     exact and hash-pinned. mean_rank orders arms by the CROSS-MULTIPLIED

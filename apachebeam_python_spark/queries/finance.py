@@ -100,78 +100,6 @@ def q_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ABC revenue classification (cumulative-share tiers)
-# --------------------------------------------------------------------------
-@register(
-    "q_abc_classes",
-    driver=False,  # §2.3 analytics tier — pytest oracle
-    oracle="""
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                       AS BIGINT)) AS BIGINT) AS r
-  FROM lineitem GROUP BY l_partkey
-), ranked AS (
-  SELECT l_partkey, r,
-         CAST(sum(r) OVER (ORDER BY r DESC, l_partkey) AS BIGINT) AS cum,
-         CAST(sum(r) OVER () AS BIGINT) AS total
-  FROM rev
-), classed AS (
-  SELECT CASE WHEN cum * 100 <= 80 * total THEN 'A'
-              WHEN cum * 100 <= 95 * total THEN 'B'
-              ELSE 'C' END AS abc_class,
-         r, total
-  FROM ranked
-)
-SELECT abc_class,
-       CAST(count(*) AS BIGINT) AS n_parts,
-       CAST(sum(r) AS BIGINT) AS rev_cents,
-       round(sum(r) / CAST(max(total) AS DOUBLE), 6) AS rev_share
-FROM classed GROUP BY abc_class
-""",
-)
-def q_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC (Pareto) classification of parts by discounted revenue: class A
-    carries the first 80 % of cumulative revenue, B to 95 %, C the tail.
-    Revenue is exact integer cents; the tier boundary is the integer
-    comparison cum·100 ≤ tier·total, so class assignment — the part of this
-    query a float could flip — never touches a double; only the reported
-    share divides. Ties on revenue break by partkey for an engine-identical
-    cumulative order. SURVEY §2.3 (window + rollup composition).
-
-    Scale: one data-sized shuffle to the per-part rollup; the cumulative
-    window runs over the |part|-sized aggregate (range-partitioned global
-    order at 100 TB — the same pattern as equi-depth binning), and
-    the class census is 3 rows."""
-    li = table(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    rev = li.groupBy("l_partkey").agg(F.sum(_cents(disc)).alias("r"))
-    w = Window.orderBy(F.desc("r"), F.asc("l_partkey")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ranked = rev.select(
-        "l_partkey",
-        "r",
-        F.sum("r").over(w).alias("cum"),
-        F.sum("r").over(Window.partitionBy()).alias("total"),
-    )
-    abc = (
-        F.when(F.col("cum") * 100 <= 80 * F.col("total"), "A")
-        .when(F.col("cum") * 100 <= 95 * F.col("total"), "B")
-        .otherwise("C")
-    )
-    return (
-        ranked.select(abc.alias("abc_class"), "r", "total")
-        .groupBy("abc_class")
-        .agg(
-            F.count("*").alias("n_parts"),
-            F.sum("r").alias("rev_cents"),
-            F.round(F.sum("r") / F.max("total").cast("double"), 6).alias("rev_share"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # Duplicate-invoice candidates (same customer, same amount, close dates)
 # --------------------------------------------------------------------------
 @register(
@@ -305,75 +233,6 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Maximum drawdown (round 6)
-# --------------------------------------------------------------------------
-@register(
-    "q_max_drawdown",
-    driver=False,  # §2.5 running-extremum window family — pytest oracle
-    oracle="""
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS flow_c
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-), eq0 AS (
-  SELECT event_type, day,
-         sum(flow_c) OVER w AS equity_c
-  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-), eq AS (
-  SELECT event_type, day, equity_c,
-         max(equity_c) OVER w2 AS peak_c
-  FROM eq0 WINDOW w2 AS (PARTITION BY event_type ORDER BY day
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_type,
-       CAST(max(peak_c - equity_c) AS BIGINT) AS max_drawdown_cents,
-       round(max(peak_c - equity_c) / 100.0, 2) AS max_drawdown
-FROM eq GROUP BY event_type
-""",
-)
-def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown per event_type: peak-to-trough fall of the
-    cumulative daily cents flow — running sum, running max of it, max gap
-    (SURVEY §2.5 frames tier; the risk metric every equity-curve report
-    carries, and the q_floored_running_balance trick's mirror image:
-    running-EXTREMUM windows turn the sequential-looking scan into plain
-    ordered frames). Exact cents integers end to end.
-
-    Scale: one (type) shuffle; both windows share its sort."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = e.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("flow_c"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    eq = daily.select(
-        "event_type", "day", F.sum("flow_c").over(w).alias("equity_c")
-    ).select(
-        "event_type",
-        "day",
-        "equity_c",
-        F.max("equity_c")
-        .over(
-            Window.partitionBy("event_type")
-            .orderBy("day")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        .alias("peak_c"),
-    )
-    dd = F.col("peak_c") - F.col("equity_c")
-    return eq.groupBy("event_type").agg(
-        F.max(dd).cast("long").alias("max_drawdown_cents"),
-        F.round(F.max(dd) / 100.0, 2).alias("max_drawdown"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Realized volatility from daily log returns (round 6)
 # --------------------------------------------------------------------------
 @register(
@@ -414,7 +273,7 @@ FROM mom WHERE n > 1
 )
 def q_realized_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annualized realized volatility per event_type — stddev of daily
-    log returns × √252 (SURVEY §2.5 time-series tier beside q_bollinger_bands /
+    log returns × √252 (SURVEY §2.5 time-series tier beside
     q_ewma). Returns quantize to integer MICRO-units (round(ln(ratio)·1e6)
     — one libm ln per row, identical input ⇒ identical double ⇒ identical
     rounding), so Σr and Σr² are exact int64/128-bit sums and the variance

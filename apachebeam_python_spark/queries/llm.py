@@ -859,28 +859,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_split_assign",
-    driver=False,  # extra beyond SURVEY §2 — pytest-only, oracle-checked
-    oracle="""
-SELECT source,
-       CASE WHEN doc_id % 100 < 80 THEN 'train'
-            WHEN doc_id % 100 < 90 THEN 'val'
-            ELSE 'test' END AS split,
-       count(*) AS n_docs
-FROM documents
-GROUP BY source, split
-""",
-)
-def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/val/test assignment
-    (operators.curation.split_assign): id-modulo bands, zero-shuffle, no
-    RNG; output = per-(source, split) census proving stratification."""
-    d = table(spark, sf_dir, "documents")
-    out = C.split_assign(d, "doc_id", [("train", 80), ("val", 10), ("test", 10)])
-    return out.groupBy("source", "split").agg(F.count("*").alias("n_docs"))
-
-
-@register(
     "q_doc_chunks",
     driver=False,  # extra beyond SURVEY §2 — pytest-only, oracle-checked
     oracle="""
@@ -902,49 +880,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence step; every chunk row is derived with zero shuffles."""
     d = table(spark, sf_dir, "documents")
     return C.chunk_documents(d, "text", "doc_id", chunk_tokens=64, stride=48)
-
-
-@register(
-    "q_tfidf",
-    driver=False,  # extra §2.11 text-analysis depth — pytest-only
-    oracle="""
-WITH tf AS (
-  SELECT doc_id, word, count(*) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
-  GROUP BY doc_id, word
-), df AS (
-  SELECT word, count(*) AS df FROM (SELECT DISTINCT doc_id, word FROM tf) GROUP BY word
-), n AS (
-  SELECT count(*) AS n_docs FROM documents
-)
-SELECT doc_id, word, tf,
-       round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-FROM tf
-JOIN df USING (word)
-CROSS JOIN n
-""",
-)
-def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF over the corpus (SURVEY §2.11 text analysis): term frequency
-    per doc × ln(N/df). Two aggregates + one broadcast join (the df table is
-    vocabulary-sized); the corpus-count scalar rides a broadcast cross join.
-    At 100 TB the vocabulary table is the only broadcast risk — cap it with
-    a min-df filter."""
-    d = table(spark, sf_dir, "documents")
-    words = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("word"))
-    tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    df_tbl = tf.select("doc_id", "word").distinct().groupBy("word").agg(
-        F.count("*").alias("df")
-    )
-    n_docs = d.select(F.count("*").cast("double").alias("n_docs"))
-    return (
-        tf.join(F.broadcast(df_tbl), "word")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id", "word", "tf",
-            F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6).alias("tfidf"),
-        )
-    )
 
 
 @register(
@@ -1966,77 +1901,6 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_keywords_tfidf",
-    driver=False,  # §2.11 keyword-extraction extension — pytest oracle
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM toks WHERE term <> '' GROUP BY 1, 2
-), df AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-), nd AS (
-  SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM tf
-), scored AS (
-  SELECT tf.doc_id, tf.term,
-         round(tf.tf * (CAST(nd.n AS DOUBLE) / df.df), 6) AS score
-  FROM tf JOIN df USING (term) CROSS JOIN nd
-)
-SELECT doc_id, term, score, rk FROM (
-  SELECT doc_id, term, score,
-         CAST(row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY score DESC, term) AS BIGINT) AS rk
-  FROM scored
-) WHERE rk <= 3
-""",
-)
-def q_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document keyword extraction — the doc-side complement to BM25
-    retrieval (q_bm25): each document's top-3 terms by a rational tf-idf
-    (tf · N/df — the plain inverse-frequency ratio, deliberately libm-free:
-    ln() differs across engines in the last ulp, and the RATIO variant is
-    the same kind of rarity weighting with exactly-reproducible scores).
-    Ties break on the term itself, so the top-3 cut is engine-identical.
-    The extracted keywords are the metadata-enrichment step before
-    faceting / mixture reports in a curation pipeline.
-
-    Scale: explode → (doc, term) partial+final agg; df is a term-keyed agg
-    over the (already collapsed) tf table, broadcast back; N is a 1-row
-    broadcast; the per-doc top-3 is WindowGroupLimit-shaped (partial top-k
-    before the doc shuffle). Nothing touches raw text twice."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    tf = (
-        d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    nd = tf.agg(F.countDistinct("doc_id").alias("n"))
-    scored = (
-        tf.join(df, "term")
-        .crossJoin(F.broadcast(nd))
-        .select(
-            "doc_id",
-            "term",
-            F.round(
-                F.col("tf") * (F.col("n").cast("double") / F.col("df")), 6
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "term")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "term", "score", "rk")
-    )
-
-
-@register(
     "q_source_overlap",
     driver=False,  # §2.11 curation-diagnostic extension — pytest oracle
     oracle="""
@@ -2102,82 +1966,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_hard_negatives",
-    driver=False,  # §2.11 retrieval-training extension — pytest oracle
-    oracle="""
-WITH e AS (SELECT vec_id, label,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-q AS (SELECT * FROM e WHERE vec_id % 40 = 0),
-pairs AS (
-  SELECT q.vec_id AS query_id, q.label AS query_label,
-         c.vec_id AS negative_id,
-         list_cosine_similarity(q.v, c.v) AS sim
-  FROM q JOIN e c ON c.label <> q.label
-)
-SELECT query_id, query_label, negative_id,
-       round(sim, 6) AS cos_sim, CAST(rn AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY sim DESC, negative_id) AS rn
-      FROM pairs)
-WHERE rn <= 4
-""",
-)
-def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive retrieval training: for each
-    query vector, the top-4 most-similar vectors of a DIFFERENT label —
-    the highest-loss negatives a trainer wants in each batch (random
-    negatives are too easy; these sit right at the decision boundary).
-    Exact cosine ranking with the (sim DESC, id) total order; labels ride
-    the embeddings fixture.
-
-    Scale: same plan spine as q_cosine_topk — the query set broadcasts
-    with precomputed norms, the corpus never shuffles, and per-query
-    top-4 cuts through WindowGroupLimit (per-partition partial top-k
-    before the rank shuffle). The label inequality is a join residual on
-    the broadcast row, not a second pass. At 100 TB mine within ANN
-    cells first (the 'emb_lsh'/'ivf' arms) and exact-rank only the
-    candidates — same verify expressions, bucketed candidate
-    generation."""
-    from pyspark.sql import Window
-
-    from ..session import fan_out
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % 40 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("qv"),
-        V.norm(F.col("embedding")).alias("qn"),
-    )
-    c = fan_out(e).select(
-        F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("c_label"),
-        F.col("embedding").alias("cv"),
-        V.norm(F.col("embedding")).alias("cn"),
-    )
-    pairs = c.join(F.broadcast(q), F.col("query_label") != F.col("c_label"))
-    sims = pairs.withColumn(
-        "cos_sim",
-        V.safe_cosine_from(V.dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("negative_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 4)
-        .select(
-            "query_id",
-            "query_label",
-            "negative_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
-
-
 _MD5_U16_SQL = (
     "((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1))-1)*4096"
     " + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))-1)*256"
@@ -2217,7 +2005,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary is bit-identical across engines (no cross-source float sum,
     no pow/libm). Selection replays exactly: the uniform is an md5 slice
     of doc_id, and the census pins membership by id checksum, not just
-    counts (same discipline as q_stratified_sample).
+    counts.
 
     Scale: per-source counts are a partial+final agg (|sources| rows →
     1-row min broadcast); the keep filter is pure codegen riding the
@@ -2296,7 +2084,7 @@ def q_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual operator — is the same regexp/array pipeline a crawl would
     run, expressed identically in both engines. The registered domain
     (last two host labels) comes along for per-domain quotas
-    (q_domain_cap) and blocklists.
+    and blocklists.
 
     Scale: pure codegen projection — regexp_replace / split / sort / join
     on each row independently, zero shuffle, scales linearly with no
@@ -2890,223 +2678,6 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# kNN classification by exact cosine vote (round 5)
-# --------------------------------------------------------------------------
-@register(
-    "q_knn_classifier",
-    driver=False,  # §2.11 embedding/eval family (round 5) — pytest oracle
-    oracle="""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), q AS (SELECT * FROM e WHERE vec_id % 10 = 7),
-c AS (SELECT * FROM e WHERE vec_id % 10 <> 7),
-pairs AS (
-  SELECT q.vec_id AS query_id, q.label AS true_label,
-         c.label AS n_label,
-         list_cosine_similarity(q.v, c.v) AS sim, c.vec_id AS nid
-  FROM q JOIN c ON true
-), top AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim DESC, nid) AS rn
-    FROM pairs
-  ) WHERE rn <= 5
-), votes AS (
-  SELECT query_id, true_label, n_label,
-         CAST(count(*) AS BIGINT) AS c
-  FROM top GROUP BY 1, 2, 3
-), pick AS (
-  SELECT query_id, true_label, n_label AS predicted,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY c DESC, n_label) AS pr
-  FROM votes
-)
-SELECT query_id AS vec_id,
-       CAST(true_label AS BIGINT) AS true_label,
-       CAST(predicted AS BIGINT)  AS predicted,
-       true_label = predicted     AS is_correct
-FROM pick WHERE pr = 1
-""",
-)
-def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN label prediction over the embedding table (SURVEY §2.11
-    embedding/eval tier): every vec_id%10==7 vector is held out and
-    classified by MAJORITY VOTE of its 5 exact-cosine nearest neighbors
-    from the remaining corpus (ties break to the smaller label — a total
-    order, so predictions are deterministic). The evaluation shape every
-    embedding pipeline runs to sanity-check that its vectors carry label
-    signal before anything expensive trains on them; reuses the exact
-    cosine machinery that q_cosine_topk oracle-anchors.
-
-    Scale: queries broadcast, corpus never shuffles (the cosine_topk
-    plan); the vote is a (query × ≤k)-sized groupBy. At 100 TB swap the
-    exact pass for the IVF/LSH candidates (q_ann_lsh) and keep the vote —
-    accuracy then degrades with measured recall, which is the right
-    trade to surface."""
-    e = table(spark, sf_dir, "embeddings")
-    q_set = e.filter(F.col("vec_id") % 10 == 7)
-    corpus = e.filter(F.col("vec_id") % 10 != 7)
-    top = SIM.cosine_topk(corpus, q_set, "embedding", "vec_id", k=5)
-    labels = e.select(F.col("vec_id").alias("nid"), F.col("label").alias("n_label"))
-    true_l = e.select(
-        F.col("vec_id").alias("qid"), F.col("label").alias("true_label")
-    )
-    votes = (
-        top.join(labels, top.neighbor_id == F.col("nid"))
-        .groupBy("query_id", "n_label")
-        .agg(F.count("*").alias("c"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("c").desc(), F.col("n_label"))
-    pick = votes.withColumn("pr", F.row_number().over(w)).filter(F.col("pr") == 1)
-    return (
-        pick.join(true_l, pick.query_id == F.col("qid"))
-        .select(
-            F.col("query_id").alias("vec_id"),
-            F.col("true_label").cast("long").alias("true_label"),
-            F.col("n_label").cast("long").alias("predicted"),
-            (F.col("true_label") == F.col("n_label")).alias("is_correct"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Temporal split leakage census (round 5)
-# --------------------------------------------------------------------------
-@register(
-    "q_split_leakage",
-    driver=False,  # §2.11 eval-hygiene family (round 5) — pytest oracle
-    oracle="""
-WITH tagged AS (
-  SELECT user_id, event_type,
-         CAST(ts AS DATE) < DATE '2024-01-16' AS is_train
-  FROM events
-), per_user AS (
-  SELECT event_type, user_id,
-         CAST(sum(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT)     AS n_train,
-         CAST(sum(CASE WHEN NOT is_train THEN 1 ELSE 0 END) AS BIGINT) AS n_test
-  FROM tagged GROUP BY 1, 2
-)
-SELECT event_type,
-       CAST(sum(n_train) AS BIGINT) AS train_rows,
-       CAST(sum(n_test) AS BIGINT)  AS test_rows,
-       CAST(sum(CASE WHEN n_train > 0 AND n_test > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                                    AS leaking_users,
-       CAST(count(*) AS BIGINT)     AS n_users,
-       round(sum(CASE WHEN n_train > 0 AND n_test > 0 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS leak_rate
-FROM per_user
-GROUP BY event_type
-""",
-)
-def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal train/test split leakage census (SURVEY §2.11 evaluation
-    hygiene, beside q_split_assign/q_decontaminate): split events at
-    2024-01-16 and count, per event type, the users who appear on BOTH
-    sides — every such user leaks entity-level signal from test into train
-    (the classic cause of inflated offline metrics). The leak_rate is the
-    fraction a group-aware split (q_split_assign's hash-by-user) would
-    reduce to zero; running both censuses is how a pipeline chooses
-    between temporal and grouped splitting.
-
-    Scale: one shuffle to (event_type, user) with conditional partial
-    aggs, then a per-type census on one row per user — the q_bootstrap_ci
-    two-level reduction shape."""
-    e = table(spark, sf_dir, "events")
-    tagged = e.select(
-        "user_id",
-        "event_type",
-        (F.to_date("ts") < F.lit("2024-01-16").cast("date")).alias("is_train"),
-    )
-    per_user = tagged.groupBy("event_type", "user_id").agg(
-        F.sum(F.when(F.col("is_train"), 1).otherwise(0)).alias("n_train"),
-        F.sum(F.when(~F.col("is_train"), 1).otherwise(0)).alias("n_test"),
-    )
-    leak = F.when((F.col("n_train") > 0) & (F.col("n_test") > 0), 1).otherwise(0)
-    return per_user.groupBy("event_type").agg(
-        F.sum("n_train").alias("train_rows"),
-        F.sum("n_test").alias("test_rows"),
-        F.sum(leak).alias("leaking_users"),
-        F.count("*").alias("n_users"),
-        F.round(F.sum(leak) / F.count("*").cast("double"), 6).alias("leak_rate"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Leave-one-out target encoding (round 5)
-# --------------------------------------------------------------------------
-@register(
-    "q_target_encoding",
-    driver=False,  # §2.11 feature-engineering family (round 5) — pytest oracle
-    oracle="""
-WITH s AS (
-  SELECT event_id, event_type, user_id % 7 AS bucket,
-         CAST(round(value * 100) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-), g AS (
-  SELECT event_type, bucket,
-         CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(y) AS BIGINT)   AS s_g
-  FROM s GROUP BY 1, 2
-), t AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM s
-)
-SELECT s.event_id,
-       CASE WHEN g.n_g > 1
-            THEN round((g.s_g - s.y) / (100.0 * (g.n_g - 1)), 6)
-       END AS loo_enc,
-       round((g.s_g + 20.0 * (t.s / CAST(t.n AS DOUBLE)))
-             / (100.0 * (g.n_g + 20.0)), 6) AS smoothed_enc
-FROM s JOIN g ON s.event_type = g.event_type AND s.bucket = g.bucket
-CROSS JOIN t
-""",
-)
-def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Target (mean) encoding of the (event_type, user-bucket) categorical
-    with the two leak-proofings every feature pipeline needs (SURVEY §2.11
-    feature-engineering tier, beside q_split_leakage): LEAVE-ONE-OUT —
-    each row's own target is subtracted from its group mean, so the
-    feature never encodes the row it describes — and m-estimate SMOOTHING
-    toward the global mean (m=20), which tames rare categories. Group sums
-    stay exact integer cents; the encodings divide once in an identical
-    IEEE tree. Singleton groups yield NULL LOO under identical guards.
-
-    Scale: one groupBy on the category key + a broadcast-sized (1-row)
-    global mean; the encode join is category-keyed — the same shuffle the
-    downstream trainer's shuffle would pay anyway. At 100 TB the group
-    table is vocabulary-sized: broadcast it and the encode is map-side."""
-    s = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "event_id",
-            "event_type",
-            (F.col("user_id") % 7).alias("bucket"),
-            F.round(F.col("value") * 100).cast("long").alias("y"),
-        )
-    )
-    g = s.groupBy("event_type", "bucket").agg(
-        F.count("*").alias("n_g"), F.sum("y").alias("s_g")
-    )
-    t = s.agg(F.count("*").alias("n"), F.sum("y").alias("s"))
-    from ..session import broadcast_if_small
-
-    j = s.join(broadcast_if_small(g), ["event_type", "bucket"]).crossJoin(
-        F.broadcast(t)
-    )
-    loo = F.when(
-        F.col("n_g") > 1,
-        F.round((F.col("s_g") - F.col("y")) / (100.0 * (F.col("n_g") - 1)), 6),
-    )
-    smoothed = F.round(
-        (F.col("s_g") + 20.0 * (F.col("s") / F.col("n").cast("double")))
-        / (100.0 * (F.col("n_g") + 20.0)),
-        6,
-    )
-    return j.select("event_id", loo.alias("loo_enc"), smoothed.alias("smoothed_enc"))
-
-
-# --------------------------------------------------------------------------
 # Feature hashing (the hashing trick) with collision census (round 5)
 # --------------------------------------------------------------------------
 @register(
@@ -3143,8 +2714,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the vocabulary is distinct-key-sized, the census one small
     groupBy; the hash itself applies to the full event stream at zero
-    shuffle when used as a feature (scan-fused md5, the q_split_assign
-    discipline)."""
+    shuffle when used as a feature (scan-fused md5)."""
     e = table(spark, sf_dir, "events")
     d = table(spark, sf_dir, "documents")
     k = F.get_json_object("props", "$.k").cast("long")
@@ -3829,9 +3399,8 @@ def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial naive Bayes with add-one smoothing: train per-language
     token counts on 80 % of documents (doc_id % 5 ≠ 3), classify the
     held-out 20 % by argmax of log prior + Σ tf·log((c+1)/(n_c+V))
-    (SURVEY §2.11 ML-eval tier — the generative counterpart of
-    q_knn_classifier, and the classic bag-of-words baseline every text
-    pipeline reports before anything neural). Unseen tokens take the
+    (SURVEY §2.11 ML-eval tier — the classic bag-of-words baseline every
+    text pipeline reports before anything neural). Unseen tokens take the
     smoothed floor 1/(n_c+V). The argmax runs on the 6-dp ROUNDED score
     with language as tie-break, so prediction is engine-deterministic;
     per-term log inputs are identical integer ratios in both engines
@@ -3947,7 +3516,7 @@ def q_entropy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     $2000) is ≥ ln(l) — a class can have many distinct values yet still
     leak if one dominates, which distinct-count l misses (SURVEY §2.11
     privacy tier). Entropy assembles from exact integer cell counts via
-    H = ln(n) − Σc·ln(c)/n (the q_token_entropy identity — one log per
+    H = ln(n) − Σc·ln(c)/n (one log per
     DISTINCT cell, never per row), effective_l = e^H is the intuitive
     headline number, and the l=3 violation flag is computed on the
     un-rounded double so the boolean is engine-identical.
@@ -4108,7 +3677,7 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     = Σ lengths of phrases containing the word — co-occurrence reach;
     frequency = appearances), and rank each document's phrases by the
     sum of member-word scores — the MULTI-WORD keyphrase extractor
-    beside q_keywords_tfidf's single terms (SURVEY §2.11 text-analysis
+    beside single-term TF-IDF keywords (SURVEY §2.11 text-analysis
     tier; RAKE is the standard cheap keyphrase baseline). The top-3 cut
     ranks on the 6-dp ROUNDED score with the phrase as tie-break, so
     the selection is engine-deterministic; degree/freq are exact
@@ -4195,8 +3764,8 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise distribution): 3 negatives per document drawn by inverse-CDF
     over the cumulative smoothed-frequency table, with md5(doc:slot) as
     the uniform — deterministic, RNG-free, and oracle-replayable (SURVEY
-    §2.11 LLM-pipeline tier beside q_hard_negatives, which mines
-    SEMANTIC negatives; this is the FREQUENCY-matched noise every
+    §2.11 LLM-pipeline tier; where mined hard negatives are SEMANTIC,
+    this is the FREQUENCY-matched noise every
     skip-gram/contrastive objective needs). The 13-hex md5 slice over
     2^52 is an exact dyadic rational in both engines, the cumulative
     weights are identical double sums over the SAME tok order, and the

@@ -1,6 +1,6 @@
 """Classical hypothesis tests as distributed queries (round 4).
 
-SURVEY §2.3 statistical extensions, same tier as q_ab_test/q_ols_trend:
+SURVEY §2.3 statistical extensions, same tier as q_ols_trend:
 the inferential-statistics layer a training-data / experimentation
 pipeline runs at corpus scale — chi-square independence, Mann-Whitney U,
 and two-sample Kolmogorov-Smirnov, each over the
@@ -839,7 +839,7 @@ def q_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     a two-proportion z-test): the 2×2 cells are exact per-user
     integers, OR = ad/bc and RR assemble in one shared double tree, and
     the CI exponentiates ln(OR) ± 1.96·√(Σ 1/cell) — ln/exp at the very
-    end only, 6-dp rounded (the q_token_entropy libm discipline).
+    end only, 6-dp rounded.
 
     Scale: one user-keyed census shuffle, then a 1-row assembly."""
     z = 1.9599639845400545

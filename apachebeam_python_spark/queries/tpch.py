@@ -4,17 +4,18 @@
 The flagship q_pricing_summary (Q1 shape) and q_shipping_priority (Q3
 shape) cover the scan-agg and selective-star families; this module rounds
 out the classic decision-support vocabulary a reference user would expect
-to run unchanged — with the round-3 completion wave, all 22 TPC-H query
-shapes are represented: multi-way join reordering (Q7/Q8),
-conditional-share aggregation (Q8/Q12/Q14), left-outer histograms (Q13),
-decorrelated scalar subqueries (Q2/Q15/Q17), aggregate-membership and
-nested semi joins (Q4/Q18/Q20), EXISTS/NOT-EXISTS censuses (Q21),
-anti-join opportunity scans (Q22), pure scan-aggregates (Q6),
-disjunctive bracket predicates (Q19), and group-vs-global share HAVINGs
-(Q11). Constants are adapted to the fixture's value domains (NATION_i,
-Brand#N, one-word p_type, 1995-2001 dates); where the fixture lacks a
-column (partsupp, commit/receipt dates, c_phone) the docstring states the
-adaptation and the planning shape is preserved. Revenue always sums
+to run unchanged: multi-way join reordering (Q7/Q8), conditional-share
+aggregation (Q8), left-outer histograms (Q13), decorrelated scalar
+subqueries (Q2/Q15), aggregate-membership and nested semi joins
+(Q4/Q18/Q20), EXISTS/NOT-EXISTS censuses (Q21), anti-join opportunity
+scans (Q22), disjunctive bracket predicates (Q19), and group-vs-global
+share HAVINGs (Q11). The Q6, Q12, Q14 and Q17 shapes are not registered:
+the kept shapes' plans carry all of their operators
+(tests/test_plans.py::SUBSUMED). Constants are adapted to the fixture's
+value domains (NATION_i, Brand#N, one-word p_type, 1995-2001 dates);
+where the fixture lacks a column (partsupp, commit/receipt dates,
+c_phone) the docstring states the adaptation and the planning shape is
+preserved. Revenue always sums
 through DECIMAL(18,4) so hashes are order-independent at any scale
 (SURVEY §7.4.4).
 
@@ -325,126 +326,6 @@ def q_cust_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Q14 shape: promo revenue share for one month
-# --------------------------------------------------------------------------
-@register(
-    "q_promo_revenue",
-    driver=False,  # §2.3 conditional-ratio aggregate — pytest oracle
-    oracle="""
-SELECT round(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
-                  THEN CAST(l.l_extendedprice * (1 - l.l_discount)
-                            AS DECIMAL(18,4))
-                  ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
-             / CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                             AS DECIMAL(18,4))) AS DOUBLE), 6)
-         AS promo_revenue_pct
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-03-01'
-  AND l.l_shipdate < TIMESTAMP '1996-04-01'
-""",
-)
-def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape — what fraction of one month's revenue came from
-    PROMO parts: the global conditional-ratio aggregate. Numerator and
-    denominator sum through DECIMAL and divide ONCE in double, so the
-    percentage is exact before its 6 dp round. The month is chosen
-    inside the fixture's date span, so the denominator is non-empty by
-    construction (and a 0/0 would return an empty result identically in
-    both engines, since a global agg over zero joined rows yields NULL
-    pct — still hash-equal).
-
-    Scale: part broadcasts onto the month-pruned lineitem scan (shipdate
-    range is a PushedFilter); the whole query is one map-side-combinable
-    global agg — no shuffle beyond the 1-row final merge."""
-    li = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    zero = F.lit(0.0).cast("decimal(18,4)")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                100.0
-                * F.sum(
-                    F.when(F.col("p_type") == "PROMO", _rev()).otherwise(zero)
-                ).cast("double")
-                / F.sum(_rev()).cast("double"),
-                6,
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Q17 shape: small-quantity-order revenue (decorrelated scalar subquery)
-# --------------------------------------------------------------------------
-@register(
-    "q_small_qty_revenue",
-    driver=False,  # §2.4 decorrelated scalar subquery — pytest oracle
-    oracle="""
-SELECT round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
-             AS DOUBLE) / 7.0, 4) AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN (
-  SELECT l_partkey AS agg_partkey,
-         0.2 * (CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-                / count(*)) AS qty_threshold
-  FROM lineitem GROUP BY l_partkey
-) t ON t.agg_partkey = l.l_partkey
-WHERE p.p_brand = 'Brand#7'
-  AND l.l_quantity < t.qty_threshold
-""",
-)
-def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape — average yearly revenue lost if small-quantity
-    orders (below 20% of the part's average order size) were not filled,
-    for one brand. The classic correlated scalar subquery, written in its
-    decorrelated form IDENTICALLY in both engines (per-part thresholds as
-    a join table) so neither optimizer's decorrelation strategy can
-    change semantics. The per-part average divides a DECIMAL sum by an
-    exact count, making the 0.2·avg threshold bit-identical across
-    engines (order-independent), so the strict < cut agrees everywhere.
-
-    Scale: the threshold table is a partial+final agg on l_partkey (the
-    fact table's own key — no extra shuffle if lineitem is bucketed by
-    partkey); the brand filter reduces part to ~1/|brands| before its
-    broadcast. Joining thresholds BEFORE filtering by brand would shuffle
-    the full fact table twice — the plan keeps the brand semi-filter
-    first."""
-    li = table(spark, sf_dir, "lineitem")
-    p = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#7").select(
-        "p_partkey"
-    )
-    thresholds = li.groupBy(F.col("l_partkey").alias("agg_partkey")).agg(
-        (
-            0.2
-            * (
-                F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
-                / F.count("*")
-            )
-        ).alias("qty_threshold")
-    )
-    branded = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    return (
-        branded.join(thresholds, branded.l_partkey == thresholds.agg_partkey)
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast(
-                    "double"
-                )
-                / 7.0,
-                4,
-            ).alias("avg_yearly")
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # Q18 shape: large-volume orders (aggregate-membership semi join)
 # --------------------------------------------------------------------------
 @register(
@@ -521,63 +402,12 @@ def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ==========================================================================
 # Round-3 completion wave: the remaining classic decision-support shapes
-# (Q2/Q4/Q6/Q9/Q11/Q12/Q15/Q16/Q19/Q20/Q21/Q22), adapted to the fixture's
+# (Q2/Q4/Q9/Q11/Q15/Q16/Q19/Q20/Q21/Q22), adapted to the fixture's
 # columns — there is no partsupp table and no commit/receipt dates, so the
 # supply-offer shapes derive their bridge from lineitem aggregates and the
 # lateness shapes proxy "late" as shipping long after the order date. Each
 # docstring states the adaptation. All DECIMAL-exact by repo convention.
 # ==========================================================================
-
-
-# --------------------------------------------------------------------------
-# Q6 shape: forecasting revenue change (pure scan-aggregate)
-# --------------------------------------------------------------------------
-@register(
-    "q_forecast_revenue",
-    driver=False,  # §2.3 global combine over a pushed-down filter — pytest oracle
-    oracle="""
-SELECT CAST(round(CAST(sum(CAST(l_extendedprice * l_discount
-                    AS DECIMAL(18,4))) AS DOUBLE), 4) AS DOUBLE) AS revenue,
-       count(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.04 AND 0.06
-  AND l_quantity < 24
-""",
-)
-def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape — revenue increase from eliminating mid-band
-    discounts on small orders in one year: the purest scan-aggregate in
-    the suite (no join at all). Exists to pin the zero-shuffle plan: all
-    three predicates sit in PushedFilters at the parquet scan, the
-    product sums through DECIMAL(18,4) (order-independent), and the
-    whole query is one partial+final agg with a 1-row result.
-
-    Scale: the canonical 100 TB smoke test — IO-bound by design. With
-    date-partitioned layout the year predicate prunes ~6/7 of files
-    before any task launches; the discount/quantity filters drop to row
-    groups via min/max stats. Nothing shuffles but 1-row partials."""
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & F.col("l_discount").between(0.04, 0.06)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                        "decimal(18,4)"
-                    )
-                ).cast("double"),
-                4,
-            ).alias("revenue"),
-            F.count("*").alias("n_lines"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -679,55 +509,6 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey",
         "s_name",
         F.round(F.col("total_revenue").cast("double"), 4).alias("total_revenue"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Q12 shape: shipping-delay priority census (join + dual conditional agg)
-# --------------------------------------------------------------------------
-@register(
-    "q_delay_priority_census",
-    driver=False,  # §2.3 conditional dual-count aggregation — pytest oracle
-    oracle="""
-SELECT l.l_returnflag AS ship_class,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders o
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-  AND l.l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-GROUP BY l.l_returnflag
-""",
-)
-def q_delay_priority_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape — for each shipping class, how many late lines came
-    from high- vs low-priority orders (did slow shipping hit urgent
-    orders?). Adaptation: no l_shipmode/commit/receipt columns, so the
-    class is l_returnflag and "late" is shipped >90 days after the order
-    date. The dual CASE-count aggregation over one join is the Q12
-    planning shape verbatim.
-
-    Scale: lineitem's year filter is pushed to the scan; the join
-    shuffles on orderkey once (or rides bucketed layout for zero
-    exchanges); the correlated 90-day predicate evaluates at the join —
-    no second pass. Output is |flags| rows from a partial+final agg."""
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
-    )
-    li = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    joined = li.join(o, li.l_orderkey == o.o_orderkey).filter(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    )
-    return joined.groupBy(F.col("l_returnflag").alias("ship_class")).agg(
-        F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
-        F.sum(F.when(~hi, 1).otherwise(0)).alias("low_line_count"),
     )
 
 
@@ -1224,16 +1005,25 @@ def q_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS (another supplier's line) / NOT EXISTS (another supplier's
     late line) pair is rewritten as one per-order census — n_supp ≥ 2
     AND n_late_supp = 1 picks exactly the orders where one supplier,
-    alone, was late — written IDENTICALLY in both engines (the classic
-    decorrelation; max over the single late suppkey is well-defined
-    because the filter pins n_late_supp = 1). Late = shipped >90 days
-    after order date (no receipt/commit dates in the fixture).
+    alone, was late (the classic decorrelation; max over the single late
+    suppkey is well-defined because the filter pins n_late_supp = 1).
+    Late = shipped >90 days after order date (no receipt/commit dates in
+    the fixture).
 
-    Scale: ONE orderkey-keyed shuffle builds the per-order census
-    (partial+final agg with conditional count-distincts); the original's
-    triple self-join of lineitem never materializes. The status filter
-    prunes orders at the scan; the final supplier probe is a broadcast
-    of the census survivors; top-20 is TakeOrderedAndProject."""
+    The census counts distinct suppliers without a count-distinct: one
+    agg per (order, supplier) folds the lines into an is_late flag, and
+    the per-order agg counts those rows and sums the flags (the oracle
+    keeps the two count-distincts; the counts are the same). Two
+    count-distincts over different arguments would plan an Expand whose
+    group order follows expression-id hashes, so the plan text (and its
+    fingerprint) would change with what the session built before.
+
+    Scale: two keyed shuffles build the census, (order, supplier) and
+    then order, each a partial+final agg with no Expand of the lines;
+    the original's triple self-join of lineitem never materializes. The
+    status filter prunes orders at the scan; the final supplier probe is
+    a broadcast of the census survivors; top-20 is
+    TakeOrderedAndProject."""
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
@@ -1241,13 +1031,19 @@ def q_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    per_order = (
+    per_supp = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey")
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(F.max(late.cast("int")).alias("is_late"))
+    )
+    per_order = (
+        per_supp.groupBy("l_orderkey")
         .agg(
-            F.count_distinct("l_suppkey").alias("n_supp"),
-            F.count_distinct(F.when(late, F.col("l_suppkey"))).alias("n_late_supp"),
-            F.max(F.when(late, F.col("l_suppkey"))).alias("late_supp"),
+            F.count("*").alias("n_supp"),
+            F.sum("is_late").alias("n_late_supp"),
+            F.max(F.when(F.col("is_late") == 1, F.col("l_suppkey"))).alias(
+                "late_supp"
+            ),
         )
         .filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1))
     )

@@ -87,28 +87,6 @@ def q_grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_side_input_scalar",
-    driver=False,  # side-input broadcast proven by q_join_broadcast
-    oracle="""
-SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
-FROM orders
-WHERE o_totalprice > 1.8 * (SELECT avg(o_totalprice) FROM orders)
-""",
-)
-def q_side_input_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam ``AsSingleton`` side input: a global scalar joined to every row
-    without driver-side collection — 1-row agg broadcast into the filter
-    (the SQL scalar subquery, dataflow-style)."""
-    o = table(spark, sf_dir, "orders")
-    avg_price = o.agg((1.8 * F.avg("o_totalprice")).alias("threshold"))
-    return (
-        o.crossJoin(F.broadcast(avg_price))
-        .filter(F.col("o_totalprice") > F.col("threshold"))
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("totalprice"))
-    )
-
-
-@register(
     "q_run_inference",
     # oracle generated from the SAME committed model artifact the Spark side
     # loads — see operators/inference.lid_oracle_sql for the float-parity

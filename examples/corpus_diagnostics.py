@@ -49,8 +49,9 @@ def main() -> None:
     print("vocabulary coverage per source (top-500 vocab):")
     for r in q.QUERIES["q_vocab_coverage"](spark, sf_dir).orderBy("source").collect():
         print(f"  {r.source:>8}: {r.total_tokens} tokens, OOV {r.oov_rate:.1%}")
-    capped = q.QUERIES["q_domain_cap"](spark, sf_dir)
-    print("per-domain quota (≤100 docs/source):", capped.count(), "docs kept")
+    print("temperature-rebalanced source mix (T = 2):")
+    for r in q.QUERIES["q_temperature_mix"](spark, sf_dir).orderBy("source").collect():
+        print(f"  {r.source:>8}: keep {r.keep_rate:.3f} of {r.n_s} -> {r.n_kept} docs")
 
     # phrase candidates for a tokenizer glossary
     print("top PMI collocations:")

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Example 8 — experimentation & statistical modeling: the A/B read-out
-(plain + CUPED-adjusted), trend/seasonality screens (OLS slope, ACF,
-seasonal anomalies, Holt forecasts), pipeline counters via the
-Observation side channel, and a PCA projection of the embedding table.
+(covariate balance gate + CUPED-adjusted metric), trend/seasonality
+screens (OLS slope, ACF, seasonal anomalies, Holt forecasts), pipeline
+counters via the Observation side channel, and a PCA projection of the
+embedding table.
 
 Run: python examples/experimentation.py [sf_dir]
 """
@@ -25,8 +26,8 @@ def main() -> None:
     spark = get_spark("example-experiments")
     spark.sparkContext.setLogLevel("ERROR")
 
-    print("A/B read-out (two-proportion z):")
-    QUERIES["q_ab_test"](spark, sf_dir).show()
+    print("covariate balance across variants (standardized mean difference):")
+    QUERIES["q_covariate_balance"](spark, sf_dir).show()
 
     print("CUPED-adjusted metric (variance ratio = fraction kept):")
     QUERIES["q_cuped"](spark, sf_dir).orderBy("variant").show()

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Example 6 — product analytics over the event stream: funnel, cohort
-retention, event-transition matrix, rolling 7-day distinct users, and the
+retention, top 3-step journeys, rolling 7-day distinct users, and the
 key-skew diagnostic that decides the shuffle strategy.
 
 Run: python examples/product_analytics.py [sf_dir]
@@ -32,10 +32,8 @@ def main() -> None:
         "cohort_week", "week_no"
     ).show(8)
 
-    print("event-transition matrix (top 5 transitions):")
-    QUERIES["q_event_transitions"](spark, sf_dir).orderBy(
-        F.col("n").desc(), "from_type", "to_type"
-    ).show(5)
+    print("top 3-step user journeys (top 5 paths):")
+    QUERIES["q_funnel_paths"](spark, sf_dir).show(5, truncate=False)
 
     print("rolling 7-day distinct users (last 5 days):")
     QUERIES["q_rolling_distinct"](spark, sf_dir).orderBy(

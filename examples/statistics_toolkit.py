@@ -2,8 +2,8 @@
 """Example 9 — round-4 statistics & governance toolkit: classical
 hypothesis tests (chi-square, Mann-Whitney, KS, Friedman) over the
 events stream, seasonal-trend decomposition, exact activity bitmaps, the
-grid-bucketed spatial join, k-core graph peeling, token entropy quality
-scoring, and a differentially private median.
+grid-bucketed spatial join, k-core graph peeling, readability scoring,
+and a differentially private median.
 
 Run: python examples/statistics_toolkit.py [sf_dir]
 """
@@ -48,8 +48,8 @@ def main() -> None:
     print("3-core of the supplier->customer nation graph")
     QUERIES["q_kcore"](spark, sf_dir).orderBy("node").show()
 
-    print("token entropy quality scores (first 10 docs)")
-    QUERIES["q_token_entropy"](spark, sf_dir).orderBy("doc_id").show(10)
+    print("FORCAST readability grades (first 10 docs)")
+    QUERIES["q_readability"](spark, sf_dir).orderBy("doc_id").show(10)
 
     print("DP median per event type (exponential mechanism)")
     QUERIES["q_dp_median"](spark, sf_dir).orderBy("event_type").show()

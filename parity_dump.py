@@ -79,9 +79,6 @@ EMPTY_OK: dict[str, str] = {
         "than k=8 or single-valued sensitive attribute); more data "
         "enlarges every class past k (11 violations at sf0.01 — the "
         "driver's grade scale — none at sf0.1+)",
-    "q_sparse_cosine": "TF-IDF cosine pairs over terms with df ≤ 40; at "
-        "sf0.1+ every cross-doc shared term exceeds the df ceiling, so no "
-        "pair survives the weighting",
     "q_misra_gries": "heavy hitters above the φ frequency threshold; the "
         "sf1 replica's salted documents flatten token frequencies below φ",
 }

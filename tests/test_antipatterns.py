@@ -85,14 +85,14 @@ def test_collects_are_exactly_the_documented_bounded_ones():
 #: WITH a boundedness justification here.
 ALLOWED_BROADCASTS = {
     # TPC-H: nation/region/supplier/part dims + 1-row scalar subqueries
-    "queries/tpch.py": 34,
+    "queries/tpch.py": 32,
     # dims, 1-row grand totals, k-row channel/scenario/state tables
     # + the betweenness sigma-table self-joins (n²-row metadata)
     # + |V|-row graph round tables (DAG depth, SSSP dist + 1-row source ×2;
     #   doc'd: shuffle on v past broadcast size, the operators/graph.py note)
     # + profile drift's 1-row time bounds + assortativity's two |V|-row
     #   degree tables
-    "queries/analytics.py": 40,  # r11 -1: the DAG-depth round-table broadcast moved to operators/graph.dag_depths; r12 -2: q_kcore's survivor-set semi-join broadcasts moved to operators/graph.kcore_census
+    "queries/analytics.py": 34,  # r11 -1: the DAG-depth round-table broadcast moved to operators/graph.dag_depths; r12 -2: q_kcore's survivor-set semi-join broadcasts moved to operators/graph.kcore_census
     # dims, 1-row CUPED/AB moments, k-row quantile cuts + calendars +
     # the 41-row DP candidate grid + the decision stump's 1-row class total
     # + the conformal radius (a 1-row quantile scalar, r6)
@@ -106,11 +106,11 @@ ALLOWED_BROADCASTS = {
     #   join NEEDS the broadcast side; CDF bucketing is the doc'd big-vocab swap)
     # + DSIR's 1-row corpus totals and 256-row bucket log-ratio table (r6 —
     #   bucket count is a constant, independent of corpus size)
-    "queries/llm.py": 29,
+    "queries/llm.py": 24,
     # vocab/merge tables (Heaps-law small), 1-row totals, df caps,
     # JS-divergence marginals (per-source and per-term corpus counts)
     # + the Kneser-Ney marginal tables (Heaps-law small)
-    "queries/corpus_lm.py": 25,  # r7 +2: phrase search 1-row top-bigram, twice (two postings slices)
+    "queries/corpus_lm.py": 21,  # r7 +2: phrase search 1-row top-bigram, twice (two postings slices)
     # 1-row global aggregates, nation dim, k-row histogram/sketch bounds
     "queries/aggregations.py": 11,
     # 1-row moment/statistic assemblies (k groups at most; incl. the
@@ -144,8 +144,6 @@ ALLOWED_BROADCASTS = {
     # DPP demo's event-type dim (domain-bounded, ≤|event types| rows; the
     # broadcast is what DPP reuses to feed the runtime partition filter)
     "queries/scans.py": 2,  # r7 +1: z-order census 1-row min/max bounds
-    # 1-row side-input scalar (Beam AsSingleton shape)
-    "queries/udfs.py": 1,
     # static enrichment dim (Beam side-input shape)
     "queries/streaming_q.py": 1,
     # nation dim lookup (the side-input join itself)

@@ -1588,23 +1588,6 @@ def test_cycle_nodes_matches_python_closure(spark, sf_dir):
     assert got == expected
 
 
-def test_bollinger_band_invariants(spark, sf_dir):
-    from apachebeam_python_spark import queries as q
-
-    rows = q.QUERIES["q_bollinger_bands"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        if r.n_win > 1:
-            assert r.lower_band <= r.mid <= r.upper_band
-            # flags agree with the published bands up to the 4-dp rounding
-            if r.breakout_up:
-                assert r.close >= r.upper_band - 1e-4
-            if r.breakout_down:
-                assert r.close <= r.lower_band + 1e-4
-        else:
-            assert r.breakout_up is None and r.breakout_down is None
-
-
 def test_entropy_l_diversity_invariants(spark, sf_dir):
     import math as _m
 

@@ -17,11 +17,12 @@ from apachebeam_python_spark import queries as q
 from parity_dump import EMPTY_OK
 
 #: The exact ledger membership as reviewed in round 11. Every entry was
-#: observed empty at ≥1 sweep scale factor in CORRECTNESS_LOCAL_r13,
-#: _r13_sf01 and _r12_sf1 (sf0.01: q_duplicate_orders, q_source_overlap; sf0.1 adds q_betweenness,
-#: q_except_all, q_important_stock, q_inverted_index, q_k_anonymity,
-#: q_sparse_cosine; sf1.0 adds q_misra_gries) with the oracle hash-agreeing
-#: on the empty set — correct but vacuous, hence the documented reasons.
+#: observed empty at ≥1 sweep scale factor in CORRECTNESS_LOCAL_r14,
+#: _r14_sf01 and _r12_sf1 (sf0.01: q_duplicate_orders, q_source_overlap;
+#: sf0.1 adds q_betweenness, q_except_all, q_important_stock,
+#: q_inverted_index, q_k_anonymity; sf1.0 adds q_misra_gries) with the
+#: oracle hash-agreeing on the empty set — correct but vacuous, hence the
+#: documented reasons.
 PINNED_LEDGER = {
     "q_betweenness",
     "q_duplicate_orders",
@@ -31,7 +32,6 @@ PINNED_LEDGER = {
     "q_k_anonymity",
     "q_misra_gries",
     "q_source_overlap",
-    "q_sparse_cosine",
 }
 
 

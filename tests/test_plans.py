@@ -179,22 +179,12 @@ def test_bm25_topk_take_ordered(spark, sf_dir):
 def test_r3_corpus_lm_plan_shapes(spark, sf_dir):
     """Round-3 corpus-statistics family: the scale properties their
     docstrings claim must be visible in the physical plan."""
-    # domain cap: rank-within-key <= k keeps the pre-shuffle partial limit
-    assert P.has(q.QUERIES["q_domain_cap"](spark, sf_dir), "WindowGroupLimit")
     # vocab build: top-V is TakeOrdered, never a global sort
     df = q.QUERIES["q_vocab_coverage"](spark, sf_dir)
     plan = P.executed_plan(df)
     assert "TakeOrderedAndProject" in plan, plan
     # corpus statistics broadcast back against the exploded token stream
     assert plan.count("BroadcastHashJoin") >= 1, plan
-
-
-def test_r3_sparse_cosine_broadcast_norms(spark, sf_dir):
-    """Sparse cosine: norm/total tables broadcast; the only real shuffles
-    are the token-keyed aggregations and the pair aggregation."""
-    df = q.QUERIES["q_sparse_cosine"](spark, sf_dir)
-    plan = P.executed_plan(df)
-    assert plan.count("BroadcastHashJoin") >= 3, plan
 
 
 def test_r3_rollup_cascade_reuses_partials(spark, sf_dir):
@@ -224,9 +214,6 @@ def test_r3_second_wave_plan_shapes(spark, sf_dir):
     df = q.QUERIES["q_ewma"](spark, sf_dir)
     plan = P.executed_plan(df)
     assert plan.count("Window") >= 1 and P.count_exchanges(df) == 1, plan
-    # association rules: item counts and totals broadcast onto pruned pairs
-    df = q.QUERIES["q_assoc_rules"](spark, sf_dir)
-    assert P.executed_plan(df).count("BroadcastHashJoin") >= 2
     # trending terms: one term-keyed shuffle + broadcast totals, nothing else
     df = q.QUERIES["q_trending_terms"](spark, sf_dir)
     assert P.count_exchanges(df) <= 2, P.executed_plan(df)
@@ -240,9 +227,6 @@ def test_r3_experiments_plan_shapes(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 1, plan  # survivors rejoin
-    # deterministic per-key sample: local top-k before the shuffle
-    df = q.QUERIES["q_sample_per_key"](spark, sf_dir)
-    assert P.has(df, "WindowGroupLimit"), P.executed_plan(df)
     # TPC-H Q3 shape: broadcast dims + global top-10 never full-sorts
     df = q.QUERIES["q_shipping_priority"](spark, sf_dir)
     plan = P.executed_plan(df)
@@ -253,9 +237,6 @@ def test_r3_experiments_plan_shapes(spark, sf_dir):
     df = q.QUERIES["q_bloom_decontaminate"](spark, sf_dir)
     plan = P.executed_plan(df)
     assert plan.count("BroadcastHashJoin") >= 2, plan
-    # A/B read-out: one user_id shuffle, then metadata-sized rollups
-    df = q.QUERIES["q_ab_test"](spark, sf_dir)
-    assert P.count_exchanges(df) <= 3, P.executed_plan(df)
 
 
 def test_r3_wave2_plan_shapes(spark, sf_dir):
@@ -341,10 +322,6 @@ def test_tpch_wave_plan_shapes(spark, sf_dir):
     df = q.QUERIES["q_returned_items"](spark, sf_dir)
     assert "EqualTo(l_returnflag,R)" in P.pushed_filters(df)
     assert P.has(df, "TakeOrderedAndProject")
-    # Q14: one broadcast join, ONE exchange total (global agg merge)
-    df = q.QUERIES["q_promo_revenue"](spark, sf_dir)
-    assert P.has(df, "BroadcastHashJoin")
-    assert P.count_exchanges(df) <= 1, P.executed_plan(df)
     # Q18: aggregated-membership semi join stays a semi join
     df = q.QUERIES["q_large_orders"](spark, sf_dir)
     plan = P.executed_plan(df)
@@ -389,18 +366,11 @@ def test_eval_and_survival_plan_shapes(spark, sf_dir):
 
 
 def test_tpch_completion_plan_shapes(spark, sf_dir):
-    """The round-3 completion wave: Q6 is a ZERO-join zero-shuffle-input
-    scan-agg with every predicate pushed; Q4's EXISTS stays a semi join;
+    """The round-3 completion wave: Q4's EXISTS stays a semi join;
     Q15 reuses the revenue agg for both consumers (no second fact scan in
     the final plan); Q19's part-side residue (brand set) is still pushed
     below the join despite the straddling OR; Q21 never self-joins
     lineitem three times — one orderkey agg + one broadcast probe."""
-    # Q6: pure pushdown scan-agg
-    df = q.QUERIES["q_forecast_revenue"](spark, sf_dir)
-    pf = P.pushed_filters(df)
-    assert "GreaterThanOrEqual(l_shipdate" in pf, pf
-    assert "LessThan(l_quantity,24" in pf, pf
-    assert "Join" not in P.executed_plan(df)
     # Q4: EXISTS with a correlated date predicate stays LeftSemi
     df = q.QUERIES["q_priority_fulfillment"](spark, sf_dir)
     assert "LeftSemi" in P.executed_plan(df), P.executed_plan(df)
@@ -451,12 +421,10 @@ def test_ngram_jaccard_driver_plan_prefix_filtered(spark, sf_dir):
 
 
 def test_r4_stats_and_spatial_plan_shapes(spark, sf_dir):
-    """Round-4 additions keep their designed shapes: the hypothesis tests
-    are one data-sized shuffle plus metadata assembly; the spatial join is
+    """Round-4 additions keep their designed shapes: the spatial join is
     a broadcast equi-join (never a theta-join explosion on coordinates);
     k-core's checkpointed edge list stops the per-round subtree re-plan;
     the bitmap rollup is the two-level partial-agg shape."""
-    assert P.count_exchanges(q.QUERIES["q_token_entropy"](spark, sf_dir)) <= 2
     assert P.count_exchanges(q.QUERIES["q_activity_bitmap"](spark, sf_dir)) <= 2
 
     spatial = q.QUERIES["q_spatial_grid_join"](spark, sf_dir)
@@ -518,8 +486,6 @@ def test_round5_plan_shapes(spark, sf_dir):
     hav = q.QUERIES["q_spatial_haversine"](spark, sf_dir)
     assert P.has(hav, "BroadcastHashJoin")
     assert not P.has(hav, "CartesianProduct")
-    enc = q.QUERIES["q_target_encoding"](spark, sf_dir)
-    assert not P.has(enc, "CartesianProduct")  # 1-row global mean is BNLJ-broadcast, not cartesian
 
 
 def test_round5_continuation_plan_shapes(spark, sf_dir):
@@ -769,6 +735,17 @@ def test_run_inference_map_only_pruned(spark, sf_dir):
     assert plan.count("MapInPandas") == 1, "model scoring must be ONE Python pass"
 
 
+@pytest.mark.parametrize("name", ["q_waiting_orders", "q_profile_drift"])
+def test_plan_fingerprint_ignores_session_history(spark, sf_dir, name):
+    """plan_sha must not depend on what the session built before. Two
+    count-distincts over different arguments in one aggregate plan an
+    Expand whose groups Spark orders by expression-id hashes, so the
+    fingerprint would move from build to build; these queries keep at
+    most one distinct group per aggregate."""
+    shas = [P.plan_fingerprint(q.QUERIES[name](spark, sf_dir)) for _ in range(8)]
+    assert len(set(shas)) == 1, shas
+
+
 #: Queries deleted because a remaining query's executed plan carries the
 #: operator that made their primitive: {deleted query: (subsumer, needles)}.
 #: A needle is a physical operator, join type, or aggregate, window or
@@ -874,6 +851,63 @@ SUBSUMED = {
     "q_multiple_regression": ("q_pacf", ("datediff(",)),
     "q_srm_check": ("q_covariate_balance", ("functions=[]", "Exchange hashpartitioning(")),
     "q_stratified_kfold": ("q_dbscan_1d", ("partial_min(", "row_number(")),
+    # pytest-only tier, same needle rule; `Exchange SinglePartition` is
+    # pinned too where both the deleted plan and its subsumer carry it
+    # aggregations
+    "q_mode_per_key": ("q_kmv_sketch", ("WindowGroupLimit", "row_number(")),
+    "q_stratified_sample": ("q_kmv_sketch", ("conv(", "md5(", "substring(")),
+    "q_weighted_median": ("q_ohlc_bars", ("partial_min(",)),
+    # analytics
+    "q_activity_streaks": ("q_ohlc_bars", ("date_trunc(", "row_number(")),
+    "q_assoc_rules": ("q_hybrid_search", ("SortMergeJoin", "Exchange SinglePartition",
+                                          "BroadcastHashJoin")),
+    "q_basket_growth": ("q_cohort_ltv", ("month(", "year(")),
+    "q_hhi_concentration": ("q_cohort_ltv", ("BroadcastHashJoin",
+                                             "BroadcastExchange HashedRelationBroadcastMode",
+                                             "HashAggregate(", "Exchange hashpartitioning(")),
+    "q_event_transitions": ("q_time_weighted_avg", ("lead(",)),
+    "q_gini_concentration": ("q_changepoint", ("row_number(",)),
+    "q_nelson_aalen": ("q_survival_km", ("datediff(", "partial_min(")),
+    "q_proration": ("q_dbscan_1d", ("row_number(",)),
+    # corpus statistics
+    "q_domain_cap": ("q_hybrid_search", ("WindowGroupLimit", "row_number(")),
+    "q_sparse_cosine": ("q_hybrid_search", ("explode(", "ln(", "split(", "BroadcastHashJoin")),
+    "q_token_entropy": ("q_hybrid_search", ("explode(", "ln(", "split(")),
+    # event time
+    "q_bollinger_bands": ("q_dickey_fuller", ("SQRT(", "Exchange SinglePartition")),
+    # experiments
+    "q_ab_test": ("q_cohens_d", ("SQRT(", "Exchange SinglePartition")),
+    "q_rolling_quantile": ("q_quantile_histogram_rollup", ("date_trunc(", "percentile(")),
+    "q_sample_per_key": ("q_kmv_sketch", ("WindowGroupLimit", "md5(", "row_number(")),
+    # finance
+    "q_abc_classes": ("q_dbscan_1d", ("Window [", "Sort [", "HashAggregate(",
+                                      "Exchange hashpartitioning(", "Exchange SinglePartition")),
+    "q_max_drawdown": ("q_ohlc_bars", ("date_trunc(",)),
+    # LLM pipeline
+    "q_hard_negatives": ("q_cosine_topk", ("RoundRobinPartitioning(", "SQRT(",
+                                           "WindowGroupLimit", "aggregate(", "lambdafunction(",
+                                           "row_number(", "zip_with(")),
+    "q_keywords_tfidf": ("q_hybrid_search", ("WindowGroupLimit", "explode(", "row_number(",
+                                             "split(")),
+    "q_knn_classifier": ("q_hybrid_search", ("RoundRobinPartitioning(", "SQRT(",
+                                             "WindowGroupLimit", "aggregate(",
+                                             "lambdafunction(", "row_number(", "zip_with(")),
+    "q_target_encoding": ("q_hybrid_search", ("BroadcastNestedLoopJoin", "Cross",
+                                              "BroadcastHashJoin",
+                                              "BroadcastExchange IdentityBroadcastMode",
+                                              "HashAggregate(keys=[]",
+                                              "Exchange SinglePartition")),
+    "q_tfidf": ("q_hybrid_search", ("explode(", "ln(", "split(")),
+    "q_split_assign": ("q_decontaminate", ("pmod(",)),
+    "q_split_leakage": ("q_corpus_curation", ("HashAggregate(", "Exchange hashpartitioning(")),
+    # TPC-H
+    "q_delay_priority_census": ("q_top_supplier", ("GreaterThanOrEqual(", "LessThan(")),
+    "q_promo_revenue": ("q_top_supplier", ("GreaterThanOrEqual(", "LessThan(",
+                                           "BroadcastHashJoin")),
+    "q_forecast_revenue": ("q_bracket_revenue", ("GreaterThanOrEqual(",)),
+    "q_small_qty_revenue": ("q_star_join", ("EqualTo(",)),
+    # UDF surface
+    "q_side_input_scalar": ("q_hybrid_search", ("partial_avg(",)),
 }
 
 

@@ -221,46 +221,6 @@ def test_changepoint_oracle_matches_bruteforce(rows):
     assert ssb_value2 == pytest.approx(_ssb / 10000.0, abs=1e-3)
 
 
-line_weights = st.lists(
-    st.integers(min_value=1, max_value=900000),  # extendedprice cents
-    min_size=1,
-    max_size=7,
-)
-
-
-@settings(max_examples=40, deadline=None)
-@given(orders=st.lists(line_weights, min_size=1, max_size=6))
-def test_proration_sums_exactly_and_stays_proportional(orders):
-    li_rows, o_rows = [], []
-    for ok, weights in enumerate(orders, start=1):
-        total = sum(weights)
-        o_rows.append({"o_orderkey": ok, "o_totalprice": total / 100.0})
-        for ln, w in enumerate(weights, start=1):
-            li_rows.append(
-                {"l_orderkey": ok, "l_linenumber": ln, "l_extendedprice": w / 100.0}
-            )
-    con = duckdb.connect()
-    con.register("lineitem", pd.DataFrame(li_rows))
-    con.register("orders", pd.DataFrame(o_rows))
-    try:
-        out = con.execute(q.ORACLES["q_proration"]).fetchall()
-    finally:
-        con.close()
-    allocs: dict[int, dict[int, int]] = {}
-    for ok, ln, alloc in out:
-        allocs.setdefault(ok, {})[ln] = alloc
-    for ok, weights in enumerate(orders, start=1):
-        total_w = sum(weights)
-        rebate = round(total_w) // 10
-        got = allocs[ok]
-        # conservation: allocations sum EXACTLY to the rebate
-        assert sum(got.values()) == rebate
-        for ln, w in enumerate(weights, start=1):
-            exact = rebate * w / total_w
-            # largest-remainder: each share within 1 cent of exact pro-rata
-            assert abs(got[ln] - exact) < 1.0
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     x=st.integers(min_value=0, max_value=1023),
